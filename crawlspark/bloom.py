@@ -6,25 +6,38 @@ is never delegated to the Bloom filter: a candidate that tests negative is
 definitely new (skips the anti-join); positives go through the exact
 ``left_anti`` join (SURVEY.md §4 "Bloom-filter exactness tension").
 
+Where it runs: only in rounds that take the merge seen probe (the
+shuffling anti-join of unbounded rounds). A broadcast-probe round already
+hashes its bounded candidate keys and streams ``seen`` once with no
+shuffle, so a filter cannot remove anything worth its build and probe
+there; the engine does no bloom work in such rounds, nor at seeding.
+On merge rounds it costs more than it saves at the sizes measured so far
+(4,000 and 16,000 pages, BENCH/BLOOM_GATE.md): negatives skip only the
+candidate side of the anti-join's shuffle, while the probe's pandas UDF
+and each round's fresh-key bitmap job are paid in full.
+
 Design:
 - Keys are hashed JVM-side with ``xxhash64`` (h1 = xxhash64(key),
   h2 = xxhash64(key, 1)) so build and probe agree without any Python
   hashing; probe positions use double hashing pos_i = (h1 + i·h2) mod m.
 - The filter is bucketed: ``bucket = pmod(h1, B)`` with an m-bit bitmap
-  per bucket, built/updated distributed via ``applyInPandas`` (vectorized
-  numpy bit-ops per Arrow group — no per-row Python) and persisted with
-  the checkpoint, so resume restores it.
+  per bucket, built distributed via ``applyInPandas`` (vectorized numpy
+  bit-ops per Arrow group — no per-row Python). The bitmaps live only on
+  the driver: the first merge round of a run builds them from the full
+  seen table (the exact source, so resume needs no snapshot) and later
+  merge rounds OR in the bitmaps of their fresh keys.
 - Probe path here is the broadcast tier: all bucket bitmaps are
   broadcast (B × m/8 bytes; 64 × 1 MiB default = 64 MiB ≈ 4×10^8 keys at
-  ~10 bits/key with k=5). Beyond ``broadcast_max_bytes`` the engine falls
-  back to the plain anti-join (Spark's runtime Bloom still assists);
-  the bucket layout is what a join-side probe tier would shard on.
+  ~10 bits/key with k=5) and released with the round. Beyond
+  ``broadcast_max_bytes`` the engine runs the round without the filter
+  (plain anti-join; Spark's runtime Bloom still assists); the bucket
+  layout is what a join-side probe tier would shard on.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Dict, Optional, Tuple
+from typing import Dict, Optional
 
 import numpy as np
 import pandas as pd
@@ -79,11 +92,10 @@ def _test_bits(words: np.ndarray, h1: np.ndarray, h2: np.ndarray, cfg: BloomConf
 def build_or_update(
     new_keys: DataFrame,
     key_col: str,
-    old_bloom: Optional[DataFrame],
     cfg: BloomConfig,
 ) -> DataFrame:
-    """Distributed build: per-bucket numpy bitmaps from the new keys, OR-ed
-    with the previous round's bitmaps. Returns (bucket, bitmap) rows."""
+    """Distributed build: per-bucket numpy bitmaps of the keys. Returns
+    (bucket, bitmap) rows; the engine ORs them into its driver copy."""
     hashed = _with_hashes(new_keys.select(key_col), key_col).withColumn(
         "bucket", F.pmod(F.col("_h1"), F.lit(cfg.buckets)).cast("int")
     )
@@ -95,21 +107,7 @@ def build_or_update(
             {"bucket": [int(pdf["bucket"].iloc[0])], "bitmap": [words.tobytes()]}
         )
 
-    fresh = hashed.groupBy("bucket").applyInPandas(build, BLOOM_SCHEMA)
-    if old_bloom is None:
-        return fresh
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = np.zeros(cfg.bits_per_bucket // 64, dtype=np.uint64)
-        for blob in pdf["bitmap"]:
-            acc |= np.frombuffer(blob, dtype=np.uint64)
-        return pd.DataFrame(
-            {"bucket": [int(pdf["bucket"].iloc[0])], "bitmap": [acc.tobytes()]}
-        )
-
-    return fresh.unionByName(old_bloom).groupBy("bucket").applyInPandas(
-        merge, BLOOM_SCHEMA
-    )
+    return hashed.groupBy("bucket").applyInPandas(build, BLOOM_SCHEMA)
 
 
 def to_dict(bloom_df: DataFrame) -> Dict[int, np.ndarray]:
@@ -125,12 +123,17 @@ def flag_candidates(
     key_col: str,
     bloom_dict: Dict[int, np.ndarray],
     cfg: BloomConfig,
+    handles: Optional[list] = None,
 ) -> DataFrame:
     """Add a ``_maybe`` column: True ⇔ the key MAY be in the seen set
     (Bloom positive), False ⇔ provably new. Probe is a vectorized pandas
     UDF over natively computed hashes. Callers that consume both halves
-    should persist the result so the probe evaluates once."""
+    should persist the result so the probe evaluates once. The bitmaps'
+    broadcast is appended to ``handles``: the caller destroys it once
+    nothing can recompute the result."""
     bc = spark.sparkContext.broadcast(bloom_dict)
+    if handles is not None:
+        handles.append(bc)
 
     @F.pandas_udf("boolean")
     def probe(h1: pd.Series, h2: pd.Series) -> pd.Series:
@@ -157,17 +160,3 @@ def flag_candidates(
         .drop("_h1", "_h2")
     )
 
-
-def split_candidates(
-    spark: SparkSession,
-    cands: DataFrame,
-    key_col: str,
-    bloom_dict: Dict[int, np.ndarray],
-    cfg: BloomConfig,
-) -> Tuple[DataFrame, DataFrame]:
-    """Split candidates into (maybe_seen, definitely_new) using the
-    broadcast bitmaps (see flag_candidates)."""
-    flagged = flag_candidates(spark, cands, key_col, bloom_dict, cfg)
-    maybe = flagged.filter(F.col("_maybe")).drop("_maybe")
-    fresh = flagged.filter(~F.col("_maybe")).drop("_maybe")
-    return maybe, fresh

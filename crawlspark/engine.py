@@ -27,6 +27,7 @@ order, seen set, and span documents. Verified against crawlspark.oracle.
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -47,6 +48,8 @@ from .schemas import SEEDS
 from .storage import CheckpointStore
 
 _DEBUG_TIMING = os.environ.get("CRAWLSPARK_DEBUG_TIMING") == "1"
+
+log = logging.getLogger(__name__)
 
 
 def _cands_storage_level():
@@ -69,7 +72,7 @@ def _parallel_jobs(*thunks) -> list:
     """Run independent Spark actions concurrently from driver threads.
 
     Each round's tail is a set of INDEPENDENT sink jobs (order append,
-    seen append, bloom roll, lineage/metrics appends, frontier snapshot)
+    seen append, fresh-key bitmaps, frontier snapshot)
     that all read already-cached inputs; running them sequentially adds
     their fixed job-submission + commit latencies to every round's
     critical path — a driver-serial term that does not shrink with
@@ -115,7 +118,9 @@ class CrawlConfig:
     max_rounds: int = 0
     num_partitions: Optional[int] = None
     broadcast_pages: bool = True  # pages table small enough to broadcast
-    # Bloom prefilter (crawlspark.bloom): exactness-safe anti-join bypass
+    # Bloom prefilter (crawlspark.bloom): exactness-safe anti-join bypass,
+    # used only in rounds that take the merge seen probe (the broadcast
+    # probe already streams seen once against the round's bounded keys)
     use_bloom: bool = False
     bloom_buckets: int = 16
     bloom_bits: int = 1 << 20  # 128 KiB per bucket (sandbox-sized default)
@@ -282,15 +287,16 @@ class Crawler:
         # per-round seen-probe decisions ("broadcast"/"merge"), appended
         # by run() — observability for the auto guard (and its tests)
         self.probe_choices: list = []
-        # driver-cached bloom bitmaps (bucket -> np.uint64 words): the
-        # probe broadcasts them from the driver anyway, so the dict IS
-        # the working copy; the per-round parquet batch is the durable
-        # mirror (written driver-side — see _roll_bloom_local)
+        # driver-only bloom bitmaps (bucket -> np.uint64 words) for merge
+        # rounds: built from the seen table by the first merge round of a
+        # run(), rolled forward by later ones, dropped by any other round
+        # (see _bloom_probe) — never checkpointed, seen is the exact source
         self._bloom_dict = None
-        # pipelined round commit (see run()): the pending commit future,
-        # the in-memory next-frontier handoff, and the persisted frontier
-        # cache the NEXT commit must release
+        # pipelined round commit (see run()): the pending commit future
+        # and its round, the in-memory next-frontier handoff, and the
+        # persisted frontier cache the NEXT commit must release
         self._pending_commit = None
+        self._pending_round = None
         self._commit_pool = None
         self._next_frontier = None
         self._frontier_handle = None
@@ -344,7 +350,7 @@ class Crawler:
             self.store.append("seen", rows, batch)
 
     # -- driver-side sinks ---------------------------------------------
-    # metrics/lineage/bloom carry O(bytes) per round but each Spark write
+    # metrics/lineage carry O(bytes) per round but each Spark write
     # is a full job (plan+submit+commit, ~0.5-2 s) on the round's critical
     # path — a level-independent serial term of the N→4N scaling gate.
     # The driver already holds every value; write them driver-side into
@@ -380,7 +386,7 @@ class Crawler:
             schema, r,
         )
 
-    # -- bloom (driver-cached working copy + durable per-round mirror) --
+    # -- bloom (driver-only bitmaps, merge rounds only) -----------------
     def _bloom_cfg(self):
         from . import bloom as bloom_mod
 
@@ -389,49 +395,40 @@ class Crawler:
             bits_per_bucket=self.cfg.bloom_bits,
         )
 
-    def _ensure_bloom(self, r: int) -> None:
-        """Populate the driver bloom dict for round r (resume path: read
-        the checkpointed batch; in-session the dict is already current)."""
+    def _bloom_probe(self) -> Optional[tuple]:
+        """The ``bloom`` argument of a merge round's dedup, or None when
+        the bitmaps would exceed ``broadcast_max_bytes`` (the round then
+        runs the plain anti-join). The first merge round of a run()
+        builds the bitmaps from the full seen table (one job); later
+        merge rounds find them rolled forward by the previous commit."""
+        bcfg = self._bloom_cfg()
+        if bcfg.total_bytes > bcfg.broadcast_max_bytes:
+            return None
         if self._bloom_dict is None:
-            from . import bloom as bloom_mod
+            self._bloom_dict = self._collect_fresh_bitmaps(
+                self.store.read("seen").select(
+                    F.col("url_key").alias("seen_key")
+                )
+            )
+        return self.spark, self._bloom_dict, bcfg
 
-            df = self.store.read_batch("bloom", r)
-            if df is not None:
-                self._bloom_dict = bloom_mod.to_dict(df)
-
-    def _collect_fresh_bitmaps(self, fresh: DataFrame) -> dict:
-        """ONE distributed job: per-bucket bitmaps of the round's fresh
-        keys (≤ buckets × bits/8 bytes reach the driver)."""
+    def _collect_fresh_bitmaps(self, keys: DataFrame) -> dict:
+        """ONE distributed job: per-bucket bitmaps of ``keys.seen_key``
+        (≤ buckets × bits/8 bytes reach the driver)."""
         from . import bloom as bloom_mod
 
         return bloom_mod.to_dict(
-            bloom_mod.build_or_update(
-                fresh.select("seen_key"), "seen_key", None, self._bloom_cfg()
-            )
+            bloom_mod.build_or_update(keys, "seen_key", self._bloom_cfg())
         )
 
-    def _roll_bloom_local(self, fresh_bitmaps: Optional[dict], batch: int) -> None:
-        """OR the fresh bitmaps into the driver dict and write the rolled
-        snapshot as bloom batch ``batch`` — no Spark job (the old path per
-        round: parquet read + merge applyInPandas + write = 3 jobs)."""
+    def _roll_bloom_local(self, fresh_bitmaps: dict) -> None:
+        """OR a merge round's fresh-key bitmaps into the driver dict —
+        no Spark job, nothing written."""
         import numpy as np
 
-        if fresh_bitmaps is None and self._bloom_dict is None:
-            return
-        d = dict(self._bloom_dict or {})
-        for b, words in (fresh_bitmaps or {}).items():
+        d = self._bloom_dict
+        for b, words in fresh_bitmaps.items():
             d[b] = np.bitwise_or(d[b], words) if b in d else words
-        self._bloom_dict = d
-        import pyarrow as pa
-
-        schema = pa.schema([("bucket", pa.int32()), ("bitmap", pa.binary())])
-        buckets = sorted(d)
-        self.store.append_local(
-            "bloom",
-            {"bucket": buckets,
-             "bitmap": [d[b].tobytes() for b in buckets]},
-            schema, batch,
-        )
 
     # -- pipelined round commit ----------------------------------------
     def _join_commit(self) -> None:
@@ -538,25 +535,15 @@ class Crawler:
         if res.fresh is None:
             return 0, False
         frontier = res.fresh.withColumn("round", F.lit(0))
-        # the three seed sinks (frontier snapshot, seen append, bloom
-        # build) all read the dense-order cache the counts job above
-        # already materialized — independent jobs, submitted concurrently
-        # like the round tail (each was a fixed ~1-2s of job-submission +
-        # commit latency on the seed critical path: pure Amdahl S for the
-        # N→4N scaling gate)
-        init_jobs = [
+        # the two seed sinks (frontier snapshot, seen append) both read
+        # the dense-order cache the counts job above already materialized
+        # — independent jobs, submitted concurrently like the round tail
+        # (each was a fixed ~1-2s of job-submission + commit latency on
+        # the seed critical path: pure Amdahl S for the N→4N scaling gate)
+        _parallel_jobs(
             lambda: self.store.append("frontier", frontier, 0),
             lambda: self._append_seen(res.fresh, 0),
-        ]
-        if self.cfg.use_bloom:
-            # the bitmap build is the only distributed part; the roll +
-            # write happen driver-side below (no Spark write job)
-            init_jobs.append(
-                lambda: self._collect_fresh_bitmaps(res.fresh)
-            )
-        results = _parallel_jobs(*init_jobs)
-        if self.cfg.use_bloom:
-            self._roll_bloom_local(results[-1], 0)
+        )
         tick("seed sinks (concurrent)")
         res.unpersist()
         return res.pushed_end, res.limit_reached
@@ -574,11 +561,15 @@ class Crawler:
         if self._pending_commit is not None:
             # a previous run() aborted mid-pipeline: wait out its commit
             # chain BEFORE reading state / truncating (it must not race
-            # this run); its failure, if any, was surfaced by that run
+            # this run). Nothing raised its failure, so log it; the resume
+            # below truncates whatever it left half-written
             try:
                 self._pending_commit.result()
             except Exception:
-                pass
+                log.error(
+                    "commit of round %s (orphaned by an aborted run) "
+                    "failed", self._pending_round, exc_info=True,
+                )
             self._pending_commit = None
         if self._frontier_handle is not None:
             try:
@@ -587,13 +578,12 @@ class Crawler:
                 pass
         self._next_frontier = None
         self._frontier_handle = None
+        # the bitmaps are rebuilt from seen by this run's first merge
+        # round: a reused Crawler's dict may hold another crawl's keys,
+        # or miss keys of rounds an aborted run committed
+        self._bloom_dict = None
         state = self.store.read_state() if resume else None
         if state is None:
-            # fresh crawl: a reused Crawler must not OR the new seed keys
-            # into a previous run's bitmaps (stale bits are exactness-safe
-            # — positives always go through the exact anti-join — but
-            # they'd charge phantom probe work to the new crawl)
-            self._bloom_dict = None
             tick0 = _Tick("engine init")
             pushed, limit_reached = self._init_frontier(seeds, sitemap_entries)
             tick0("seed frontier")
@@ -614,7 +604,7 @@ class Crawler:
             # discard any torn round beyond the last committed state
             for t in ("documents", "order", "metrics", "lineage"):
                 self.store.truncate_after(t, r - 1)
-            for t in ("seen", "frontier", "bloom"):
+            for t in ("seen", "frontier"):
                 self.store.truncate_after(t, r)
 
         # Pipelined round commit: each round's independent sinks + state
@@ -622,7 +612,7 @@ class Crawler:
         # pool ⇒ commits serialize in round order) while the NEXT round's
         # schedule→fetch→parse head — which depends only on the in-memory
         # frontier handoff — runs concurrently. The chain is joined right
-        # before the next round's seen/bloom reads (its first dependence
+        # before the next round's seen read (its first dependence
         # on round-r durable state), by which point the 3-5 s tail has
         # hidden behind the 15-70 s parse phase. Crash contract unchanged:
         # state_r commits only after every round-r sink is durable, so a
@@ -913,7 +903,7 @@ class Crawler:
                 lin = row
                 tick(f"fused stats+lineage agg sched={n_sched}")
                 # first dependence on the previous round's durable state
-                # (seen batch, bloom snapshot, any compaction): join the
+                # (seen batch, any compaction, the rolled bitmaps): join the
                 # pipelined commit chain here — it has been running
                 # concurrently under the whole fetch/parse/agg head
                 self._join_commit()
@@ -933,15 +923,6 @@ class Crawler:
                         seen = seen.filter(
                             F.col("kbucket").isin(cbuckets)
                         )
-                bloom_arg = None
-                if cfg.use_bloom:
-                    # driver-cached working copy; read_batch only on
-                    # resume (the dict survives round to round in-session)
-                    self._ensure_bloom(r)
-                    if self._bloom_dict is not None:
-                        bloom_arg = (
-                            self.spark, self._bloom_dict, self._bloom_cfg()
-                        )
                 probe = cfg.seen_probe
                 if probe == "auto":
                     # per-round guard: broadcast only while the candidate
@@ -955,6 +936,16 @@ class Crawler:
                         else "merge"
                     )
                 self.probe_choices.append(probe)
+                bloom_arg = None
+                if cfg.use_bloom and probe == "merge":
+                    bloom_arg = self._bloom_probe()
+                else:
+                    # no prefilter (it cannot pay where the broadcast
+                    # probe already streams seen once against the round's
+                    # bounded key set). Unrolled bitmaps would miss this
+                    # round's keys: drop them, the next merge round
+                    # rebuilds them from seen
+                    self._bloom_dict = None
                 # sampling-free dense order: the accepted parents' disc
                 # range is known from the fused agg, so the global FIFO
                 # index uses analytic order-buckets (monotone in
@@ -999,9 +990,9 @@ class Crawler:
                     tail_jobs.append(
                         lambda f=_fresh, b=_r + 1: self._append_seen(f, b)
                     )
-                if cfg.use_bloom and fresh is not None and n_kept > 0:
-                    # the only distributed bloom work: fresh-key bitmaps;
-                    # the roll + batch write are driver-side in the commit
+                if bloom_arg is not None and fresh is not None and n_kept > 0:
+                    # fresh-key bitmaps for the next merge round; the
+                    # commit ORs them into the driver dict
                     tail_jobs.append(
                         lambda f=fresh: self._collect_fresh_bitmaps(f)
                     )
@@ -1065,7 +1056,7 @@ class Crawler:
             n_frontier = n_carry + n_kept  # next round's size, tracked
 
             # ---- pipelined commit: the round's independent sinks (seen/
-            # bloom/lineage/metrics/frontier snapshot) all read cached
+            # fresh bitmaps/lineage/metrics/frontier snapshot) read cached
             # inputs. Submit them + the state write + compaction +
             # unpersists as ONE background chain on the single-thread
             # commit pool (chains serialize in round order) and let round
@@ -1091,18 +1082,19 @@ class Crawler:
                 handles=tuple(_handles), dres=_dedup_res,
                 prev_frontier=_prev_frontier,
             ):
-                results = _parallel_jobs(*jobs) if jobs else []
-                ofut.result()
-                opool.shutdown()
+                try:
+                    results = _parallel_jobs(*jobs) if jobs else []
+                finally:
+                    # join the order append even when a tail job failed:
+                    # its pool must not leak, nor its own failure hide
+                    opool.shutdown()
+                    ofut.result()
                 # driver-side sinks (no Spark jobs)
                 self._append_metrics_local(rr, msched, mok, mkept)
                 if lrows is not None:
                     self._append_lineage_local(rr, lrows)
-                if cfg.use_bloom:
-                    self._roll_bloom_local(
-                        results[b_idx] if b_idx is not None else None,
-                        rr + 1,
-                    )
+                if b_idx is not None:
+                    self._roll_bloom_local(results[b_idx])
                 self.store.write_state(st)
                 # post-commit maintenance: bound the seen scan's file
                 # count. Runs AFTER the state write, so the compacted
@@ -1128,7 +1120,12 @@ class Crawler:
                 if prev_frontier is not None:
                     prev_frontier.unpersist()
 
+            # a drain round never joined the previous commit (it reads no
+            # seen): join it here, or its failure would be overwritten and
+            # this round's state write would move past it
+            self._join_commit()
             self._pending_commit = self._commit_pool.submit(_commit)
+            self._pending_round = r
             self._frontier_handle = nxt_core
             self._next_frontier = nxt_core
             tick("round tail (submitted)")

@@ -7,8 +7,8 @@ Scale design:
   dropDuplicates (SURVEY.md Q1).
 - Cross-round dedup: ``left_anti`` join against the append-only seen table;
   Spark's runtime Bloom filter assists, and crawlspark.bloom provides the
-  explicit partitioned prefilter for 10^10-key scale. Exactness always
-  comes from the anti-join.
+  explicit partitioned prefilter for the merge probe at 10^10-key scale.
+  Exactness always comes from the anti-join.
 - Global FIFO numbering: a *distributed* dense index — range-repartition on
   the order key, per-partition row_number, plus broadcast cumulative
   offsets. No single-partition window, no driver collect of data rows
@@ -26,6 +26,7 @@ import time
 from dataclasses import dataclass
 from typing import Optional, Tuple
 
+from pyspark import Broadcast
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -176,12 +177,16 @@ class DedupResult:
     n_new: int  # unique candidates not yet seen
     n_kept: int  # after budget cut
     limit_reached: bool
-    handles: tuple = ()  # persisted DataFrames for the caller to unpersist
+    # persisted DataFrames and broadcasts for the caller to release
+    handles: tuple = ()
 
     def unpersist(self):
         for h in self.handles:
             try:
-                h.unpersist()
+                if isinstance(h, Broadcast):
+                    h.destroy()
+                else:
+                    h.unpersist()
             except Exception:
                 pass
 
@@ -207,6 +212,7 @@ def dedup_candidates(
     ``bloom``: optional (spark, bucket→bitmap dict, BloomConfig) — splits
     candidates so only possibly-seen rows pay the seen-set membership
     test; bloom-negative rows are provably new (exactness preserved).
+    The engine passes it only with ``seen_probe="merge"``.
     ``n_attempts``: push-attempt count when the caller already knows it
     (fused into the engine's round agg) — avoids a dedicated count job.
     ``order_bucket``: optional monotone integer bucket expression over the
@@ -227,8 +233,8 @@ def dedup_candidates(
         Exact (set algebra identical to "merge"); requires the round's
         candidate-key set to fit in a broadcast (bounded per-round
         frontier growth — the engine's politeness budgets bound it).
-        At 10^10-key scale this pairs with the Bloom prefilter so only
-        maybe-seen keys enter the probe.
+        The Bloom prefilter pairs with "merge" only: here the seen side
+        is already streamed once with no shuffle for it to save.
     """
     handles = []
     if limit > 0 and n_attempts is None:
@@ -261,7 +267,7 @@ def dedup_candidates(
 
             spark, bdict, bcfg = bloom
             flagged = flag_candidates(
-                spark, first, "seen_key", bdict, bcfg
+                spark, first, "seen_key", bdict, bcfg, handles=handles
             ).persist()
             handles.append(flagged)
             maybe = flagged.filter(F.col("_maybe")).drop("_maybe")

@@ -76,8 +76,8 @@ class CheckpointStore:
     def append_local(
         self, table: str, columns: dict, schema, batch: int
     ) -> None:
-        """Append a DRIVER-SIZED batch (metrics, lineage, bloom bitmaps —
-        a handful of rows the driver already holds) without a Spark job:
+        """Append a DRIVER-SIZED batch (metrics, lineage — a handful of
+        rows the driver already holds) without a Spark job:
         one pyarrow parquet file into the same ``batch={r}`` layout
         ``append`` produces, so readers cannot tell the difference.
 
@@ -98,14 +98,15 @@ class CheckpointStore:
         path = os.path.join(self._table_path(table), f"batch={batch}")
         os.makedirs(path, exist_ok=True)
         # overwrite semantics of append(): a retried round replaces its
-        # own batch dir content
-        for f in os.listdir(path):
-            if f.endswith(".parquet"):
-                os.remove(os.path.join(path, f))
-        pq.write_table(
-            pa.table(columns, schema=schema),
-            os.path.join(path, "part-00000.parquet"),
-        )
+        # own batch file — atomically, so a failed write leaves the
+        # previous file in place (readers skip the dot-named temp file)
+        tmp = os.path.join(path, ".part-00000.parquet.tmp")
+        try:
+            pq.write_table(pa.table(columns, schema=schema), tmp)
+            os.replace(tmp, os.path.join(path, "part-00000.parquet"))
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
     def read(self, table: str) -> Optional[DataFrame]:
         path = self._table_path(table)

@@ -1,6 +1,8 @@
 """End-to-end: the Spark engine must reproduce the oracle's crawl order,
 seen set, span documents and per-round counts exactly (north rule)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -132,7 +134,7 @@ def test_chain_rounds(spark, tmp_path):
     assert_matches_oracle(result, oracle)
 
 
-def test_seen_probe_auto_guard(spark, tmp_path):
+def test_seen_probe_auto_guard(spark, tmp_path, monkeypatch):
     """The auto probe guard (VERDICT r2 / ADVICE r2): per round, the
     broadcast seen-probe is chosen only while the candidate set fits the
     byte budget; beyond it the round falls back to the shuffling merge
@@ -153,12 +155,88 @@ def test_seen_probe_auto_guard(spark, tmp_path):
     assert c_auto.probe_choices and set(c_auto.probe_choices) == {"broadcast"}
     assert_matches_oracle(res_auto, oracle)
 
-    # auto with a 0-byte budget: every round must fall back to merge
-    c_merge, res_merge = run(broadcast_probe_max_bytes=0)
+    # bloom work is counted from here on: it belongs to merge rounds
+    # whose bitmaps fit broadcast_max_bytes, so none of the legs below
+    # may build or probe a bloom filter
+    from crawlspark import bloom
+
+    calls = []
+    for name in ("flag_candidates", "build_or_update"):
+        fn = getattr(bloom, name)
+        monkeypatch.setattr(
+            bloom, name,
+            lambda *a, _n=name, _f=fn, **k: calls.append(_n) or _f(*a, **k),
+        )
+
+    # auto with a 0-byte budget: every round must fall back to merge;
+    # its 2 GiB of bitmaps exceed broadcast_max_bytes, so no prefilter
+    c_merge, res_merge = run(
+        broadcast_probe_max_bytes=0, use_bloom=True, bloom_bits=1 << 30
+    )
     assert c_merge.probe_choices and set(c_merge.probe_choices) == {"merge"}
     assert_matches_oracle(res_merge, oracle)
 
-    # explicit override still honored
-    c_b, res_b = run(seen_probe="broadcast")
+    # explicit override still honored; broadcast rounds do no bloom work
+    c_b, res_b = run(seen_probe="broadcast", use_bloom=True)
     assert set(c_b.probe_choices) == {"broadcast"}
     assert_matches_oracle(res_b, oracle)
+    assert calls == []
+    assert not os.path.exists(os.path.join(res_b.store.root, "bloom"))
+
+
+def test_failed_commit_before_drain_round_raises(spark, tmp_path, monkeypatch):
+    """A round's commit runs in the background while the next round
+    starts. Round 1 of basic16 at limit=5 hits the limit, so round 2 is
+    a drain round: it reads no seen table and so never joined round 1's
+    commit before submitting its own. A failed round-1 metrics write must
+    still make run() raise, and _state.json must not move past round 1;
+    resuming then finishes the crawl equal to the oracle."""
+    import json
+
+    from crawlspark.storage import CheckpointStore
+
+    pages, seeds = basic16()
+    append_local = CheckpointStore.append_local
+
+    def failing(self, table, columns, schema, batch):
+        if table == "metrics" and batch == 1:
+            raise OSError("injected metrics write failure")
+        return append_local(self, table, columns, schema, batch)
+
+    monkeypatch.setattr(CheckpointStore, "append_local", failing)
+    with pytest.raises(OSError, match="injected"):
+        run_spark_crawl(spark, tmp_path, pages, seeds, host="example.com",
+                        limit=5)
+    state = json.loads((tmp_path / "ckpt" / "_state.json").read_text())
+    assert state["next_round"] == 1 and not state["finished"]
+
+    monkeypatch.undo()
+    pages_df = spark.createDataFrame(pages, PAGES)
+    cfg = CrawlConfig(checkpoint_dir=str(tmp_path / "ckpt"),
+                      host="example.com", limit=5)
+    result = Crawler(spark, pages_df, cfg).run(seeds, resume=True)
+    oracle = oracle_crawl(pages_index(pages), seeds, "example.com", limit=5)
+    assert result.pushed == 6 and result.limit_reached
+    assert_matches_oracle(result, oracle)
+
+
+def test_orphaned_commit_failure_is_logged(spark, tmp_path, caplog):
+    """A commit chain left pending by a run() that aborted is waited out
+    at the next run() entry; its failure is logged with its round."""
+    import logging
+    from concurrent.futures import Future
+
+    pages, _ = basic16()
+    cfg = CrawlConfig(checkpoint_dir=str(tmp_path / "ckpt"),
+                      host="example.com")
+    crawler = Crawler(spark, spark.createDataFrame(pages, PAGES), cfg)
+    crawler.store.write_state({"next_round": 4, "pushed": 16,
+                               "limit_reached": False, "finished": True})
+    failed = Future()
+    failed.set_exception(OSError("injected seen write failure"))
+    crawler._pending_commit, crawler._pending_round = failed, 3
+    with caplog.at_level(logging.ERROR, logger="crawlspark.engine"):
+        crawler.run(resume=True)
+    assert crawler._pending_commit is None
+    assert any("round 3" in r.getMessage() and r.exc_info
+               for r in caplog.records)

@@ -266,17 +266,21 @@ def test_seen_bucketed_layout_and_pruned_scan(spark, tmp_path):
     assert {r["url_key"] for r in res.seen_df().collect()} == oracle.seen
 
 
-def test_torn_round_seen_bloom_resume_no_key_dropped(spark, tmp_path):
+def test_torn_round_seen_bloom_resume_no_key_dropped(
+    spark, tmp_path, monkeypatch
+):
     """VERDICT r2 #8 — the one previously-unpinned crash window: a round
-    crashes AFTER appending seen batch r+1 and rolling the bloom snapshot
-    to batch r+1 but BEFORE the round's state commit. Resume must
-    truncate both torn batches back to the committed round and replay to
-    a result identical to an uninterrupted run — no key dropped, no key
-    duplicated, no bloom false-skip."""
+    crashes AFTER appending seen batch r+1 but BEFORE the round's state
+    commit. Resume must truncate the torn batch back to the committed
+    round and replay to a result identical to an uninterrupted run — no
+    key dropped, no key duplicated, no bloom false-skip. The merge probe
+    drives the bloom path; its bitmaps are not checkpointed, so the
+    resumed run rebuilds them from the truncated seen table."""
     import shutil
 
     pages, seeds = richsite()
-    kw = dict(host="rich.example", use_bloom=True, bloom_buckets=4)
+    kw = dict(host="rich.example", use_bloom=True, bloom_buckets=4,
+              seen_probe="merge")
     full = make_crawler(spark, tmp_path / "full", pages, **kw).run(seeds)
 
     part = make_crawler(
@@ -284,14 +288,11 @@ def test_torn_round_seen_bloom_resume_no_key_dropped(spark, tmp_path):
     ).run(seeds)
     assert part.rounds == 1
     ckpt = tmp_path / "part" / "ckpt"
+    assert not (ckpt / "bloom").exists()
     # forge the torn round-1 writes the crash window leaves behind:
-    # seen and bloom advanced to batch 2, order/documents half-written
-    # for round 1, but _state.json still says next_round=1
-    for t in ("seen", "bloom"):
-        src = ckpt / t / "batch=1"
-        dst = ckpt / t / "batch=2"
-        assert src.is_dir()
-        shutil.copytree(src, dst)
+    # seen advanced to batch 2, order/documents half-written for round
+    # 1, but _state.json still says next_round=1
+    shutil.copytree(ckpt / "seen" / "batch=1", ckpt / "seen" / "batch=2")
     shutil.copytree(ckpt / "order" / "batch=0", ckpt / "order" / "batch=1")
     state_path = ckpt / "_state.json"
     import json
@@ -299,9 +300,18 @@ def test_torn_round_seen_bloom_resume_no_key_dropped(spark, tmp_path):
     state = json.loads(state_path.read_text())
     assert state["next_round"] == 1 and not state["finished"]
 
+    from crawlspark import bloom
+
+    builds = []
+    build = bloom.build_or_update
+    monkeypatch.setattr(
+        bloom, "build_or_update",
+        lambda *a, **k: builds.append(1) or build(*a, **k),
+    )
     resumed = make_crawler(spark, tmp_path / "part", pages, **kw).run(
         seeds, resume=True
     )
+    assert builds  # bitmaps rebuilt from seen, then rolled forward
 
     def order_tuples(res):
         return sorted(

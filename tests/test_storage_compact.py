@@ -163,3 +163,22 @@ def test_crawl_with_aggressive_compaction_identical(spark, tmp_path):
     crawl(3, tmp_path / "resume", max_rounds=10)
     res_r = crawl(3, tmp_path / "resume", resume=True)
     assert key(res_r) == key(res_u)
+
+
+def test_append_local_failed_write_keeps_previous_batch(tmp_path):
+    """append_local replaces a batch file atomically: a retried write that
+    raises leaves the previous file in place and readable (pyarrow only,
+    no Spark)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    st = CheckpointStore(None, str(tmp_path))
+    schema = pa.schema([("round", pa.int32()), ("n", pa.int64())])
+    st.append_local("metrics", {"round": [3], "n": [7]}, schema, 3)
+    with pytest.raises((pa.ArrowInvalid, pa.ArrowTypeError)):
+        st.append_local("metrics", {"round": [3], "n": ["x"]}, schema, 3)
+    batch = tmp_path / "metrics" / "batch=3"
+    assert sorted(os.listdir(batch)) == ["part-00000.parquet"]
+    assert pq.read_table(batch / "part-00000.parquet").to_pylist() == [
+        {"round": 3, "n": 7}
+    ]

@@ -63,8 +63,8 @@ anti = cand.join(seen, "seen_key", "left_anti")
 out.append("## 4. Seen-set anti-join (Q1 cross-round dedup)\n\n"
            "Required: plain shuffled/broadcast anti-join on the 16-byte-hashable\n"
            "key column; Spark's runtime Bloom (enabled in session conf) injects\n"
-           "a bloom probe on large joins, and crawlspark.bloom pre-drops\n"
-           "definite-new candidates before this join at scale.\n\n```\n"
+           "a bloom probe on large joins, and on merge-probe rounds crawlspark.bloom\n"
+           "pre-drops definite-new candidates before this join.\n\n```\n"
            + cap(anti) + "```\n")
 
 # 5. whole-stage codegen for T1 + accept filter

@@ -17,7 +17,7 @@ Module map (SURVEY.md §7):
   frontier   — dedup / budget / seen-set (Q1), Bloom prefilter
   schedule   — politeness window top-k + salted repartition (Q4/Q5)
   engine     — round loop, checkpoint/resume, metrics/lineage (Q2/Q7)
-  storage    — Iceberg-or-parquet table abstraction
+  storage    — round-versioned parquet table store
   synth      — deterministic synthetic web graphs (fixtures)
   oracle     — single-threaded reference simulator (golden)
   analysis   — training-data pipeline ops (dedup/similarity/text/multimodal)

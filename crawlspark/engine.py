@@ -35,6 +35,7 @@ from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,22 +51,6 @@ from .storage import CheckpointStore
 _DEBUG_TIMING = os.environ.get("CRAWLSPARK_DEBUG_TIMING") == "1"
 
 log = logging.getLogger(__name__)
-
-
-def _cands_storage_level():
-    """Storage level for the per-round cands_raw cache. Default
-    MEMORY_AND_DISK (heap-columnar). CRAWLSPARK_CANDS_CACHE=disk selects
-    DISK_ONLY: with spark.local.dir on tmpfs the blocks still live in
-    RAM (OS page cache) but stay OFF the executor heap — at multi-million
-    -link rounds the heap-columnar build of this cache competes with the
-    aggregation's execution memory inside the crawl's largest stage."""
-    from pyspark import StorageLevel
-
-    return (
-        StorageLevel.DISK_ONLY
-        if os.environ.get("CRAWLSPARK_CANDS_CACHE", "").lower() == "disk"
-        else StorageLevel.MEMORY_AND_DISK
-    )
 
 
 def _parallel_jobs(*thunks) -> list:
@@ -141,18 +126,6 @@ class CrawlConfig:
     # strings plus hash-relation overhead)
     broadcast_probe_max_bytes: int = 64 << 20
     broadcast_probe_key_bytes: int = 128
-    # Seen-table bucketing (the parquet realization of the Iceberg
-    # bucket(key_hash) partition spec, storage.py): every seen append is
-    # directory-partitioned by kbucket = pmod(xxhash64(seen_key), B), and
-    # each round's seen read is PRUNED to the buckets the round's
-    # candidate keys actually hash into (collected for free inside the
-    # fused round agg). Plain parquet cannot declare its hash layout to
-    # Catalyst, so the merge anti-join still exchanges the pruned subset
-    # (zero-exchange is Iceberg storage-partitioned-join territory; the
-    # broadcast probe is already exchange-free on the seen side) — but
-    # the scan now touches only matching buckets instead of every file
-    # every round. 0 disables bucketing (flat layout).
-    seen_buckets: int = 64
     # Robots crawl-delay → per-host politeness budgets (README.md:9-10):
     # when round_wall_secs > 0, a host with a robots crawl-delay d gets a
     # per-round budget of ceil(round_wall_secs / d); hosts WITHOUT a
@@ -175,18 +148,16 @@ class CrawlConfig:
     process_fn: Optional[object] = None
     remove_fn: Optional[object] = None
     # Seen-table compaction cadence: when >= fanin seen batch dirs exist,
-    # merge them into one bucket-partitioned dir (storage.compact) so a
-    # long crawl's per-round seen scan reads O(fanin x buckets) files
-    # instead of O(rounds x buckets). 0 disables. Only applies with
-    # seen_buckets > 0 (the bucketed layout is the scale path).
+    # merge them into one single-file dir (storage.compact) so a long
+    # crawl's per-round seen scan reads O(fanin) batch dirs instead of
+    # O(rounds). 0 disables.
     seen_compact_fanin: int = 16
     # Two-tier parse (parse.py native tier): pages passing the clean-page
     # grammar are link/span-extracted entirely JVM-side; only dirty pages
     # cross into the exact Arrow parse. Bit-exact either way (routing
     # equality pinned by tests/test_native_parse.py); the switch exists
-    # for A/B measurement and is also overridable via
-    # CRAWLSPARK_NATIVE_PARSE=0. Hooks (process_fn/remove_fn) force the
-    # exact tier regardless.
+    # for A/B measurement. Hooks (process_fn/remove_fn) force the exact
+    # tier regardless.
     native_parse: bool = True
 
     def __post_init__(self):
@@ -250,8 +221,6 @@ class Crawler:
             # spark.local.dir (tmpfs in the bench = OS page cache, zero
             # GC); the cached partitioning still avoids the per-round
             # exchange+sort on the big side.
-            from pyspark import StorageLevel
-
             self.pages = pages.repartition(P, "host", "url_key").persist(
                 StorageLevel.DISK_ONLY
             )
@@ -318,36 +287,14 @@ class Crawler:
                 )
 
     def _append_seen(self, fresh: DataFrame, batch: int) -> None:
-        """Append fresh keys to the seen table, bucketed by
-        kbucket = pmod(xxhash64(key), seen_buckets) — the parquet
-        realization of the Iceberg bucket(key_hash) partition spec."""
-        rows = fresh.select(
+        """Append fresh keys to the seen table as ``(url_key,
+        first_round)``, one file per non-empty partition of ``fresh``
+        (no shuffle). Rounds read seen whole, so a finer layout would
+        buy no pruning."""
+        self.store.append("seen", fresh.select(
             F.col("seen_key").alias("url_key"),
-            F.xxhash64("seen_key").alias("key_hash"),
             F.lit(batch).alias("first_round"),
-        )
-        if self.cfg.seen_buckets > 0:
-            rows = rows.withColumn(
-                "kbucket",
-                F.pmod(F.col("key_hash"), F.lit(self.cfg.seen_buckets)),
-            )
-            # hash-repartition on the bucket BEFORE the partitionBy write:
-            # without it every write task opens a dynamic-partition writer
-            # per bucket it sees (tasks x buckets small files + per-task
-            # writer state — measured 3x task-time inflation of the seen
-            # append at local[8] vs local[2]). With it each bucket is
-            # written by exactly ONE task (single-writer-per-bucket: one
-            # file per bucket dir per round). Note this is NOT
-            # one-bucket-per-task: bucket→partition hash collisions mod
-            # numPartitions can co-locate several buckets in one task
-            # (skewing write tasks, leaving others empty), and with
-            # P < seen_buckets a task necessarily writes several files.
-            rows = rows.repartition(
-                min(self.cfg.seen_buckets, self.P), F.col("kbucket")
-            )
-            self.store.append("seen", rows, batch, partition_by=["kbucket"])
-        else:
-            self.store.append("seen", rows, batch)
+        ), batch)
 
     # -- driver-side sinks ---------------------------------------------
     # metrics/lineage carry O(bytes) per round but each Spark write
@@ -663,7 +610,6 @@ class Crawler:
                 cfg.native_parse
                 and cfg.process_fn is None
                 and cfg.remove_fn is None
-                and os.environ.get("CRAWLSPARK_NATIVE_PARSE", "1") != "0"
             )
             fetched_handle = None
             if use_native_parse:
@@ -677,8 +623,6 @@ class Crawler:
                 # streaming the join per tier re-runs the probe-side
                 # hash build and the routing grammar per tier — paired
                 # A/B at local[8]/400k pages: 176.4 s -> 229.5 s.)
-                from pyspark import StorageLevel
-
                 from .parse import mark_dirty
 
                 # routing flag computed INTO the cache: the clean-page
@@ -786,7 +730,7 @@ class Crawler:
                 # measured in round 2).
                 cands_pre = canon.canonize_links_prepared(
                     links, "href"
-                ).persist(_cands_storage_level())
+                ).persist(StorageLevel.MEMORY_AND_DISK)
                 round_handles.append(cands_pre)
                 cands_fast, cands_slow = canon.canonize_links_split(
                     cands_pre, self.udfs["canonize"]
@@ -795,7 +739,7 @@ class Crawler:
                 # exact resolver runs once per dirty link, not once per
                 # consumer (the fused agg materializes it; the dedup scan
                 # reads both caches) — tiny by the two-tier premise
-                cands_slow = cands_slow.persist(_cands_storage_level())
+                cands_slow = cands_slow.persist(StorageLevel.MEMORY_AND_DISK)
                 round_handles.append(cands_slow)
                 cands_raw = cands_fast.unionByName(cands_slow)
 
@@ -863,18 +807,6 @@ class Crawler:
                             F.count("*").alias("raw"),
                             F.count(F.when(resolved_ok, 1)).alias("resolved"),
                             F.count(F.when(accept_expr, 1)).alias("accepted"),
-                            # the candidate keys' seen-buckets (≤ B
-                            # values) — drives the pruned seen scan below;
-                            # rides the same fused job, no extra action
-                            F.collect_set(
-                                F.when(
-                                    accept_expr,
-                                    F.pmod(
-                                        F.xxhash64(self._seen_key()),
-                                        F.lit(max(cfg.seen_buckets, 1)),
-                                    ),
-                                )
-                            ).alias("cbuckets"),
                             # accepted parent_disc bounds: drive the
                             # sampling-free dense-order buckets (same
                             # fused job — no extra action)
@@ -909,20 +841,6 @@ class Crawler:
                 self._join_commit()
                 tick("commit join")
                 seen = self.store.read("seen")
-                if (
-                    cfg.seen_buckets > 0
-                    and "kbucket" in seen.columns
-                ):
-                    cbuckets = sorted(
-                        int(b) for b in (lin["cbuckets"] or [])
-                    )
-                    if len(cbuckets) < cfg.seen_buckets:
-                        # directory-level pruning: only the bucket
-                        # partitions a candidate key can hash into are
-                        # scanned (PartitionFilters on kbucket)
-                        seen = seen.filter(
-                            F.col("kbucket").isin(cbuckets)
-                        )
                 probe = cfg.seen_probe
                 if probe == "auto":
                     # per-round guard: broadcast only while the candidate
@@ -1105,10 +1023,9 @@ class Crawler:
                 # filters compacted dirs on it). Round r+1 cannot observe
                 # a half-compacted table: its seen read happens after
                 # _join_commit.
-                if cfg.seen_compact_fanin > 0 and cfg.seen_buckets > 0:
+                if cfg.seen_compact_fanin > 0:
                     self.store.maybe_compact(
-                        "seen", upto=rr + 1, partition_by=["kbucket"],
-                        round_col="first_round",
+                        "seen", upto=rr + 1, round_col="first_round",
                         fanin=cfg.seen_compact_fanin,
                     )
                 # release round-r caches (the next frontier is its own

@@ -35,9 +35,7 @@ _DEBUG_TIMING = os.environ.get("CRAWLSPARK_DEBUG_TIMING") == "1"
 # dense-order partition offsets: above this partition count the offsets
 # ship as a broadcast-joined DataFrame instead of a create_map literal
 # (a 10^5-entry literal in every round's plan bloats compile time)
-_OFFSETS_LITERAL_MAX = int(
-    os.environ.get("CRAWLSPARK_OFFSETS_LITERAL_MAX", "256")
-)
+_OFFSETS_LITERAL_MAX = 256
 
 
 def _t(label: str, t0: float) -> float:

@@ -62,7 +62,6 @@ FRONTIER = T.StructType(
 SEEN = T.StructType(
     [
         T.StructField("url_key", T.StringType(), False),
-        T.StructField("key_hash", T.LongType(), False),  # xxhash64(url_key)
         T.StructField("first_round", T.IntegerType(), False),
     ]
 )

@@ -1,16 +1,13 @@
-"""Persistent table layer: Iceberg when the runtime is on the classpath,
-plain parquet otherwise, behind one API so nothing above notices
-(SURVEY.md §7 "Iceberg in sandbox").
-
-Layout (parquet mode), all append-only and round-versioned so any round is
-resumable (north rule):
+"""Persistent table layer: plain parquet, round-versioned and
+append-only so any round is resumable (north rule):
 
     {root}/{table}/batch={round}/part-*.parquet
     {root}/_state.json        — {round, pushed, limit_reached} (atomic rename)
 
 ``batch`` is a directory-partition column (dropped on read); append-only
 per-round writes mean a crashed round simply overwrites its own batch dir
-on retry — no partial-state corruption.
+on retry — no partial-state corruption. Every table, ``seen`` included,
+is flat: a batch dir holds its parquet files directly.
 """
 
 from __future__ import annotations
@@ -23,53 +20,29 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when the Iceberg Spark runtime is on the classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
 class CheckpointStore:
-    """Round-versioned append-only table store.
-
-    In Iceberg deployments each table maps to ``writeTo(name).append()`` on
-    an Iceberg table partitioned by ``bucket(key_hash)`` (seen) or
-    ``batch`` (everything else); the parquet fallback reproduces the same
-    append/snapshot semantics with directory partitions.
-    """
+    """Round-versioned append-only table store (one ``batch={r}``
+    directory per table per round)."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
-        self.iceberg = iceberg_available(spark)
         self._recover_compactions()
 
     # -- tables ---------------------------------------------------------
     def _table_path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def append(
-        self, table: str, df: DataFrame, batch: int,
-        partition_by: Optional[list] = None,
-    ) -> None:
+    def append(self, table: str, df: DataFrame, batch: int) -> None:
         path = os.path.join(self._table_path(table), f"batch={batch}")
-        w = df.write.mode("overwrite")
-        if partition_by:
-            # sub-partitioned layout (e.g. seen's kbucket — the parquet
-            # realization of Iceberg's bucket(key_hash) spec): readers
-            # filtering on the partition column get directory pruning
-            w = w.partitionBy(*partition_by)
         # label the write's stages in the event log (job descriptions are
         # thread-local, so concurrent sink threads don't clobber each
         # other) — keeps scaling diagnostics attributable to a sink
         sc = self.spark.sparkContext
         sc.setJobDescription(f"append:{table} b{batch}")
         try:
-            w.parquet(path)
+            df.write.mode("overwrite").parquet(path)
         finally:
             sc.setJobDescription(None)
 
@@ -86,8 +59,7 @@ class CheckpointStore:
         cluster — driver-serial either way). For tables whose per-round
         payload is O(bytes), that latency IS the cost, and it lands on
         every round's critical path — a level-independent Amdahl term of
-        the N→4N scaling gate. In an Iceberg deployment this maps to a
-        driver-side ``append_files`` commit of one small data file.
+        the N→4N scaling gate.
 
         ``columns``: name → list of Python values; ``schema``: a pyarrow
         schema pinning the exact types the Spark writer used (int32/int64
@@ -126,20 +98,6 @@ class CheckpointStore:
             return None
         return self.spark.read.parquet(path)
 
-    def read_batches(self, table: str, max_batch: int) -> Optional[DataFrame]:
-        """Read only batches ≤ max_batch (resume from an earlier round)."""
-        path = self._table_path(table)
-        if not os.path.isdir(path):
-            return None
-        dirs = [
-            os.path.join(path, d)
-            for d in os.listdir(path)
-            if d.startswith("batch=") and int(d.split("=")[1]) <= max_batch
-        ]
-        if not dirs:
-            return None
-        return self.spark.read.option("basePath", path).parquet(*dirs).drop("batch")
-
     def truncate_after(self, table: str, max_batch: int) -> None:
         """Drop batches > max_batch (discard a partially-written round).
 
@@ -172,31 +130,26 @@ class CheckpointStore:
             self._write_compacted(
                 table, kept, max_batch,
                 merged=[int(d.split("=")[1])],
-                partition_by=info.get("partition_by"),
                 round_col=info["round_col"],
             )
 
     # -- compaction -------------------------------------------------------
-    # Each round appends one batch dir (seen: further split into kbucket
-    # sub-dirs), so a long crawl's seen scan reads O(rounds x buckets)
-    # small files. compact() bounds that: all batch dirs <= upto are
-    # rewritten into the single dir batch=upto, hash-repartitioned on the
-    # bucket column so each bucket sub-dir holds ONE file. The rewrite is
-    # crash-safe via a commit journal (_compact_journal.json): data is
-    # fully written to a temp dir first, then journal -> remove merged
-    # dirs -> rename temp -> remove journal; _recover_compactions()
-    # finishes any step a crash interrupted (idempotent). An Iceberg
-    # deployment maps this to rewrite_data_files (leveled/binpack); the
-    # parquet realization keeps the same reader-visible layout contract.
+    # Each round appends one batch dir, so a long crawl's seen scan reads
+    # O(rounds x files per batch) small files. compact() bounds that: all
+    # batch dirs <= upto are rewritten into ONE file in the single dir
+    # batch=upto. The rewrite is crash-safe via a commit journal
+    # (_compact_journal.json): data is fully written to a temp dir first,
+    # then journal -> remove merged dirs -> rename temp -> remove
+    # journal; _recover_compactions() finishes any step a crash
+    # interrupted (idempotent).
 
     def maybe_compact(
         self, table: str, upto: int,
-        partition_by: Optional[list] = None,
         round_col: str = "first_round", fanin: int = 16,
     ) -> bool:
         """Compact iff at least ``fanin`` batch dirs <= upto exist —
         amortizes the full-table rewrite to every fanin-th round while
-        bounding the scan file count at fanin x buckets."""
+        bounding the scan at fanin batch dirs."""
         if fanin <= 0:
             return False
         path = self._table_path(table)
@@ -209,13 +162,11 @@ class CheckpointStore:
         ]
         if len(todo) < fanin:
             return False
-        self.compact(table, upto, partition_by, round_col)
+        self.compact(table, upto, round_col)
         return True
 
     def compact(
-        self, table: str, upto: int,
-        partition_by: Optional[list] = None,
-        round_col: str = "first_round",
+        self, table: str, upto: int, round_col: str = "first_round",
     ) -> None:
         """Rewrite every batch dir <= upto into the single dir
         batch=upto. Rows keep their per-row round column, so resume to
@@ -233,33 +184,20 @@ class CheckpointStore:
         df = self.spark.read.option("basePath", path).parquet(
             *[os.path.join(path, f"batch={b}") for b in todo]
         ).drop("batch")
-        self._write_compacted(
-            table, df, max(todo), todo, partition_by, round_col
-        )
+        self._write_compacted(table, df, max(todo), todo, round_col)
 
     def _write_compacted(
         self, table: str, df: DataFrame, label: int, merged: list,
-        partition_by: Optional[list], round_col: str,
+        round_col: str,
     ) -> None:
         import shutil
-
-        from pyspark.sql import functions as F
 
         path = self._table_path(table)
         tmp = os.path.join(path, ".compact_tmp")
         shutil.rmtree(tmp, ignore_errors=True)
-        if partition_by:
-            # hash-repartition on the bucket column: every bucket lands
-            # in exactly one task => one file per bucket sub-dir
-            w = df.repartition(*[F.col(c) for c in partition_by]).write
-            w = w.partitionBy(*partition_by)
-        else:
-            w = df.coalesce(1).write
-        w.mode("overwrite").parquet(tmp)
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
         with open(os.path.join(tmp, "_compacted.json"), "w") as f:
-            json.dump(
-                {"round_col": round_col, "partition_by": partition_by}, f
-            )
+            json.dump({"round_col": round_col}, f)
         # commit point: from here a crash is completed by recovery
         journal = os.path.join(path, "_compact_journal.json")
         with open(journal + ".tmp", "w") as f:

@@ -220,6 +220,39 @@ def test_failed_commit_before_drain_round_raises(spark, tmp_path, monkeypatch):
     assert_matches_oracle(result, oracle)
 
 
+def test_failed_seen_append_in_normal_round_raises(spark, tmp_path,
+                                                   monkeypatch):
+    """A normal round's seen append runs in the background commit chain.
+    A failed round-1 seen write (batch 2) must make run() raise, leave
+    _state.json at next_round 1, and a resume must equal the oracle."""
+    import json
+
+    from crawlspark.storage import CheckpointStore
+
+    pages, seeds = basic16()
+    append = CheckpointStore.append
+
+    def failing(self, table, df, batch):
+        if table == "seen" and batch == 2:
+            raise OSError("injected seen write failure")
+        return append(self, table, df, batch)
+
+    monkeypatch.setattr(CheckpointStore, "append", failing)
+    with pytest.raises(OSError, match="injected"):
+        run_spark_crawl(spark, tmp_path, pages, seeds, host="example.com")
+    state = json.loads((tmp_path / "ckpt" / "_state.json").read_text())
+    assert state["next_round"] == 1 and not state["finished"]
+
+    monkeypatch.undo()
+    pages_df = spark.createDataFrame(pages, PAGES)
+    cfg = CrawlConfig(checkpoint_dir=str(tmp_path / "ckpt"),
+                      host="example.com")
+    result = Crawler(spark, pages_df, cfg).run(seeds, resume=True)
+    assert_matches_oracle(
+        result, oracle_crawl(pages_index(pages), seeds, "example.com")
+    )
+
+
 def test_orphaned_commit_failure_is_logged(spark, tmp_path, caplog):
     """A commit chain left pending by a run() that aborted is waited out
     at the next run() entry; its failure is logged with its round."""

@@ -233,37 +233,28 @@ def test_rerun_same_config_deterministic(spark, tmp_path):
     assert checksum(a) == checksum(b)
 
 
-def test_seen_bucketed_layout_and_pruned_scan(spark, tmp_path):
-    """The seen table is written directory-partitioned by
-    kbucket = pmod(xxhash64(key), seen_buckets) — the parquet realization
-    of the Iceberg bucket(key_hash) spec (storage.py) — and each round's
-    seen read is pruned to the candidate keys' buckets."""
+def test_seen_flat_layout(spark, tmp_path):
+    """The seen table is flat: every batch dir holds its parquet files
+    directly (no sub-directories), at most one per partition of the
+    dedup exchange the fresh keys come from, its rows are exactly
+    (url_key, first_round), and the seen set equals the oracle's."""
     import os
 
     pages, seeds = richsite()
-    res = make_crawler(
-        spark, tmp_path, pages, host="rich.example", seen_buckets=8
-    ).run(seeds)
+    res = make_crawler(spark, tmp_path, pages, host="rich.example").run(seeds)
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     seen_root = tmp_path / "ckpt" / "seen"
     batch_dirs = [d for d in os.listdir(seen_root) if d.startswith("batch=")]
     assert batch_dirs
     for b in batch_dirs:
-        kdirs = [
-            d for d in os.listdir(seen_root / b) if d.startswith("kbucket=")
-        ]
-        assert kdirs, f"{b} has no kbucket partitions"
-        assert all(0 <= int(d.split("=")[1]) < 8 for d in kdirs)
-    # kbucket values consistent with the hash
-    rows = res.seen_df().select("url_key", "key_hash", "kbucket").collect()
-    for r in rows:
-        assert r["kbucket"] == r["key_hash"] % 8
-    # the pruned scan produces a plan with a partition filter on kbucket
-    seen = res.seen_df().filter(F.col("kbucket").isin([1, 3]))
-    plan = seen._jdf.queryExecution().executedPlan().toString()
-    assert "kbucket" in plan
-    # correctness unchanged vs oracle seen set
+        entries = os.listdir(seen_root / b)
+        assert not [e for e in entries if (seen_root / b / e).is_dir()], b
+        files = [e for e in entries if e.endswith(".parquet")]
+        assert 1 <= len(files) <= width, (b, files)
+    seen = res.seen_df()
+    assert seen.columns == ["url_key", "first_round"]
     oracle = oracle_crawl(pages_index(pages), seeds, "rich.example")
-    assert {r["url_key"] for r in res.seen_df().collect()} == oracle.seen
+    assert {r["url_key"] for r in seen.collect()} == oracle.seen
 
 
 def test_torn_round_seen_bloom_resume_no_key_dropped(

@@ -9,7 +9,6 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from crawlspark.storage import CheckpointStore
 
@@ -17,7 +16,7 @@ from crawlspark.storage import CheckpointStore
 def _mk_rows(spark, batch, keys):
     return spark.createDataFrame(
         [(k, batch) for k in keys], "url_key string, first_round int"
-    ).withColumn("kbucket", F.pmod(F.xxhash64("url_key"), F.lit(4)))
+    )
 
 
 def _keys(df):
@@ -36,37 +35,34 @@ def test_compact_merges_and_bounds_files(spark, tmp_path):
     want = []
     for b in range(6):
         keys = [f"k{b}_{i}" for i in range(5)]
-        st.append("seen", _mk_rows(spark, b, keys), b,
-                  partition_by=["kbucket"])
+        st.append("seen", _mk_rows(spark, b, keys), b)
         want += [(k, b) for k in keys]
     n_before = len(_parquet_files(str(tmp_path / "seen")))
-    st.compact("seen", 5, partition_by=["kbucket"])
-    # single batch dir, one file per bucket sub-dir
+    st.compact("seen", 5)
+    # single batch dir holding a single file
     dirs = [d for d in os.listdir(tmp_path / "seen") if d.startswith("batch=")]
     assert dirs == ["batch=5"]
-    n_after = len(_parquet_files(str(tmp_path / "seen")))
-    assert n_after <= 4 < n_before  # <= one per kbucket
+    files = _parquet_files(str(tmp_path / "seen"))
+    assert len(files) == 1 < n_before
+    assert os.path.dirname(files[0]) == str(tmp_path / "seen" / "batch=5")
     assert _keys(st.read("seen")) == sorted(want)
     # appends after compaction coexist; a second compaction folds them in
-    st.append("seen", _mk_rows(spark, 6, ["k6_0"]), 6,
-              partition_by=["kbucket"])
-    st.compact("seen", 6, partition_by=["kbucket"])
+    st.append("seen", _mk_rows(spark, 6, ["k6_0"]), 6)
+    st.compact("seen", 6)
     assert _keys(st.read("seen")) == sorted(want + [("k6_0", 6)])
 
 
 def test_maybe_compact_fanin_gate(spark, tmp_path):
     st = CheckpointStore(spark, str(tmp_path))
     for b in range(3):
-        st.append("seen", _mk_rows(spark, b, [f"k{b}"]), b,
-                  partition_by=["kbucket"])
-    assert not st.maybe_compact("seen", 2, ["kbucket"], fanin=4)
+        st.append("seen", _mk_rows(spark, b, [f"k{b}"]), b)
+    assert not st.maybe_compact("seen", 2, fanin=4)
     assert len(os.listdir(tmp_path / "seen")) == 3
-    st.append("seen", _mk_rows(spark, 3, ["k3"]), 3,
-              partition_by=["kbucket"])
-    assert st.maybe_compact("seen", 3, ["kbucket"], fanin=4)
+    st.append("seen", _mk_rows(spark, 3, ["k3"]), 3)
+    assert st.maybe_compact("seen", 3, fanin=4)
     dirs = [d for d in os.listdir(tmp_path / "seen") if d.startswith("batch=")]
     assert dirs == ["batch=3"]
-    assert not st.maybe_compact("seen", 3, ["kbucket"], fanin=4)  # idempotent
+    assert not st.maybe_compact("seen", 3, fanin=4)  # idempotent
 
 
 def test_truncate_after_rewrites_compacted_dir(spark, tmp_path):
@@ -75,17 +71,15 @@ def test_truncate_after_rewrites_compacted_dir(spark, tmp_path):
     the keys of rounds <= max_batch survive (resume-from-any-round)."""
     st = CheckpointStore(spark, str(tmp_path))
     for b in range(5):
-        st.append("seen", _mk_rows(spark, b, [f"k{b}"]), b,
-                  partition_by=["kbucket"])
-    st.compact("seen", 4, partition_by=["kbucket"])
+        st.append("seen", _mk_rows(spark, b, [f"k{b}"]), b)
+    st.compact("seen", 4)
     st.truncate_after("seen", 2)
     assert _keys(st.read("seen")) == [("k0", 0), ("k1", 1), ("k2", 2)]
     # the rewritten dir is itself compacted: a second, deeper truncate works
     st.truncate_after("seen", 0)
     assert _keys(st.read("seen")) == [("k0", 0)]
     # and plain (uncompacted) dirs still just get dropped
-    st.append("seen", _mk_rows(spark, 1, ["k1b"]), 1,
-              partition_by=["kbucket"])
+    st.append("seen", _mk_rows(spark, 1, ["k1b"]), 1)
     st.truncate_after("seen", 0)
     assert _keys(st.read("seen")) == [("k0", 0)]
 
@@ -99,8 +93,7 @@ def test_torn_compaction_recovered_on_reopen(spark, tmp_path):
     st = CheckpointStore(spark, str(tmp_path))
     want = []
     for b in range(4):
-        st.append("seen", _mk_rows(spark, b, [f"k{b}"]), b,
-                  partition_by=["kbucket"])
+        st.append("seen", _mk_rows(spark, b, [f"k{b}"]), b)
         want.append((f"k{b}", b))
     path = str(tmp_path / "seen")
 
@@ -110,7 +103,7 @@ def test_torn_compaction_recovered_on_reopen(spark, tmp_path):
     real_finish = CheckpointStore._finish_compaction
     try:
         CheckpointStore._finish_compaction = lambda self, *a: None
-        st.compact("seen", 3, partition_by=["kbucket"])
+        st.compact("seen", 3)
     finally:
         CheckpointStore._finish_compaction = real_finish
     assert os.path.exists(os.path.join(path, "_compact_journal.json"))

@@ -61,8 +61,8 @@ cand = spark.range(5000).select(F.col("id").cast("string").alias("seen_key"),
                                 F.col("id").alias("parent_disc"))
 anti = cand.join(seen, "seen_key", "left_anti")
 out.append("## 4. Seen-set anti-join (Q1 cross-round dedup)\n\n"
-           "Required: plain shuffled/broadcast anti-join on the 16-byte-hashable\n"
-           "key column; Spark's runtime Bloom (enabled in session conf) injects\n"
+           "Required: plain shuffled/broadcast anti-join on the seen_key string\n"
+           "column; Spark's runtime Bloom (enabled in session conf) injects\n"
            "a bloom probe on large joins, and on merge-probe rounds crawlspark.bloom\n"
            "pre-drops definite-new candidates before this join.\n\n```\n"
            + cap(anti) + "```\n")

@@ -270,12 +270,29 @@ def _sql_mk_key(pcol, qcol):
     return F.when(qcol != "", F.concat(k, F.lit("?"), qcol)).otherwise(k)
 
 
-# private precomputed parent columns the engine may hoist above the link
-# explode (one evaluation per page instead of per link); consumed by
-# canonize_links_prepared and never leaked into any output schema
+# private parent columns (parent_cols) hoisted above the link explode;
+# consumed by canonize_links_prepared and never leaked into any output
+# schema
 _PRECOMP = ("_pprefix", "_phost", "_parent_ok")
 # private columns of the prepared projection (canonize_links_prepared)
 _PREPARED = ("_cn", "url", "host", "url_key", "_cp", "_cf")
+
+
+def parent_cols(url):
+    """The _PRECOMP columns of the page URL column ``url``: its
+    ``scheme://host`` prefix, its host, and whether it is a clean parent
+    (absolute, canonical, no escape in the path) that root-relative
+    hrefs can resolve against natively. Select them BEFORE the link
+    explode, so each page's regexes run once instead of once per link."""
+    from pyspark.sql import functions as F
+
+    ppath = F.regexp_extract(url, r"^[a-z][a-z0-9+.\-]*://[^/?#]*([^?#]*)", 1)
+    return [
+        F.regexp_extract(url, r"^([a-z][a-z0-9+.\-]*://[^/?#]*)", 1)
+        .alias("_pprefix"),
+        F.regexp_extract(url, SQL_HOST_RE, 1).alias("_phost"),
+        (url.rlike(SQL_ABS_SIMPLE) & ~ppath.contains("%")).alias("_parent_ok"),
+    ]
 
 
 def canonize_links_prepared(df, href_col):
@@ -304,8 +321,8 @@ def canonize_links_prepared(df, href_col):
     micro-bench measured the one-pass cached shape ~4x faster at 19.35M
     links: 27.8s vs 106.2s for materialize+agg on local[32].)
 
-    ``df`` must carry ``parent_url`` (+ optionally the _PRECOMP hoisted
-    parent columns) plus passthrough columns; ``href_col`` is consumed.
+    ``df`` must carry ``parent_url`` and its parent_cols plus
+    passthrough columns; ``href_col`` is consumed.
     """
     from pyspark.sql import functions as F
 
@@ -352,22 +369,8 @@ def canonize_links_prepared(df, href_col):
     # trimmed href, entirely JVM-side. Masks are deliberately conservative
     # so every row the exact parser could treat differently (unicode
     # whitespace trim, escapes, dot segments, odd parents) falls through.
-    # Parent-derived columns (_pprefix, _phost, _parent_ok) may be
-    # precomputed by the caller BEFORE the link explode (one evaluation
-    # per page instead of per link); computed inline otherwise.
-    if "_pprefix" in df.columns:
-        pprefix = F.col("_pprefix")
-        phost = F.col("_phost")
-        parent_ok = F.col("_parent_ok")
-    else:
-        pprefix = F.regexp_extract(
-            F.col("parent_url"), r"^([a-z][a-z0-9+.\-]*://[^/?#]*)", 1
-        )
-        ppath = F.regexp_extract(
-            F.col("parent_url"), r"^[a-z][a-z0-9+.\-]*://[^/?#]*([^?#]*)", 1
-        )
-        phost = F.regexp_extract(F.col("parent_url"), SQL_HOST_RE, 1)
-        parent_ok = F.col("parent_url").rlike(SQL_ABS_SIMPLE) & ~ppath.contains("%")
+    # The parent-derived columns come precomputed (parent_cols).
+    pprefix, phost, parent_ok = (F.col(c) for c in _PRECOMP)
     trimmed = F.trim(href)
     rr_nofrag = F.substring_index(trimmed, "#", 1)
     rr_path = F.substring_index(rr_nofrag, "?", 1)  # ≡ ^([^?#]*) capture
@@ -438,57 +441,9 @@ def canonize_links_split(pre, udf):
     return fast, slow
 
 
-def canonize_links(df, href_col, udf, native: bool = True):
-    """Derive (url, host, url_key) for candidate links.
-
-    Scale design: the overwhelmingly common case on a real web graph —
-    an absolute, already-canonical href with a dot-segment-free path —
-    is computed ENTIRELY JVM-side (regexp extract/replace inside
-    whole-stage codegen). Only the hard rows (relative hrefs, dot
-    segments, odd schemes/escaping) take the Arrow round-trip through the
-    exact pandas UDF. Both branches implement the same golden contract
-    (purl.normalize/normalize_key); the split is a pure optimization.
-
-    Composition of canonize_links_prepared + canonize_links_split; heavy
-    callers (the engine's per-round candidate pipeline) should persist
-    the prepared projection between the two so the mask battery runs
-    once per link — this convenience wrapper leaves the plan uncached
-    (correct, but catalyst collapses the projection into both union
-    branches).
-
-    ``df`` must carry ``parent_url`` plus passthrough columns; returns the
-    passthrough columns + (url, host, url_key) with ``href_col`` consumed.
-    """
-    from pyspark.sql import functions as F
-
-    if not native:
-        # _PRECOMP columns are consumed here and must never leak into the
-        # output schema — on ANY path, including native=False (ADVICE r3:
-        # the passthrough list used to keep them on the non-native path)
-        passthrough = [
-            c
-            for c in df.columns
-            if c not in ("parent_url", href_col) and c not in _PRECOMP
-        ]
-        return df.select(
-            *passthrough,
-            udf(F.col("parent_url"), F.col(href_col)).alias("c"),
-        ).select(
-            *passthrough,
-            F.col("c.url").alias("url"),
-            F.col("c.host").alias("host"),
-            F.col("c.url_key").alias("url_key"),
-        )
-
-    fast, slow = canonize_links_split(
-        canonize_links_prepared(df, href_col), udf
-    )
-    return fast.unionByName(slow)
-
-
 def canonize_urls(df, url_col, url_key_udf):
     """Derive ``url_key`` for raw URL strings (the seed path — no parent
-    resolution, just U3). Same native/exact split as canonize_links: the
+    resolution, just U3). Same native/exact split as the link path: the
     common clean absolute URL is keyed ENTIRELY JVM-side; odd rows
     (dot-segments, control chars, opaque/relative forms) take the exact
     pandas UDF. Keeps seeding off the Python path for large seed tables
@@ -538,22 +493,12 @@ def pd_canonize(parent_urls: pd.Series, hrefs: pd.Series) -> pd.DataFrame:
 
 def register_udfs():
     """Create the pandas UDF objects (deferred import so pure-Python callers
-    never need a JVM). CRAWLSPARK_UDF_STATS=1 makes every worker append
-    per-batch (rows, seconds) lines to /tmp/crawlspark_udf_stats.log —
-    the tool for spotting silent recomputation of UDF stages."""
+    never need a JVM)."""
     import contextlib
     import gc as _gc
-    import os as _os
-    import time as _time
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
-
-    stats = _os.environ.get("CRAWLSPARK_UDF_STATS") == "1"
-
-    def _log(name, n, dt):
-        with open("/tmp/crawlspark_udf_stats.log", "a") as f:
-            f.write(f"{name} {n} {dt:.3f} pid={_os.getpid()}\n")
 
     @contextlib.contextmanager
     def _no_gc():
@@ -571,21 +516,8 @@ def register_udfs():
 
     @F.pandas_udf(T.StringType())
     def url_key_udf(urls: pd.Series) -> pd.Series:
-        t0 = _time.time()
         with _no_gc():
-            out = pd_url_key(urls)
-        if stats:
-            _log("url_key", len(urls), _time.time() - t0)
-        return out
-
-    @F.pandas_udf(T.StringType())
-    def resolve_udf(parent_urls: pd.Series, hrefs: pd.Series) -> pd.Series:
-        t0 = _time.time()
-        with _no_gc():
-            out = pd_resolve(parent_urls, hrefs)
-        if stats:
-            _log("resolve", len(hrefs), _time.time() - t0)
-        return out
+            return pd_url_key(urls)
 
     canon_t = T.StructType(
         [
@@ -597,12 +529,8 @@ def register_udfs():
 
     @F.pandas_udf(canon_t)
     def canonize_udf(parent_urls: pd.Series, hrefs: pd.Series) -> pd.DataFrame:
-        t0 = _time.time()
         with _no_gc():
-            out = pd_canonize(parent_urls, hrefs)
-        if stats:
-            _log("canonize", len(hrefs), _time.time() - t0)
-        return out
+            return pd_canonize(parent_urls, hrefs)
 
     # NOTE on double evaluation: a deterministic Python UDF referenced by
     # both a Filter and a Project gets cloned by filter pushdown and was
@@ -611,11 +539,7 @@ def register_udfs():
     # (engine.py candidate pipeline) — NOT by marking the UDFs
     # non-deterministic, which blocked enough other optimizations to be a
     # net 7x loss on the window/anti-join stages.
-    return {
-        "url_key": url_key_udf,
-        "resolve": resolve_udf,
-        "canonize": canonize_udf,
-    }
+    return {"url_key": url_key_udf, "canonize": canonize_udf}
 
 
 def host_col(url_col):
@@ -653,12 +577,4 @@ def accept_filter_col(url_col, host: str, reject: list[str], accept_pats: list[s
     from pyspark.sql import functions as F
 
     c = F.col(url_col) if isinstance(url_col, str) else url_col
-    pred = host_col(c) == F.lit(host)
-    for pat in reject:
-        pred = pred & ~c.rlike(pat)
-    if accept_pats:
-        any_acc = F.lit(False)
-        for pat in accept_pats:
-            any_acc = any_acc | c.rlike(pat)
-        pred = pred & any_acc
-    return pred
+    return accept_filter_with_host(c, host_col(c), host, reject, accept_pats)

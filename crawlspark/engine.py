@@ -28,27 +28,23 @@ order, seen set, and span documents. Verified against crawlspark.oracle.
 from __future__ import annotations
 
 import logging
-import os
-import time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import canon
 from .fetch import resolve_fetch
-from .frontier import dedup_candidates
+from .frontier import DedupResult, dedup_candidates
 from .parse import parse_stage
 from .robots import apply_robots
 from .schedule import schedule_round, spread_for_fetch
 from .schemas import SEEDS
 from .storage import CheckpointStore
-
-_DEBUG_TIMING = os.environ.get("CRAWLSPARK_DEBUG_TIMING") == "1"
 
 log = logging.getLogger(__name__)
 
@@ -65,28 +61,19 @@ def _parallel_jobs(*thunks) -> list:
     threads submit them as concurrent jobs instead; the scheduler
     interleaves their (small) task sets across free slots. Results are
     returned in thunk order; the first exception propagates."""
-    if len(thunks) == 1:
-        return [thunks[0]()]
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
     with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
         futs = [ex.submit(t) for t in thunks]
         return [f.result() for f in futs]
 
 
-class _Tick:
-    """Per-round stage timer (CRAWLSPARK_DEBUG_TIMING=1): prints the wall
-    time between stage marks so scaling work stays measurement-driven."""
-
-    def __init__(self, label: str):
-        self.label = label
-        self.t = time.time()
-
-    def __call__(self, stage: str) -> None:
-        if _DEBUG_TIMING:
-            now = time.time()
-            print(f"    [{self.label}] {stage}: {now - self.t:.2f}s", flush=True)
-            self.t = now
-        else:
-            self.t = time.time()
+def _release_checkpoint(df: Optional[DataFrame]) -> None:
+    """Free the blocks of a lazy ``localCheckpoint`` (the in-memory
+    frontier handoff). ``DataFrame.unpersist`` does nothing on one: the
+    blocks belong to the RDD under its ``LogicalRDD`` plan."""
+    if df is not None:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 @dataclass
@@ -152,13 +139,6 @@ class CrawlConfig:
     # crawl's per-round seen scan reads O(fanin) batch dirs instead of
     # O(rounds). 0 disables.
     seen_compact_fanin: int = 16
-    # Two-tier parse (parse.py native tier): pages passing the clean-page
-    # grammar are link/span-extracted entirely JVM-side; only dirty pages
-    # cross into the exact Arrow parse. Bit-exact either way (routing
-    # equality pinned by tests/test_native_parse.py); the switch exists
-    # for A/B measurement. Hooks (process_fn/remove_fn) force the exact
-    # tier regardless.
-    native_parse: bool = True
 
     def __post_init__(self):
         # accept/reject regexes are evaluated under THREE dialects
@@ -193,6 +173,23 @@ class CrawlResult:
         return self.store.read("lineage")
 
 
+@dataclass
+class _RoundCommit:
+    """What round ``r``'s background commit writes and releases."""
+
+    r: int
+    state: dict  # _state.json once every sink below is durable
+    metrics: tuple  # (scheduled, fetched_ok, new_urls)
+    lineage: Optional[list]  # (reason, n) rows; None in a drain round
+    fresh: Optional[DataFrame]  # kept fresh keys, appended to seen
+    bloom: bool  # roll the fresh keys into the bloom bitmaps
+    next_frontier: Optional[DataFrame]  # snapshot as frontier batch r+1
+    order_append: Future  # running since the documents write
+    handles: list  # round caches to unpersist
+    dedup: Optional[DedupResult]
+    prev_frontier: Optional[DataFrame]  # the handoff round r consumed
+
+
 class Crawler:
     def __init__(
         self,
@@ -203,7 +200,7 @@ class Crawler:
     ):
         self.spark = spark
         self.cfg = config
-        P = config.num_partitions or spark.sparkContext.defaultParallelism
+        self.P = config.num_partitions or spark.sparkContext.defaultParallelism
         if config.broadcast_pages:
             self.pages = pages
         else:
@@ -221,7 +218,7 @@ class Crawler:
             # spark.local.dir (tmpfs in the bench = OS page cache, zero
             # GC); the cached partitioning still avoids the per-round
             # exchange+sort on the big side.
-            self.pages = pages.repartition(P, "host", "url_key").persist(
+            self.pages = pages.repartition(self.P, "host", "url_key").persist(
                 StorageLevel.DISK_ONLY
             )
         self.robots = robots_rules
@@ -234,7 +231,6 @@ class Crawler:
         self._robots_compiled = compile_robots(robots_rules)
         self.store = CheckpointStore(spark, config.checkpoint_dir)
         self.udfs = canon.register_udfs()
-        self.P = config.num_partitions or spark.sparkContext.defaultParallelism
         if config.multi_host:
             if config.hosts is not None:
                 # dedupe user-supplied hosts: the accept join is a plain
@@ -262,12 +258,11 @@ class Crawler:
         # (see _bloom_probe) — never checkpointed, seen is the exact source
         self._bloom_dict = None
         # pipelined round commit (see run()): the pending commit future
-        # and its round, the in-memory next-frontier handoff, and the
-        # persisted frontier cache the NEXT commit must release
+        # and its round, and the in-memory next-frontier handoff (a lazy
+        # localCheckpoint the commit of the round consuming it releases)
         self._pending_commit = None
         self._pending_round = None
         self._commit_pool = None
-        self._next_frontier = None
         self._frontier_handle = None
         # robots crawl-delay → per-host budgets (broadcast policy state)
         self._host_budgets = None
@@ -406,7 +401,6 @@ class Crawler:
         offset past max(entry_order), so the only driver traffic is one
         scalar agg. entry_order must be distinct (sitemapsrc emits a
         dense 0..n-1) — ties would make the push order nondeterministic."""
-        tick = _Tick("init")
         order = 0
         smdf = None
         if sitemap_entries is not None:
@@ -450,7 +444,6 @@ class Crawler:
                 "parent_disc", "link_index", "priority",
             )
         )
-        tick("seed cands built")
         # seed dense-order buckets on link_index (= seed_order): one cheap
         # count replaces the range-sampling pass over the canonize chain
         if isinstance(seeds, DataFrame) or smdf is not None:
@@ -459,22 +452,14 @@ class Crawler:
             n_seed = len(rows)
         order_bucket = None
         if n_seed > 0:
-            order_bucket = F.greatest(
-                F.lit(0),
-                F.least(
-                    F.lit(self.P - 1),
-                    F.floor(
-                        F.col("link_index").cast("long")
-                        * F.lit(self.P) / F.lit(n_seed)
-                    ),
-                ),
+            order_bucket = self._order_bucket(
+                F.col("link_index").cast("long"), n_seed
             )
         res = dedup_candidates(
             cands, None, pushed=0, limit=self.cfg.limit,
             limit_reached=False, num_partitions=self.P,
             order_bucket=order_bucket,
         )
-        tick("seed dedup")
         # NOTE: reference seed-push failures are logged, not flag-setting
         # (crawler.go:320-329); the flag only matters for parse-time pushes
         # and with a 0-room budget the first parse push trips it anyway —
@@ -491,9 +476,424 @@ class Crawler:
             lambda: self.store.append("frontier", frontier, 0),
             lambda: self._append_seen(res.fresh, 0),
         )
-        tick("seed sinks (concurrent)")
         res.unpersist()
         return res.pushed_end, res.limit_reached
+
+    def _order_bucket(self, offset: Column, span: int) -> Column:
+        """Analytic dense-order bucket: ``offset`` (≥ 0, monotone in the
+        order key) spread over ``span`` values into P buckets — replaces
+        a sampled range partitioning (one full pass less)."""
+        return F.greatest(
+            F.lit(0),
+            F.least(
+                F.lit(self.P - 1),
+                F.floor(offset * F.lit(self.P) / F.lit(span)),
+            ),
+        )
+
+    # -- round phases -----------------------------------------------------
+    def _fetch_parse(self, r: int, frontier: DataFrame, handles: list):
+        """Schedule → robots → fetch → parse, then the documents append
+        and the order append. Returns (parsed, carry, order append
+        future); the round's caches go into ``handles``."""
+        cfg = self.cfg
+        scheduled, carry = schedule_round(
+            frontier, cfg.host_budget, cfg.priority_order,
+            host_budgets=self._host_budgets,
+            default_budget=self._default_budget,
+        )
+        scheduled = spread_for_fetch(
+            scheduled.withColumn("round", F.lit(r)), self.P, salt=r
+        )
+        allowed, denied = apply_robots(
+            scheduled, self.robots, self._robots_compiled
+        )
+        fetched = resolve_fetch(
+            allowed,
+            self.pages,
+            allowed_hosts=self._hosts_df,
+            crawl_host=None if cfg.multi_host else cfg.host,
+            broadcast_pages=cfg.broadcast_pages,
+        )
+        # the hooks run inside the Python parse loop: they force the
+        # exact tier
+        native = cfg.process_fn is None and cfg.remove_fn is None
+        if native:
+            # the native/exact tier split scans `fetched` twice (two
+            # disjoint filters); persist the round batch so the fetch
+            # join runs once. DISK_ONLY for the same reason as the
+            # pages cache: HTML bodies must never be heap-resident,
+            # and spark.local.dir sits on tmpfs in the bench. Cost is
+            # bounded by ROUND size, never corpus size. (Measured
+            # alternative, rejected: skipping this persist and
+            # streaming the join per tier re-runs the probe-side
+            # hash build and the routing grammar per tier — paired
+            # A/B at local[8]/400k pages: 176.4 s -> 229.5 s.)
+            from .parse import mark_dirty
+
+            # routing flag computed INTO the cache: the clean-page
+            # grammar runs once per page here; the tier filters in
+            # parse_stage read the cached boolean
+            fetched = mark_dirty(fetched).persist(StorageLevel.DISK_ONLY)
+        parsed = parse_stage(
+            fetched,
+            process_fn=cfg.process_fn,
+            remove_fn=cfg.remove_fn,
+            native=native,
+        )
+        if self.robots is not None:
+            denied_rows = denied.select(
+                "url", "host", "url_key", "round", "disc_order", "priority",
+                F.lit(0).alias("status"),
+                F.lit(False).alias("fetched_ok"),
+                F.lit(None).cast(parsed.schema["spans"].dataType).alias("spans"),
+                F.lit(None).cast(parsed.schema["links"].dataType).alias("links"),
+            )
+            parsed = parsed.unionByName(denied_rows)
+        parsed = parsed.persist()
+        handles.append(parsed)
+        if native:
+            handles.append(fetched)
+
+        # SNK1: documents (Process runs even after the limit flag) —
+        # this write is also the job that materializes the parsed
+        # cache, so every later consumer (order write, fused agg,
+        # candidate pipeline) is a cache read
+        self.store.append(
+            "documents",
+            parsed.filter(F.col("fetched_ok")).select(
+                F.col("url").alias("doc_id"), "spans"
+            ),
+            r,
+        )
+        # the order append reads the parsed cache only — submit it
+        # from its own thread so it overlaps the fused agg (independent
+        # sinks; per-round serial latency is the Amdahl term of the
+        # scaling gate). The commit joins it.
+        order_pool = ThreadPoolExecutor(max_workers=1)
+        order_append = order_pool.submit(
+            self.store.append,
+            "order",
+            parsed.select(
+                "url", "host", "url_key", "round", "disc_order",
+                "priority", "status", "fetched_ok",
+            ),
+            r,
+        )
+        order_pool.shutdown(wait=False)
+        return parsed, carry, order_append
+
+    def _candidates(self, parsed: DataFrame, handles: list):
+        """The round's canonicalized links. Returns (flagged, accepted,
+        resolved_ok, accept_expr): every canonized link with what the
+        accept filter reads, the accepted rows keyed for dedup, and the
+        two predicates the fused agg counts; caches go into
+        ``handles``."""
+        cfg = self.cfg
+        # parent-derived canon columns are computed HERE, before the link
+        # explode, so each page's regexes run once instead of once per
+        # link (fanout ~19x on the bench graph)
+        links = parsed.filter(F.col("fetched_ok")).select(
+            F.col("url").alias("parent_url"),
+            F.col("disc_order").alias("parent_disc"),
+            "priority",
+            *canon.parent_cols(F.col("url")),
+            F.explode("links").alias("l"),
+        ).select(
+            "parent_url", "parent_disc", "priority",
+            "_pprefix", "_phost", "_parent_ok",
+            F.col("l.link_index").alias("link_index"),
+            F.col("l.href").alias("href"),
+        )
+        # canonicalization: JVM-native for the common absolute/
+        # root-relative case, exact fused pandas UDF for the rest
+        # (canon.py). The persist sits on the ONE-PASS prepared
+        # projection, BELOW the fast/slow union: the mask battery
+        # and all native value expressions run exactly once per
+        # link when the fused agg materializes the cache
+        # (the previous union-of-filtered-branches shape
+        # re-evaluated the mask towers per branch and per output
+        # column — the round-4 event logs showed it as the
+        # largest stage of the crawl; the one-pass cached shape
+        # measured ~4x faster at 19.35M links). The persist is
+        # also the optimizer barrier that keeps filter pushdown
+        # from cloning the UDF into a Filter (~3x Python CPU,
+        # measured in round 2).
+        cands_pre = canon.canonize_links_prepared(links, "href").persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        cands_fast, cands_slow = canon.canonize_links_split(
+            cands_pre, self.udfs["canonize"]
+        )
+        # the slow (dirty-href) side is persisted POST-UDF so the
+        # exact resolver runs once per dirty link, not once per
+        # consumer (the fused agg materializes it; the dedup scan
+        # reads both caches) — tiny by the two-tier premise
+        cands_slow = cands_slow.persist(StorageLevel.MEMORY_AND_DISK)
+        handles += [cands_pre, cands_slow]
+        cands_raw = cands_fast.unionByName(cands_slow)
+
+        resolved_ok = F.col("url").isNotNull() & F.col("url_key").isNotNull()
+        if cfg.accept_fn is not None:
+            # IsAcceptedFunc seam: the user callable REPLACES F1
+            # (crawler.go:137-142), evaluated as an Arrow-batched
+            # pandas UDF over the cached candidates
+            _fn = cfg.accept_fn
+
+            @F.pandas_udf("boolean")
+            def _accept_udf(urls: pd.Series) -> pd.Series:
+                return urls.map(
+                    lambda u: bool(_fn(u)) if u is not None else False
+                ).astype(bool)
+
+            flagged = cands_raw
+            accept_expr = resolved_ok & _accept_udf(F.col("url"))
+        elif cfg.multi_host:
+            # membership flag via one broadcast join — shared by
+            # the accept filter AND the lineage counts (no per-
+            # round collect of the host universe, no isin literal
+            # list in the plan)
+            flagged = cands_raw.join(
+                F.broadcast(self._hosts_df.withColumn("_hin", F.lit(True))),
+                "host",
+                "left",
+            )
+            accept_expr = resolved_ok & F.col("_hin").isNotNull()
+        else:
+            flagged = cands_raw
+            accept_expr = resolved_ok & canon.accept_filter_with_host(
+                "url", "host", cfg.host, list(cfg.reject), list(cfg.accept),
+            )
+
+        accepted = flagged.filter(accept_expr).withColumn(
+            "seen_key", self._seen_key()
+        ).select(
+            "url", "host", "url_key", "seen_key",
+            "parent_disc", "link_index", "priority",
+        )
+        return flagged, accepted, resolved_ok, accept_expr
+
+    @staticmethod
+    def _parsed_counts(parsed: DataFrame) -> DataFrame:
+        """The scheduled/fetched counts of SNK2 metrics: all a drain
+        round aggregates, and the first half of the fused agg."""
+        return parsed.agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("fetched_ok").cast("long")).alias("ok"),
+        )
+
+    def _fused_agg(self, r, parsed, flagged, resolved_ok, accept_expr):
+        """ONE fused driver-synchronized job per round for every scalar
+        the control flow needs: scheduled/fetched counts (SNK2 metrics)
+        × Q3 error-taxonomy counts (queue.go:9-21 reasons; 'duplicate'
+        covers in-round and cross-round — the reference has a single
+        ErrDuplicateURL). parsed is already cached (documents write);
+        this job materializes the candidate caches."""
+        sc = self.spark.sparkContext
+        sc.setJobDescription(f"fused-agg r{r}")
+        row = (
+            self._parsed_counts(parsed)
+            .crossJoin(
+                flagged.agg(
+                    F.count("*").alias("raw"),
+                    F.count(F.when(resolved_ok, 1)).alias("resolved"),
+                    F.count(F.when(accept_expr, 1)).alias("accepted"),
+                    # accepted parent_disc bounds: drive the
+                    # sampling-free dense-order buckets (same
+                    # fused job — no extra action)
+                    F.min(
+                        F.when(accept_expr, F.col("parent_disc"))
+                    ).alias("pd_lo"),
+                    F.max(
+                        F.when(accept_expr, F.col("parent_disc"))
+                    ).alias("pd_hi"),
+                    # max attempt order key: makes the limit-
+                    # boundary trailing-attempt check in
+                    # dedup_candidates a pure scalar compare
+                    # (no extra jobs on the limit-hit round)
+                    F.max(
+                        F.when(
+                            accept_expr,
+                            F.struct("parent_disc", "link_index"),
+                        )
+                    ).alias("att_max"),
+                )
+            )
+            .collect()[0]
+        )
+        sc.setJobDescription(None)
+        return row
+
+    def _dedup(self, accepted, row, pushed, limit_reached):
+        """Seen probe + dedup of the accepted candidates. Returns the
+        DedupResult and whether the round probed the bloom bitmaps."""
+        cfg = self.cfg
+        seen = self.store.read("seen")
+        probe = cfg.seen_probe
+        if probe == "auto":
+            # per-round guard: broadcast only while the candidate
+            # key set (bounded above by the accepted count, known
+            # from the fused agg — no extra job) fits the byte
+            # budget; large rounds take the shuffling merge path
+            est = int(row["accepted"]) * cfg.broadcast_probe_key_bytes
+            probe = (
+                "broadcast" if est < cfg.broadcast_probe_max_bytes else "merge"
+            )
+        self.probe_choices.append(probe)
+        bloom = None
+        if cfg.use_bloom and probe == "merge":
+            bloom = self._bloom_probe()
+        else:
+            # no prefilter (it cannot pay where the broadcast
+            # probe already streams seen once against the round's
+            # bounded key set). Unrolled bitmaps would miss this
+            # round's keys: drop them, the next merge round
+            # rebuilds them from seen
+            self._bloom_dict = None
+        # sampling-free dense order: the accepted parents' disc range is
+        # known from the fused agg, so the global FIFO index uses
+        # analytic order-buckets (monotone in (parent_disc, link_index))
+        order_bucket = None
+        if row["pd_lo"] is not None:
+            pd_lo = int(row["pd_lo"])
+            order_bucket = self._order_bucket(
+                F.col("parent_disc") - F.lit(pd_lo),
+                int(row["pd_hi"]) - pd_lo + 1,
+            )
+        limited = cfg.limit > 0
+        res = dedup_candidates(
+            accepted, seen.select(F.col("url_key").alias("seen_key")),
+            pushed=pushed, limit=cfg.limit,
+            limit_reached=limit_reached, num_partitions=self.P,
+            bloom=bloom,
+            n_attempts=int(row["accepted"]) if limited else None,
+            seen_probe=probe,
+            order_bucket=order_bucket,
+            attempts_max=(
+                tuple(row["att_max"])
+                if limited and row["att_max"] is not None
+                else None
+            ),
+        )
+        return res, bloom is not None
+
+    @staticmethod
+    def _lineage(row, res: DedupResult) -> list:
+        """Q3 lineage rows: pure driver scalars, written driver-side by
+        the commit."""
+        n_raw, n_res, n_acc = (
+            int(row["raw"]), int(row["resolved"]), int(row["accepted"])
+        )
+        return [
+            ("unparseable", n_raw - n_res),
+            ("rejected", n_res - n_acc),
+            ("duplicate", n_acc - res.n_new),
+            ("budget", res.n_new - res.n_kept),
+            ("pushed", res.n_kept),
+        ]
+
+    @staticmethod
+    def _next_frontier(carry, fresh) -> Optional[DataFrame]:
+        """Next frontier = carryover ∪ fresh (FIFO: carry first by disc),
+        or None when both are absent.
+
+        localCheckpoint, NOT persist: the in-memory frontier handoff to
+        round r+1 must TRUNCATE lineage the way the parquet round-trip
+        used to — a plain persist leaves the logical plan referencing the
+        whole previous round's tree, which compounds exponentially across
+        rounds (measured: a 2 GB plan string by round ~10). Lazy
+        (eager=False) so the materialization happens inside the
+        background snapshot write, off the critical path. The DURABLE
+        checkpoint is still the parquet snapshot; the local checkpoint
+        only serves the in-session pipeline (on executor loss the round
+        job fails and the crawl resumes from the parquet state — same
+        contract)."""
+        nxt = None
+        if carry is not None:
+            nxt = carry.select(
+                "url", "host", "url_key", "seen_key", "disc_order", "priority"
+            )
+        if fresh is not None:
+            nxt = fresh if nxt is None else nxt.unionByName(fresh)
+        return None if nxt is None else nxt.localCheckpoint(eager=False)
+
+    def _commit(self, rc: _RoundCommit) -> None:
+        """Round ``rc.r``'s background commit chain: its Spark sinks
+        (concurrent, over cached inputs), the driver-side sinks, the
+        state write, seen compaction, and the release of the round's
+        caches. The state is written only after every round-r sink,
+        the order append included, is durable."""
+        nb = rc.r + 1
+        jobs, bitmaps_at = [], None
+        if rc.fresh is not None:
+            jobs.append(lambda: self._append_seen(rc.fresh, nb))
+            if rc.bloom:
+                # fresh-key bitmaps for the next merge round; ORed into
+                # the driver dict below
+                bitmaps_at = len(jobs)
+                jobs.append(lambda: self._collect_fresh_bitmaps(rc.fresh))
+        if rc.next_frontier is not None:
+            jobs.append(lambda: self.store.append(
+                "frontier", rc.next_frontier.withColumn("round", F.lit(nb)),
+                nb,
+            ))
+        try:
+            results = _parallel_jobs(*jobs)
+        finally:
+            # join the order append even when a tail job failed: its
+            # own failure must not hide
+            rc.order_append.result()
+        # driver-side sinks (no Spark jobs)
+        self._append_metrics_local(rc.r, *rc.metrics)
+        if rc.lineage is not None:
+            self._append_lineage_local(rc.r, rc.lineage)
+        if bitmaps_at is not None:
+            self._roll_bloom_local(results[bitmaps_at])
+        self.store.write_state(rc.state)
+        # post-commit maintenance: bound the seen scan's file count. Runs
+        # AFTER the state write, so the compacted label (= the committed
+        # next_round) always survives the resume truncate; crash
+        # mid-compaction is completed by the store's journal recovery,
+        # and rows keep first_round so resume to ANY round stays exact
+        # (truncate_after filters compacted dirs on it). Round r+1
+        # cannot observe a half-compacted table: its seen read happens
+        # after _join_commit.
+        if self.cfg.seen_compact_fanin > 0:
+            self.store.maybe_compact(
+                "seen", upto=nb, round_col="first_round",
+                fanin=self.cfg.seen_compact_fanin,
+            )
+        # release round-r caches (the next frontier is its own cache,
+        # already materialized by the snapshot write above)
+        for h in rc.handles:
+            h.unpersist()
+        if rc.dedup is not None:
+            rc.dedup.unpersist()
+        _release_checkpoint(rc.prev_frontier)
+
+    def _reset_pipeline(self) -> None:
+        """Entry guard of run(): wait out the commit chain of a previous
+        run() that aborted mid-pipeline BEFORE reading state /
+        truncating (it must not race this run). Nothing raised its
+        failure, so log it; the resume truncates whatever it left
+        half-written."""
+        if self._commit_pool is None:
+            self._commit_pool = ThreadPoolExecutor(max_workers=1)
+        if self._pending_commit is not None:
+            try:
+                self._pending_commit.result()
+            except Exception:
+                log.error(
+                    "commit of round %s (orphaned by an aborted run) "
+                    "failed", self._pending_round, exc_info=True,
+                )
+            self._pending_commit = None
+        _release_checkpoint(self._frontier_handle)
+        self._frontier_handle = None
+        # the bitmaps are rebuilt from seen by this run's first merge
+        # round: a reused Crawler's dict may hold another crawl's keys,
+        # or miss keys of rounds an aborted run committed
+        self._bloom_dict = None
 
     # -- main loop ------------------------------------------------------
     def run(
@@ -503,37 +903,10 @@ class Crawler:
         resume: bool = False,
     ) -> CrawlResult:
         cfg = self.cfg
-        if self._commit_pool is None:
-            self._commit_pool = ThreadPoolExecutor(max_workers=1)
-        if self._pending_commit is not None:
-            # a previous run() aborted mid-pipeline: wait out its commit
-            # chain BEFORE reading state / truncating (it must not race
-            # this run). Nothing raised its failure, so log it; the resume
-            # below truncates whatever it left half-written
-            try:
-                self._pending_commit.result()
-            except Exception:
-                log.error(
-                    "commit of round %s (orphaned by an aborted run) "
-                    "failed", self._pending_round, exc_info=True,
-                )
-            self._pending_commit = None
-        if self._frontier_handle is not None:
-            try:
-                self._frontier_handle.unpersist()
-            except Exception:
-                pass
-        self._next_frontier = None
-        self._frontier_handle = None
-        # the bitmaps are rebuilt from seen by this run's first merge
-        # round: a reused Crawler's dict may hold another crawl's keys,
-        # or miss keys of rounds an aborted run committed
-        self._bloom_dict = None
+        self._reset_pipeline()
         state = self.store.read_state() if resume else None
         if state is None:
-            tick0 = _Tick("engine init")
             pushed, limit_reached = self._init_frontier(seeds, sitemap_entries)
-            tick0("seed frontier")
             r = 0
             n_frontier = pushed  # round-0 frontier = every successful push
             self.store.write_state(
@@ -545,9 +918,9 @@ class Crawler:
             r = state["next_round"]
             pushed = state["pushed"]
             limit_reached = state["limit_reached"]
-            n_frontier = state.get("frontier_size")  # None on old states
             if state.get("finished"):
                 return CrawlResult(self.store, r, pushed, limit_reached)
+            n_frontier = state["frontier_size"]
             # discard any torn round beyond the last committed state
             for t in ("documents", "order", "metrics", "lineage"):
                 self.store.truncate_after(t, r - 1)
@@ -555,499 +928,91 @@ class Crawler:
                 self.store.truncate_after(t, r)
 
         # Pipelined round commit: each round's independent sinks + state
-        # write + compaction run as ONE background chain (single-thread
-        # pool ⇒ commits serialize in round order) while the NEXT round's
-        # schedule→fetch→parse head — which depends only on the in-memory
-        # frontier handoff — runs concurrently. The chain is joined right
-        # before the next round's seen read (its first dependence
-        # on round-r durable state), by which point the 3-5 s tail has
-        # hidden behind the 15-70 s parse phase. Crash contract unchanged:
-        # state_r commits only after every round-r sink is durable, so a
-        # crash mid-pipeline resumes at the last committed round and
-        # truncates any partially-written later batches.
+        # write + compaction run as ONE background chain (_commit on a
+        # single-thread pool ⇒ commits serialize in round order) while
+        # the NEXT round's schedule→fetch→parse head — which depends only
+        # on the in-memory frontier handoff — runs concurrently. The
+        # chain is joined right before the next round's seen read (its
+        # first dependence on round-r durable state), by which point the
+        # 3-5 s tail has hidden behind the 15-70 s parse phase. Crash
+        # contract: state_r commits only after every round-r sink is
+        # durable, so a crash mid-pipeline resumes at the last committed
+        # round and truncates any partially-written later batches.
         drained = False
         while cfg.max_rounds == 0 or r < cfg.max_rounds:
-            tick = _Tick(f"engine r{r}")
-            if self._next_frontier is not None:
-                # in-memory handoff from the previous round (persisted;
-                # byte-identical rows to the parquet snapshot the commit
-                # chain is writing concurrently)
-                frontier = self._next_frontier
-                self._next_frontier = None
-            else:
+            # in-memory handoff from the previous round (byte-identical
+            # rows to the parquet snapshot its commit is writing)
+            frontier = self._frontier_handle
+            if frontier is None:
                 self._join_commit()
                 frontier = self.store.read_batch("frontier", r)
                 if frontier is None:
                     drained = True
                     break
                 frontier = frontier.drop("round")
-            if n_frontier is None:
-                # resume from a pre-tracking state file: one-time count
-                n_frontier = frontier.count()
-            tick("frontier read")
             if n_frontier == 0:
                 drained = True
                 break
-            scheduled, carry = schedule_round(
-                frontier, cfg.host_budget, cfg.priority_order,
-                host_budgets=self._host_budgets,
-                default_budget=self._default_budget,
+            handles = []
+            parsed, carry, order_append = self._fetch_parse(
+                r, frontier, handles
             )
-            scheduled = spread_for_fetch(
-                scheduled.withColumn("round", F.lit(r)), self.P, salt=r
-            )
-            allowed, denied = apply_robots(
-                scheduled, self.robots, self._robots_compiled
-            )
-            fetched = resolve_fetch(
-                allowed,
-                self.pages,
-                allowed_hosts=self._hosts_df,
-                crawl_host=None if cfg.multi_host else cfg.host,
-                broadcast_pages=cfg.broadcast_pages,
-            )
-            use_native_parse = (
-                cfg.native_parse
-                and cfg.process_fn is None
-                and cfg.remove_fn is None
-            )
-            fetched_handle = None
-            if use_native_parse:
-                # the native/exact tier split scans `fetched` twice (two
-                # disjoint filters); persist the round batch so the fetch
-                # join runs once. DISK_ONLY for the same reason as the
-                # pages cache: HTML bodies must never be heap-resident,
-                # and spark.local.dir sits on tmpfs in the bench. Cost is
-                # bounded by ROUND size, never corpus size. (Measured
-                # alternative, rejected: skipping this persist and
-                # streaming the join per tier re-runs the probe-side
-                # hash build and the routing grammar per tier — paired
-                # A/B at local[8]/400k pages: 176.4 s -> 229.5 s.)
-                from .parse import mark_dirty
-
-                # routing flag computed INTO the cache: the clean-page
-                # grammar runs once per page here; the tier filters in
-                # parse_stage read the cached boolean
-                fetched_handle = mark_dirty(fetched).persist(
-                    StorageLevel.DISK_ONLY
-                )
-                fetched = fetched_handle
-            parsed = parse_stage(
-                fetched,
-                process_fn=cfg.process_fn,
-                remove_fn=cfg.remove_fn,
-                native=use_native_parse,
-            )
-            if self.robots is not None:
-                denied_rows = denied.select(
-                    "url", "host", "url_key", "round", "disc_order", "priority",
-                    F.lit(0).alias("status"),
-                    F.lit(False).alias("fetched_ok"),
-                    F.lit(None).cast(parsed.schema["spans"].dataType).alias("spans"),
-                    F.lit(None).cast(parsed.schema["links"].dataType).alias("links"),
-                )
-                parsed = parsed.unionByName(denied_rows)
-            parsed = parsed.persist()
-
-            # SNK1: documents (Process runs even after the limit flag) —
-            # this write is also the job that materializes the parsed
-            # cache, so every later consumer (order write, fused agg,
-            # candidate pipeline) is a cache read
-            self.store.append(
-                "documents",
-                parsed.filter(F.col("fetched_ok")).select(
-                    F.col("url").alias("doc_id"), "spans"
-                ),
-                r,
-            )
-            tick("fetch+parse+documents write")
-            # the order append reads the parsed cache only — submit it
-            # from a driver thread so it overlaps the fused agg below
-            # (independent sinks; per-round serial latency is the Amdahl
-            # term of the scaling gate)
-            order_pool = ThreadPoolExecutor(max_workers=1)
-            order_fut = order_pool.submit(
-                self.store.append,
-                "order",
-                parsed.select(
-                    "url", "host", "url_key", "round", "disc_order",
-                    "priority", "status", "fetched_ok",
-                ),
-                r,
-            )
-
-            n_kept = 0
-            fresh = None
-            dedup_res = None
-            round_handles = []
-            tail_jobs = []  # independent sink jobs, submitted concurrently
-            bloom_tail_idx = None  # index of the fresh-bitmap job result
-            lineage_rows = None  # driver-side lineage rows for the commit
-            if not limit_reached:
-                # parent-derived canon columns (_pprefix/_phost/_parent_ok)
-                # are computed HERE, before the link explode, so each
-                # page's regexes run once instead of once per link
-                # (fanout ~19x on the bench graph); canonize_links
-                # consumes and drops them
-                _purl = F.col("url")
-                _ppath = F.regexp_extract(
-                    _purl, r"^[a-z][a-z0-9+.\-]*://[^/?#]*([^?#]*)", 1
-                )
-                links = parsed.filter(F.col("fetched_ok")).select(
-                    F.col("url").alias("parent_url"),
-                    F.col("disc_order").alias("parent_disc"),
-                    "priority",
-                    F.regexp_extract(
-                        _purl, r"^([a-z][a-z0-9+.\-]*://[^/?#]*)", 1
-                    ).alias("_pprefix"),
-                    F.regexp_extract(_purl, canon.SQL_HOST_RE, 1).alias(
-                        "_phost"
-                    ),
-                    (
-                        _purl.rlike(canon.SQL_ABS_SIMPLE)
-                        & ~_ppath.contains("%")
-                    ).alias("_parent_ok"),
-                    F.explode("links").alias("l"),
-                ).select(
-                    "parent_url", "parent_disc", "priority",
-                    "_pprefix", "_phost", "_parent_ok",
-                    F.col("l.link_index").alias("link_index"),
-                    F.col("l.href").alias("href"),
-                )
-                # canonicalization: JVM-native for the common absolute/
-                # root-relative case, exact fused pandas UDF for the rest
-                # (canon.py). The persist sits on the ONE-PASS prepared
-                # projection, BELOW the fast/slow union: the mask battery
-                # and all native value expressions run exactly once per
-                # link when the fused agg below materializes the cache
-                # (the previous union-of-filtered-branches shape
-                # re-evaluated the mask towers per branch and per output
-                # column — the round-4 event logs showed it as the
-                # largest stage of the crawl; the one-pass cached shape
-                # measured ~4x faster at 19.35M links). The persist is
-                # also the optimizer barrier that keeps filter pushdown
-                # from cloning the UDF into a Filter (~3x Python CPU,
-                # measured in round 2).
-                cands_pre = canon.canonize_links_prepared(
-                    links, "href"
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                round_handles.append(cands_pre)
-                cands_fast, cands_slow = canon.canonize_links_split(
-                    cands_pre, self.udfs["canonize"]
-                )
-                # the slow (dirty-href) side is persisted POST-UDF so the
-                # exact resolver runs once per dirty link, not once per
-                # consumer (the fused agg materializes it; the dedup scan
-                # reads both caches) — tiny by the two-tier premise
-                cands_slow = cands_slow.persist(StorageLevel.MEMORY_AND_DISK)
-                round_handles.append(cands_slow)
-                cands_raw = cands_fast.unionByName(cands_slow)
-
-                resolved_ok = (
-                    F.col("url").isNotNull() & F.col("url_key").isNotNull()
-                )
-                if cfg.accept_fn is not None:
-                    # IsAcceptedFunc seam: the user callable REPLACES F1
-                    # (crawler.go:137-142), evaluated as an Arrow-batched
-                    # pandas UDF over the cached candidates
-                    _fn = cfg.accept_fn
-
-                    @F.pandas_udf("boolean")
-                    def _accept_udf(urls: pd.Series) -> pd.Series:
-                        return urls.map(
-                            lambda u: bool(_fn(u)) if u is not None else False
-                        ).astype(bool)
-
-                    flagged = cands_raw
-                    accept_expr = resolved_ok & _accept_udf(F.col("url"))
-                elif cfg.multi_host:
-                    # membership flag via one broadcast join — shared by
-                    # the accept filter AND the lineage counts (no per-
-                    # round collect of the host universe, no isin literal
-                    # list in the plan)
-                    flagged = cands_raw.join(
-                        F.broadcast(
-                            self._hosts_df.withColumn("_hin", F.lit(True))
-                        ),
-                        "host",
-                        "left",
-                    )
-                    accept_expr = resolved_ok & F.col("_hin").isNotNull()
-                else:
-                    flagged = cands_raw
-                    accept_expr = resolved_ok & canon.accept_filter_with_host(
-                        "url", "host", cfg.host,
-                        list(cfg.reject), list(cfg.accept),
-                    )
-
-                cands = flagged.filter(accept_expr).withColumn(
-                    "seen_key", self._seen_key()
-                ).select(
-                    "url", "host", "url_key", "seen_key",
-                    "parent_disc", "link_index", "priority",
-                )
-
-                # ONE fused driver-synchronized job per round for every
-                # scalar the control flow needs: scheduled/fetched counts
-                # (SNK2 metrics) × Q3 error-taxonomy counts (queue.go:9-21
-                # reasons; 'duplicate' covers in-round and cross-round —
-                # the reference has a single ErrDuplicateURL). parsed is
-                # already cached (documents write); this job materializes
-                # the cands_raw cache.
-                self.spark.sparkContext.setJobDescription(
-                    f"fused-agg r{r}"
-                )
-                row = (
-                    parsed.agg(
-                        F.count("*").alias("n"),
-                        F.sum(F.col("fetched_ok").cast("long")).alias("ok"),
-                    )
-                    .crossJoin(
-                        flagged.agg(
-                            F.count("*").alias("raw"),
-                            F.count(F.when(resolved_ok, 1)).alias("resolved"),
-                            F.count(F.when(accept_expr, 1)).alias("accepted"),
-                            # accepted parent_disc bounds: drive the
-                            # sampling-free dense-order buckets (same
-                            # fused job — no extra action)
-                            F.min(
-                                F.when(accept_expr, F.col("parent_disc"))
-                            ).alias("pd_lo"),
-                            F.max(
-                                F.when(accept_expr, F.col("parent_disc"))
-                            ).alias("pd_hi"),
-                            # max attempt order key: makes the limit-
-                            # boundary trailing-attempt check in
-                            # dedup_candidates a pure scalar compare
-                            # (no extra jobs on the limit-hit round)
-                            F.max(
-                                F.when(
-                                    accept_expr,
-                                    F.struct("parent_disc", "link_index"),
-                                )
-                            ).alias("att_max"),
-                        )
-                    )
-                    .collect()[0]
-                )
-                self.spark.sparkContext.setJobDescription(None)
-                n_sched, n_ok = row["n"], int(row["ok"] or 0)
-                lin = row
-                tick(f"fused stats+lineage agg sched={n_sched}")
-                # first dependence on the previous round's durable state
-                # (seen batch, any compaction, the rolled bitmaps): join the
-                # pipelined commit chain here — it has been running
-                # concurrently under the whole fetch/parse/agg head
-                self._join_commit()
-                tick("commit join")
-                seen = self.store.read("seen")
-                probe = cfg.seen_probe
-                if probe == "auto":
-                    # per-round guard: broadcast only while the candidate
-                    # key set (bounded above by the accepted count, known
-                    # from the fused agg — no extra job) fits the byte
-                    # budget; large rounds take the shuffling merge path
-                    est = int(lin["accepted"]) * cfg.broadcast_probe_key_bytes
-                    probe = (
-                        "broadcast"
-                        if est < cfg.broadcast_probe_max_bytes
-                        else "merge"
-                    )
-                self.probe_choices.append(probe)
-                bloom_arg = None
-                if cfg.use_bloom and probe == "merge":
-                    bloom_arg = self._bloom_probe()
-                else:
-                    # no prefilter (it cannot pay where the broadcast
-                    # probe already streams seen once against the round's
-                    # bounded key set). Unrolled bitmaps would miss this
-                    # round's keys: drop them, the next merge round
-                    # rebuilds them from seen
-                    self._bloom_dict = None
-                # sampling-free dense order: the accepted parents' disc
-                # range is known from the fused agg, so the global FIFO
-                # index uses analytic order-buckets (monotone in
-                # (parent_disc, link_index)) instead of a sampled range
-                # partitioning — one full pass less per round
-                order_bucket = None
-                if lin["pd_lo"] is not None:
-                    pd_lo = int(lin["pd_lo"])
-                    span = int(lin["pd_hi"]) - pd_lo + 1
-                    order_bucket = F.greatest(
-                        F.lit(0),
-                        F.least(
-                            F.lit(self.P - 1),
-                            F.floor(
-                                (F.col("parent_disc") - F.lit(pd_lo))
-                                * F.lit(self.P) / F.lit(span)
-                            ),
-                        ),
-                    )
-                res = dedup_candidates(
-                    cands, seen.select(F.col("url_key").alias("seen_key")),
-                    pushed=pushed, limit=cfg.limit,
-                    limit_reached=limit_reached, num_partitions=self.P,
-                    bloom=bloom_arg,
-                    n_attempts=int(lin["accepted"]) if cfg.limit > 0 else None,
-                    seen_probe=probe,
-                    order_bucket=order_bucket,
-                    attempts_max=(
-                        tuple(lin["att_max"])
-                        if cfg.limit > 0 and lin["att_max"] is not None
-                        else None
-                    ),
-                )
-                dedup_res = res
-                tick("dedup")
-                pushed = res.pushed_end
-                limit_reached = res.limit_reached
-                n_kept = res.n_kept
-                fresh = res.fresh
-                if fresh is not None and n_kept > 0:
-                    _fresh, _r = fresh, r
-                    tail_jobs.append(
-                        lambda f=_fresh, b=_r + 1: self._append_seen(f, b)
-                    )
-                if bloom_arg is not None and fresh is not None and n_kept > 0:
-                    # fresh-key bitmaps for the next merge round; the
-                    # commit ORs them into the driver dict
-                    tail_jobs.append(
-                        lambda f=fresh: self._collect_fresh_bitmaps(f)
-                    )
-                    bloom_tail_idx = len(tail_jobs) - 1
-
-                n_raw, n_res, n_acc = (
-                    int(lin["raw"]), int(lin["resolved"]), int(lin["accepted"])
-                )
-                # Q3 lineage: pure driver scalars — written driver-side in
-                # the commit (was a per-round createDataFrame+write job)
-                lineage_rows = [
-                    ("unparseable", n_raw - n_res),
-                    ("rejected", n_res - n_acc),
-                    ("duplicate", n_acc - res.n_new),
-                    ("budget", res.n_new - n_kept),
-                    ("pushed", n_kept),
-                ]
-            else:
+            dedup = lineage = None
+            bloom = False
+            if limit_reached:
                 # post-limit drain round: no candidate pipeline, only the
                 # scheduled/fetched counts for metrics
-                stats = parsed.agg(
-                    F.count("*").alias("n"),
-                    F.sum(F.col("fetched_ok").cast("long")).alias("ok"),
-                ).collect()[0]
-                n_sched, n_ok = stats["n"], int(stats["ok"] or 0)
-                tick(f"drain stats agg sched={n_sched}")
-
-            # next frontier = carryover ∪ fresh (FIFO: carry first by disc)
-            parts = []
-            if carry is not None:
-                parts.append(carry.select(
-                    "url", "host", "url_key", "seen_key", "disc_order", "priority"
-                ))
-            if fresh is not None and n_kept > 0:
-                parts.append(fresh)
-            n_carry = n_frontier - n_sched
-            nxt_core = None
-            if parts:
-                nxt_core = parts[0]
-                for p in parts[1:]:
-                    nxt_core = nxt_core.unionByName(p)
-                # localCheckpoint, NOT persist: the in-memory frontier
-                # handoff to round r+1 must TRUNCATE lineage the way the
-                # parquet round-trip used to — a plain persist leaves the
-                # logical plan referencing the whole previous round's
-                # tree, which compounds exponentially across rounds
-                # (measured: a 2 GB plan string by round ~10). Lazy
-                # (eager=False) so the materialization happens inside the
-                # background snapshot write, off the critical path. The
-                # DURABLE checkpoint is still the parquet snapshot below;
-                # the local checkpoint only serves the in-session
-                # pipeline (on executor loss the round job fails and the
-                # crawl resumes from the parquet state — same contract).
-                nxt_core = nxt_core.localCheckpoint(eager=False)
-                tail_jobs.append(
-                    lambda df=nxt_core, b=r + 1: self.store.append(
-                        "frontier", df.withColumn("round", F.lit(b)), b
-                    )
+                row = self._parsed_counts(parsed).collect()[0]
+            else:
+                flagged, accepted, resolved_ok, accept_expr = (
+                    self._candidates(parsed, handles)
                 )
-            has_next = (n_carry + n_kept) > 0
-            n_frontier = n_carry + n_kept  # next round's size, tracked
-
-            # ---- pipelined commit: the round's independent sinks (seen/
-            # fresh bitmaps/lineage/metrics/frontier snapshot) read cached
-            # inputs. Submit them + the state write + compaction +
-            # unpersists as ONE background chain on the single-thread
-            # commit pool (chains serialize in round order) and let round
-            # r+1's fetch/parse head run concurrently off the in-memory
-            # frontier. Same crash contract: state_r is written only
-            # after every round-r sink (including the order append) has
-            # finished.
-            _handles = [parsed] + (
-                [fetched_handle] if fetched_handle is not None else []
-            ) + round_handles
-            _dedup_res = dedup_res
-            _prev_frontier = self._frontier_handle
-            _state = {
-                "next_round": r + 1, "pushed": pushed,
-                "limit_reached": limit_reached, "finished": not has_next,
-                "frontier_size": n_frontier,
-            }
-
-            def _commit(
-                jobs=tuple(tail_jobs), ofut=order_fut, opool=order_pool,
-                b_idx=bloom_tail_idx, lrows=lineage_rows, rr=r,
-                msched=n_sched, mok=n_ok, mkept=n_kept, st=_state,
-                handles=tuple(_handles), dres=_dedup_res,
-                prev_frontier=_prev_frontier,
-            ):
-                try:
-                    results = _parallel_jobs(*jobs) if jobs else []
-                finally:
-                    # join the order append even when a tail job failed:
-                    # its pool must not leak, nor its own failure hide
-                    opool.shutdown()
-                    ofut.result()
-                # driver-side sinks (no Spark jobs)
-                self._append_metrics_local(rr, msched, mok, mkept)
-                if lrows is not None:
-                    self._append_lineage_local(rr, lrows)
-                if b_idx is not None:
-                    self._roll_bloom_local(results[b_idx])
-                self.store.write_state(st)
-                # post-commit maintenance: bound the seen scan's file
-                # count. Runs AFTER the state write, so the compacted
-                # label (= the committed next_round) always survives the
-                # resume truncate; crash mid-compaction is completed by
-                # the store's journal recovery, and rows keep first_round
-                # so resume to ANY round stays exact (truncate_after
-                # filters compacted dirs on it). Round r+1 cannot observe
-                # a half-compacted table: its seen read happens after
-                # _join_commit.
-                if cfg.seen_compact_fanin > 0:
-                    self.store.maybe_compact(
-                        "seen", upto=rr + 1, round_col="first_round",
-                        fanin=cfg.seen_compact_fanin,
-                    )
-                # release round-r caches (the next frontier is its own
-                # cache, already materialized by the snapshot write above)
-                for h in handles:
-                    h.unpersist()
-                if dres is not None:
-                    dres.unpersist()
-                if prev_frontier is not None:
-                    prev_frontier.unpersist()
+                row = self._fused_agg(
+                    r, parsed, flagged, resolved_ok, accept_expr
+                )
+                # first dependence on the previous round's durable state
+                # (seen batch, any compaction, the rolled bitmaps): join
+                # the pipelined commit chain here — it has been running
+                # concurrently under the whole fetch/parse/agg head
+                self._join_commit()
+                dedup, bloom = self._dedup(accepted, row, pushed, limit_reached)
+                pushed, limit_reached = dedup.pushed_end, dedup.limit_reached
+                lineage = self._lineage(row, dedup)
+            n_sched, n_ok = row["n"], int(row["ok"] or 0)
+            n_kept = dedup.n_kept if dedup is not None else 0
+            fresh = dedup.fresh if n_kept > 0 else None
+            nxt = self._next_frontier(carry, fresh)
+            n_frontier = n_frontier - n_sched + n_kept
 
             # a drain round never joined the previous commit (it reads no
             # seen): join it here, or its failure would be overwritten and
             # this round's state write would move past it
             self._join_commit()
-            self._pending_commit = self._commit_pool.submit(_commit)
+            self._pending_commit = self._commit_pool.submit(
+                self._commit,
+                _RoundCommit(
+                    r=r,
+                    state={
+                        "next_round": r + 1, "pushed": pushed,
+                        "limit_reached": limit_reached,
+                        "finished": n_frontier == 0,
+                        "frontier_size": n_frontier,
+                    },
+                    metrics=(n_sched, n_ok, n_kept),
+                    lineage=lineage,
+                    fresh=fresh,
+                    bloom=bloom,
+                    next_frontier=nxt,
+                    order_append=order_append,
+                    handles=handles,
+                    dedup=dedup,
+                    prev_frontier=self._frontier_handle,
+                ),
+            )
             self._pending_round = r
-            self._frontier_handle = nxt_core
-            self._next_frontier = nxt_core
-            tick("round tail (submitted)")
+            self._frontier_handle = nxt
             r += 1
-            if not has_next:
+            if n_frontier == 0:
                 drained = True
                 break
 
@@ -1055,12 +1020,10 @@ class Crawler:
         # (also surfaces any background sink failure). The pool itself is
         # per-Crawler and idles between runs; if this run() raises before
         # reaching here, the next run() (or interpreter exit) waits out
-        # the orphaned chain — see the entry guard above.
+        # the orphaned chain — see _reset_pipeline.
         self._join_commit()
-        if self._frontier_handle is not None:
-            self._frontier_handle.unpersist()
-            self._frontier_handle = None
-        self._next_frontier = None
+        _release_checkpoint(self._frontier_handle)
+        self._frontier_handle = None
         # only a drained frontier finishes the crawl; a max_rounds stop
         # leaves state resumable (north rule: resumable from any round)
         if drained:

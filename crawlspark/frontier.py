@@ -21,8 +21,6 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-import time
 from dataclasses import dataclass
 from typing import Optional, Tuple
 
@@ -30,18 +28,10 @@ from pyspark import Broadcast
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_DEBUG_TIMING = os.environ.get("CRAWLSPARK_DEBUG_TIMING") == "1"
-
 # dense-order partition offsets: above this partition count the offsets
 # ship as a broadcast-joined DataFrame instead of a create_map literal
 # (a 10^5-entry literal in every round's plan bloats compile time)
 _OFFSETS_LITERAL_MAX = 256
-
-
-def _t(label: str, t0: float) -> float:
-    if _DEBUG_TIMING:
-        print(f"    [frontier] {label}: {time.time() - t0:.1f}s", flush=True)
-    return time.time()
 
 
 def with_dense_order(
@@ -76,11 +66,6 @@ def with_dense_order(
     internally (two actions share the range exchange)."""
     if num_partitions is None:
         num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    t0 = time.time()
-    if _DEBUG_TIMING:
-        # label the dense-order jobs in the event log (cleared below —
-        # a sticky description would mislabel every later job)
-        df.sparkSession.sparkContext.setJobDescription("dense-order")
     if bucket_col is not None:
         ranged = df.withColumn("_pid", bucket_col.cast("int"))
     else:
@@ -103,9 +88,6 @@ def with_dense_order(
     counts = {r["_pid"]: r["cnt"] for r in rows}
     if order_max_out is not None and rows:
         order_max_out.append(max(tuple(r["mx"]) for r in rows))
-    if _DEBUG_TIMING:
-        df.sparkSession.sparkContext.setJobDescription(None)
-    _t("dense-order counts collect", t0)
     offsets = {}
     acc = start
     for pid in sorted(counts):
@@ -284,7 +266,6 @@ def dedup_candidates(
     # times (sample, exchange, counts). With the cache, sampling and the
     # exchange read a small cached set. n_new falls out of the dense-order
     # per-partition counts (no dedicated count job).
-    t0 = time.time()
     new = new.persist()
     handles.append(new)
     _new_max_out: list = []
@@ -293,7 +274,6 @@ def dedup_candidates(
         handles=handles, bucket_col=order_bucket,
         order_max_out=_new_max_out,
     )
-    t0 = _t("dense-order(build)", t0)
     n_after_first_wins = n_new  # (first-wins count only needed for lineage)
 
     # budget: pushes succeed while done <= limit ⇒ room = limit+1-pushed

@@ -109,8 +109,8 @@ def _native_parent_cols(url):
     prefix, and the proof that purl.parse_url(page_url) succeeds with that
     exact scheme/host so ``prefix + trimmed_src`` equals
     purl.normalize(page_url, src).to_string() for rooted srcs (the same
-    argument canonize_links makes for rooted hrefs, tightened to a fully
-    printable-ASCII parent: purl rejects hosts containing any of
+    argument canonize_links_prepared makes for rooted hrefs, tightened to
+    a fully printable-ASCII parent: purl rejects hosts containing any of
     _BAD_HOST_CHARS, all of which the printable-minus-specials class
     excludes)."""
     from pyspark.sql import functions as F
@@ -237,10 +237,7 @@ def _make_parse_batch(process_fn=None, remove_fn=None):
 
     def _parse_batch(batches) -> Iterator:
         import gc as _gc
-        import os as _os
-        import time as _time
 
-        _stats = _os.environ.get("CRAWLSPARK_UDF_STATS") == "1"
         # The parse loop allocates heavily (DOM events, span tuples); in
         # long-lived pyspark workers the cyclic GC fires constantly over the
         # worker's whole heap (Arrow buffers, batch state) and was measured
@@ -250,9 +247,7 @@ def _make_parse_batch(process_fn=None, remove_fn=None):
         _gc_was_enabled = _gc.isenabled()
         _gc.disable()
         try:
-            yield from _parse_batches_inner(
-                batches, _stats, _os, _time, process_fn, remove_fn
-            )
+            yield from _parse_batches_inner(batches, process_fn, remove_fn)
         finally:
             if _gc_was_enabled:
                 _gc.enable()
@@ -260,11 +255,10 @@ def _make_parse_batch(process_fn=None, remove_fn=None):
     return _parse_batch
 
 
-def _parse_batches_inner(batches, _stats, _os, _time, process_fn, remove_fn):
+def _parse_batches_inner(batches, process_fn, remove_fn):
     import pyarrow as pa
 
     for batch in batches:
-        _t0 = _time.time()
         cols = {n: batch.column(n) for n in batch.schema.names}
         # to_pylist once per column: C++ -> list of str, far cheaper than
         # per-element scalar access
@@ -347,11 +341,6 @@ def _parse_batches_inner(batches, _stats, _os, _time, process_fn, remove_fn):
             ],
             names=_PASSTHROUGH + ["status", "fetched_ok", "spans", "links"],
         )
-        if _stats:
-            with open("/tmp/crawlspark_udf_stats.log", "a") as f:
-                f.write(
-                    f"parse {n} {_time.time() - _t0:.3f} pid={_os.getpid()}\n"
-                )
         yield out
 
 

@@ -127,8 +127,13 @@ def test_multi_host_powerlaw_budget(spark, tmp_path):
 
 
 def test_chain_rounds(spark, tmp_path):
+    """A 6-round crawl equals the oracle and releases every cache it
+    made, the in-memory frontier handoffs (local checkpoints) included."""
     pages, seeds = chain(6)
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs())
     result = run_spark_crawl(spark, tmp_path, pages, seeds, host="chain.example")
+    assert set(sc._jsc.getPersistentRDDs()) == before
     oracle = oracle_crawl(pages_index(pages), seeds, "chain.example")
     assert result.rounds == 6
     assert_matches_oracle(result, oracle)

@@ -35,14 +35,16 @@ def test_udfs_match_purl_through_spark(spark):
     df = spark.createDataFrame(rows, "parent string, href string")
     out = df.select(
         "parent", "href",
-        udfs["resolve"](F.col("parent"), F.col("href")).alias("resolved"),
-    ).withColumn("key", udfs["url_key"](F.col("resolved"))).collect()
+        udfs["canonize"](F.col("parent"), F.col("href")).alias("c"),
+    ).withColumn("key", udfs["url_key"](F.col("c.url"))).collect()
     for r in out:
         u = normalize(parse_url(r["parent"]), r["href"])
         want_resolved = u.to_string() if u else None
-        assert r["resolved"] == want_resolved
+        assert r["c"]["url"] == want_resolved
         if u is not None:
-            assert r["key"] == normalize_key(parse_url(r["resolved"]))
+            assert r["c"]["url_key"] == r["key"] == normalize_key(
+                parse_url(want_resolved)
+            )
 
 
 def test_accept_filter_col_matches_purl(spark):
@@ -65,147 +67,120 @@ def test_accept_filter_col_matches_purl(spark):
         assert got[u] == accept(parse_url(u), "example.com", reject, acc)
 
 
-def test_native_canonize_matches_udf(spark):
-    """The JVM-native canonicalization fast path must agree with the exact
-    pandas-UDF path row for row over every href shape."""
+def _href_rows(bulk: bool) -> list:
+    """(parent_url, rid, href) rows over every href shape; ``bulk`` adds
+    200 absolute machine-generated links (the native-path bulk case)."""
     from tests.test_canon_vectorized import HREFS, PARENTS
 
-    udfs = canon.register_udfs()
-    rows = []
-    i = 0
-    for p in PARENTS:
-        for h in HREFS:
-            rows.append((p, i, h))
-            i += 1
-    # plus absolute machine-generated links (the native-path bulk case)
-    for j in range(200):
-        rows.append((PARENTS[0], i, f"http://h{j % 7}.example/p/{j}?x={j}#f{j}"))
-        i += 1
+    rows = [(p, 0, h) for p in PARENTS for h in HREFS]
+    if bulk:
+        rows += [(PARENTS[0], 0, f"http://h{j % 7}.example/p/{j}?x={j}#f{j}")
+                 for j in range(200)]
+    return [(p, i, h) for i, (p, _, h) in enumerate(rows)]
+
+
+def _prepared_input(spark, rows):
+    """The engine's link shape: parent_url plus its hoisted parent
+    columns (canon.parent_cols) above the href."""
     df = spark.createDataFrame(rows, "parent_url string, rid long, href string")
+    return df.select(
+        "parent_url", "rid", "href", *canon.parent_cols(F.col("parent_url"))
+    )
 
-    got_native = {
-        r["rid"]: (r["url"], r["host"], r["url_key"])
-        for r in canon.canonize_links(df, "href", udfs["canonize"], native=True).collect()
+
+def _pd_reference(rows) -> dict:
+    """The pure-pandas exact path (pd_canonize), computed on the driver."""
+    out = canon.pd_canonize(
+        pd.Series([r[0] for r in rows]), pd.Series([r[2] for r in rows])
+    )
+    return {
+        r[1]: (u, h, k)
+        for r, u, h, k in zip(rows, out["url"], out["host"], out["url_key"])
     }
-    got_udf = {
-        r["rid"]: (r["url"], r["host"], r["url_key"])
-        for r in canon.canonize_links(df, "href", udfs["canonize"], native=False).collect()
+
+
+def _as_dict(df) -> dict:
+    return {
+        r["rid"]: (r["url"], r["host"], r["url_key"]) for r in df.collect()
     }
-    assert got_native == got_udf
+
+
+def test_native_canonize_matches_udf(spark):
+    """The JVM-native canonicalization fast path must agree with the exact
+    pandas path row for row over every href shape."""
+    rows = _href_rows(bulk=True)
+    fast, slow = canon.canonize_links_split(
+        canon.canonize_links_prepared(_prepared_input(spark, rows), "href"),
+        canon.register_udfs()["canonize"],
+    )
+    assert _as_dict(fast.unionByName(slow)) == _pd_reference(rows)
     # sanity: the native branch actually covered the machine-generated bulk
-    from pyspark.sql import functions as F
-
-    n_native = df.filter(
-        F.col("href").rlike(canon.SQL_ABS_SIMPLE)
-    ).count()
-    assert n_native >= 200
+    assert fast.count() >= 200
 
 
 def test_native_canonize_precomputed_parent_cols(spark):
     """The engine hoists the parent-derived columns (_pprefix/_phost/
-    _parent_ok) above the link explode; the precomputed-column branch of
-    canonize_links must (a) produce output identical to the inline-native
-    and udf paths and (b) never leak the private columns into the output
-    schema — on ANY path (ADVICE r3)."""
-    from tests.test_canon_vectorized import HREFS, PARENTS
+    _parent_ok) above the link explode. Over that precomputed input the
+    split (native + udf) must (a) produce output identical to the exact
+    UDF applied to every row through Spark and (b) never leak the private
+    columns into the output schema."""
+    rows = _href_rows(bulk=False)
+    udf = canon.register_udfs()["canonize"]
+    pre = _prepared_input(spark, rows)
+    assert {"_pprefix", "_phost", "_parent_ok"} <= set(pre.columns)
 
-    udfs = canon.register_udfs()
-    rows = []
-    i = 0
-    for p in PARENTS:
-        for h in HREFS:
-            rows.append((p, i, h))
-            i += 1
-    df = spark.createDataFrame(rows, "parent_url string, rid long, href string")
+    fast, slow = canon.canonize_links_split(
+        canon.canonize_links_prepared(pre, "href"), udf
+    )
+    out = fast.unionByName(slow)
+    assert not any(c.startswith(("_p", "_c")) for c in out.columns)
+    got_split = _as_dict(out)
 
-    # the engine's exact hoisted expressions (engine.py candidate pipeline)
-    _purl = F.col("parent_url")
-    _ppath = F.regexp_extract(
-        _purl, r"^[a-z][a-z0-9+.\-]*://[^/?#]*([^?#]*)", 1
-    )
-    pre = df.select(
-        "parent_url", "rid", "href",
-        F.regexp_extract(
-            _purl, r"^([a-z][a-z0-9+.\-]*://[^/?#]*)", 1
-        ).alias("_pprefix"),
-        F.regexp_extract(_purl, canon.SQL_HOST_RE, 1).alias("_phost"),
-        (
-            _purl.rlike(canon.SQL_ABS_SIMPLE) & ~_ppath.contains("%")
-        ).alias("_parent_ok"),
-    )
-
-    def res(out_df):
-        assert not any(c.startswith("_p") for c in out_df.columns)
-        return {
-            r["rid"]: (r["url"], r["host"], r["url_key"])
-            for r in out_df.collect()
-        }
-
-    got_pre = res(canon.canonize_links(pre, "href", udfs["canonize"], native=True))
-    got_pre_udf = res(
-        canon.canonize_links(pre, "href", udfs["canonize"], native=False)
-    )
-    got_inline = res(
-        canon.canonize_links(df, "href", udfs["canonize"], native=True)
-    )
-    got_udf = res(canon.canonize_links(df, "href", udfs["canonize"], native=False))
-    assert got_pre == got_inline == got_udf == got_pre_udf
+    all_udf = pre.select(
+        "rid", udf(F.col("parent_url"), F.col("href")).alias("c")
+    ).select("rid", "c.url", "c.host", "c.url_key")
+    assert got_split == _as_dict(all_udf) == _pd_reference(rows)
+    # the precomputed root-relative tier did route some rows natively
+    assert fast.count() >= 1
 
 
 def test_prepared_split_cached_matches_udf(spark):
-    """The engine's round-4 shape — canonize_links_prepared PERSISTED,
-    then canonize_links_split's union over the cache — must produce the
-    same row set as the exact pandas-UDF path over every href shape, the
+    """The engine's round shape — canonize_links_prepared over the
+    hoisted parent columns, PERSISTED, then canonize_links_split's union
+    over the cache — must produce the same rows as the exact pandas path
+    over every href shape (with and without the absolute bulk), the
     prepared projection must store NULL url/host/url_key and the raw
     (parent_url, href) pair exactly on the non-native rows, and no
     private column (_cn/_cp/_cf or the hoisted _p*) may leak into the
-    union's output schema."""
-    from tests.test_canon_vectorized import HREFS, PARENTS
+    prepared projection or the union's output schema."""
+    udf = canon.register_udfs()["canonize"]
+    for bulk in (False, True):
+        rows = _href_rows(bulk)
+        pre = canon.canonize_links_prepared(
+            _prepared_input(spark, rows), "href"
+        ).persist()
+        try:
+            assert not any(c.startswith("_p") for c in pre.columns)
+            # the prepared projection's invariants
+            for r in pre.collect():
+                if r["_cn"]:
+                    assert r["url"] is not None and r["url_key"] is not None
+                    assert r["_cp"] is None and r["_cf"] is None
+                else:
+                    assert r["url"] is None and r["host"] is None
+                    assert r["url_key"] is None
+                    assert r["_cp"] is not None  # parent_url is never null
 
-    udfs = canon.register_udfs()
-    rows = []
-    i = 0
-    for p in PARENTS:
-        for h in HREFS:
-            rows.append((p, i, h))
-            i += 1
-    for j in range(200):
-        rows.append((PARENTS[0], i, f"http://h{j % 7}.example/p/{j}?x={j}#f{j}"))
-        i += 1
-    df = spark.createDataFrame(rows, "parent_url string, rid long, href string")
-
-    pre = canon.canonize_links_prepared(df, "href").persist()
-    try:
-        # the prepared projection's invariants
-        for r in pre.collect():
-            if r["_cn"]:
-                assert r["url"] is not None and r["url_key"] is not None
-                assert r["_cp"] is None and r["_cf"] is None
-            else:
-                assert r["url"] is None and r["host"] is None
-                assert r["url_key"] is None
-                assert r["_cp"] is not None  # parent_url is never null here
-
-        fast, slow = canon.canonize_links_split(pre, udfs["canonize"])
-        out = fast.unionByName(slow)
-        assert set(out.columns) == {"rid", "url", "host", "url_key"}
-        got = {
-            r["rid"]: (r["url"], r["host"], r["url_key"])
-            for r in out.collect()
-        }
-        want = {
-            r["rid"]: (r["url"], r["host"], r["url_key"])
-            for r in canon.canonize_links(
-                df, "href", udfs["canonize"], native=False
-            ).collect()
-        }
-        assert got == want
-        # both tiers genuinely exercised on this corpus
-        n_fast = fast.count()
-        assert n_fast >= 200
-        assert slow.count() == len(rows) - n_fast > 0
-    finally:
-        pre.unpersist()
+            fast, slow = canon.canonize_links_split(pre, udf)
+            out = fast.unionByName(slow)
+            assert set(out.columns) == {"rid", "url", "host", "url_key"}
+            assert _as_dict(out) == _pd_reference(rows)
+            # both tiers genuinely exercised on this corpus
+            n_fast = fast.count()
+            assert n_fast >= (200 if bulk else 1)
+            assert slow.count() == len(rows) - n_fast > 0
+        finally:
+            pre.unpersist()
 
 
 def test_parquet_scan_pushdown(spark, tmp_path):

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from crawlspark import analysis
 from crawlspark.engine import CrawlConfig, Crawler
-from crawlspark.frontier import with_dense_order
+from crawlspark.frontier import order_bucket, with_dense_order
 from crawlspark.media import media_features
 from crawlspark.schedule import schedule_round
 from crawlspark.schemas import PAGES, SPAN
@@ -142,7 +142,14 @@ def _q_budget_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global limit+1 budget via the distributed dense-order index (Q1/Q2
     machinery) — checked against row_number in DuckDB."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id")
-    idx, _n = with_dense_order(ev, [F.col("event_id")], "disc_order")
+    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).collect()[0]
+    bucket = F.lit(0)
+    if lo is not None:
+        bucket = order_bucket(
+            F.col("event_id") - F.lit(lo), hi - lo + 1,
+            spark.sparkContext.defaultParallelism,
+        )
+    idx, _n = with_dense_order(ev, [F.col("event_id")], "disc_order", bucket)
     return idx.filter(F.col("disc_order") < 101).select(
         "event_id", "disc_order"
     )

@@ -11,7 +11,6 @@ Env knobs:
   SPARK_GRAFT_SF_DIR      sf dir for operator queries (default sf0.1)
   SPARK_GRAFT_CPUS        local[N] cores (default 32)
   CRAWLSPARK_BENCH_PAGES  synthetic graph size (default 40000)
-  CRAWLSPARK_BENCH_CRAWL_ONLY=1  skip operator queries (scaling runs)
 
 The synthetic graph is generated once and cached as parquet under /tmp so
 every parallelism level benches the identical input (BASELINE.md protocol).
@@ -30,17 +29,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 PARTS = int(os.environ.get("CRAWLSPARK_BENCH_PARTITIONS", str(0))) or CPUS
 N_PAGES = int(os.environ.get("CRAWLSPARK_BENCH_PAGES", "40000"))
-CRAWL_ONLY = os.environ.get("CRAWLSPARK_BENCH_CRAWL_ONLY") == "1"
 QUERY_REPS = int(os.environ.get("CRAWLSPARK_BENCH_QUERY_REPS", "3"))
 # Headline-crawl repetitions (VERDICT r3 §wrong #1): the shared host has
 # measured 2-3x co-tenant swings, so a single-shot crawl wall is
 # uninterpretable round-over-round. Default: 3 interleaved reps (each rep
 # spread across the query sweeps so the noise timeline is shared), min
-# estimator, all walls reported. Scaling runs (CRAWL_ONLY) default to 1 —
-# bench/scaling.py cancels noise by co-run pairing at its own level.
-CRAWL_REPS = int(
-    os.environ.get("CRAWLSPARK_BENCH_CRAWL_REPS", "1" if CRAWL_ONLY else "3")
-)
+# estimator, all walls reported.
+CRAWL_REPS = int(os.environ.get("CRAWLSPARK_BENCH_CRAWL_REPS", "3"))
 CACHE_DIR = f"/tmp/crawlspark_bench_input_{N_PAGES}"
 
 
@@ -184,22 +179,20 @@ def main():
         extra_conf=extra,
     )
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    qnames, qfns, qreps = [], {}, {}
-    if not CRAWL_ONLY:
-        import __spark_entry__ as entry
+    import __spark_entry__ as entry
 
-        qfns = entry.queries()
-        skip = {"crawl_order_basic16", "crawl_span_documents"}  # crawl above
-        qnames = [n for n in qfns if n not in skip]
-        qreps = {n: [] for n in qnames}
+    qfns = entry.queries()
+    skip = {"crawl_order_basic16", "crawl_span_documents"}  # crawl above
+    qnames = [n for n in qfns if n not in skip]
+    qreps = {n: [] for n in qnames}
 
     # interleave: crawl rep 1, query sweep 1, crawl rep 2, sweep 2, ...
     # so the headline crawl and every query share one noise timeline
     crawl_runs = []
-    for rep in range(max(CRAWL_REPS, QUERY_REPS if not CRAWL_ONLY else 0)):
+    for rep in range(max(CRAWL_REPS, QUERY_REPS)):
         if rep < CRAWL_REPS:
             crawl_runs.append(run_crawl_bench(spark))
-        if not CRAWL_ONLY and rep < QUERY_REPS:
+        if rep < QUERY_REPS:
             run_query_sweep(spark, qnames, qfns, qreps)
 
     checksums = {r["crawl_checksum"] for r in crawl_runs}

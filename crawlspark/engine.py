@@ -34,12 +34,12 @@ from typing import Optional, Sequence
 
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import canon
 from .fetch import resolve_fetch
-from .frontier import DedupResult, dedup_candidates
+from .frontier import DedupResult, dedup_candidates, order_bucket
 from .parse import parse_stage
 from .robots import apply_robots
 from .schedule import schedule_round, spread_for_fetch
@@ -445,20 +445,19 @@ class Crawler:
             )
         )
         # seed dense-order buckets on link_index (= seed_order): one cheap
-        # count replaces the range-sampling pass over the canonize chain
+        # count gives their bounds; no seeds take the constant bucket
         if isinstance(seeds, DataFrame) or smdf is not None:
             n_seed = seeds_df.count()
         else:
             n_seed = len(rows)
-        order_bucket = None
+        bucket = F.lit(0)
         if n_seed > 0:
-            order_bucket = self._order_bucket(
-                F.col("link_index").cast("long"), n_seed
+            bucket = order_bucket(
+                F.col("link_index").cast("long"), n_seed, self.P
             )
         res = dedup_candidates(
             cands, None, pushed=0, limit=self.cfg.limit,
-            limit_reached=False, num_partitions=self.P,
-            order_bucket=order_bucket,
+            limit_reached=False, bucket_col=bucket,
         )
         # NOTE: reference seed-push failures are logged, not flag-setting
         # (crawler.go:320-329); the flag only matters for parse-time pushes
@@ -478,18 +477,6 @@ class Crawler:
         )
         res.unpersist()
         return res.pushed_end, res.limit_reached
-
-    def _order_bucket(self, offset: Column, span: int) -> Column:
-        """Analytic dense-order bucket: ``offset`` (≥ 0, monotone in the
-        order key) spread over ``span`` values into P buckets — replaces
-        a sampled range partitioning (one full pass less)."""
-        return F.greatest(
-            F.lit(0),
-            F.least(
-                F.lit(self.P - 1),
-                F.floor(offset * F.lit(self.P) / F.lit(span)),
-            ),
-        )
 
     # -- round phases -----------------------------------------------------
     def _fetch_parse(self, r: int, frontier: DataFrame, handles: list):
@@ -699,8 +686,8 @@ class Crawler:
                     F.count(F.when(resolved_ok, 1)).alias("resolved"),
                     F.count(F.when(accept_expr, 1)).alias("accepted"),
                     # accepted parent_disc bounds: drive the
-                    # sampling-free dense-order buckets (same
-                    # fused job — no extra action)
+                    # dense-order buckets (same fused job — no
+                    # extra action)
                     F.min(
                         F.when(accept_expr, F.col("parent_disc"))
                     ).alias("pd_lo"),
@@ -750,25 +737,26 @@ class Crawler:
             # round's keys: drop them, the next merge round
             # rebuilds them from seen
             self._bloom_dict = None
-        # sampling-free dense order: the accepted parents' disc range is
-        # known from the fused agg, so the global FIFO index uses
-        # analytic order-buckets (monotone in (parent_disc, link_index))
-        order_bucket = None
+        # dense order: the accepted parents' disc range is known from the
+        # fused agg, so the global FIFO index uses analytic order-buckets
+        # (monotone in (parent_disc, link_index)); a round with no
+        # accepted link takes the constant bucket
+        bucket = F.lit(0)
         if row["pd_lo"] is not None:
             pd_lo = int(row["pd_lo"])
-            order_bucket = self._order_bucket(
+            bucket = order_bucket(
                 F.col("parent_disc") - F.lit(pd_lo),
                 int(row["pd_hi"]) - pd_lo + 1,
+                self.P,
             )
         limited = cfg.limit > 0
         res = dedup_candidates(
             accepted, seen.select(F.col("url_key").alias("seen_key")),
             pushed=pushed, limit=cfg.limit,
-            limit_reached=limit_reached, num_partitions=self.P,
+            limit_reached=limit_reached, bucket_col=bucket,
             bloom=bloom,
             n_attempts=int(row["accepted"]) if limited else None,
             seen_probe=probe,
-            order_bucket=order_bucket,
             attempts_max=(
                 tuple(row["att_max"])
                 if limited and row["att_max"] is not None
@@ -801,9 +789,11 @@ class Crawler:
         round r+1 must TRUNCATE lineage the way the parquet round-trip
         used to — a plain persist leaves the logical plan referencing the
         whole previous round's tree, which compounds exponentially across
-        rounds (measured: a 2 GB plan string by round ~10). Lazy
-        (eager=False) so the materialization happens inside the
-        background snapshot write, off the critical path. The DURABLE
+        rounds (measured: a 2 GB plan string by round ~10).
+        eager=False does not keep this off the critical path under AQE:
+        building the checkpoint RDD runs the plan's query stages here,
+        on the run() thread (4 jobs and about 1.15 s a round on a 2,000
+        page crawl at local[4]; ROADMAP item 3a). The DURABLE
         checkpoint is still the parquet snapshot; the local checkpoint
         only serves the in-session pipeline (on executor loss the round
         job fails and the crawl resumes from the parquet state — same

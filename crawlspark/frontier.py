@@ -6,13 +6,16 @@ Scale design:
   key ordered by (parent_disc, link_index) — deterministic, unlike
   dropDuplicates (SURVEY.md Q1).
 - Cross-round dedup: ``left_anti`` join against the append-only seen table;
-  Spark's runtime Bloom filter assists, and crawlspark.bloom provides the
-  explicit partitioned prefilter for the merge probe at 10^10-key scale.
-  Exactness always comes from the anti-join.
-- Global FIFO numbering: a *distributed* dense index — range-repartition on
-  the order key, per-partition row_number, plus broadcast cumulative
-  offsets. No single-partition window, no driver collect of data rows
-  (only one count per partition reaches the driver).
+  Spark's runtime Bloom filter assists. The explicit crawlspark.bloom
+  prefilter runs only with the merge probe, where it measured slower in
+  21 of 21 CPU pairs (BENCH/BLOOM_GATE.md). Exactness always comes from
+  the anti-join.
+- Global FIFO numbering: a *distributed* dense index — a monotone bucket
+  computed from driver-known order-key bounds (``order_bucket``),
+  per-bucket row_number, plus cumulative bucket offsets shipped as a map
+  literal of at most ``P`` entries. No range sampling, no
+  single-partition window, no driver collect of data rows (only one
+  count per bucket reaches the driver).
 - limit+1 budget: ``done > limit`` is checked before increment in the
   reference (queue.go:64-67) ⇒ exactly limit+1 pushes succeed; dedup
   happens after the limit check, so any push *attempt* past the budget —
@@ -28,54 +31,44 @@ from pyspark import Broadcast
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# dense-order partition offsets: above this partition count the offsets
-# ship as a broadcast-joined DataFrame instead of a create_map literal
-# (a 10^5-entry literal in every round's plan bloats compile time)
-_OFFSETS_LITERAL_MAX = 256
+
+def order_bucket(offset: Column, span: int, buckets: int) -> Column:
+    """Dense-order bucket: ``offset`` (≥ 0, monotone in the order key)
+    spread over ``span`` values into ``buckets`` buckets, clamped to
+    ``[0, buckets - 1]``. An input with no rows (no bounds) uses the
+    constant bucket ``F.lit(0)`` instead."""
+    return F.greatest(
+        F.lit(0),
+        F.least(
+            F.lit(buckets - 1),
+            F.floor(offset * F.lit(buckets) / F.lit(span)),
+        ),
+    )
 
 
 def with_dense_order(
     df: DataFrame,
     order_cols: list,
     out_col: str,
+    bucket_col: Column,
     start: int = 0,
-    num_partitions: Optional[int] = None,
-    handles: Optional[list] = None,
-    bucket_col: Optional[Column] = None,
     order_max_out: Optional[list] = None,
 ) -> Tuple[DataFrame, int]:
-    """Assign a dense 0-based global index in ``order_cols`` order, fully
-    distributed: order-bucket → per-bucket row_number + cumulative bucket
-    offsets (computed from per-bucket counts; only #buckets scalars hit
-    the driver). Returns (df_with_index, end_index).
+    """Assign a dense global index, starting at ``start``, in
+    ``order_cols`` order, fully distributed: per-bucket row_number +
+    cumulative bucket offsets (computed from per-bucket counts; only
+    #buckets scalars hit the driver). Returns (df_with_index, end_index).
 
-    ``bucket_col`` — the scale path: an integer expression that is
-    MONOTONE w.r.t. the lexicographic ``order_cols`` order (every row in
-    bucket b sorts before every row in bucket b+1), e.g.
-    ``floor((parent_disc - lo) * P / span)`` with driver-known bounds.
-    Buckets replace physical range partitioning entirely: the window
-    hash-exchanges on the bucket value and the global index is
-    offset[bucket] + per-bucket row_number, so NO range sampling pass
-    runs (repartitionByRange samples its input — a full extra
-    materialization of the upstream chain every round) and correctness
-    is independent of physical placement. Bucket skew costs parallelism,
-    never exactness.
-
-    Without ``bucket_col`` (unknown bounds), falls back to
-    repartitionByRange + spark_partition_id; the input is persisted
-    internally (two actions share the range exchange)."""
-    if num_partitions is None:
-        num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    if bucket_col is not None:
-        ranged = df.withColumn("_pid", bucket_col.cast("int"))
-    else:
-        ranged = (
-            df.repartitionByRange(num_partitions, *order_cols)
-            .withColumn("_pid", F.spark_partition_id())
-            .persist()
-        )
-        if handles is not None:
-            handles.append(ranged)
+    ``bucket_col`` is an integer expression that is MONOTONE w.r.t. the
+    lexicographic ``order_cols`` order (every row in bucket b sorts
+    before every row in bucket b+1), e.g. ``order_bucket`` over
+    driver-known bounds. The window hash-exchanges on the bucket value,
+    so no range sampling pass runs and correctness is independent of
+    physical placement. Bucket skew costs parallelism, never exactness.
+    The offsets ship as a map literal with one entry per non-empty
+    bucket, so ``bucket_col`` should take few distinct values (the
+    engine clamps it to ``[0, P-1]``)."""
+    ranged = df.withColumn("_pid", bucket_col.cast("int"))
     # the max order key rides the same counts job (``order_max_out``):
     # consumers needing "the last row's key" (the limit-boundary
     # trailing-attempt check) get it for free instead of running a
@@ -97,32 +90,11 @@ def with_dense_order(
     if not offsets:
         # no rows at all — plan must still typecheck (map() is VOID-typed)
         offset_col = F.lit(start)
-    elif len(offsets) <= _OFFSETS_LITERAL_MAX:
+    else:
         mapping = F.create_map(
             *[F.lit(x) for kv in sorted(offsets.items()) for x in kv]
         )
         offset_col = F.coalesce(mapping[F.col("_pid")], F.lit(start))
-    else:
-        # cluster scale (10^4-10^5 shuffle partitions): a create_map
-        # literal with one entry per partition bloats every round's plan
-        # (compile time + driver heap). Ship the offsets as a tiny
-        # broadcast-joined DataFrame instead — same values, O(1) plan.
-        off_df = df.sparkSession.createDataFrame(
-            sorted(offsets.items()), "_pid int, _poffset long"
-        )
-        out = (
-            ranged.join(F.broadcast(off_df), "_pid", "left")
-            .withColumn("_rn", F.row_number().over(w))
-            .withColumn(
-                out_col,
-                (
-                    F.col("_rn") - 1
-                    + F.coalesce(F.col("_poffset"), F.lit(start))
-                ).cast("long"),
-            )
-            .drop("_pid", "_rn", "_poffset")
-        )
-        return out, acc
     out = (
         ranged.withColumn("_rn", F.row_number().over(w))
         .withColumn(out_col, (F.col("_rn") - 1 + offset_col).cast("long"))
@@ -177,11 +149,10 @@ def dedup_candidates(
     pushed: int,
     limit: int,
     limit_reached: bool,
-    num_partitions: Optional[int] = None,
+    bucket_col: Column,
     bloom: Optional[tuple] = None,
     n_attempts: Optional[int] = None,
     seen_probe: str = "merge",
-    order_bucket: Optional[Column] = None,
     attempts_max: Optional[tuple] = None,
 ) -> DedupResult:
     """Apply push semantics to this round's accepted candidates.
@@ -195,9 +166,9 @@ def dedup_candidates(
     The engine passes it only with ``seen_probe="merge"``.
     ``n_attempts``: push-attempt count when the caller already knows it
     (fused into the engine's round agg) — avoids a dedicated count job.
-    ``order_bucket``: optional monotone integer bucket expression over the
-    order key (see with_dense_order) — enables the sampling-free dense
-    index when the caller knows the order-key bounds.
+    ``bucket_col``: monotone integer bucket expression over the order
+    key (parent_disc, link_index) for the dense index (see
+    with_dense_order); ``F.lit(0)`` when there are no bounds.
     ``attempts_max``: max (parent_disc, link_index) over ALL attempts —
     when the caller already has it (fused into the engine's round agg),
     the limit-boundary trailing-attempt check becomes a pure scalar
@@ -260,19 +231,16 @@ def dedup_candidates(
             new = _anti_seen(first, seen, seen_probe)
     else:
         new = first
-    # Materialize the deduped set ONCE before dense ordering: the range
-    # partitioner samples its input to pick bounds, so an uncached input
-    # would re-run the whole explode→resolve→window→anti-join chain three
-    # times (sample, exchange, counts). With the cache, sampling and the
-    # exchange read a small cached set. n_new falls out of the dense-order
-    # per-partition counts (no dedicated count job).
+    # Materialize the deduped set ONCE: the dense-order counts job fills
+    # the cache, and the indexed rows' later reads (the seen and frontier
+    # appends, the next round's handoff) read the small cached set instead
+    # of re-running the explode→resolve→window→anti-join chain. n_new falls
+    # out of the dense-order per-bucket counts (no dedicated count job).
     new = new.persist()
     handles.append(new)
     _new_max_out: list = []
     new, n_new = with_dense_order(
-        new, order_key, "_idx", start=0, num_partitions=num_partitions,
-        handles=handles, bucket_col=order_bucket,
-        order_max_out=_new_max_out,
+        new, order_key, "_idx", bucket_col, order_max_out=_new_max_out,
     )
     n_after_first_wins = n_new  # (first-wins count only needed for lineage)
 

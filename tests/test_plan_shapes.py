@@ -100,56 +100,13 @@ def test_per_host_budget_column(spark):
     assert h0 == [0, 2, 4]
 
 
-def test_dense_order_broadcast_offsets_beyond_literal_max(spark):
-    """with_dense_order at cluster-scale partition counts must not embed
-    a per-partition create_map literal in the plan (VERDICT r2 §wrong
-    #3): beyond _OFFSETS_LITERAL_MAX the offsets ship as a broadcast
-    join. Both paths must produce the identical dense index."""
-    import crawlspark.frontier as fr
-
-    df = spark.range(5000).select(
-        (F.col("id") * 7919 % 5000).alias("parent_disc"),
-        F.col("id").cast("int").alias("link_index"),
-    )
-    order = [F.col("parent_disc"), F.col("link_index")]
-
-    out_small, end_small = fr.with_dense_order(
-        df, order, "_idx", start=3, num_partitions=8
-    )
-    got_small = [
-        (r["parent_disc"], r["_idx"])
-        for r in out_small.orderBy("_idx").collect()
-    ]
-
-    # force the broadcast-offsets path: more partitions than the literal cap
-    old = fr._OFFSETS_LITERAL_MAX
-    fr._OFFSETS_LITERAL_MAX = 4
-    try:
-        out_b, end_b = fr.with_dense_order(
-            df, order, "_idx", start=3, num_partitions=8
-        )
-        plan = out_b._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-        assert "map_from" not in plan and "keys:" not in plan
-        got_b = [
-            (r["parent_disc"], r["_idx"])
-            for r in out_b.orderBy("_idx").collect()
-        ]
-    finally:
-        fr._OFFSETS_LITERAL_MAX = old
-
-    assert end_b == end_small == 3 + 5000
-    assert got_b == got_small
-    # dense, 0-gap, starts at `start`
-    assert [i for _, i in got_b] == list(range(3, 3 + 5000))
-
-
 def test_dense_order_bucket_col_no_sampling_identical_index(spark):
-    """The sampling-free dense order (bucket_col = analytic monotone
-    buckets over the order key) must (1) produce the identical dense
-    index as the sampled repartitionByRange path, (2) put NO
-    repartitionByRange/RangePartitioning in the plan, and (3) stay exact
-    under bucket skew and out-of-range clamping."""
+    """The bucketed dense order (bucket_col = analytic monotone buckets
+    over the order key) must (1) give the same dense, gap-free index,
+    starting at ``start``, as a driver-side sort, (2) put NO
+    repartitionByRange/RangePartitioning in the plan, (3) stay exact
+    under bucket skew and out-of-range clamping, and (4) index an empty
+    input with the constant bucket to zero rows, ending at ``start``."""
     import crawlspark.frontier as fr
 
     df = spark.range(5000).select(
@@ -157,29 +114,30 @@ def test_dense_order_bucket_col_no_sampling_identical_index(spark):
         F.col("id").cast("int").alias("link_index"),
     )
     order = [F.col("parent_disc"), F.col("link_index")]
-
-    out_ref, end_ref = fr.with_dense_order(
-        df, order, "_idx", start=3, num_partitions=8
-    )
-    got_ref = [
-        (r["parent_disc"], r["link_index"], r["_idx"])
-        for r in out_ref.orderBy("_idx").collect()
+    want = [
+        (pd, li, i)
+        for i, (pd, li) in enumerate(
+            sorted(tuple(r) for r in df.collect()), start=3
+        )
     ]
 
-    # analytic buckets over a DELIBERATELY wrong span (clamps exercise
-    # greatest/least) — monotone is the only requirement for exactness
-    bucket = F.greatest(
-        F.lit(0),
-        F.least(F.lit(7), F.floor(F.col("parent_disc") * 8 / F.lit(50))),
-    )
-    out_b, end_b = fr.with_dense_order(
-        df, order, "_idx", start=3, num_partitions=8, bucket_col=bucket
-    )
+    # analytic buckets over a DELIBERATELY wrong span (parent_disc runs
+    # to 96, so the clamp to bucket 7 fires) — monotone is the only
+    # requirement for exactness
+    bucket = fr.order_bucket(F.col("parent_disc"), 50, 8)
+    out_b, end_b = fr.with_dense_order(df, order, "_idx", bucket, start=3)
     plan = out_b._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" not in plan.lower()
     got_b = [
         (r["parent_disc"], r["link_index"], r["_idx"])
         for r in out_b.orderBy("_idx").collect()
     ]
-    assert end_b == end_ref == 3 + 5000
-    assert got_b == got_ref
+    assert end_b == 3 + 5000
+    assert got_b == want
+    # dense, 0-gap, starts at `start`
+    assert [i for _, _, i in got_b] == list(range(3, 3 + 5000))
+
+    out_e, end_e = fr.with_dense_order(
+        df.limit(0), order, "_idx", F.lit(0), start=3
+    )
+    assert out_e.collect() == [] and end_e == 3

@@ -414,7 +414,7 @@ def canonize_links_prepared(df, href_col):
     )
 
 
-def canonize_links_split(pre, udf):
+def canonize_links_split(pre, udf, exact=True):
     """(fast, slow) sides over a canonize_links_prepared projection.
 
     ``fast`` = the _cn rows with their precomputed (url, host, url_key);
@@ -422,13 +422,17 @@ def canonize_links_split(pre, udf):
     passthrough + (url, host, url_key) in identical order; their
     unionByName is the full candidate set. When ``pre`` is persisted,
     each side is a plain flag filter over the cache — no mask tower, no
-    regex re-evaluation."""
+    regex re-evaluation. ``exact=False`` (the caller counted no ~_cn
+    row) returns ``slow`` as None: no UDF in the plan, so no Python
+    worker starts for empty batches."""
     from pyspark.sql import functions as F
 
     passthrough = [c for c in pre.columns if c not in _PREPARED]
     fast = pre.filter(F.col("_cn")).select(
         *passthrough, "url", "host", "url_key"
     )
+    if not exact:
+        return fast, None
     slow = pre.filter(~F.col("_cn")).select(
         *passthrough,
         udf(F.col("_cp"), F.col("_cf")).alias("c"),
@@ -441,36 +445,54 @@ def canonize_links_split(pre, udf):
     return fast, slow
 
 
-def canonize_urls(df, url_col, url_key_udf):
-    """Derive ``url_key`` for raw URL strings (the seed path — no parent
-    resolution, just U3). Same native/exact split as the link path: the
-    common clean absolute URL is keyed ENTIRELY JVM-side; odd rows
-    (dot-segments, control chars, opaque/relative forms) take the exact
-    pandas UDF. Keeps seeding off the Python path for large seed tables
-    (10^5+ seeds on the bench graph; 10^8+ at web scale)."""
+def _abs_path_query(url):
+    """Path and query of an absolute URL column, fragment dropped."""
     from pyspark.sql import functions as F
 
-    url = F.col(url_col)
     nofrag = F.regexp_replace(url, "#.*$", "")
     path = F.regexp_extract(nofrag, r"^[a-z][a-z0-9+.\-]*://[^/?#]*([^?#]*)", 1)
     query = F.regexp_extract(nofrag, r"\?([^#]*)", 1)
+    return path, query
 
-    is_native = (
+
+def url_native(url):
+    """Non-null routing flag of canonize_urls: True where the URL column
+    ``url`` is keyed JVM-side, False where it takes the exact UDF."""
+    from pyspark.sql import functions as F
+
+    path, _ = _abs_path_query(url)
+    return F.coalesce(
         url.isNotNull()
         & url.rlike(SQL_ABS_SIMPLE)
         & ~url.rlike(SQL_NON_PRINTABLE_ASCII)  # ctrl chars + raw non-ASCII
         & ~path.rlike(SQL_PATH_NEEDS_CLEAN)
-        & ~path.contains("%")  # escaped paths percent-decode ⇒ exact path
+        & ~path.contains("%"),  # escaped paths percent-decode ⇒ exact path
+        F.lit(False),
     )
 
+
+def canonize_urls(df, url_col, url_key_udf, exact=True):
+    """Derive ``url_key`` for raw URL strings (the seed path — no parent
+    resolution, just U3). Same native/exact split as the link path: the
+    common clean absolute URL (``url_native``) is keyed ENTIRELY
+    JVM-side; odd rows (dot-segments, control chars, opaque/relative
+    forms) take the exact pandas UDF. Keeps seeding off the Python path
+    for large seed tables (10^5+ seeds on the bench graph; 10^8+ at web
+    scale). ``exact=False`` (the caller counted no non-native row)
+    leaves the UDF branch out of the plan."""
+    from pyspark.sql import functions as F
+
+    url = F.col(url_col)
+    native = url_native(url)
+    path, query = _abs_path_query(url)
     cleaned = F.regexp_replace(path, r"(.)/$", "$1")
     key = F.when(cleaned == "", F.lit("/")).otherwise(cleaned)
     key = F.when(query != "", F.concat(key, F.lit("?"), query)).otherwise(key)
 
-    fast = df.filter(is_native).withColumn("url_key", key)
-    slow = df.filter(~F.coalesce(is_native, F.lit(False))).withColumn(
-        "url_key", url_key_udf(url)
-    )
+    fast = df.filter(native).withColumn("url_key", key)
+    if not exact:
+        return fast
+    slow = df.filter(~native).withColumn("url_key", url_key_udf(url))
     return fast.unionByName(slow)
 
 

@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import canon
 from .fetch import resolve_fetch
@@ -43,7 +44,7 @@ from .frontier import DedupResult, dedup_candidates, order_bucket
 from .parse import parse_stage
 from .robots import apply_robots
 from .schedule import schedule_round, spread_for_fetch
-from .schemas import SEEDS
+from .schemas import DOCUMENTS, LINEAGE, METRICS, ORDER, SEEDS, SEEN
 from .storage import CheckpointStore
 
 log = logging.getLogger(__name__)
@@ -66,6 +67,20 @@ def _parallel_jobs(*thunks) -> list:
     with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
         futs = [ex.submit(t) for t in thunks]
         return [f.result() for f in futs]
+
+
+def _local_frame(spark: SparkSession, schema: T.StructType,
+                 columns: dict) -> DataFrame:
+    """A table of driver-held ``columns`` that lives in the JVM (a
+    LocalRelation, built through Arrow). A ``createDataFrame`` over
+    Python rows is a PythonRDD instead: every query that reads it runs
+    Python tasks."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(
+        pa.table(columns, schema=to_arrow_schema(schema)), schema
+    )
 
 
 def _release_checkpoint(df: Optional[DataFrame]) -> None:
@@ -157,20 +172,30 @@ class CrawlResult:
     pushed: int
     limit_reached: bool
 
+    def _table(self, table: str, schema: T.StructType) -> DataFrame:
+        """The checkpointed table; empty, with its schema, when the crawl
+        wrote none (no seeds)."""
+        df = self.store.read(table)
+        if df is None:
+            df = _local_frame(
+                self.store.spark, schema, {f.name: [] for f in schema}
+            )
+        return df
+
     def order_df(self) -> DataFrame:
-        return self.store.read("order")
+        return self._table("order", ORDER)
 
     def seen_df(self) -> DataFrame:
-        return self.store.read("seen")
+        return self._table("seen", SEEN)
 
     def documents_df(self) -> DataFrame:
-        return self.store.read("documents")
+        return self._table("documents", DOCUMENTS)
 
     def metrics_df(self) -> DataFrame:
-        return self.store.read("metrics")
+        return self._table("metrics", METRICS)
 
     def lineage_df(self) -> DataFrame:
-        return self.store.read("lineage")
+        return self._table("lineage", LINEAGE)
 
 
 @dataclass
@@ -237,9 +262,10 @@ class Crawler:
                 # left join (lineage needs the unmatched rows), so a
                 # duplicate host entry would duplicate candidate rows and
                 # inflate lineage counts (ADVICE r2)
-                self._hosts_df = spark.createDataFrame(
-                    [(h,) for h in dict.fromkeys(config.hosts)],
-                    "host string",
+                self._hosts_df = _local_frame(
+                    spark,
+                    T.StructType([T.StructField("host", T.StringType())]),
+                    {"host": list(dict.fromkeys(config.hosts))},
                 )
             else:
                 # default discovery stays a DataFrame end-to-end: no
@@ -412,28 +438,36 @@ class Crawler:
             )
             hi = smdf.agg(F.max("seed_order")).collect()[0][0]
             order = 0 if hi is None else int(hi) + 1
-        rows = []
         if isinstance(seeds, DataFrame):
-            sdf = seeds
-            if "priority" not in sdf.columns:
-                sdf = sdf.withColumn("priority", F.lit(0.0))
-            sdf = sdf.select(
+            if "priority" not in seeds.columns:
+                seeds = seeds.withColumn("priority", F.lit(0.0))
+            seeds_df = seeds.select(
                 "url",
                 (F.col("seed_order") + F.lit(order)).cast("int")
                 .alias("seed_order"),
                 F.col("priority").cast("double"),
             )
-            seeds_df = sdf
         else:
-            for s in seeds:
-                rows.append((s, order, 0.0))
-                order += 1
-            seeds_df = self.spark.createDataFrame(rows, SEEDS)
+            seeds = list(seeds)
+            seeds_df = _local_frame(self.spark, SEEDS, {
+                "url": seeds,
+                "seed_order": list(range(order, order + len(seeds))),
+                "priority": [0.0] * len(seeds),
+            })
         if smdf is not None:
             seeds_df = smdf.unionByName(seeds_df)
+        # one job counts the seeds (the bounds of their dense-order
+        # buckets) and the seeds the exact url_key tier must take; with
+        # none, that tier's UDF branch stays out of the plan
+        n_seed, n_exact = seeds_df.agg(
+            F.count("*"),
+            F.count(F.when(~canon.url_native(F.col("url")), 1)),
+        ).collect()[0]
 
         cands = (
-            canon.canonize_urls(seeds_df, "url", self.udfs["url_key"])
+            canon.canonize_urls(
+                seeds_df, "url", self.udfs["url_key"], exact=n_exact > 0
+            )
             .filter(F.col("url_key").isNotNull())
             .withColumn("host", canon.host_col("url"))
             .withColumn("seen_key", self._seen_key())
@@ -444,12 +478,8 @@ class Crawler:
                 "parent_disc", "link_index", "priority",
             )
         )
-        # seed dense-order buckets on link_index (= seed_order): one cheap
-        # count gives their bounds; no seeds take the constant bucket
-        if isinstance(seeds, DataFrame) or smdf is not None:
-            n_seed = seeds_df.count()
-        else:
-            n_seed = len(rows)
+        # seed dense-order buckets on link_index (= seed_order); no seeds
+        # take the constant bucket
         bucket = F.lit(0)
         if n_seed > 0:
             bucket = order_bucket(
@@ -505,28 +535,35 @@ class Crawler:
         # the hooks run inside the Python parse loop: they force the
         # exact tier
         native = cfg.process_fn is None and cfg.remove_fn is None
+        exact = True
         if native:
-            # the native/exact tier split scans `fetched` twice (two
-            # disjoint filters); persist the round batch so the fetch
-            # join runs once. DISK_ONLY for the same reason as the
-            # pages cache: HTML bodies must never be heap-resident,
-            # and spark.local.dir sits on tmpfs in the bench. Cost is
-            # bounded by ROUND size, never corpus size. (Measured
-            # alternative, rejected: skipping this persist and
-            # streaming the join per tier re-runs the probe-side
-            # hash build and the routing grammar per tier — paired
-            # A/B at local[8]/400k pages: 176.4 s -> 229.5 s.)
-            from .parse import mark_dirty
+            # persist the round batch with its routing flag computed
+            # INTO the cache: the clean-page grammar runs once per page,
+            # and the fetch join once, however many scans follow (the
+            # tier split's two disjoint filters, when both tiers run).
+            # DISK_ONLY for the same reason as the pages cache: HTML
+            # bodies must never be heap-resident, and spark.local.dir
+            # sits on tmpfs in the bench. Cost is bounded by ROUND size,
+            # never corpus size. (Measured alternative, rejected:
+            # skipping this persist and streaming the join per tier
+            # re-runs the probe-side hash build and the routing grammar
+            # per tier — paired A/B at local[8]/400k pages: 176.4 s ->
+            # 229.5 s.)
+            from .parse import DIRTY_COL, mark_dirty
 
-            # routing flag computed INTO the cache: the clean-page
-            # grammar runs once per page here; the tier filters in
-            # parse_stage read the cached boolean
             fetched = mark_dirty(fetched).persist(StorageLevel.DISK_ONLY)
+            # the count materializes the cache the documents append
+            # would; a round with no dirty page leaves the exact tier's
+            # MapInArrow out of the plan, so no Python worker starts
+            exact = self._described(
+                f"parse-split r{r}", fetched.filter(F.col(DIRTY_COL)).count
+            ) > 0
         parsed = parse_stage(
             fetched,
             process_fn=cfg.process_fn,
             remove_fn=cfg.remove_fn,
             native=native,
+            exact=exact,
         )
         if self.robots is not None:
             denied_rows = denied.select(
@@ -570,7 +607,7 @@ class Crawler:
         order_pool.shutdown(wait=False)
         return parsed, carry, order_append
 
-    def _candidates(self, parsed: DataFrame, handles: list):
+    def _candidates(self, r: int, parsed: DataFrame, handles: list):
         """The round's canonicalized links. Returns (flagged, accepted,
         resolved_ok, accept_expr): every canonized link with what the
         accept filter reads, the accepted rows keyed for dedup, and the
@@ -597,7 +634,7 @@ class Crawler:
         # (canon.py). The persist sits on the ONE-PASS prepared
         # projection, BELOW the fast/slow union: the mask battery
         # and all native value expressions run exactly once per
-        # link when the fused agg materializes the cache
+        # link when the count below materializes the cache
         # (the previous union-of-filtered-branches shape
         # re-evaluated the mask towers per branch and per output
         # column — the round-4 event logs showed it as the
@@ -609,16 +646,23 @@ class Crawler:
         cands_pre = canon.canonize_links_prepared(links, "href").persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        cands_fast, cands_slow = canon.canonize_links_split(
-            cands_pre, self.udfs["canonize"]
+        handles.append(cands_pre)
+        # a round with no dirty href leaves the UDF branch out of the
+        # plan, so no Python worker starts for empty batches
+        exact = self._described(
+            f"canon-split r{r}", cands_pre.filter(~F.col("_cn")).count
+        ) > 0
+        cands_raw, cands_slow = canon.canonize_links_split(
+            cands_pre, self.udfs["canonize"], exact=exact
         )
-        # the slow (dirty-href) side is persisted POST-UDF so the
-        # exact resolver runs once per dirty link, not once per
-        # consumer (the fused agg materializes it; the dedup scan
-        # reads both caches) — tiny by the two-tier premise
-        cands_slow = cands_slow.persist(StorageLevel.MEMORY_AND_DISK)
-        handles += [cands_pre, cands_slow]
-        cands_raw = cands_fast.unionByName(cands_slow)
+        if cands_slow is not None:
+            # the slow (dirty-href) side is persisted POST-UDF so the
+            # exact resolver runs once per dirty link, not once per
+            # consumer (the fused agg materializes it; the dedup scan
+            # reads both caches)
+            cands_slow = cands_slow.persist(StorageLevel.MEMORY_AND_DISK)
+            handles.append(cands_slow)
+            cands_raw = cands_raw.unionByName(cands_slow)
 
         resolved_ok = F.col("url").isNotNull() & F.col("url_key").isNotNull()
         if cfg.accept_fn is not None:
@@ -660,6 +704,16 @@ class Crawler:
         )
         return flagged, accepted, resolved_ok, accept_expr
 
+    def _described(self, desc: str, action):
+        """``action()`` with ``desc`` as the description of the jobs it
+        starts from this thread."""
+        sc = self.spark.sparkContext
+        sc.setJobDescription(desc)
+        try:
+            return action()
+        finally:
+            sc.setJobDescription(None)
+
     @staticmethod
     def _parsed_counts(parsed: DataFrame) -> DataFrame:
         """The scheduled/fetched counts of SNK2 metrics: all a drain
@@ -674,11 +728,10 @@ class Crawler:
         the control flow needs: scheduled/fetched counts (SNK2 metrics)
         × Q3 error-taxonomy counts (queue.go:9-21 reasons; 'duplicate'
         covers in-round and cross-round — the reference has a single
-        ErrDuplicateURL). parsed is already cached (documents write);
-        this job materializes the candidate caches."""
-        sc = self.spark.sparkContext
-        sc.setJobDescription(f"fused-agg r{r}")
-        row = (
+        ErrDuplicateURL). parsed and cands_pre are already cached (the
+        documents write, the canon-split count); this job materializes
+        the exact tier's cands_slow, when the round has one."""
+        return self._described(f"fused-agg r{r}", lambda: (
             self._parsed_counts(parsed)
             .crossJoin(
                 flagged.agg(
@@ -707,9 +760,7 @@ class Crawler:
                 )
             )
             .collect()[0]
-        )
-        sc.setJobDescription(None)
-        return row
+        ))
 
     def _dedup(self, accepted, row, pushed, limit_reached):
         """Seen probe + dedup of the accepted candidates. Returns the
@@ -955,7 +1006,7 @@ class Crawler:
                 row = self._parsed_counts(parsed).collect()[0]
             else:
                 flagged, accepted, resolved_ok, accept_expr = (
-                    self._candidates(parsed, handles)
+                    self._candidates(r, parsed, handles)
                 )
                 row = self._fused_agg(
                     r, parsed, flagged, resolved_ok, accept_expr

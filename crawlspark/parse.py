@@ -344,7 +344,8 @@ def _parse_batches_inner(batches, process_fn, remove_fn):
         yield out
 
 
-def parse_stage(fetched, process_fn=None, remove_fn=None, native=False):
+def parse_stage(fetched, process_fn=None, remove_fn=None, native=False,
+                exact=True):
     """fetched: DataFrame with frontier cols + (status, content_html,
     guard_ok) → PARSED rows (spans + links nested arrays). Optional user
     hooks: ``process_fn(url, spans)->spans`` span post-hook (ProcessFunc),
@@ -357,7 +358,10 @@ def parse_stage(fetched, process_fn=None, remove_fn=None, native=False):
     Callers should persist ``fetched`` before a native-split call — the
     two tiers each scan it; pre-marking with ``mark_dirty`` before the
     persist makes the routing grammar run ONCE per page (the two tier
-    filters then read the cached boolean) instead of once per tier."""
+    filters then read the cached boolean) instead of once per tier.
+    ``exact=False`` (the caller counted no dirty row) leaves the exact
+    tier's MapInArrow out of the native split, so no Python worker
+    starts for empty batches; the hooks still force the exact tier."""
     from pyspark.sql import functions as F
 
     cols = _PASSTHROUGH + ["status", "content_html", "guard_ok"]
@@ -366,18 +370,20 @@ def parse_stage(fetched, process_fn=None, remove_fn=None, native=False):
             _make_parse_batch(process_fn, remove_fn), PARSED
         )
 
-    if _DIRTY_COL not in fetched.columns:
+    if DIRTY_COL not in fetched.columns:
         fetched = mark_dirty(fetched)
-    needs_py = F.col(_DIRTY_COL)
-    fetched = fetched.select(*cols, _DIRTY_COL)
+    needs_py = F.col(DIRTY_COL)
+    fetched = fetched.select(*cols, DIRTY_COL)
     fast = native_parse_projection(fetched.filter(~needs_py))
+    if not exact:
+        return fast
     slow = fetched.filter(needs_py).select(*cols).mapInArrow(
         _make_parse_batch(None, None), PARSED
     )
     return fast.unionByName(slow)
 
 
-_DIRTY_COL = "_parse_dirty"
+DIRTY_COL = "_parse_dirty"
 
 
 def mark_dirty(fetched):
@@ -395,5 +401,5 @@ def mark_dirty(fetched):
     )
     needs_py = ok & ~clean_page_pred(F.col("url"), F.col("content_html"))
     return fetched.withColumn(
-        _DIRTY_COL, F.coalesce(needs_py, F.lit(False))
+        DIRTY_COL, F.coalesce(needs_py, F.lit(False))
     )

@@ -111,6 +111,10 @@ PARSED = T.StructType(
     ]
 )
 
+# The crawl order table (SNK2): one row per scheduled URL, PARSED minus
+# the nested payloads.
+ORDER = T.StructType(PARSED.fields[:8])
+
 METRICS = T.StructType(
     [
         T.StructField("round", T.IntegerType(), False),

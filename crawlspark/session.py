@@ -13,11 +13,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem(mem_total_bytes: int | None = None) -> str:
+    """The driver heap when the caller names none: the 24 GiB sweet spot
+    below, capped at half the box's physical memory (``mem_total_bytes``,
+    default MemTotal). The heap is pre-committed (-Xms), so a 24 GiB
+    default cannot start the JVM on a smaller box."""
+    if mem_total_bytes is None:
+        mem_total_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf(
+            "SC_PAGE_SIZE"
+        )
+    return f"{min(24 << 10, mem_total_bytes // 2 >> 20)}m"
+
+
 def get_spark(
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     app: str = "crawlspark",
-    driver_mem: str = "24g",
+    driver_mem: str | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Note on driver_mem — the heap has a SWEET SPOT, measured on the
@@ -33,12 +45,15 @@ def get_spark(
 
     Size the heap to the cached working set (pages + parsed rounds), not
     to the machine; GC threads are capped below so collections cannot
-    occupy every core."""
+    occupy every core. With no ``driver_mem`` (and no
+    CRAWLSPARK_DRIVER_MEM) the heap is ``default_driver_mem()``."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = cores
-    driver_mem = os.environ.get("CRAWLSPARK_DRIVER_MEM", driver_mem)
+    driver_mem = os.environ.get(
+        "CRAWLSPARK_DRIVER_MEM", driver_mem or default_driver_mem()
+    )
     # GC capacity must scale with the level's core allotment the way a
     # real node's does (a 4N-node cluster brings 4x the GC threads).
     # The old formula (min(8, max(4, cores//2))) clamped local[2] AND

@@ -19,15 +19,21 @@ def run_spark_crawl(spark, tmp_path, pages, seeds, **cfg_kwargs):
     return crawler.run(seeds)
 
 
-def rows(df):
-    """A table's rows; a crawl with no seeds writes no tables."""
-    return [] if df is None else df.collect()
+def has_python_rdd(df):
+    """Whether reading ``df`` runs a PythonRDD (Python tasks)."""
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def has_python_node(df):
+    """Whether ``df``'s physical plan evaluates a Python UDF or map."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "MapInArrow" in plan or "ArrowEvalPython" in plan
 
 
 def collect_order(result):
     got = [
         (r["url"], r["round"], r["disc_order"], r["fetched_ok"])
-        for r in rows(result.order_df())
+        for r in result.order_df().collect()
     ]
     return sorted(got, key=lambda t: t[2])
 
@@ -43,14 +49,14 @@ def assert_matches_oracle(result, oracle):
         key=lambda t: t[2],
     )
     assert got == want
-    got_seen = {r["url_key"] for r in rows(result.seen_df())}
+    got_seen = {r["url_key"] for r in result.seen_df().collect()}
     assert got_seen == oracle.seen
     # span documents: per-doc sequence equality (kind, text, media_ref, order)
     got_docs = {
         r["doc_id"]: [
             (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]
         ]
-        for r in rows(result.documents_df())
+        for r in result.documents_df().collect()
     }
     want_docs = {
         doc_id: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
@@ -60,7 +66,7 @@ def assert_matches_oracle(result, oracle):
     # per-round counts
     got_counts = {
         r["round"]: (r["scheduled"], r["fetched_ok"], r["failed"], r["new_urls"])
-        for r in rows(result.metrics_df())
+        for r in result.metrics_df().collect()
     }
     want_counts = {
         c["round"]: (c["scheduled"], c["fetched_ok"], c["failed"], c["new_urls"])
@@ -79,6 +85,10 @@ def test_basic16(spark, tmp_path):
         oracle = oracle_crawl(pages_index(pages), s, "example.com")
         assert result.pushed == pushed
         assert_matches_oracle(result, oracle)
+    # a crawl with no seeds writes no table: each reads back empty
+    for df in (result.order_df(), result.seen_df(), result.documents_df(),
+               result.metrics_df(), result.lineage_df()):
+        assert df.count() == 0
 
 
 def test_basic16_limit(spark, tmp_path):
@@ -125,16 +135,72 @@ def test_accept_reject_filters(spark, tmp_path):
 
 
 def test_multi_host_powerlaw_budget(spark, tmp_path):
+    """Multi-host crawl, also with an empty hosts list (every URL is
+    off-host). The allowed-hosts table is deduplicated and JVM-side:
+    reading it runs no Python."""
     pages, seeds = powerlaw(n_pages=200, n_hosts=5, seed=11)
-    hosts = sorted({p["host"] for p in pages})
-    result = run_spark_crawl(
-        spark, tmp_path, pages, seeds,
-        multi_host=True, hosts=hosts, host_budget=10, max_rounds=6,
-    )
-    oracle = oracle_crawl(
-        pages_index(pages), seeds, "", multi_host=True, hosts=set(hosts),
-        host_budget=10, max_rounds=6,
-    )
+    pages_df = spark.createDataFrame(pages, PAGES)
+    all_hosts = sorted({p["host"] for p in pages})
+    for hosts in (all_hosts + all_hosts[:1], []):
+        cfg = CrawlConfig(
+            checkpoint_dir=str(tmp_path / str(len(hosts))),
+            multi_host=True, hosts=hosts, host_budget=10, max_rounds=6,
+        )
+        crawler = Crawler(spark, pages_df, cfg)
+        assert not has_python_rdd(crawler._hosts_df)
+        assert crawler._hosts_df.count() == len(set(hosts))
+        oracle = oracle_crawl(
+            pages_index(pages), seeds, "", multi_host=True, hosts=set(hosts),
+            host_budget=10, max_rounds=6,
+        )
+        assert_matches_oracle(crawler.run(seeds), oracle)
+
+
+def test_exact_tiers_only_for_dirty_rows(spark, tmp_path, monkeypatch):
+    """A round starts an exact Python tier only when it has rows for it.
+    Round 0 fetches a clean page with a root-relative link, round 1 a
+    page the clean grammar rejects (a charref) with a relative link,
+    round 2 a clean page with no link: parse and canonicalization pass
+    exact=False, True, False, and only exact=True plans hold a Python
+    node. The second seed needs the exact url_key (a dot-segment); the
+    seed frame runs no Python to be read."""
+    from crawlspark import canon, engine
+    from crawlspark.synth import _page, _row
+
+    base = "http://t.example"
+    pages = [
+        _row(f"{base}/", html=_page('<a href="/b.html">b</a>')),
+        _row(f"{base}/b.html",
+             html=_page('<p>x &amp; y</p>\n<a href="c.html">c</a>')),
+        _row(f"{base}/b.html/c.html", html=_page("<p>end</p>")),
+    ]
+    seeds = [f"{base}/", f"{base}/x/../"]
+    calls = {"parse": [], "canon": [], "seeds": []}
+
+    def spy(owner, name, kind):
+        fn = getattr(owner, name)
+
+        def wrapper(df, *a, exact=True, **k):
+            out = fn(df, *a, exact=exact, **k)
+            calls[kind].append((exact, df, out))
+            return out
+
+        monkeypatch.setattr(owner, name, wrapper)
+
+    spy(engine, "parse_stage", "parse")
+    spy(canon, "canonize_links_split", "canon")
+    spy(canon, "canonize_urls", "seeds")
+    result = run_spark_crawl(spark, tmp_path, pages, seeds, host="t.example")
+    assert [e for e, _, _ in calls["parse"]] == [False, True, False]
+    assert [e for e, _, _ in calls["canon"]] == [False, True, False]
+    assert all(has_python_node(out) == e for e, _, out in calls["parse"])
+    assert all((slow is not None) == e
+               for e, _, (_, slow) in calls["canon"])
+    [(exact, seeds_df, keyed)] = calls["seeds"]
+    assert exact and has_python_node(keyed)
+    assert not has_python_rdd(seeds_df)
+    oracle = oracle_crawl(pages_index(pages), seeds, "t.example")
+    assert result.rounds == 3
     assert_matches_oracle(result, oracle)
 
 

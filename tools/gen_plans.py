@@ -147,7 +147,11 @@ out.append("## 6. Two-tier parse routing (P2/P4, round 4)\n\n"
            "regexp_extract_all, spans via regexp_replace+split+transform);\n"
            "exactly ONE MapInArrow node exists, fed only by the dirty-page\n"
            "filter; the routing flag `_parse_dirty` is read from the cached\n"
-           "round batch, not recomputed per tier.\n\n```\n"
+           "round batch, not recomputed per tier. The engine counts that flag\n"
+           "first (job `parse-split r<N>`); at 0 it calls\n"
+           "`parse_stage(exact=False)`, which leaves the MapInArrow branch\n"
+           "out of the plan, so a round with no dirty page starts no Python\n"
+           "worker.\n\n```\n"
            + cap(parsed) + "```\n")
 
 # 7. pipelined round commit: a timeline property, not a plan

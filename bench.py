@@ -52,7 +52,7 @@ def ensure_bench_input(spark):
         tmp = CACHE_DIR + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
         os.makedirs(tmp, exist_ok=True)
-        synth_args = dict(
+        pages, seeds = powerlaw(
             n_pages=N_PAGES,
             n_hosts=24,
             out_degree=25,
@@ -61,31 +61,13 @@ def ensure_bench_input(spark):
             hot_host_share=0.4,
             seed_fraction=0.25,
         )
-        # beyond ~1M pages the driver-side Python generator is itself the
-        # bottleneck (and at 10^10 it's impossible); the distributed
-        # generator builds the same structure class JVM-side
-        use_spark_synth = N_PAGES > 1_000_000 or (
-            os.environ.get("CRAWLSPARK_BENCH_SYNTH") == "spark"
-        )
-        if use_spark_synth:
-            from crawlspark.synth import powerlaw_spark
-
-            pages_df, seeds_df = powerlaw_spark(spark, **synth_args)
-            pages_df.repartition(PARTS).write.mode("overwrite").parquet(
-                f"{tmp}/pages"
-            )
-            seeds_df.coalesce(8).write.mode("overwrite").parquet(
-                f"{tmp}/seeds"
-            )
-        else:
-            pages, seeds = powerlaw(**synth_args)
-            spark.createDataFrame(pages, PAGES).repartition(
-                PARTS
-            ).write.mode("overwrite").parquet(f"{tmp}/pages")
-            spark.createDataFrame(
-                [(u, i) for i, u in enumerate(seeds)],
-                "url string, seed_order int",
-            ).coalesce(8).write.mode("overwrite").parquet(f"{tmp}/seeds")
+        spark.createDataFrame(pages, PAGES).repartition(
+            PARTS
+        ).write.mode("overwrite").parquet(f"{tmp}/pages")
+        spark.createDataFrame(
+            [(u, i) for i, u in enumerate(seeds)],
+            "url string, seed_order int",
+        ).coalesce(8).write.mode("overwrite").parquet(f"{tmp}/seeds")
         shutil.rmtree(CACHE_DIR, ignore_errors=True)
         os.replace(tmp, CACHE_DIR)
     return spark.read.parquet(pages_path), spark.read.parquet(seeds_path)

@@ -36,10 +36,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
 # ---------------------------------------------------------------------------
 # Deduplication
 # ---------------------------------------------------------------------------

@@ -8,7 +8,7 @@ Round r (SURVEY.md §3 lifecycle):
     frontier_r (parquet snapshot)
       → politeness schedule: two-phase per-host top-k          [Q5]
       → uniform salted repartition for the fetch stage         [Q4]
-      → robots broadcast gate (denied = counted failures)      [F5]
+      → robots literal-map gate (denied = counted failures)    [F5]
       → guards + resolver join against pages                   [F3,F4,SRC3,F6]
       → one mapInArrow: parse + links + spans                 [P1-P4]
       → documents / order / metrics appends                    [SNK1,SNK2]
@@ -246,14 +246,15 @@ class Crawler:
             self.pages = pages.repartition(self.P, "host", "url_key").persist(
                 StorageLevel.DISK_ONLY
             )
-        self.robots = robots_rules
-        # compile the (broadcast-small) rule set once so the per-round
-        # gate is a narrow literal-map projection — no join, no window
-        # shuffle (falls back to the broadcast-join path when the rule
-        # set exceeds the compile cutoff)
+        # the robots rules are small policy state: collect them once, so
+        # every round's gate is a literal-map projection (no join, no
+        # window shuffle) and the crawl-delay budgets a literal map
         from .robots import compile_robots
 
-        self._robots_compiled = compile_robots(robots_rules)
+        robots_rows = (
+            robots_rules.collect() if robots_rules is not None else []
+        )
+        self._robots_compiled = compile_robots(robots_rows)
         self.store = CheckpointStore(spark, config.checkpoint_dir)
         self.udfs = canon.register_udfs()
         if config.multi_host:
@@ -290,7 +291,7 @@ class Crawler:
         self._pending_round = None
         self._commit_pool = None
         self._frontier_handle = None
-        # robots crawl-delay → per-host budgets (broadcast policy state)
+        # robots crawl-delay → per-host budgets ({host: budget})
         self._host_budgets = None
         self._default_budget = 0
         if config.round_wall_secs > 0:
@@ -301,11 +302,10 @@ class Crawler:
             self._default_budget = _math.ceil(
                 config.round_wall_secs / config.default_delay_secs
             )
-            if robots_rules is not None:
-                self._host_budgets = robots_budgets(
-                    robots_rules, config.round_wall_secs,
-                    config.default_delay_secs,
-                )
+            self._host_budgets = robots_budgets(
+                robots_rows, config.round_wall_secs,
+                config.default_delay_secs,
+            )
 
     def _append_seen(self, fresh: DataFrame, batch: int) -> None:
         """Append fresh keys to the seen table as ``(url_key,
@@ -485,15 +485,26 @@ class Crawler:
             bucket = order_bucket(
                 F.col("link_index").cast("long"), n_seed, self.P
             )
+        n_attempts = attempts_max = None
+        if self.cfg.limit > 0:
+            # the limit state machine's scalars, from one agg over the
+            # candidates (persisted: dedup reads them again)
+            cands = cands.persist()
+            n_attempts, attempts_max = cands.agg(
+                F.count("*"), F.max(F.struct("parent_disc", "link_index")),
+            ).collect()[0]
         res = dedup_candidates(
             cands, None, pushed=0, limit=self.cfg.limit,
             limit_reached=False, bucket_col=bucket,
+            n_attempts=n_attempts,
+            attempts_max=None if attempts_max is None else tuple(attempts_max),
         )
         # NOTE: reference seed-push failures are logged, not flag-setting
         # (crawler.go:320-329); the flag only matters for parse-time pushes
         # and with a 0-room budget the first parse push trips it anyway —
         # observably identical, asserted by tests vs the oracle.
         if res.fresh is None:
+            cands.unpersist()
             return 0, False
         frontier = res.fresh.withColumn("round", F.lit(0))
         # the two seed sinks (frontier snapshot, seen append) both read
@@ -506,6 +517,7 @@ class Crawler:
             lambda: self._append_seen(res.fresh, 0),
         )
         res.unpersist()
+        cands.unpersist()
         return res.pushed_end, res.limit_reached
 
     # -- round phases -----------------------------------------------------
@@ -522,9 +534,7 @@ class Crawler:
         scheduled = spread_for_fetch(
             scheduled.withColumn("round", F.lit(r)), self.P, salt=r
         )
-        allowed, denied = apply_robots(
-            scheduled, self.robots, self._robots_compiled
-        )
+        allowed, denied = apply_robots(scheduled, self._robots_compiled)
         fetched = resolve_fetch(
             allowed,
             self.pages,
@@ -565,7 +575,7 @@ class Crawler:
             native=native,
             exact=exact,
         )
-        if self.robots is not None:
+        if self._robots_compiled is not None:
             denied_rows = denied.select(
                 "url", "host", "url_key", "round", "disc_order", "priority",
                 F.lit(0).alias("status"),

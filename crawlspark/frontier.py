@@ -124,8 +124,6 @@ def _anti_seen(cands: DataFrame, seen: DataFrame, probe: str) -> DataFrame:
 class DedupResult:
     fresh: DataFrame  # new frontier rows (url, host, url_key, seen_key, disc_order, priority)
     pushed_end: int  # global push counter after this round
-    n_attempts: int
-    n_after_first_wins: int
     n_new: int  # unique candidates not yet seen
     n_kept: int  # after budget cut
     limit_reached: bool
@@ -164,16 +162,17 @@ def dedup_candidates(
     candidates so only possibly-seen rows pay the seen-set membership
     test; bloom-negative rows are provably new (exactness preserved).
     The engine passes it only with ``seen_probe="merge"``.
-    ``n_attempts``: push-attempt count when the caller already knows it
-    (fused into the engine's round agg) — avoids a dedicated count job.
+    ``n_attempts``: the push-attempt count (rows of ``cands``); only
+    the limit state machine reads it, so it is required when
+    ``limit > 0``. The engine takes it from an agg it already runs.
     ``bucket_col``: monotone integer bucket expression over the order
     key (parent_disc, link_index) for the dense index (see
     with_dense_order); ``F.lit(0)`` when there are no bounds.
-    ``attempts_max``: max (parent_disc, link_index) over ALL attempts —
-    when the caller already has it (fused into the engine's round agg),
-    the limit-boundary trailing-attempt check becomes a pure scalar
-    comparison against the deduped set's max key (which rides the
-    dense-order counts job) instead of two extra jobs.
+    ``attempts_max``: max (parent_disc, link_index) over ALL attempts,
+    required when ``limit > 0`` and ``n_attempts > 0``: the
+    limit-boundary trailing-attempt check is a scalar comparison of it
+    against the deduped set's max key (which rides the dense-order
+    counts job).
     ``seen_probe``: how the cross-round membership test executes:
       - "merge": plain ``left_anti`` (sort-merge / AQE choice) — both
         sides shuffle; the safe default at unbounded per-round volumes.
@@ -188,18 +187,8 @@ def dedup_candidates(
         is already streamed once with no shuffle for it to save.
     """
     handles = []
-    if limit > 0 and n_attempts is None:
-        # attempt counting is only consulted by the limit state machine;
-        # skip the extra job entirely in the unlimited case
-        cands = cands.persist()
-        handles.append(cands)
-        n_attempts = cands.count()
-    if n_attempts is None:
-        n_attempts = -1  # unknown, not needed (limit == 0)
     if limit > 0 and n_attempts == 0:
-        for h in handles:
-            h.unpersist()
-        return DedupResult(None, pushed, 0, 0, 0, 0, limit_reached)
+        return DedupResult(None, pushed, 0, 0, limit_reached)
 
     order_key = [F.col("parent_disc"), F.col("link_index")]
 
@@ -242,7 +231,6 @@ def dedup_candidates(
     new, n_new = with_dense_order(
         new, order_key, "_idx", bucket_col, order_max_out=_new_max_out,
     )
-    n_after_first_wins = n_new  # (first-wins count only needed for lineage)
 
     # budget: pushes succeed while done <= limit ⇒ room = limit+1-pushed
     if limit > 0:
@@ -262,33 +250,13 @@ def dedup_candidates(
         limit_hit = False
         if room is not None and n_new == room and room >= 0:
             if n_attempts > n_new:
-                # were any attempts ordered after the budget-exhausting push?
-                if room == 0:
-                    limit_hit = n_attempts > 0
-                elif attempts_max is not None and _new_max_out:
-                    # scalar path: kept == new here (n_new == room), so the
-                    # last kept key is the deduped set's max order key —
-                    # already collected inside the dense-order counts job.
-                    # A trailing attempt exists iff some attempt orders
-                    # strictly after it.
-                    limit_hit = tuple(attempts_max) > _new_max_out[0]
-                else:
-                    last = (
-                        kept.orderBy(F.col("_idx").desc())
-                        .select("parent_disc", "link_index")
-                        .limit(1)
-                        .collect()
-                    )
-                    if last:
-                        ld, li = last[0]["parent_disc"], last[0]["link_index"]
-                        trailing = cands.filter(
-                            (F.col("parent_disc") > ld)
-                            | (
-                                (F.col("parent_disc") == ld)
-                                & (F.col("link_index") > li)
-                            )
-                        ).count()
-                        limit_hit = trailing > 0
+                # were any attempts ordered after the budget-exhausting
+                # push? kept == new here (n_new == room), so the last kept
+                # key is the deduped set's max order key, collected inside
+                # the dense-order counts job
+                limit_hit = (
+                    room == 0 or tuple(attempts_max) > _new_max_out[0]
+                )
         elif room is not None and room == 0 and n_attempts > 0:
             limit_hit = True
 
@@ -299,8 +267,6 @@ def dedup_candidates(
     return DedupResult(
         fresh=fresh,
         pushed_end=pushed + n_kept,
-        n_attempts=n_attempts,
-        n_after_first_wins=n_after_first_wins,
         n_new=n_new,
         n_kept=n_kept,
         limit_reached=limit_reached or limit_hit,

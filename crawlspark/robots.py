@@ -5,24 +5,26 @@ Rules model (FIXTURES.md §4): per-host path-prefix allow/deny rows with
 optional crawl delay. Decision: the longest matching prefix wins; no
 matching rule ⇒ allow (matching real robots.txt precedence).
 
-Scale: the rules table is small policy state shared by every task — the
-Spark translation of the reference's read-only robots object shared by all
-workers is an explicit ``F.broadcast`` join (north rule calls this out).
-Denied rows are failed fetch attempts: still counted in ``done``
-(crawler.go:175), never fetched.
+The rules table is small policy state shared by every task (the
+reference's read-only robots object shared by all workers). The engine
+collects it once per crawl; the gate is a literal map in the round plan
+and the crawl-delay budgets a driver dict. Denied rows are failed fetch
+attempts: still counted in ``done`` (crawler.go:175), never fetched.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Tuple
+import math
+from typing import Dict, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 
 def robots_budgets(
-    rules: DataFrame, round_wall_secs: float, default_delay_secs: float = 3.0
-) -> Optional[DataFrame]:
+    rules: Sequence[Row], round_wall_secs: float,
+    default_delay_secs: float = 3.0,
+) -> Optional[Dict[str, int]]:
     """Per-host politeness budgets derived from robots crawl-delay
     (reference README.md:9-10 — crawl-delay honored in the default
     config; the delay sleep is crawler.go:176-178, default 3s
@@ -33,54 +35,34 @@ def robots_budgets(
     crawl delay") — a host advertising a delay shorter than the default
     gets the larger budget its own rule allows (ADVICE r2).
 
-    Returns a small (host, budget) DataFrame for schedule_round's
-    broadcast, or None when no rule carries a delay. Hosts absent from
-    the result fall to the caller's default budget (derived from
-    default_delay_secs)."""
-    if rules is None or "crawl_delay_secs" not in rules.columns:
-        return None
-    per_host = (
-        rules.filter(
-            F.col("crawl_delay_secs").isNotNull()
-            & (F.col("crawl_delay_secs") > 0)
-        )
-        .groupBy("host")
-        .agg(F.max("crawl_delay_secs").alias("_delay"))
-    )
-    return per_host.select(
-        "host",
-        F.ceil(
-            F.lit(float(round_wall_secs)) / F.col("_delay").cast("double")
-        ).cast("long").alias("budget"),
-    )
+    ``rules``: the collected rules rows. Returns ``{host: budget}`` for
+    schedule_round's literal map, or None when no rule carries a delay.
+    Hosts absent from the result fall to the caller's default budget
+    (derived from default_delay_secs)."""
+    delay: Dict[str, float] = {}
+    for r in rules:
+        d = r.asDict().get("crawl_delay_secs")
+        if d is not None and d > 0:
+            delay[r["host"]] = max(d, delay.get(r["host"], d))
+    return {
+        h: math.ceil(float(round_wall_secs) / float(d))
+        for h, d in delay.items()
+    } or None
 
 
-#: literal-map path cutoff: beyond this many total rules the compiled
-#: plan literal would bloat Catalyst (same reasoning as frontier.py's
-#: dense-order offsets cutoff); fall back to the broadcast-join path.
-COMPILE_MAX_RULES = 4096
-
-
-def compile_robots(rules: Optional[DataFrame]):
-    """Collect the (broadcast-small) rules table ONCE at crawl start into
-    ``[(host, [(prefix, allow), ...]), ...]`` with each host's prefixes
-    sorted longest-first (ties: prefix asc, deny before allow — fully
-    deterministic, unlike a bare length-desc sort). The engine passes the
-    compiled form to ``apply_robots`` every round so the per-round gate
-    is a NARROW projection — no join, no window, no shuffle (the round-2
-    plan had a per-round window shuffle on seen_key here).
-
-    Returns None when the rule set is empty or exceeds
-    ``COMPILE_MAX_RULES`` (a crawl spanning millions of hosts keeps the
-    broadcast-join path — robots state that big should not live in a
-    plan literal)."""
-    if rules is None:
-        return None
-    rows = rules.select("host", "path_prefix", "allow").collect()
-    if not rows or len(rows) > COMPILE_MAX_RULES:
+def compile_robots(rules: Sequence[Row]):
+    """The collected rules rows as ``[(host, [(prefix, allow), ...]),
+    ...]``, each host's prefixes sorted longest-first (ties: prefix asc,
+    deny before allow — fully deterministic, unlike a bare length-desc
+    sort). The engine compiles once per crawl and passes the result to
+    ``apply_robots`` every round, so the per-round gate is a NARROW
+    projection — no join, no window, no shuffle (the round-2 plan had a
+    per-round window shuffle on seen_key here). None when there are no
+    rules (allow-all)."""
+    if not rules:
         return None
     per_host: dict = {}
-    for r in rows:
+    for r in rules:
         per_host.setdefault(r["host"], []).append(
             (r["path_prefix"], bool(r["allow"]))
         )
@@ -100,79 +82,44 @@ def _raw_path() -> F.Column:
 
 
 def apply_robots(
-    scheduled: DataFrame,
-    rules: Optional[DataFrame],
-    compiled=None,
+    scheduled: DataFrame, compiled
 ) -> Tuple[DataFrame, DataFrame]:
-    """Split scheduled rows into (allowed, denied) under the rules table.
+    """Split scheduled rows into (allowed, denied) under the rules
+    ``compiled`` by :func:`compile_robots`: a narrow literal-map lookup
+    plus a higher-order prefix scan — zero shuffle, zero join.
 
-    ``scheduled`` must carry url_key (path[?query] — the path the server
-    sees); ``rules``: (host, path_prefix, allow, crawl_delay_secs).
-    With ``compiled`` (from :func:`compile_robots`) the decision is a
-    narrow literal-map lookup + higher-order prefix scan — zero shuffle,
-    zero join; otherwise the broadcast-join + longest-prefix window path
-    runs (the scale fallback for rule sets too large to compile)."""
-    if rules is None and compiled is None:
+    ``scheduled`` must carry url and host; None rules allow all."""
+    if compiled is None:
         return scheduled, scheduled.limit(0)
 
-    if compiled:
-        m = F.create_map(
-            *[
-                c
-                for host, pa in compiled
-                for c in (
-                    F.lit(host),
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(p).alias("p"), F.lit(a).alias("a")
-                            )
-                            for p, a in pa
-                        ]
-                    ),
-                )
-            ]
-        )
-        raw = _raw_path()
-        # try_element_at: null (⇒ allow) for hosts with no rules and for
-        # rows matching no prefix — element_at throws under ANSI mode
-        first_match = F.try_element_at(
-            F.filter(
-                m[F.col("host")], lambda s: raw.startswith(s["p"])
-            ),
-            F.lit(1),
-        )
-        decided = scheduled.withColumn(
-            "_decision", F.coalesce(first_match["a"], F.lit(True))
-        )
-        allowed = decided.filter(F.col("_decision")).drop("_decision")
-        denied = decided.filter(~F.col("_decision")).drop("_decision")
-        return allowed, denied
-
-    r = rules.select(
-        F.col("host").alias("_rhost"),
-        F.col("path_prefix").alias("_prefix"),
-        F.col("allow").alias("_allow"),
+    m = F.create_map(
+        *[
+            c
+            for host, pa in compiled
+            for c in (
+                F.lit(host),
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(p).alias("p"), F.lit(a).alias("a")
+                        )
+                        for p, a in pa
+                    ]
+                ),
+            )
+        ]
     )
-    joined = scheduled.withColumn("_rawpath", _raw_path()).join(
-        F.broadcast(r),
-        (F.col("host") == F.col("_rhost"))
-        & F.col("_rawpath").startswith(F.col("_prefix")),
-        "left",
+    raw = _raw_path()
+    # try_element_at: null (⇒ allow) for hosts with no rules and for
+    # rows matching no prefix — element_at throws under ANSI mode
+    first_match = F.try_element_at(
+        F.filter(
+            m[F.col("host")], lambda s: raw.startswith(s["p"])
+        ),
+        F.lit(1),
     )
-    # longest matching prefix per URL wins; no rule ⇒ allow. Tie-break
-    # (prefix asc, deny-before-allow) matches compile_robots' sort so
-    # both paths decide identically.
-    w = Window.partitionBy("seen_key").orderBy(
-        F.length(F.col("_prefix")).desc_nulls_last(),
-        F.col("_prefix").asc_nulls_last(),
-        F.col("_allow").asc_nulls_last(),
-    )
-    decided = (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .withColumn("_decision", F.coalesce(F.col("_allow"), F.lit(True)))
-        .drop("_rn", "_rhost", "_prefix", "_allow", "_rawpath")
+    decided = scheduled.withColumn(
+        "_decision", F.coalesce(first_match["a"], F.lit(True))
     )
     allowed = decided.filter(F.col("_decision")).drop("_decision")
     denied = decided.filter(~F.col("_decision")).drop("_decision")

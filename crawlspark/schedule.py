@@ -21,7 +21,7 @@ round-robin dispatch, immune to hot-host skew by construction.
 
 from __future__ import annotations
 
-from typing import Optional, Tuple
+from typing import Dict, Optional, Tuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -34,7 +34,7 @@ def schedule_round(
     host_budget: int = 0,
     priority_order: bool = False,
     salt_buckets: int = SALT_BUCKETS,
-    host_budgets: Optional[DataFrame] = None,
+    host_budgets: Optional[Dict[str, int]] = None,
     default_budget: int = 0,
 ) -> Tuple[DataFrame, Optional[DataFrame]]:
     """Split the frontier into (scheduled, carryover) for one round.
@@ -42,10 +42,10 @@ def schedule_round(
     Frontier order (≙ queue FIFO / priority queue): (priority desc,
     disc_order) in priority mode, else disc_order alone.
 
-    ``host_budgets``: optional small (host, budget) table — per-host
-    politeness budgets derived from robots crawl-delay (reference
-    README.md:9-10; delay applied crawler.go:176-178) — broadcast onto the
-    frontier; hosts without a row fall back to ``host_budget`` (or
+    ``host_budgets``: optional ``{host: budget}`` — per-host politeness
+    budgets derived from robots crawl-delay (reference README.md:9-10;
+    delay applied crawler.go:176-178) — looked up in a literal map, so
+    no join; hosts without an entry fall back to ``host_budget`` (or
     ``default_budget`` when host_budget == 0).
 
     Scale shape: carryover is a FLAG SPLIT of the two ranking windows —
@@ -54,7 +54,7 @@ def schedule_round(
     the frontier is never re-shuffled a second time per round (the
     round-2 fix for the per-round carryover exchange)."""
     fallback = host_budget if host_budget > 0 else default_budget
-    if fallback <= 0 and host_budgets is None:
+    if fallback <= 0 and not host_budgets:
         return frontier, None
 
     if priority_order:
@@ -65,18 +65,17 @@ def schedule_round(
     salted = frontier.withColumn(
         "_salt", F.pmod(F.xxhash64("url_key"), F.lit(salt_buckets))
     )
-    if host_budgets is not None:
-        b = host_budgets.select(
-            F.col("host"), F.col("budget").alias("_hb")
-        )
-        salted = salted.join(F.broadcast(b), "host", "left").withColumn(
+    if host_budgets:
+        hb = F.create_map(*[
+            F.lit(x) for kv in sorted(host_budgets.items()) for x in kv
+        ])[F.col("host")].cast("long")
+        salted = salted.withColumn(
             "_budget",
             F.coalesce(
-                F.col("_hb"),
-                F.lit(fallback if fallback > 0 else None).cast("long"),
+                hb, F.lit(fallback if fallback > 0 else None).cast("long")
             ),
-        ).drop("_hb")
-        # a host with neither a budget row nor a fallback is unbounded
+        )
+        # a host with neither a budget entry nor a fallback is unbounded
         unbounded = F.col("_budget").isNull()
     else:
         salted = salted.withColumn("_budget", F.lit(fallback).cast("long"))

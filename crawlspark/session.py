@@ -65,9 +65,7 @@ def get_spark(
     # at 8 slots wastes 4x the core-seconds — a level-independent Amdahl
     # term charged to the scaling gate). 2 threads per slot = the
     # cpuset/core budget the level owns.
-    gc_threads = int(
-        os.environ.get("CRAWLSPARK_GC_THREADS", max(2, min(2 * cores, 16)))
-    )
+    gc_threads = max(2, min(2 * cores, 16))
     # Heap posture, from paired GC logs on the 400k-page crawl (r4):
     # - -Xms == -Xmx: without it the heap grows 5.5G -> 14.8G across
     #   round 0 while 8+ tasks allocate concurrently; G1 runs undersized
@@ -146,8 +144,10 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.ui.enabled", "false")
     )
-    # opt-in event logging for scaling diagnostics (stage gaps = driver-
-    # serial time; stage times = parallel work) — bench/analyze_eventlog.py
+    # opt-in event logging: set CRAWLSPARK_EVENTLOG_DIR for a
+    # `python bench.py` run, then read the log with
+    # bench/analyze_eventlog.py (stage gaps = driver-serial time; stage
+    # times = parallel work)
     evlog = os.environ.get("CRAWLSPARK_EVENTLOG_DIR")
     if evlog:
         os.makedirs(evlog, exist_ok=True)
@@ -156,12 +156,6 @@ def get_spark(
             .config("spark.eventLog.dir", evlog)
             .config("spark.eventLog.compress", "false")
         )
-    # ad-hoc conf overrides for experiments/ops without code changes:
-    # CRAWLSPARK_EXTRA_CONF="key=value;key2=value2"
-    env_conf = os.environ.get("CRAWLSPARK_EXTRA_CONF", "")
-    for pair in filter(None, env_conf.split(";")):
-        k, _, v = pair.partition("=")
-        b = b.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -123,30 +123,3 @@ def sitemap_entries(xml_df):
     """DataFrame(sitemap_url, xml) → SITEMAP_ENTRY rows."""
     return xml_df.select("xml").mapInPandas(_parse_batches, SITEMAP_ENTRY)
 
-
-def lastmod_col(col):
-    """Native multi-layout lastmod parse (SF2) as a coalesce of
-    to_timestamp attempts — for SQL pipelines on shredded sitemap tables."""
-    from pyspark.sql import functions as F
-
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(
-        F.to_timestamp(c, "yyyy-MM-dd"),
-        F.to_timestamp(c, "yyyy-MM-dd'T'HH:mmXXX"),
-        F.to_timestamp(c, "yyyy-MM-dd'T'HH:mm:ssXXX"),
-        F.to_timestamp(c, "yyyy-MM-dd'T'HH:mm:ss.SSSSSSSSSXXX"),
-        F.to_timestamp(c, "yyyy-MM"),
-        F.to_timestamp(c, "yyyy"),
-    )
-
-
-def changefreq_col(col):
-    """Native SF1 decode as a when-chain."""
-    from pyspark.sql import functions as F
-
-    c = F.col(col) if isinstance(col, str) else col
-    expr = F.when(c == "", F.lit(0))
-    for token, secs in _FREQ_SECS.items():
-        if token:
-            expr = expr.when(c == token, F.lit(secs))
-    return expr.otherwise(F.lit(None)).cast("long")

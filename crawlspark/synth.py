@@ -206,142 +206,3 @@ def pages_index(pages: List[dict]) -> Dict[Tuple[str, str], Tuple[int, Optional[
     resolver (the single-process analogue of the Spark resolver join)."""
     return {(p["host"], p["url_key"]): (p["status"], p["content_html"]) for p in pages}
 
-
-def powerlaw_spark(
-    spark,
-    n_pages: int,
-    n_hosts: int = 24,
-    out_degree: int = 25,
-    paragraphs: int = 20,
-    seed: int = 42,
-    hot_host_share: float = 0.4,
-    seed_fraction: float = 0.25,
-):
-    """Distributed deterministic power-law web graph — the scale path of
-    :func:`powerlaw`. Identical structure class (one hot host with
-    ``hot_host_share`` of all pages, zipf-decaying tail hosts, same-host
-    link bias, dead links, img spans, multi-paragraph bodies) but
-    generated entirely JVM-side from ``spark.range``: a 10^7-10^10-page
-    corpus never exists as driver memory and generation parallelizes
-    with the cluster. Every column is a pure deterministic expression of
-    the page index (xxhash64-seeded), so the corpus is identical at any
-    parallelism / partitioning.
-
-    Returns ``(pages_df, seeds_df)`` with the same schemas the bench and
-    engine consume (PAGES columns; seeds ``(url, seed_order)``)."""
-    from pyspark.sql import functions as F
-
-    # --- host assignment: boundaries precomputed driver-side (n_hosts
-    # literals), matching powerlaw()'s hot + zipf split
-    n_hot = int(n_pages * hot_host_share)
-    weights = [1.0 / (h + 1) for h in range(1, n_hosts)]
-    total_w = sum(weights)
-    remaining = n_pages - n_hot
-    bounds = [n_hot]
-    for w in weights:
-        bounds.append(bounds[-1] + int(remaining * w / total_w))
-
-    def host_of(idx):
-        # CASE chain over the ~n_hosts literal boundaries; indices past
-        # the last boundary take a deterministic pseudo-random tail host
-        expr = F.when(idx < F.lit(bounds[0]), F.lit(0))
-        for h in range(1, n_hosts):
-            expr = expr.when(idx < F.lit(bounds[h]), F.lit(h))
-        return expr.otherwise(
-            (
-                F.pmod(F.xxhash64(idx, F.lit("tail"), F.lit(seed)),
-                       F.lit(n_hosts - 1)) + F.lit(1)
-            ).cast("int")
-        )
-
-    def url_of(idx):
-        return F.concat(
-            F.lit("http://h"), host_of(idx).cast("string"),
-            F.lit(".example/p/"), idx.cast("string"),
-        )
-
-    base = spark.range(n_pages).select(F.col("id").alias("i"))
-    i = F.col("i")
-
-    # --- links: out_degree targets; ~70% biased to a nearby page (mostly
-    # same-host because page indices cluster by host), like powerlaw()
-    link_exprs = []
-    for k in range(out_degree):
-        j_far = F.pmod(
-            F.xxhash64(i, F.lit(k), F.lit(seed)), F.lit(n_pages)
-        )
-        j_near = F.pmod(
-            i + F.lit(1)
-            + F.pmod(F.xxhash64(i, F.lit(k), F.lit("near"), F.lit(seed)),
-                     F.lit(49)),
-            F.lit(n_pages),
-        )
-        biased = (
-            F.pmod(F.xxhash64(i, F.lit(k), F.lit("bias"), F.lit(seed)),
-                   F.lit(100)) < F.lit(70)
-        )
-        j = F.when(biased, j_near).otherwise(j_far)
-        link_exprs.append(
-            F.concat(
-                F.lit('<a href="'), url_of(j), F.lit('">l'),
-                j.cast("string"), F.lit("</a>"),
-            )
-        )
-
-    # --- body: paragraphs drawn from a driver-precomputed sentence pool
-    # (128 literal sentences; one hash per paragraph picks the sentence)
-    rng = random.Random(seed)
-    words = ["crawl", "frontier", "spark", "shard", "queue", "host", "span"]
-    pool = [
-        "<p>" + " ".join(rng.choices(words, k=12)) + "</p>"
-        for _ in range(128)
-    ]
-    pool_arr = F.array(*[F.lit(s) for s in pool])
-    para_exprs = [
-        F.element_at(
-            pool_arr,
-            F.pmod(F.xxhash64(i, F.lit("para"), F.lit(p), F.lit(seed)),
-                   F.lit(128)).cast("int") + F.lit(1),
-        )
-        for p in range(paragraphs)
-    ]
-
-    dead = F.when(
-        F.pmod(F.xxhash64(i, F.lit("dead"), F.lit(seed)), F.lit(100))
-        < F.lit(10),
-        F.concat(F.lit('<a href="/missing/'), i.cast("string"),
-                 F.lit('">dead</a>')),
-    )
-    img = F.when(
-        F.pmod(F.xxhash64(i, F.lit("img"), F.lit(seed)), F.lit(100))
-        < F.lit(30),
-        F.concat(F.lit('<img src="/img/'), i.cast("string"),
-                 F.lit('.png">')),
-    )
-    body = F.concat_ws(
-        "\n", *para_exprs, *link_exprs, dead, img
-    )  # concat_ws skips the NULLs from the optional whens
-    html = F.concat(
-        F.lit("<html>\n\t<head></head>\n\t<body>\n"), body,
-        F.lit("\n\t</body>\n</html>\n"),
-    )
-
-    pages_df = base.select(
-        url_of(i).alias("url"),
-        F.concat(F.lit("h"), host_of(i).cast("string"),
-                 F.lit(".example")).alias("host"),
-        F.concat(F.lit("/p/"), i.cast("string")).alias("url_key"),
-        F.lit(200).alias("status"),
-        html.alias("content_html"),
-    )
-
-    step = max(1, int(1 / max(seed_fraction, 1e-9)))
-    seeds_df = (
-        spark.range(0, n_pages, step)
-        .select(F.col("id").alias("i"))
-        .select(
-            url_of(F.col("i")).alias("url"),
-            (F.col("i") / F.lit(step)).cast("int").alias("seed_order"),
-        )
-    )
-    return pages_df, seeds_df

@@ -102,6 +102,32 @@ def test_basic16_limit(spark, tmp_path):
     assert_matches_oracle(result, oracle)
 
 
+def test_seed_limit_boundary(spark, tmp_path):
+    """Seeds that fill the room exactly (limit + 1 unique keys): a
+    duplicate seed AFTER the last unique one is a push attempt past the
+    budget and trips the limit at seeding; the same duplicate BEFORE it
+    does not (round 0's link pushes trip it). Both equal the oracle."""
+    pages, _ = basic16()
+    uniq = [p["url"] for p in pages[:6]]
+    dup = uniq[1] + "#again"  # same url_key as uniq[1]
+    for name, seeds, at_seeding in (
+        ("trailing", uniq + [dup], True),
+        ("inner", uniq[:-1] + [dup, uniq[-1]], False),
+    ):
+        result = run_spark_crawl(
+            spark, tmp_path / name, pages, seeds, host="example.com", limit=5
+        )
+        oracle = oracle_crawl(
+            pages_index(pages), seeds, "example.com", limit=5
+        )
+        assert result.limit_reached and oracle.limit_reached
+        assert result.pushed == 6
+        assert_matches_oracle(result, oracle)
+        # a limit hit at seeding makes round 0 a drain round, which runs
+        # no candidate pipeline and writes no lineage
+        assert (result.lineage_df().count() == 0) == at_seeding
+
+
 def test_richsite_failures_and_variants(spark, tmp_path):
     pages, seeds = richsite()
     result = run_spark_crawl(spark, tmp_path, pages, seeds, host="rich.example")

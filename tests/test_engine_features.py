@@ -57,11 +57,11 @@ def test_robots_longest_prefix_wins(spark, tmp_path):
 
 
 def test_robots_compiled_path_equals_join_path_and_is_narrow(spark):
-    """The literal-map robots gate (compiled once per crawl) decides
-    identically to the broadcast-join + longest-prefix-window fallback —
-    including prefix-length ties, where deny sorts before allow — and its
-    plan has ZERO exchanges (the round-2 plan shuffled on seen_key here
-    every round)."""
+    """The literal-map robots gate (compiled once per crawl) gives the
+    longest-prefix decisions — including prefix-length ties, where deny
+    sorts before allow — and its plan has ZERO exchanges and no join (the
+    round-2 plan shuffled on seen_key here every round). An empty rules
+    table allows everything."""
     from crawlspark.robots import apply_robots, compile_robots
 
     rules = spark.createDataFrame(
@@ -87,32 +87,28 @@ def test_robots_compiled_path_equals_join_path_and_is_narrow(spark):
         ],
         "url string, host string, seen_key string",
     )
-    compiled = compile_robots(rules)
+    compiled = compile_robots(rules.collect())
     assert compiled is not None
 
     def keys(df):
         return sorted(r["seen_key"] for r in df.collect())
 
-    a_fast, d_fast = apply_robots(scheduled, rules, compiled)
-    a_join, d_join = apply_robots(scheduled, rules, None)
-    assert keys(a_fast) == keys(a_join)
-    assert keys(d_fast) == keys(d_join)
-    assert keys(d_fast) == [
+    allowed, denied = apply_robots(scheduled, compiled)
+    assert keys(denied) == [
         "h.com/a/x.html", "h.com/t/z.html", "other.com/p.html"
     ]
+    assert keys(allowed) == [
+        "h.com/a/keep/y.html", "h.com/free.html", "norules.com/p.html"
+    ]
 
-    plan = a_fast._jdf.queryExecution().executedPlan().toString()
+    plan = allowed._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "Join" not in plan
 
-    # cutoff fallback: an over-large rule set refuses to compile
-    import crawlspark.robots as R
-
-    old = R.COMPILE_MAX_RULES
-    try:
-        R.COMPILE_MAX_RULES = 3
-        assert compile_robots(rules) is None
-    finally:
-        R.COMPILE_MAX_RULES = old
+    # an empty rules table is allow-all
+    empty = compile_robots(spark.createDataFrame([], ROBOTS_RULE).collect())
+    allowed, denied = apply_robots(scheduled, empty)
+    assert keys(allowed) == keys(scheduled)
+    assert keys(denied) == []
 
 
 def test_sitemap_entries_seed_first_with_priority(spark, tmp_path):

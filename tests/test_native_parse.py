@@ -209,22 +209,14 @@ def test_clean_parent_edge_cases_match(spark):
 
 def test_bench_graph_is_fully_native(spark):
     """The scaling-gate premise: EVERY page of the bench powerlaw graph
-    (both generators) passes the clean grammar, so the crawl bench pays
-    zero per-page Python."""
-    from crawlspark.synth import powerlaw_spark
-
+    passes the clean grammar, so the crawl bench pays zero per-page
+    Python."""
     pages, _ = powerlaw(n_pages=600, n_hosts=8)
     df = spark.createDataFrame(pages, PAGES)
     n_dirty = df.filter(
         ~clean_page_pred(F.col("url"), F.col("content_html"))
     ).count()
     assert n_dirty == 0
-
-    pages_df, _ = powerlaw_spark(spark, n_pages=600, n_hosts=8)
-    n_dirty_spark = pages_df.filter(
-        ~clean_page_pred(F.col("url"), F.col("content_html"))
-    ).count()
-    assert n_dirty_spark == 0
 
 
 def test_engine_native_toggle_identical(spark, tmp_path):

@@ -83,10 +83,11 @@ def test_per_host_budget_column(spark):
         F.col("id").alias("disc_order"),
         F.lit(0.0).alias("priority"),
     )
-    budgets = spark.createDataFrame([("h0", 3)], "host string, budget long")
     scheduled, carry = schedule_round(
-        frontier, host_budget=0, host_budgets=budgets, default_budget=10
+        frontier, host_budget=0, host_budgets={"h0": 3}, default_budget=10
     )
+    # the budgets are a literal map in the plan, not a join
+    assert "Join" not in _plan(scheduled)
     counts = {
         r["host"]: r["count"]
         for r in scheduled.groupBy("host").count().collect()

@@ -8,9 +8,16 @@ exact anti-join dedup on). Also times the analysis/operator queries from
 __spark_entry__ at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 
 Env knobs:
-  SPARK_GRAFT_SF_DIR      sf dir for operator queries (default sf0.1)
-  SPARK_GRAFT_CPUS        local[N] cores (default 32)
-  CRAWLSPARK_BENCH_PAGES  synthetic graph size (default 40000)
+  SPARK_GRAFT_SF_DIR           sf dir for operator queries (default sf0.1)
+  SPARK_GRAFT_CPUS             local[N] cores (default: the CPUs this
+                               process may run on)
+  CRAWLSPARK_BENCH_PAGES       synthetic graph size (default 40000)
+  CRAWLSPARK_BENCH_PARTITIONS  crawl partitions (default: the cores)
+  CRAWLSPARK_BENCH_CRAWL_REPS  headline-crawl repetitions (default 3)
+  CRAWLSPARK_BENCH_QUERY_REPS  operator-query sweeps (default 3; 0 runs
+                               the crawl only)
+  CRAWLSPARK_DRIVER_MEM        driver heap (default: get_spark's)
+  CRAWLSPARK_EVENTLOG_DIR      write a Spark event log there
 
 The synthetic graph is generated once and cached as parquet under /tmp so
 every parallelism level benches the identical input (BASELINE.md protocol).
@@ -26,7 +33,9 @@ import tempfile
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+)
 PARTS = int(os.environ.get("CRAWLSPARK_BENCH_PARTITIONS", str(0))) or CPUS
 N_PAGES = int(os.environ.get("CRAWLSPARK_BENCH_PAGES", "40000"))
 QUERY_REPS = int(os.environ.get("CRAWLSPARK_BENCH_QUERY_REPS", "3"))
@@ -165,7 +174,8 @@ def main():
 
     qfns = entry.queries()
     skip = {"crawl_order_basic16", "crawl_span_documents"}  # crawl above
-    qnames = [n for n in qfns if n not in skip]
+    # CRAWLSPARK_BENCH_QUERY_REPS=0: the crawl alone, no query sweep
+    qnames = [n for n in qfns if n not in skip] if QUERY_REPS else []
     qreps = {n: [] for n in qnames}
 
     # interleave: crawl rep 1, query sweep 1, crawl rep 2, sweep 2, ...

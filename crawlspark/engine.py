@@ -28,7 +28,7 @@ order, seen set, and span documents. Verified against crawlspark.oracle.
 from __future__ import annotations
 
 import logging
-from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
@@ -53,8 +53,8 @@ log = logging.getLogger(__name__)
 def _parallel_jobs(*thunks) -> list:
     """Run independent Spark actions concurrently from driver threads.
 
-    Each round's tail is a set of INDEPENDENT sink jobs (order append,
-    seen append, fresh-key bitmaps, frontier snapshot)
+    Each round's tail is a set of INDEPENDENT sink jobs (seen append,
+    fresh-key bitmaps, frontier snapshot)
     that all read already-cached inputs; running them sequentially adds
     their fixed job-submission + commit latencies to every round's
     critical path — a driver-serial term that does not shrink with
@@ -209,7 +209,6 @@ class _RoundCommit:
     fresh: Optional[DataFrame]  # kept fresh keys, appended to seen
     bloom: bool  # roll the fresh keys into the bloom bitmaps
     next_frontier: Optional[DataFrame]  # snapshot as frontier batch r+1
-    order_append: Future  # running since the documents write
     handles: list  # round caches to unpersist
     dedup: Optional[DedupResult]
     prev_frontier: Optional[DataFrame]  # the handoff round r consumed
@@ -523,8 +522,9 @@ class Crawler:
     # -- round phases -----------------------------------------------------
     def _fetch_parse(self, r: int, frontier: DataFrame, handles: list):
         """Schedule → robots → fetch → parse, then the documents append
-        and the order append. Returns (parsed, carry, order append
-        future); the round's caches go into ``handles``."""
+        and the order append, both on the round's own thread, so a round
+        that raises later leaves no write running. Returns (parsed,
+        carry); the round's caches go into ``handles``."""
         cfg = self.cfg
         scheduled, carry = schedule_round(
             frontier, cfg.host_budget, cfg.priority_order,
@@ -600,13 +600,7 @@ class Crawler:
             ),
             r,
         )
-        # the order append reads the parsed cache only — submit it
-        # from its own thread so it overlaps the fused agg (independent
-        # sinks; per-round serial latency is the Amdahl term of the
-        # scaling gate). The commit joins it.
-        order_pool = ThreadPoolExecutor(max_workers=1)
-        order_append = order_pool.submit(
-            self.store.append,
+        self.store.append(
             "order",
             parsed.select(
                 "url", "host", "url_key", "round", "disc_order",
@@ -614,8 +608,7 @@ class Crawler:
             ),
             r,
         )
-        order_pool.shutdown(wait=False)
-        return parsed, carry, order_append
+        return parsed, carry
 
     def _candidates(self, r: int, parsed: DataFrame, handles: list):
         """The round's canonicalized links. Returns (flagged, accepted,
@@ -872,8 +865,8 @@ class Crawler:
         """Round ``rc.r``'s background commit chain: its Spark sinks
         (concurrent, over cached inputs), the driver-side sinks, the
         state write, seen compaction, and the release of the round's
-        caches. The state is written only after every round-r sink,
-        the order append included, is durable."""
+        caches. The state is written only after every round-r sink is
+        durable (documents and order already are: the round wrote them)."""
         nb = rc.r + 1
         jobs, bitmaps_at = [], None
         if rc.fresh is not None:
@@ -888,12 +881,7 @@ class Crawler:
                 "frontier", rc.next_frontier.withColumn("round", F.lit(nb)),
                 nb,
             ))
-        try:
-            results = _parallel_jobs(*jobs)
-        finally:
-            # join the order append even when a tail job failed: its
-            # own failure must not hide
-            rc.order_append.result()
+        results = _parallel_jobs(*jobs)
         # driver-side sinks (no Spark jobs)
         self._append_metrics_local(rc.r, *rc.metrics)
         if rc.lineage is not None:
@@ -1005,9 +993,7 @@ class Crawler:
                 drained = True
                 break
             handles = []
-            parsed, carry, order_append = self._fetch_parse(
-                r, frontier, handles
-            )
+            parsed, carry = self._fetch_parse(r, frontier, handles)
             dedup = lineage = None
             bloom = False
             if limit_reached:
@@ -1054,7 +1040,6 @@ class Crawler:
                     fresh=fresh,
                     bloom=bloom,
                     next_frontier=nxt,
-                    order_append=order_append,
                     handles=handles,
                     dedup=dedup,
                     prev_frontier=self._frontier_handle,

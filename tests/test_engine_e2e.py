@@ -362,6 +362,47 @@ def test_failed_seen_append_in_normal_round_raises(spark, tmp_path,
     )
 
 
+def test_failed_round_leaves_no_append_running(spark, tmp_path, monkeypatch):
+    """A round that raises after its fetch/parse phase (here round 0's
+    fused agg) must leave no checkpoint write behind it: a write that
+    starts after run() raised could land after a resume's truncate. The
+    order append is slowed so that one running off the round's thread
+    would start late; a resume then equals the oracle."""
+    import time
+
+    from crawlspark.storage import CheckpointStore
+
+    pages, seeds = basic16()
+    append, delay, starts = CheckpointStore.append, 2.0, []
+
+    def spy(self, table, df, batch):
+        if table == "order":
+            time.sleep(delay)
+        starts.append((table, batch, time.monotonic()))
+        return append(self, table, df, batch)
+
+    def failing_agg(self, *args):
+        raise RuntimeError("injected fused-agg failure")
+
+    monkeypatch.setattr(CheckpointStore, "append", spy)
+    monkeypatch.setattr(Crawler, "_fused_agg", failing_agg)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_spark_crawl(spark, tmp_path, pages, seeds, host="example.com")
+    raised = time.monotonic()
+    time.sleep(delay + 1.0)  # room for a write still running to start
+    late = [(t, b) for t, b, at in starts if at > raised]
+    assert ("order", 0) in {(t, b) for t, b, _ in starts} and late == []
+
+    monkeypatch.undo()
+    pages_df = spark.createDataFrame(pages, PAGES)
+    cfg = CrawlConfig(checkpoint_dir=str(tmp_path / "ckpt"),
+                      host="example.com")
+    result = Crawler(spark, pages_df, cfg).run(seeds, resume=True)
+    assert_matches_oracle(
+        result, oracle_crawl(pages_index(pages), seeds, "example.com")
+    )
+
+
 def test_orphaned_commit_failure_is_logged(spark, tmp_path, caplog):
     """A commit chain left pending by a run() that aborted is waited out
     at the next run() entry; its failure is logged with its round."""

@@ -3,8 +3,6 @@ per-host politeness budgets, and the user-hook seams (IsAcceptedFunc /
 ProcessFunc / RemoveFunc analogues) — each pinned against the pure-Python
 reference oracle running with the identical hooks/budgets."""
 
-import tempfile
-
 import pytest
 
 from crawlspark import oracle as ora
@@ -30,9 +28,9 @@ def _two_host_site():
     return pages, ["http://slow.example/", "http://fast.example/"]
 
 
-def _run(spark, pages, seeds, robots=None, **cfg):
+def _run(spark, tmp_path, pages, seeds, robots=None, **cfg):
     pages_df = spark.createDataFrame(pages, PAGES)
-    ckpt = tempfile.mkdtemp(prefix="crawlspark_test_")
+    ckpt = str(tmp_path / "ckpt")
     robots_df = (
         spark.createDataFrame(robots, ROBOTS_RULE) if robots else None
     )
@@ -55,7 +53,7 @@ def _oracle_tuples(oracle):
     return sorted(oracle.order_tuples, key=lambda t: t[2])
 
 
-def test_crawl_delay_budgets_match_oracle(spark):
+def test_crawl_delay_budgets_match_oracle(spark, tmp_path):
     """slow.example has crawl-delay 10s; with a 30s round wall its budget
     is ceil(30/10)=3/round, while fast.example gets the default
     ceil(30/3)=10/round — scheduling (and therefore crawl order and round
@@ -65,7 +63,7 @@ def test_crawl_delay_budgets_match_oracle(spark):
         ("slow.example", "/", True, 10.0),
     ]
     res = _run(
-        spark, pages, seeds,
+        spark, tmp_path, pages, seeds,
         robots=robots,
         multi_host=True,
         hosts=["slow.example", "fast.example"],
@@ -96,11 +94,11 @@ def test_crawl_delay_budgets_match_oracle(spark):
     assert m[1] <= 3 + 10  # per-host caps respected after round 0
 
 
-def test_crawl_delay_without_rules_uses_default(spark):
+def test_crawl_delay_without_rules_uses_default(spark, tmp_path):
     """No robots rules: every host gets ceil(round_wall/default)."""
     pages, seeds = _two_host_site()
     res = _run(
-        spark, pages, seeds,
+        spark, tmp_path, pages, seeds,
         multi_host=True, hosts=["slow.example", "fast.example"],
         round_wall_secs=9.0, default_delay_secs=3.0,  # budget 3/host/round
     )
@@ -112,7 +110,7 @@ def test_crawl_delay_without_rules_uses_default(spark):
     assert _order_tuples(res) == _oracle_tuples(expected)
 
 
-def test_crawl_delay_shorter_than_default_wins(spark):
+def test_crawl_delay_shorter_than_default_wins(spark, tmp_path):
     """A host advertising a crawl-delay SHORTER than the configured
     default gets the LARGER budget its own rule allows — reference
     semantics: Worker.Delay applies only 'if there is not robots.txt
@@ -124,7 +122,7 @@ def test_crawl_delay_shorter_than_default_wins(spark):
         ("fast.example", "/", True, 1.0),
     ]
     res = _run(
-        spark, pages, seeds,
+        spark, tmp_path, pages, seeds,
         robots=robots,
         multi_host=True, hosts=["slow.example", "fast.example"],
         round_wall_secs=9.0, default_delay_secs=3.0,
@@ -168,11 +166,11 @@ _upper_text_spans = lambda url, spans: [  # noqa: E731
 _drop_vowel_e = lambda ch: ch == "e"  # noqa: E731
 
 
-def test_accept_fn_hook_matches_oracle(spark):
+def test_accept_fn_hook_matches_oracle(spark, tmp_path):
     """Custom IsAcceptedFunc (rejects /articles/a1*) steers BOTH engines
     identically: same order, same seen set."""
     pages, seeds = richsite()
-    res = _run(spark, pages, seeds, host="rich.example",
+    res = _run(spark, tmp_path, pages, seeds, host="rich.example",
                accept_fn=_accept_no_a1)
     expected = ora.crawl(
         pages_index(pages), seeds, "rich.example", accept_fn=_accept_no_a1
@@ -185,13 +183,13 @@ def test_accept_fn_hook_matches_oracle(spark):
     assert len(urls) < len(base.order_tuples)
 
 
-def test_process_and_remove_hooks_match_oracle(spark):
+def test_process_and_remove_hooks_match_oracle(spark, tmp_path):
     """ProcessFunc (uppercase text spans) + RemoveFunc (strip 'e' before
     whitespace normalization) flow through the Arrow parse stage and the
     oracle identically."""
     pages, seeds = richsite()
     res = _run(
-        spark, pages, seeds, host="rich.example",
+        spark, tmp_path, pages, seeds, host="rich.example",
         process_fn=_upper_text_spans, remove_fn=_drop_vowel_e,
     )
     expected = ora.crawl(

@@ -1,4 +1,5 @@
-"""Driver heap sizing of get_spark (pure Python, no JVM)."""
+"""get_spark: driver heap sizing (pure Python), and the effective session
+conf the engine relies on (the session fixture)."""
 
 from crawlspark.session import default_driver_mem
 
@@ -19,3 +20,18 @@ def test_default_driver_mem_fits_this_box():
     total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
     mb = int(default_driver_mem().rstrip("m"))
     assert 0 < mb << 20 <= total // 2
+
+
+def test_effective_conf_the_engine_relies_on(spark):
+    """get_spark leaves these to Spark's defaults; a Spark upgrade that
+    flips one fails here instead of silently changing plans."""
+    for key in (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.skewJoin.enabled",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled",
+    ):
+        assert spark.conf.get(key) == "true", key
+    # the session fixture asks for local[4]
+    assert spark.sparkContext.defaultParallelism == 4
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"

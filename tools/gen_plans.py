@@ -55,7 +55,8 @@ traced `wide` crawl and 1.38 s of a 19.3 s traced `dirty` crawl. A one-round cra
 its commit behind, so nearly all of it is the final join in `run()`.
 
 Crash contract unchanged: `state_r` is written inside the chain only
-after every round-r sink (including the order append) is durable;
+after every round-r sink is durable (the round itself writes documents
+and order);
 resume truncates any batch beyond the committed round, so a crash
 mid-pipeline replays the uncommitted round exactly as before
 (tests/test_engine_e2e.py resume tests, test_storage_compact torn-

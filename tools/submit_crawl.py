@@ -8,7 +8,8 @@
 
 Master, executor count/memory, and cluster conf come from spark-submit —
 this script never calls ``.master(...)``; it only sets the engine-required
-session conf (AQE, UTC, Arrow) that is cluster-size-independent. The
+session conf (UTC, Arrow) that is cluster-size-independent; AQE is
+Spark's default. The
 ``crawlspark`` package arrives via --py-files (tools/make_pyfiles.py), so
 the script imports it from the shipped archive on the driver while every
 executor's Python worker resolves the same archive — the standard
@@ -59,7 +60,6 @@ def main() -> None:
 
     spark = (
         SparkSession.builder.appName("crawlspark-submit")
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .getOrCreate()

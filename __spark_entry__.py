@@ -13,6 +13,9 @@ deterministic but engine-specific ⇒ rows-only checks).
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
 import tempfile
 from collections.abc import Callable
 
@@ -36,9 +39,19 @@ SF0001 = "/root/testdata/sf0.001"
 # ---------------------------------------------------------------------------
 
 
+@functools.cache
+def _checkpoint_root() -> str:
+    """This process's one directory for crawl checkpoints, removed at
+    exit: the query frames read their checkpoint tables lazily, so no
+    checkpoint can go earlier."""
+    root = tempfile.mkdtemp(prefix="crawlspark_entry_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
 def _run_crawl(spark: SparkSession, pages, seeds, **cfg):
     pages_df = spark.createDataFrame(pages, PAGES)
-    ckpt = tempfile.mkdtemp(prefix="crawlspark_entry_")
+    ckpt = tempfile.mkdtemp(dir=_checkpoint_root())
     crawler = Crawler(
         spark, pages_df, CrawlConfig(checkpoint_dir=ckpt, **cfg)
     )

@@ -295,8 +295,13 @@ def parent_cols(url):
     ]
 
 
+def _layer(df, **cols):
+    """``df`` plus the named columns, built from ``df``'s own columns."""
+    return df.select("*", *(c.alias(n) for n, c in cols.items()))
+
+
 def canonize_links_prepared(df, href_col):
-    """ONE-PASS canonicalization projection for candidate links.
+    """Canonicalization projection for candidate links, built in layers.
 
     Returns the passthrough columns plus:
       ``_cn``       routing flag — True where the href is fully resolved
@@ -307,19 +312,24 @@ def canonize_links_prepared(df, href_col):
                     (NULL otherwise, so a cache of this projection stays
                     narrow — clean rows never store their parent twice)
 
-    Scale design: the overwhelmingly common case on a real web graph —
-    an absolute, already-canonical href with a dot-segment-free path, or
-    a clean root-relative href — is computed ENTIRELY JVM-side. The whole
-    mask battery and all value expressions are evaluated in this SINGLE
-    projection, so a caller that persists the result pays the regex/byte
-    ops exactly ONCE per link; canonize_links_split's two branches are
-    then plain flag filters over the cache. (The previous shape — a union
-    of two FILTERED-then-projected branches straight off the exploded
-    links — re-evaluated the mask towers per branch and per output column
-    across the filter/project boundary; the round-4 event logs showed
-    that stage as the largest of the crawl at 10^6-page scale, and the
-    micro-bench measured the one-pass cached shape ~4x faster at 19.35M
-    links: 27.8s vs 106.2s for materialize+agg on local[32].)
+    The common case on a real web graph — an absolute, already-canonical
+    href with a dot-segment-free path, or a clean root-relative href — is
+    computed entirely JVM-side, and a caller that persists the result
+    pays the byte ops once per link; canonize_links_split's two branches
+    are then plain flag filters over the cache.
+
+    Every intermediate (the fragment cut, the authority split, the
+    root-relative path and query, the two tier masks) is a private
+    column of its own ``select`` layer, built once from the columns of
+    the layer below. A single Column tree would copy an intermediate's
+    whole subtree into each of its uses (a 68-kchar plan holding the
+    authority split ``locate('/', …)`` 160 times), and codegen's
+    subexpression elimination cannot share an expression that only some
+    CASE WHEN branches use. Each layer references its intermediates more
+    than once, and CollapseProject never merges a Project into its child
+    when that would copy a non-cheap expression, so the layers survive
+    optimization (≈5 kchars) and whole-stage codegen evaluates each
+    intermediate once per link.
 
     ``df`` must carry ``parent_url`` and its parent_cols plus
     passthrough columns; ``href_col`` is consumed.
@@ -331,7 +341,8 @@ def canonize_links_prepared(df, href_col):
         for c in df.columns
         if c not in ("parent_url", href_col) and c not in _PRECOMP
     ]
-    href = F.col(href_col)
+    href, c = F.col(href_col), F.col
+    pprefix, phost, parent_ok = (F.col(x) for x in _PRECOMP)
 
     # fragment is kept in the URL but never in the key (url.go:52-72).
     # Everything below the two fused rlike masks is UTF8String byte ops:
@@ -339,30 +350,51 @@ def canonize_links_prepared(df, href_col):
     # and at ~20 passes/link the conversions dominated the candidate
     # pipeline's CPU (event-log measured: the fused-agg stage IS the
     # largest stage of the crawl). Two regex passes per link remain.
-    nofrag = F.substring_index(href, "#", 1)  # ≡ regexp_replace("#.*$")
+    # F.trim(href) feeds the ROOT-RELATIVE tier (below).
+    df = _layer(
+        df,
+        _nofrag=F.substring_index(href, "#", 1),  # ≡ regexp_replace("#.*$")
+        _trimmed=F.trim(href),
+    )
+    nofrag, trimmed = c("_nofrag"), c("_trimmed")
     # authority split for absolute hrefs (valid under abs_clean only —
     # unused garbage otherwise, guarded by the mask in every consumer):
     # rest = after '://'; host = rest up to first '/' or '?';
     # path = '/'-rooted remainder up to '?'; query = after first '?'.
-    rest = F.substring(nofrag, F.locate("://", nofrag) + 3, F.length(nofrag))
-    hostq = F.substring_index(rest, "?", 1)
-    slash = F.locate("/", hostq)
-    path = F.when(
-        slash > 0, F.substring(hostq, slash, F.length(hostq))
-    ).otherwise(F.lit(""))
-    qpos = F.locate("?", nofrag)
-    query = F.when(
-        qpos > 0, F.substring(nofrag, qpos + 1, F.length(nofrag))
-    ).otherwise(F.lit(""))
-    host_abs = F.substring_index(hostq, "/", 1)
-
-    is_native = (
-        href.isNotNull()
-        # ONE regex: SQL_ABS_SIMPLE ∧ printable-ASCII (see SQL_ABS_CLEAN)
-        & href.rlike(SQL_ABS_CLEAN)
-        & ~_sql_path_needs_clean(path)
-        & ~path.contains("%")  # escaped paths percent-decode ⇒ exact path
+    df = _layer(
+        df,
+        _rest=F.substring(nofrag, F.locate("://", nofrag) + 3, F.length(nofrag)),
+        _qpos=F.locate("?", nofrag),
+        _rr_nofrag=F.substring_index(trimmed, "#", 1),
     )
+    rest, qpos, rr_nofrag = c("_rest"), c("_qpos"), c("_rr_nofrag")
+    df = _layer(
+        df,
+        _hostq=F.substring_index(rest, "?", 1),
+        _rr_path=F.substring_index(rr_nofrag, "?", 1),  # ≡ ^([^?#]*) capture
+        _rr_qpos=F.locate("?", rr_nofrag),
+    )
+    hostq, rr_path, rr_qpos = c("_hostq"), c("_rr_path"), c("_rr_qpos")
+    df = _layer(
+        df,
+        _query=F.when(
+            qpos > 0, F.substring(nofrag, qpos + 1, F.length(nofrag))
+        ).otherwise(F.lit("")),
+        _rr_query=F.when(
+            rr_qpos > 0,
+            F.substring(rr_nofrag, rr_qpos + 1, F.length(rr_nofrag)),
+        ).otherwise(F.lit("")),
+        _slash=F.locate("/", hostq),
+    )
+    query, rr_query, slash = c("_query"), c("_rr_query"), c("_slash")
+    df = _layer(
+        df,
+        _path=F.when(
+            slash > 0, F.substring(hostq, slash, F.length(hostq))
+        ).otherwise(F.lit("")),
+        _host_abs=F.substring_index(hostq, "/", 1),
+    )
+    path, host_abs = c("_path"), c("_host_abs")
 
     # second native tier: ROOT-RELATIVE hrefs ("/x", U1 case 3 — the most
     # common relative form on real webs): resolve = parent scheme://host +
@@ -370,28 +402,31 @@ def canonize_links_prepared(df, href_col):
     # so every row the exact parser could treat differently (unicode
     # whitespace trim, escapes, dot segments, odd parents) falls through.
     # The parent-derived columns come precomputed (parent_cols).
-    pprefix, phost, parent_ok = (F.col(c) for c in _PRECOMP)
-    trimmed = F.trim(href)
-    rr_nofrag = F.substring_index(trimmed, "#", 1)
-    rr_path = F.substring_index(rr_nofrag, "?", 1)  # ≡ ^([^?#]*) capture
-    rr_qpos = F.locate("?", rr_nofrag)
-    rr_query = F.when(
-        rr_qpos > 0, F.substring(rr_nofrag, rr_qpos + 1, F.length(rr_nofrag))
-    ).otherwise(F.lit(""))
-    is_rootrel = (
-        href.isNotNull()
-        # ONE regex on trim(href): rooted + printable charset. `^/` also
-        # implies not-absolute, and the printable class implies the old
-        # separate [^\x20-\x7E] href check (F.trim strips only \x20, so
-        # any non-printable byte survives into trimmed and fails the
-        # class) — so F.trim ≡ Go TrimSpace on every accepted row.
-        & trimmed.rlike(SQL_ROOTED_CLEAN)
-        & ~trimmed.startswith("//")  # protocol-relative is a distinct case
-        & parent_ok  # clean parent whose path re-parses unchanged
-        & ~_sql_path_needs_clean(rr_path)
-        & ~rr_path.contains("%")
+    df = _layer(
+        df,
+        _is_native=(
+            href.isNotNull()
+            # ONE regex: SQL_ABS_SIMPLE ∧ printable-ASCII (see SQL_ABS_CLEAN)
+            & href.rlike(SQL_ABS_CLEAN)
+            & ~_sql_path_needs_clean(path)
+            & ~path.contains("%")  # escaped paths percent-decode ⇒ exact
+        ),
+        _is_rootrel=(
+            href.isNotNull()
+            # ONE regex on trim(href): rooted + printable charset. `^/`
+            # also implies not-absolute, and the printable class implies
+            # the old separate [^\x20-\x7E] href check (F.trim strips only
+            # \x20, so any non-printable byte survives into trimmed and
+            # fails the class) — so F.trim ≡ Go TrimSpace on every
+            # accepted row.
+            & trimmed.rlike(SQL_ROOTED_CLEAN)
+            & ~trimmed.startswith("//")  # protocol-relative: distinct case
+            & parent_ok  # clean parent whose path re-parses unchanged
+            & ~_sql_path_needs_clean(rr_path)
+            & ~rr_path.contains("%")
+        ),
     )
-
+    is_native, is_rootrel = c("_is_native"), c("_is_rootrel")
     native_any = F.coalesce(is_native, F.lit(False)) | F.coalesce(
         is_rootrel, F.lit(False)
     )

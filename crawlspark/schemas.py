@@ -46,16 +46,18 @@ PAGES = T.StructType(
     ]
 )
 
-# Frontier rows: the unit of work (≙ *url.URL flowing through channels,
-# crawler.go:170) plus the scheduling metadata our batch realization needs.
+# The frontier snapshot (table ``frontier``, one batch per round): the
+# unit of work (≙ *url.URL flowing through channels, crawler.go:170) plus
+# the scheduling metadata our batch realization needs.
 FRONTIER = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
         T.StructField("host", T.StringType(), False),
-        T.StructField("url_key", T.StringType(), False),  # seen-set key
-        T.StructField("round", T.IntegerType(), False),  # discovery round
+        T.StructField("url_key", T.StringType(), False),
+        T.StructField("seen_key", T.StringType(), False),  # seen-set key
         T.StructField("disc_order", T.LongType(), False),  # global FIFO order
         T.StructField("priority", T.DoubleType(), False),
+        T.StructField("round", T.IntegerType(), False),  # snapshot's round
     ]
 )
 
@@ -135,3 +137,14 @@ LINEAGE = T.StructType(
         T.StructField("n", T.LongType(), False),
     ]
 )
+
+# Every checkpoint table by name, as written: the store reads each with
+# its schema, so no read runs a job to infer one from the parquet footers.
+TABLES = {
+    "documents": DOCUMENTS,
+    "frontier": FRONTIER,
+    "seen": SEEN,
+    "order": ORDER,
+    "metrics": METRICS,
+    "lineage": LINEAGE,
+}

@@ -19,6 +19,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .schemas import TABLES
+
 
 class CheckpointStore:
     """Round-versioned append-only table store (one ``batch={r}``
@@ -80,6 +82,14 @@ class CheckpointStore:
             if os.path.exists(tmp):
                 os.remove(tmp)
 
+    def _scan(self, table: str, *dirs: str) -> DataFrame:
+        """The batch dirs ``dirs`` of ``table``, read with the table's
+        written schema (TABLES): inferring it would run a one-task job."""
+        path = self._table_path(table)
+        return self.spark.read.schema(TABLES[table]).option(
+            "basePath", path
+        ).parquet(*[os.path.join(path, d) for d in dirs]).drop("batch")
+
     def read(self, table: str) -> Optional[DataFrame]:
         path = self._table_path(table)
         if not os.path.isdir(path):
@@ -87,16 +97,15 @@ class CheckpointStore:
         batches = [d for d in os.listdir(path) if d.startswith("batch=")]
         if not batches:
             return None
-        return self.spark.read.option("basePath", path).parquet(
-            *[os.path.join(path, b) for b in batches]
-        ).drop("batch")
+        return self._scan(table, *batches)
 
     def read_batch(self, table: str, batch: int) -> Optional[DataFrame]:
         """Read exactly one batch (e.g. the frontier snapshot of round r)."""
-        path = os.path.join(self._table_path(table), f"batch={batch}")
-        if not os.path.isdir(path):
+        if not os.path.isdir(
+            os.path.join(self._table_path(table), f"batch={batch}")
+        ):
             return None
-        return self.spark.read.parquet(path)
+        return self._scan(table, f"batch={batch}")
 
     def truncate_after(self, table: str, max_batch: int) -> None:
         """Drop batches > max_batch (discard a partially-written round).
@@ -124,7 +133,7 @@ class CheckpointStore:
                 info = json.load(f)
             from pyspark.sql import functions as F
 
-            kept = self.spark.read.parquet(dpath).filter(
+            kept = self._scan(table, d).filter(
                 F.col(info["round_col"]) <= max_batch
             )
             self._write_compacted(
@@ -181,9 +190,7 @@ class CheckpointStore:
         )
         if len(todo) <= 1:
             return
-        df = self.spark.read.option("basePath", path).parquet(
-            *[os.path.join(path, f"batch={b}") for b in todo]
-        ).drop("batch")
+        df = self._scan(table, *[f"batch={b}" for b in todo])
         self._write_compacted(table, df, max(todo), todo, round_col)
 
     def _write_compacted(

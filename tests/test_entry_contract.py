@@ -3,6 +3,9 @@ __spark_entry__ query on Spark and its oracle_sql on DuckDB over the same
 parquet, compare row count + column names + sorted values."""
 
 import math
+import os
+import subprocess
+import sys
 
 import duckdb
 import pytest
@@ -104,3 +107,32 @@ def test_entry_smoke(spark):
     # URL exactly as crawled
     first = df.filter(df.doc_id == "http://rich.example").collect()
     assert len(first) == 1 and len(first[0]["spans"]) > 0
+
+
+_EXIT_SCRIPT = """
+import __spark_entry__ as entry
+from crawlspark.session import get_spark
+from crawlspark.synth import chain
+
+spark = get_spark(cores=1, app="entry-exit", driver_mem="1g")
+pages, seeds = chain(2)
+res = entry._run_crawl(spark, pages, seeds, host="chain.example")
+assert res.order_df().count() == 2
+print(entry._checkpoint_root())
+print(res.store.root)
+"""
+
+
+def test_entry_checkpoints_removed_at_exit(tmp_path):
+    """_run_crawl puts each crawl's checkpoint under one per-process
+    directory, and that directory is gone once the process exits."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _EXIT_SCRIPT], cwd=repo, capture_output=True,
+        text=True, timeout=600, env={**os.environ, "TMPDIR": str(tmp_path)},
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    root, ckpt = out.stdout.split()[-2:]
+    assert os.path.dirname(root) == str(tmp_path)
+    assert os.path.dirname(ckpt) == root
+    assert not os.path.exists(root)

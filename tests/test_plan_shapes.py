@@ -142,3 +142,25 @@ def test_dense_order_bucket_col_no_sampling_identical_index(spark):
         df.limit(0), order, "_idx", F.lit(0), start=3
     )
     assert out_e.collect() == [] and end_e == 3
+
+
+def test_link_canon_plan_stays_small(spark):
+    """canonize_links_prepared is a stack of select layers, each
+    intermediate built once: its analyzed and optimized plans stay under
+    10 kchars. As a single Column tree that copied every shared
+    subexpression into each use, the same projection read ~68 kchars."""
+    from crawlspark import canon
+
+    df = spark.createDataFrame(
+        [("http://h.example/a/", 1, 0, "/b?q#f")],
+        "parent_url string, parent_disc long, link_index int, href string",
+    )
+    df = df.select("*", *canon.parent_cols(F.col("parent_url")))
+    qe = canon.canonize_links_prepared(df, "href")._jdf.queryExecution()
+    analyzed = qe.analyzed().toString()
+    optimized = qe.optimizedPlan().toString()
+    assert len(analyzed) <= 10_000, len(analyzed)
+    assert len(optimized) <= 10_000, len(optimized)
+    # the layers survive CollapseProject: one Project per layer, not one
+    # Project holding every copy
+    assert optimized.count("Project [") > 3

@@ -175,3 +175,38 @@ def test_append_local_failed_write_keeps_previous_batch(tmp_path):
     assert pq.read_table(batch / "part-00000.parquet").to_pylist() == [
         {"round": 3, "n": 7}
     ]
+
+
+def test_reads_use_written_schema_and_run_no_job(spark, tmp_path):
+    """Every checkpoint table reads with its declared schema (TABLES),
+    which equals the one parquet inference finds, and a read starts no
+    Spark job (inference would run a one-task job per read)."""
+    from crawlspark.engine import CrawlConfig, Crawler
+    from crawlspark.schemas import PAGES, TABLES
+    from crawlspark.synth import chain
+
+    pages, seeds = chain(3)
+    cfg = CrawlConfig(checkpoint_dir=str(tmp_path), host="chain.example")
+    Crawler(spark, spark.createDataFrame(pages, PAGES), cfg).run(seeds)
+    st = CheckpointStore(spark, str(tmp_path))
+    assert sorted(TABLES) == sorted(
+        t for t in os.listdir(tmp_path) if not t.startswith("_")
+    )
+    for table in TABLES:
+        path = str(tmp_path / table)
+        inferred = spark.read.option("basePath", path).parquet(
+            *[os.path.join(path, d) for d in os.listdir(path)]
+        ).drop("batch")
+        assert st.read(table).schema == inferred.schema, table
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs():
+        ids = tracker.getJobIdsForGroup(None)
+        return max(ids) + 1 if ids else 0
+
+    before = jobs()
+    seen = st.read("seen")
+    frontier = st.read_batch("frontier", 0)
+    assert jobs() == before
+    assert seen.count() == 3 and frontier.count() == 1

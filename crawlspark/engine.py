@@ -5,16 +5,19 @@ resumable, deterministic at any parallelism.
 
 Round r (SURVEY.md §3 lifecycle):
 
-    frontier_r (parquet snapshot)
+    frontier_r (parquet snapshot batch r: every round reads it)
       → politeness schedule: two-phase per-host top-k          [Q5]
       → uniform salted repartition for the fetch stage         [Q4]
       → robots literal-map gate (denied = counted failures)    [F5]
       → guards + resolver join against pages                   [F3,F4,SRC3,F6]
       → one mapInArrow: parse + links + spans                 [P1-P4]
-      → documents / order / metrics appends                    [SNK1,SNK2]
+      → documents / order appends                              [SNK1,SNK2]
       → link resolve (pandas UDF) → native accept filter       [U1,F1]
       → first-wins window → anti-join seen → budget            [Q1]
-      → frontier_{r+1} = carryover ∪ fresh (snapshot write)
+      → frontier_{r+1} = carryover ∪ fresh (snapshot batch r+1)
+      → background commit: seen append, metrics + lineage, state;
+        joined by round r+1 before its seen read, and by run() before
+        it returns or raises
     terminate when the frontier is empty (≙ TTL fixpoint, Q2) or the
     round cap is hit. Every table append is keyed by round ⇒ resumable
     from any round boundary; a torn round overwrites itself on retry.
@@ -37,6 +40,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import canon
 from .fetch import resolve_fetch
@@ -50,25 +54,6 @@ from .storage import CheckpointStore
 log = logging.getLogger(__name__)
 
 
-def _parallel_jobs(*thunks) -> list:
-    """Run independent Spark actions concurrently from driver threads.
-
-    Each round's tail is a set of INDEPENDENT sink jobs (seen append,
-    fresh-key bitmaps, frontier snapshot)
-    that all read already-cached inputs; running them sequentially adds
-    their fixed job-submission + commit latencies to every round's
-    critical path — a driver-serial term that does not shrink with
-    executors (the Amdahl denominator of the N→4N scaling gate). Driver
-    threads submit them as concurrent jobs instead; the scheduler
-    interleaves their (small) task sets across free slots. Results are
-    returned in thunk order; the first exception propagates."""
-    if len(thunks) <= 1:
-        return [t() for t in thunks]
-    with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-        futs = [ex.submit(t) for t in thunks]
-        return [f.result() for f in futs]
-
-
 def _local_frame(spark: SparkSession, schema: T.StructType,
                  columns: dict) -> DataFrame:
     """A table of driver-held ``columns`` that lives in the JVM (a
@@ -76,19 +61,10 @@ def _local_frame(spark: SparkSession, schema: T.StructType,
     Python rows is a PythonRDD instead: every query that reads it runs
     Python tasks."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     return spark.createDataFrame(
         pa.table(columns, schema=to_arrow_schema(schema)), schema
     )
-
-
-def _release_checkpoint(df: Optional[DataFrame]) -> None:
-    """Free the blocks of a lazy ``localCheckpoint`` (the in-memory
-    frontier handoff). ``DataFrame.unpersist`` does nothing on one: the
-    blocks belong to the RDD under its ``LogicalRDD`` plan."""
-    if df is not None:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 @dataclass
@@ -200,7 +176,9 @@ class CrawlResult:
 
 @dataclass
 class _RoundCommit:
-    """What round ``r``'s background commit writes and releases."""
+    """What round ``r``'s background commit writes and releases. The
+    round itself has already written documents, order and frontier
+    batch ``r + 1``."""
 
     r: int
     state: dict  # _state.json once every sink below is durable
@@ -208,10 +186,8 @@ class _RoundCommit:
     lineage: Optional[list]  # (reason, n) rows; None in a drain round
     fresh: Optional[DataFrame]  # kept fresh keys, appended to seen
     bloom: bool  # roll the fresh keys into the bloom bitmaps
-    next_frontier: Optional[DataFrame]  # snapshot as frontier batch r+1
     handles: list  # round caches to unpersist
     dedup: Optional[DedupResult]
-    prev_frontier: Optional[DataFrame]  # the handoff round r consumed
 
 
 class Crawler:
@@ -283,13 +259,9 @@ class Crawler:
         # run(), rolled forward by later ones, dropped by any other round
         # (see _bloom_probe) — never checkpointed, seen is the exact source
         self._bloom_dict = None
-        # pipelined round commit (see run()): the pending commit future
-        # and its round, and the in-memory next-frontier handoff (a lazy
-        # localCheckpoint the commit of the round consuming it releases)
+        # the background commit run() submitted last and has not yet
+        # joined (see run())
         self._pending_commit = None
-        self._pending_round = None
-        self._commit_pool = None
-        self._frontier_handle = None
         # robots crawl-delay → per-host budgets ({host: budget})
         self._host_budgets = None
         self._default_budget = 0
@@ -315,43 +287,6 @@ class Crawler:
             F.col("seen_key").alias("url_key"),
             F.lit(batch).alias("first_round"),
         ), batch)
-
-    # -- driver-side sinks ---------------------------------------------
-    # metrics/lineage carry O(bytes) per round but each Spark write
-    # is a full job (plan+submit+commit, ~0.5-2 s) on the round's critical
-    # path — a level-independent serial term of the N→4N scaling gate.
-    # The driver already holds every value; write them driver-side into
-    # the identical batch layout (storage.append_local).
-
-    def _append_metrics_local(self, r, n_sched, n_ok, n_kept) -> None:
-        import pyarrow as pa
-
-        schema = pa.schema([
-            ("round", pa.int32()), ("scheduled", pa.int64()),
-            ("fetched_ok", pa.int64()), ("failed", pa.int64()),
-            ("new_urls", pa.int64()),
-        ])
-        self.store.append_local(
-            "metrics",
-            {"round": [r], "scheduled": [n_sched], "fetched_ok": [n_ok],
-             "failed": [n_sched - n_ok], "new_urls": [n_kept]},
-            schema, r,
-        )
-
-    def _append_lineage_local(self, r, reasons) -> None:
-        import pyarrow as pa
-
-        schema = pa.schema([
-            ("round", pa.int32()), ("reason", pa.string()),
-            ("n", pa.int64()),
-        ])
-        self.store.append_local(
-            "lineage",
-            {"round": [r] * len(reasons),
-             "reason": [x[0] for x in reasons],
-             "n": [int(x[1]) for x in reasons]},
-            schema, r,
-        )
 
     # -- bloom (driver-only bitmaps, merge rounds only) -----------------
     def _bloom_cfg(self):
@@ -397,10 +332,11 @@ class Crawler:
         for b, words in fresh_bitmaps.items():
             d[b] = np.bitwise_or(d[b], words) if b in d else words
 
-    # -- pipelined round commit ----------------------------------------
+    # -- background round commit ---------------------------------------
     def _join_commit(self) -> None:
-        """Block until the previous round's commit chain (sinks + state +
-        compaction) finishes; propagate its exception if it failed."""
+        """Block until the previous round's commit (seen append, metrics
+        and lineage, state write, compaction, cache release) finishes;
+        raise its exception if it failed."""
         if self._pending_commit is not None:
             f, self._pending_commit = self._pending_commit, None
             f.result()
@@ -505,16 +441,10 @@ class Crawler:
         if res.fresh is None:
             cands.unpersist()
             return 0, False
-        frontier = res.fresh.withColumn("round", F.lit(0))
-        # the two seed sinks (frontier snapshot, seen append) both read
-        # the dense-order cache the counts job above already materialized
-        # — independent jobs, submitted concurrently like the round tail
-        # (each was a fixed ~1-2s of job-submission + commit latency on
-        # the seed critical path: pure Amdahl S for the N→4N scaling gate)
-        _parallel_jobs(
-            lambda: self.store.append("frontier", frontier, 0),
-            lambda: self._append_seen(res.fresh, 0),
+        self.store.append(
+            "frontier", res.fresh.withColumn("round", F.lit(0)), 0
         )
+        self._append_seen(res.fresh, 0)
         res.unpersist()
         cands.unpersist()
         return res.pushed_end, res.limit_reached
@@ -837,21 +767,11 @@ class Crawler:
     @staticmethod
     def _next_frontier(carry, fresh) -> Optional[DataFrame]:
         """Next frontier = carryover ∪ fresh (FIFO: carry first by disc),
-        or None when both are absent.
-
-        localCheckpoint, NOT persist: the in-memory frontier handoff to
-        round r+1 must TRUNCATE lineage the way the parquet round-trip
-        used to — a plain persist leaves the logical plan referencing the
-        whole previous round's tree, which compounds exponentially across
-        rounds (measured: a 2 GB plan string by round ~10).
-        eager=False does not keep this off the critical path under AQE:
-        building the checkpoint RDD runs the plan's query stages here,
-        on the run() thread (4 jobs and about 1.15 s a round on a 2,000
-        page crawl at local[4]; ROADMAP item 3a). The DURABLE
-        checkpoint is still the parquet snapshot; the local checkpoint
-        only serves the in-session pipeline (on executor loss the round
-        job fails and the crawl resumes from the parquet state — same
-        contract)."""
+        or None when both are absent. The round writes it as frontier
+        batch r+1 and round r+1 reads that snapshot back, resumed or
+        not: the parquet round-trip truncates the lineage, which would
+        otherwise reference every earlier round's plan (measured: a 2 GB
+        plan string by round ~10)."""
         nxt = None
         if carry is not None:
             nxt = carry.select(
@@ -859,35 +779,37 @@ class Crawler:
             )
         if fresh is not None:
             nxt = fresh if nxt is None else nxt.unionByName(fresh)
-        return None if nxt is None else nxt.localCheckpoint(eager=False)
+        return nxt
 
     def _commit(self, rc: _RoundCommit) -> None:
-        """Round ``rc.r``'s background commit chain: its Spark sinks
-        (concurrent, over cached inputs), the driver-side sinks, the
-        state write, seen compaction, and the release of the round's
-        caches. The state is written only after every round-r sink is
-        durable (documents and order already are: the round wrote them)."""
+        """Round ``rc.r``'s background commit: the seen append (and, in
+        a merge round that probed the bloom bitmaps, rolling the fresh
+        keys into them), the metrics and lineage rows, the state write,
+        seen compaction, and the release of the round's caches. The
+        state is written only after every round-r sink is durable
+        (documents, order and the next frontier already are: the round
+        wrote them)."""
         nb = rc.r + 1
-        jobs, bitmaps_at = [], None
         if rc.fresh is not None:
-            jobs.append(lambda: self._append_seen(rc.fresh, nb))
+            self._append_seen(rc.fresh, nb)
             if rc.bloom:
-                # fresh-key bitmaps for the next merge round; ORed into
-                # the driver dict below
-                bitmaps_at = len(jobs)
-                jobs.append(lambda: self._collect_fresh_bitmaps(rc.fresh))
-        if rc.next_frontier is not None:
-            jobs.append(lambda: self.store.append(
-                "frontier", rc.next_frontier.withColumn("round", F.lit(nb)),
-                nb,
-            ))
-        results = _parallel_jobs(*jobs)
-        # driver-side sinks (no Spark jobs)
-        self._append_metrics_local(rc.r, *rc.metrics)
+                self._roll_bloom_local(self._collect_fresh_bitmaps(rc.fresh))
+        # a byte-sized table is written by the driver: no Spark job
+        n_sched, n_ok, n_kept = rc.metrics
+        self.store.append_local(
+            "metrics",
+            {"round": [rc.r], "scheduled": [n_sched], "fetched_ok": [n_ok],
+             "failed": [n_sched - n_ok], "new_urls": [n_kept]},
+            to_arrow_schema(METRICS), rc.r,
+        )
         if rc.lineage is not None:
-            self._append_lineage_local(rc.r, rc.lineage)
-        if bitmaps_at is not None:
-            self._roll_bloom_local(results[bitmaps_at])
+            self.store.append_local(
+                "lineage",
+                {"round": [rc.r] * len(rc.lineage),
+                 "reason": [x[0] for x in rc.lineage],
+                 "n": [int(x[1]) for x in rc.lineage]},
+                to_arrow_schema(LINEAGE), rc.r,
+            )
         self.store.write_state(rc.state)
         # post-commit maintenance: bound the seen scan's file count. Runs
         # AFTER the state write, so the compacted label (= the committed
@@ -902,37 +824,11 @@ class Crawler:
                 "seen", upto=nb, round_col="first_round",
                 fanin=self.cfg.seen_compact_fanin,
             )
-        # release round-r caches (the next frontier is its own cache,
-        # already materialized by the snapshot write above)
+        # release round-r caches
         for h in rc.handles:
             h.unpersist()
         if rc.dedup is not None:
             rc.dedup.unpersist()
-        _release_checkpoint(rc.prev_frontier)
-
-    def _reset_pipeline(self) -> None:
-        """Entry guard of run(): wait out the commit chain of a previous
-        run() that aborted mid-pipeline BEFORE reading state /
-        truncating (it must not race this run). Nothing raised its
-        failure, so log it; the resume truncates whatever it left
-        half-written."""
-        if self._commit_pool is None:
-            self._commit_pool = ThreadPoolExecutor(max_workers=1)
-        if self._pending_commit is not None:
-            try:
-                self._pending_commit.result()
-            except Exception:
-                log.error(
-                    "commit of round %s (orphaned by an aborted run) "
-                    "failed", self._pending_round, exc_info=True,
-                )
-            self._pending_commit = None
-        _release_checkpoint(self._frontier_handle)
-        self._frontier_handle = None
-        # the bitmaps are rebuilt from seen by this run's first merge
-        # round: a reused Crawler's dict may hold another crawl's keys,
-        # or miss keys of rounds an aborted run committed
-        self._bloom_dict = None
 
     # -- main loop ------------------------------------------------------
     def run(
@@ -942,7 +838,10 @@ class Crawler:
         resume: bool = False,
     ) -> CrawlResult:
         cfg = self.cfg
-        self._reset_pipeline()
+        # the bitmaps are rebuilt from seen by this run's first merge
+        # round: a reused Crawler's dict may hold another crawl's keys,
+        # or miss keys of rounds an aborted run committed
+        self._bloom_dict = None
         state = self.store.read_state() if resume else None
         if state is None:
             pushed, limit_reached = self._init_frontier(seeds, sitemap_entries)
@@ -966,103 +865,99 @@ class Crawler:
             for t in ("seen", "frontier"):
                 self.store.truncate_after(t, r)
 
-        # Pipelined round commit: each round's independent sinks + state
-        # write + compaction run as ONE background chain (_commit on a
-        # single-thread pool ⇒ commits serialize in round order) while
-        # the NEXT round's schedule→fetch→parse head — which depends only
-        # on the in-memory frontier handoff — runs concurrently. The
-        # chain is joined right before the next round's seen read (its
-        # first dependence on round-r durable state), by which point the
-        # 3-5 s tail has hidden behind the 15-70 s parse phase. Crash
-        # contract: state_r commits only after every round-r sink is
-        # durable, so a crash mid-pipeline resumes at the last committed
-        # round and truncates any partially-written later batches.
-        drained = False
-        while cfg.max_rounds == 0 or r < cfg.max_rounds:
-            # in-memory handoff from the previous round (byte-identical
-            # rows to the parquet snapshot its commit is writing)
-            frontier = self._frontier_handle
-            if frontier is None:
-                self._join_commit()
-                frontier = self.store.read_batch("frontier", r)
-                if frontier is None:
-                    drained = True
-                    break
-                frontier = frontier.drop("round")
-            if n_frontier == 0:
-                drained = True
-                break
-            handles = []
-            parsed, carry = self._fetch_parse(r, frontier, handles)
-            dedup = lineage = None
-            bloom = False
-            if limit_reached:
-                # post-limit drain round: no candidate pipeline, only the
-                # scheduled/fetched counts for metrics
-                row = self._parsed_counts(parsed).collect()[0]
-            else:
-                flagged, accepted, resolved_ok, accept_expr = (
-                    self._candidates(r, parsed, handles)
-                )
-                row = self._fused_agg(
-                    r, parsed, flagged, resolved_ok, accept_expr
-                )
-                # first dependence on the previous round's durable state
-                # (seen batch, any compaction, the rolled bitmaps): join
-                # the pipelined commit chain here — it has been running
-                # concurrently under the whole fetch/parse/agg head
-                self._join_commit()
-                dedup, bloom = self._dedup(accepted, row, pushed, limit_reached)
-                pushed, limit_reached = dedup.pushed_end, dedup.limit_reached
-                lineage = self._lineage(row, dedup)
-            n_sched, n_ok = row["n"], int(row["ok"] or 0)
-            n_kept = dedup.n_kept if dedup is not None else 0
-            fresh = dedup.fresh if n_kept > 0 else None
-            nxt = self._next_frontier(carry, fresh)
-            n_frontier = n_frontier - n_sched + n_kept
+        # Every round reads its frontier from snapshot batch r, resumed
+        # or not, and writes documents, order and frontier batch r+1
+        # itself. The rest of its writes (seen append, metrics, lineage,
+        # state, compaction) run as one background commit on a
+        # single-thread pool, so commits run in round order, while the
+        # next round's schedule→fetch→parse head runs. That round joins
+        # the commit right before its seen read, its first dependence on
+        # round-r state. Crash contract: state r+1 is written only after
+        # every round-r sink is durable, so a crash resumes at the last
+        # committed round and truncates any later batch. No commit
+        # outlives run(): leaving the pool's block waits out the pending
+        # one, so a second Crawler on this checkpoint cannot race it.
+        try:
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                while n_frontier > 0 and (
+                    cfg.max_rounds == 0 or r < cfg.max_rounds
+                ):
+                    frontier = self.store.read_batch("frontier", r)
+                    handles = []
+                    parsed, carry = self._fetch_parse(
+                        r, frontier.drop("round"), handles
+                    )
+                    dedup = lineage = None
+                    bloom = False
+                    if limit_reached:
+                        # post-limit drain round: no candidate pipeline,
+                        # only the scheduled/fetched counts for metrics
+                        row = self._parsed_counts(parsed).collect()[0]
+                    else:
+                        flagged, accepted, resolved_ok, accept_expr = (
+                            self._candidates(r, parsed, handles)
+                        )
+                        row = self._fused_agg(
+                            r, parsed, flagged, resolved_ok, accept_expr
+                        )
+                        # first dependence on the previous round's commit
+                        # (seen batch, any compaction, the rolled bitmaps)
+                        self._join_commit()
+                        dedup, bloom = self._dedup(
+                            accepted, row, pushed, limit_reached
+                        )
+                        pushed, limit_reached = (
+                            dedup.pushed_end, dedup.limit_reached
+                        )
+                        lineage = self._lineage(row, dedup)
+                    n_sched, n_ok = row["n"], int(row["ok"] or 0)
+                    n_kept = dedup.n_kept if dedup is not None else 0
+                    fresh = dedup.fresh if n_kept > 0 else None
+                    nxt = self._next_frontier(carry, fresh)
+                    if nxt is not None:
+                        self.store.append(
+                            "frontier", nxt.withColumn("round", F.lit(r + 1)),
+                            r + 1,
+                        )
+                    n_frontier = n_frontier - n_sched + n_kept
 
-            # a drain round never joined the previous commit (it reads no
-            # seen): join it here, or its failure would be overwritten and
-            # this round's state write would move past it
-            self._join_commit()
-            self._pending_commit = self._commit_pool.submit(
-                self._commit,
-                _RoundCommit(
-                    r=r,
-                    state={
-                        "next_round": r + 1, "pushed": pushed,
-                        "limit_reached": limit_reached,
-                        "finished": n_frontier == 0,
-                        "frontier_size": n_frontier,
-                    },
-                    metrics=(n_sched, n_ok, n_kept),
-                    lineage=lineage,
-                    fresh=fresh,
-                    bloom=bloom,
-                    next_frontier=nxt,
-                    handles=handles,
-                    dedup=dedup,
-                    prev_frontier=self._frontier_handle,
-                ),
-            )
-            self._pending_round = r
-            self._frontier_handle = nxt
-            r += 1
-            if n_frontier == 0:
-                drained = True
-                break
-
-        # join the last round's commit chain before touching final state
-        # (also surfaces any background sink failure). The pool itself is
-        # per-Crawler and idles between runs; if this run() raises before
-        # reaching here, the next run() (or interpreter exit) waits out
-        # the orphaned chain — see _reset_pipeline.
-        self._join_commit()
-        _release_checkpoint(self._frontier_handle)
-        self._frontier_handle = None
+                    # a drain round never joined the previous commit (it
+                    # reads no seen): join it here, or its failure would
+                    # be lost and this round's state write would move
+                    # past it
+                    self._join_commit()
+                    self._pending_commit = pool.submit(
+                        self._commit,
+                        _RoundCommit(
+                            r=r,
+                            state={
+                                "next_round": r + 1, "pushed": pushed,
+                                "limit_reached": limit_reached,
+                                "finished": n_frontier == 0,
+                                "frontier_size": n_frontier,
+                            },
+                            metrics=(n_sched, n_ok, n_kept),
+                            lineage=lineage,
+                            fresh=fresh,
+                            bloom=bloom,
+                            handles=handles,
+                            dedup=dedup,
+                        ),
+                    )
+                    r += 1
+                self._join_commit()
+        except BaseException:
+            # leaving the pool's block waited out the commit the failed
+            # round left pending (round r-1's); its failure would be lost
+            # behind this one
+            pending, self._pending_commit = self._pending_commit, None
+            if pending is not None and pending.exception() is not None:
+                log.error("commit of round %d failed", r - 1,
+                          exc_info=pending.exception())
+            raise
         # only a drained frontier finishes the crawl; a max_rounds stop
         # leaves state resumable (north rule: resumable from any round)
-        if drained:
+        if n_frontier == 0:
             self.store.write_state(
                 {"next_round": r, "pushed": pushed,
                  "limit_reached": limit_reached, "finished": True}

@@ -39,8 +39,8 @@ class CheckpointStore:
     def append(self, table: str, df: DataFrame, batch: int) -> None:
         path = os.path.join(self._table_path(table), f"batch={batch}")
         # label the write's stages in the event log (job descriptions are
-        # thread-local, so concurrent sink threads don't clobber each
-        # other) — keeps scaling diagnostics attributable to a sink
+        # thread-local, so the background commit's writes and the round's
+        # own do not clobber each other's)
         sc = self.spark.sparkContext
         sc.setJobDescription(f"append:{table} b{batch}")
         try:
@@ -56,16 +56,11 @@ class CheckpointStore:
         one pyarrow parquet file into the same ``batch={r}`` layout
         ``append`` produces, so readers cannot tell the difference.
 
-        Why: every Spark write is a full job (plan + submit + commit
-        latency, ~0.5-2 s in local mode and no faster on a 1000-executor
-        cluster — driver-serial either way). For tables whose per-round
-        payload is O(bytes), that latency IS the cost, and it lands on
-        every round's critical path — a level-independent Amdahl term of
-        the N→4N scaling gate.
-
-        ``columns``: name → list of Python values; ``schema``: a pyarrow
-        schema pinning the exact types the Spark writer used (int32/int64
-        distinctions matter to the correctness gate's schema compare)."""
+        ``columns``: name → list of Python values; ``schema``: the
+        table's pyarrow schema, ``to_arrow_schema`` of its ``TABLES``
+        entry, so the written types are the ones every read declares
+        (int32/int64 distinctions matter to the correctness gate's
+        schema compare)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 

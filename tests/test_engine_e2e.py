@@ -230,14 +230,24 @@ def test_exact_tiers_only_for_dirty_rows(spark, tmp_path, monkeypatch):
     assert_matches_oracle(result, oracle)
 
 
-def test_chain_rounds(spark, tmp_path):
-    """A 6-round crawl equals the oracle and releases every cache it
-    made, the in-memory frontier handoffs (local checkpoints) included."""
+def test_chain_rounds(spark, tmp_path, monkeypatch):
+    """A 6-round crawl equals the oracle, releases every cache it made,
+    and every round reads its frontier from its parquet snapshot, once."""
+    from crawlspark.storage import CheckpointStore
+
     pages, seeds = chain(6)
+    read_batch, reads = CheckpointStore.read_batch, []
+
+    def spy(self, table, batch):
+        reads.append((table, batch))
+        return read_batch(self, table, batch)
+
+    monkeypatch.setattr(CheckpointStore, "read_batch", spy)
     sc = spark.sparkContext
     before = set(sc._jsc.getPersistentRDDs())
     result = run_spark_crawl(spark, tmp_path, pages, seeds, host="chain.example")
     assert set(sc._jsc.getPersistentRDDs()) == before
+    assert sorted(b for t, b in reads if t == "frontier") == list(range(6))
     oracle = oracle_crawl(pages_index(pages), seeds, "chain.example")
     assert result.rounds == 6
     assert_matches_oracle(result, oracle)
@@ -403,23 +413,82 @@ def test_failed_round_leaves_no_append_running(spark, tmp_path, monkeypatch):
     )
 
 
-def test_orphaned_commit_failure_is_logged(spark, tmp_path, caplog):
-    """A commit chain left pending by a run() that aborted is waited out
-    at the next run() entry; its failure is logged with its round."""
+def test_failed_round_waits_out_pending_commit(spark, tmp_path,
+                                               monkeypatch, caplog):
+    """Round 0's commit runs in the background while round 1 starts. If
+    round 1 raises, run() must first wait that commit out: no checkpoint
+    write may start or end after run() raised, no commit thread may be
+    left alive, and a fresh Crawler then resumes to the oracle's result.
+    If the commit itself failed too, run() raises the round's own error
+    and logs the commit's failure with its round."""
+    import json
     import logging
-    from concurrent.futures import Future
+    import threading
+    import time
 
-    pages, _ = basic16()
+    from crawlspark.storage import CheckpointStore
+
+    pages, seeds = basic16()
+    oracle = oracle_crawl(pages_index(pages), seeds, "example.com")
+    append, write_state = CheckpointStore.append, CheckpointStore.write_state
+    calls, commit_fails, delay = [], [], 2.0
+
+    def spy_append(self, table, df, batch):
+        calls.append(time.monotonic())
+        try:
+            if table == "seen" and batch == 1:  # round 0's commit
+                time.sleep(delay)
+                if commit_fails:
+                    raise OSError("injected seen write failure")
+            return append(self, table, df, batch)
+        finally:
+            calls.append(time.monotonic())
+
+    def spy_state(self, state):
+        calls.append(time.monotonic())
+        try:
+            return write_state(self, state)
+        finally:
+            calls.append(time.monotonic())
+
+    fused_agg = Crawler._fused_agg
+
+    def agg_failing_in_round_1(self, r, *args):
+        if r == 1:
+            raise RuntimeError("injected fused-agg failure in round 1")
+        return fused_agg(self, r, *args)
+
+    def pool_threads():
+        return {t for t in threading.enumerate()
+                if t.name.startswith("ThreadPoolExecutor")}
+
+    monkeypatch.setattr(CheckpointStore, "append", spy_append)
+    monkeypatch.setattr(CheckpointStore, "write_state", spy_state)
+    monkeypatch.setattr(Crawler, "_fused_agg", agg_failing_in_round_1)
+
+    # leg 1: the commit succeeds, late
+    threads = pool_threads()
+    with pytest.raises(RuntimeError, match="round 1"):
+        run_spark_crawl(spark, tmp_path, pages, seeds, host="example.com")
+    raised = time.monotonic()
+    time.sleep(delay + 1.0)  # room for a write still running to end
+    assert calls and max(calls) < raised
+    assert pool_threads() <= threads
+    state = json.loads((tmp_path / "ckpt" / "_state.json").read_text())
+    assert state["next_round"] == 1
+
+    # leg 2: the slowed commit fails as well
+    commit_fails.append(True)
+    with caplog.at_level(logging.ERROR, logger="crawlspark.engine"):
+        with pytest.raises(RuntimeError, match="fused-agg"):
+            run_spark_crawl(spark, tmp_path / "leg2", pages, seeds,
+                            host="example.com")
+    assert any("round 0" in r.getMessage() and r.exc_info
+               for r in caplog.records)
+
+    monkeypatch.undo()
+    pages_df = spark.createDataFrame(pages, PAGES)
     cfg = CrawlConfig(checkpoint_dir=str(tmp_path / "ckpt"),
                       host="example.com")
-    crawler = Crawler(spark, spark.createDataFrame(pages, PAGES), cfg)
-    crawler.store.write_state({"next_round": 4, "pushed": 16,
-                               "limit_reached": False, "finished": True})
-    failed = Future()
-    failed.set_exception(OSError("injected seen write failure"))
-    crawler._pending_commit, crawler._pending_round = failed, 3
-    with caplog.at_level(logging.ERROR, logger="crawlspark.engine"):
-        crawler.run(resume=True)
-    assert crawler._pending_commit is None
-    assert any("round 3" in r.getMessage() and r.exc_info
-               for r in caplog.records)
+    result = Crawler(spark, pages_df, cfg).run(resume=True)
+    assert_matches_oracle(result, oracle)

@@ -21,25 +21,24 @@ from crawlspark.synth import richsite
 from crawlspark import canon
 from crawlspark.schedule import schedule_round, spread_for_fetch
 
-SECTION_7 = """## 7. Pipelined round commit (round 5)
+SECTION_7 = """## 7. Background round commit
 
-Not a physical plan but a round-timeline audit: the per-round sink tail
-(seen append, fresh-key bitmaps in merge-probe bloom rounds, lineage,
-metrics, frontier snapshot, state write, seen compaction) is a
-LEVEL-INDEPENDENT serial term — identical latency at local[2] and at
-1000 executors — so every second of it is charged directly against
-the N→4N scaling gate's Amdahl denominator. Since round 5 it runs as one
-background commit chain (engine.py `Crawler._commit`, one `_RoundCommit`
-record per round on a single-thread pool ⇒ chains serialize in round
-order) while the next round's schedule→fetch→parse head runs
-concurrently off an in-memory frontier handoff (`localCheckpoint`, lazy
-— truncates lineage exactly as the old parquet round-trip did, without
-blocking on a write+read; the commit of the round that consumed it
-frees its blocks). The chain is joined immediately before the next
-round's seen read — its first dependence on the previous round's
-durable state — and, in a drain round (limit reached, no seen read),
-right before that round submits its own chain, so a failed commit
-always raises.
+Not a physical plan but a round-timeline audit. Round r writes
+documents, order and frontier batch r+1 itself, and round r+1 reads its
+frontier back from that parquet snapshot, as a resumed round does: a
+round has one way to get its frontier. The rest of round r's writes —
+the seen append (and, in merge-probe bloom rounds, the fresh-key
+bitmaps), the metrics and lineage rows, the state write and seen
+compaction — run as one background commit (engine.py `Crawler._commit`,
+one `_RoundCommit` record per round) on a single-thread pool that
+`run()` opens in a `with` block, so commits run in round order and none
+outlives `run()`. The commit overlaps the next round's
+schedule→fetch→parse head and is joined right before that round's seen
+read, its first dependence on round r's state, or, in a drain round
+(limit reached, no seen read), right before that round submits its own
+commit, so a failed commit always raises. When a round raises, leaving
+the block waits out the pending commit, and `run()` logs that commit's
+failure with its round before it raises the round's error.
 
 Required: the commit wait (`engine.commit_wait_s` of `python3
 crawlbench/run.py --workload wide|dirty --trace 1`, the summed span of
@@ -50,17 +49,17 @@ storage.append_local; the bloom bitmaps are driver-only and never
 written).
 
 Measured with one traced crawlbench run per workload (seed 51, 4 vCPUs,
-seeding leg + one round): `engine.commit_wait_s` 0.85 s of a 16.2 s
-traced `wide` crawl and 1.38 s of a 19.3 s traced `dirty` crawl. A one-round crawl has no next round to hide
-its commit behind, so nearly all of it is the final join in `run()`.
+seeding leg + one round): `engine.commit_wait_s` 0.28 s on `wide` and
+0.81 s on `dirty` (0.44 and 0.91 s with the former in-memory frontier
+handoff, same window). A one-round crawl has no next round to hide its
+commit behind, so nearly all of it is the final join in `run()`.
 
-Crash contract unchanged: `state_r` is written inside the chain only
-after every round-r sink is durable (the round itself writes documents
-and order);
-resume truncates any batch beyond the committed round, so a crash
-mid-pipeline replays the uncommitted round exactly as before
-(tests/test_engine_e2e.py resume tests, test_storage_compact torn-
-compaction tests).
+Crash contract: `state_r+1` is written inside the commit only after
+every round-r sink is durable (the round itself writes documents, order
+and the next frontier snapshot); resume truncates any batch beyond the
+committed round, so a crash mid-pipeline replays the uncommitted round
+exactly (tests/test_engine_e2e.py resume tests, test_storage_compact
+torn-compaction tests).
 """
 
 
@@ -155,7 +154,7 @@ out.append("## 6. Two-tier parse routing (P2/P4, round 4)\n\n"
            "worker.\n\n```\n"
            + cap(parsed) + "```\n")
 
-# 7. pipelined round commit: a timeline property, not a plan
+# 7. background round commit: a timeline property, not a plan
 out.append(SECTION_7)
 
 # 8. layered link canonicalization

@@ -1,14 +1,14 @@
 """crawlspark — a from-scratch PySpark-native URL-frontier / fetch-scheduler
 engine with the capabilities of the reference crawler (mars9/crawler),
-re-expressed Spark-first: iterative DataFrame jobs, vectorized pandas/Arrow
-UDFs for per-row logic, window-function dedup/scheduling, anti-join seen-set
+re-expressed Spark-first: iterative DataFrame jobs, native expressions plus
+Arrow-batched Python UDFs for per-row logic, window-function dedup/scheduling, anti-join seen-set
 with a partitioned Bloom prefilter, and checkpointed, resumable crawl rounds
 writing interleaved text+media span documents.
 
 Module map (SURVEY.md §7):
   purl       — exact Go-URL semantics (U1/U2/U3 pure-Python contract)
   textnorm   — whitespace normalizer T1 (python + Catalyst implementations)
-  canon      — vectorized canonicalization + accept filter (U1-U3, F1)
+  canon      — canonicalization (JVM masks + purl-per-row UDFs) + accept filter (U1-U3, F1)
   htmlparse  — link + span extraction (P1/P2/P4 pure parser)
   parse      — Spark mapInPandas stage wrapping htmlparse (P2-P4)
   fetch      — batch fetch round via resolver join (SRC3, F3-F6)

@@ -1,217 +1,34 @@
-"""Vectorized URL canonicalization + accept filter (U1/U2/U3, F1).
+"""URL canonicalization + accept filter in Spark plans (U1/U2/U3, F1).
 
-The per-row golden contract lives in crawlspark.purl; this module is the
-Arrow-batch realization used in Spark plans. Strategy (SURVEY.md §2.3):
+Two tiers per URL operation:
 
-- The common URL shapes are handled with true pandas vectorized string ops
-  (str.extract masks + boolean-mask concatenation — no Python per row).
-- Rows the fast path cannot express exactly (dot-segments, `//` runs,
-  unusual schemes, whitespace edge cases) drop to a ``Series.map`` of the
-  pure functions *inside the Arrow batch* — still no per-row Python at the
-  Spark row level, and rare in practice (every fallback is mask-counted so
-  tests can assert the fast path actually covers the corpus).
-- Equivalence fast-path ≡ purl is pinned exhaustively by
-  tests/test_canon_vectorized.py over adversarial corpora.
+- The JVM tier: Java-regex masks and UTF8String byte ops that resolve and
+  key the common clean shapes (an absolute canonical href, a clean
+  root-relative href, a clean absolute seed) inside whole-stage codegen.
+  The masks are deliberately conservative: every row whose result could
+  differ from crawlspark.purl falls through.
+- The exact tier: the pandas UDFs below, which call purl per row inside
+  the Arrow batch, exactly as oracle.crawl does.
 
-Native (JVM/codegen) helpers are preferred wherever bit-exact: host/scheme
-extraction via ``regexp_extract``, the accept filter via folded ``rlike``
-(F1, crawler.go:59-84), key hashing via ``xxhash64``.
+Tier equality is pinned by tests/test_spark_canon.py over adversarial
+corpora. Host extraction (``regexp_extract``), the accept filter (folded
+``rlike``, crawler.go:59-84) and the key hashing stay native.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 
-from .purl import normalize, normalize_key, parse_url, url_key_of
-
-# RFC-3986-style splitter; group order: scheme, host, path, query, fragment.
-_URL_PARTS = (
-    r"^(?:([A-Za-z][A-Za-z0-9+.\-]*):)?"  # 1 scheme
-    r"(?://([^/?#]*))?"  # 2 host (authority)
-    r"([^?#]*)"  # 3 path
-    r"(?:\?([^#]*))?"  # 4 query
-    r"(?:#(.*))?$"  # 5 fragment
-)
+from .purl import normalize, normalize_key, parse_url
 
 # Native Spark regexes (Java dialect) for scan-level column derivation.
 SQL_HOST_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)"
-SQL_SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*):"
-
-_CTRL = r"[\x00-\x1f\x7f]"
-
-# Any char outside printable ASCII. The exact parser (Go net/url String(),
-# url.go:33 round-trip) percent-escapes raw non-ASCII in paths, so every
-# fast path that would emit the input verbatim must exclude them
-# (ADVICE r2: fast≡exact held only because test corpora were ASCII).
-_NON_ASCII = r"[^\x00-\x7f]"
 SQL_NON_PRINTABLE_ASCII = r"[^\x20-\x7E]"  # control chars OR non-ASCII
 
-# paths the vectorized cleaner handles: no dot-segments, no double slashes
-_NEEDS_CLEAN = r"(?://)|(?:^|/)\.\.?(?:/|$)"
-
-
-def _split(urls: pd.Series) -> pd.DataFrame:
-    parts = urls.str.extract(_URL_PARTS)
-    parts.columns = ["scheme", "host", "path", "query", "fragment"]
-    return parts
-
-
-def pd_url_key(urls: pd.Series) -> pd.Series:
-    """Vectorized U3 (normalizeKey, url.go:52-72): cleaned path with leading
-    slash (empty ⇒ "/"), plus "?"+query verbatim. Fast path covers paths
-    without dot-segments/double slashes; others fall back to purl."""
-    urls = urls.astype("string")
-    parts = _split(urls)
-    path = parts["path"].fillna("")
-    query = parts["query"]
-
-    fast = ~path.str.contains(_NEEDS_CLEAN, regex=True, na=False)
-    fast &= ~urls.str.contains(_CTRL, regex=True, na=False)
-    fast &= ~urls.str.contains(_NON_ASCII, regex=True, na=False)
-    # escaped paths percent-decode into the key (Go url.Parse → u.Path);
-    # any '%' in the path falls back to the exact parser ('%' in the
-    # query is fine — RawQuery is kept verbatim)
-    fast &= ~path.str.contains("%", regex=False, na=False)
-    # opaque URLs (scheme + non-slash rest) are not keyable on the fast path
-    fast &= ~(parts["scheme"].notna() & parts["host"].isna() & ~path.str.startswith("/") & (path != ""))
-
-    # clean for dot-free paths = strip one trailing slash (keep root "/")
-    p = path.str.replace(r"(.)/$", r"\1", regex=True)
-    p = p.mask((p != "") & ~p.str.startswith("/"), "/" + p)
-    p = p.mask(p == "", "/")
-    key = p.where(query.isna() | (query == ""), p + "?" + query.fillna(""))
-
-    slow = ~fast
-    if slow.any():
-        key = key.mask(slow, urls[slow].map(url_key_of))
-    key = key.mask(urls.isna(), None)
-    return key.astype(object).where(key.notna(), None)
-
-
-def pd_host(urls: pd.Series) -> pd.Series:
-    """Authority (Go url.Host: hostname[:port], no userinfo handling needed
-    for crawl URLs)."""
-    return _split(urls.astype("string"))["host"].fillna("")
-
-
-def _join_host_map(parents: pd.Series) -> pd.Series:
-    """join(host, path) per parent (U2) — computed once per *unique* parent
-    (one page yields many links), then broadcast back. Python cost is
-    O(unique pages), not O(links)."""
-    uniq = pd.Series(parents.unique())
-    mapped = {}
-    for s in uniq.dropna():
-        u = parse_url(s)
-        if u is None:
-            mapped[s] = None
-            continue
-        from .purl import join_host
-
-        mapped[s] = (u.scheme, u.host, join_host(u.host, u.path))
-    return parents.map(mapped)
-
-
-def pd_resolve(parent_urls: pd.Series, hrefs: pd.Series) -> pd.Series:
-    """Vectorized U1 (normalize, url.go:9-34). Returns the resolved absolute
-    URL string, or None where the reference would skip the link."""
-    hrefs = hrefs.astype("string")
-    parent_urls = parent_urls.astype("string")
-    n = len(hrefs)
-    out = pd.Series([None] * n, index=hrefs.index, dtype=object)
-
-    bad = hrefs.isna() | hrefs.str.contains(_CTRL, regex=True, na=True)
-    ok = ~bad
-
-    # absolute? (Go: url.Parse(href).IsAbs() — scheme present, checked on the
-    # RAW href: leading whitespace defeats scheme detection)
-    abs_mask = ok & hrefs.str.match(r"^[A-Za-z][A-Za-z0-9+.\-]*:", na=False)
-    # fast absolute: already in canonical Parse→String form; a '%' in the
-    # path part may re-escape or fail (invalid escape ⇒ skip) — exact path
-    path_part = hrefs.str.replace(r"[?#].*$", "", regex=True)
-    abs_fast = (
-        abs_mask
-        & hrefs.str.match(r"^[a-z][a-z0-9+.\-]*://[^\s<>\"{}|\\^`]*$", na=False)
-        & ~path_part.str.contains("%", regex=False, na=False)
-        & ~hrefs.str.contains(_NON_ASCII, regex=True, na=False)
-    )
-    out[abs_fast] = hrefs[abs_fast]
-    abs_slow = abs_mask & ~abs_fast
-    if abs_slow.any():
-        out[abs_slow] = hrefs[abs_slow].map(
-            lambda h: (lambda u: u.to_string() if u is not None else None)(parse_url(h))
-        )
-
-    rel = ok & ~abs_mask
-    if rel.any():
-        trimmed = hrefs.str.strip()
-        pinfo = _join_host_map(parent_urls)
-        pscheme = pinfo.map(lambda t: t[0] if t else None)
-        phost = pinfo.map(lambda t: t[1] if t else None)
-        pjoin = pinfo.map(lambda t: t[2] if t else None)
-
-        frag = rel & trimmed.str.startswith("#")
-        proto = rel & trimmed.str.startswith("//") & ~frag
-        root = rel & trimmed.str.startswith("/") & ~proto & ~frag
-        other = rel & ~frag & ~proto & ~root
-
-        cand = pd.Series([None] * n, index=hrefs.index, dtype=object)
-        cand[frag] = pscheme[frag] + "://" + pjoin[frag] + trimmed[frag]
-        cand[proto] = pscheme[proto] + ":" + trimmed[proto]
-        cand[root] = pscheme[root] + "://" + phost[root] + trimmed[root]
-        cand[other] = pscheme[other] + "://" + pjoin[other] + "/" + trimmed[other]
-
-        # final url.Parse round-trip (url.go:33 "verify, normalize url"):
-        # identity for clean constructed strings; python fallback otherwise
-        # (a '%' in the constructed path — from the href OR the parent's
-        # decoded path — must re-parse: Go re-decodes and may error)
-        built = cand.notna() & rel
-        cand_s = pd.Series(cand, dtype="string")
-        cand_path = cand_s.str.replace(r"[?#].*$", "", regex=True)
-        clean = (
-            built
-            & cand_s.str.match(
-                r"^[a-z][a-z0-9+.\-]*://[^\s<>\"{}|\\^`]*$", na=False
-            )
-            & ~cand_path.str.contains("%", regex=False, na=False)
-            # the constructed URL can carry raw non-ASCII from the href OR
-            # from the parent's decoded path — the round-trip re-escapes it
-            & ~cand_s.str.contains(_NON_ASCII, regex=True, na=False)
-        )
-        out[clean] = cand[clean]
-        dirty = built & ~clean
-        if dirty.any():
-            out[dirty] = cand[dirty].map(
-                lambda h: (lambda u: u.to_string() if u is not None else None)(
-                    parse_url(h)
-                )
-            )
-    return out
-
-
-def pd_accept(
-    urls: pd.Series, host: str, reject: list[str], accept_pats: list[str]
-) -> pd.Series:
-    """Vectorized F1 over resolved URL strings (host equality + regex lists;
-    reject wins; empty accept ⇒ accept all). Used by tests and the oracle
-    path; in Spark plans the same predicate is expressed natively via
-    accept_filter_col (rlike folds) so Catalyst can push/fuse it."""
-    if host == "":
-        raise ValueError("empty crawl host")
-    res = pd_host(urls) == host
-    for pat in reject:
-        res &= ~urls.str.contains(pat, regex=True, na=False)
-    if accept_pats:
-        any_acc = pd.Series(False, index=urls.index)
-        for pat in accept_pats:
-            any_acc |= urls.str.contains(pat, regex=True, na=False)
-        res &= any_acc
-    return res.fillna(False)
-
-
-# Java-regex masks for the NATIVE canonicalization fast path. They must
-# match pd_resolve's abs_fast mask and pd_url_key's fast mask exactly —
-# pinned by tests/test_spark_canon.py::test_native_canonize_matches_udf.
+# Java-regex masks for the NATIVE canonicalization tier. A row they admit
+# must come out exactly as purl.normalize + to_string/normalize_key would
+# give it — pinned by tests/test_spark_canon.py::
+# test_native_canonize_matches_udf.
 SQL_ABS_SIMPLE = r"^[a-z][a-z0-9+.\-]*://[^\s<>\x22{}|\\^`]*$"
 SQL_PATH_NEEDS_CLEAN = r"(//)|((^|/)\.\.?(/|$))"
 
@@ -235,6 +52,14 @@ SQL_ABS_CLEAN = (
 # body class implies the old separate [^\x20-\x7E] href check (any
 # non-printable survives the space-only trim and fails the class).
 SQL_ROOTED_CLEAN = r"^/[\x21-\x7E&&[^<>\x22{}|\\^`]]*$"
+
+
+def empty_tail(nofrag, s):
+    """True where purl drops an empty query or fragment off ``s`` (its
+    to_string writes neither): ``nofrag``, the part of ``s`` before its
+    first '#', ends in '?', or ``s`` ends in '#'. The native tiers emit
+    their input verbatim, so they route such rows to the exact tier."""
+    return nofrag.endswith("?") | s.endswith("#")
 
 
 def _sql_path_needs_clean(path):
@@ -307,7 +132,7 @@ def canonize_links_prepared(df, href_col):
       ``_cn``       routing flag — True where the href is fully resolved
                     JVM-side (clean absolute or clean root-relative form)
       ``url``/``host``/``url_key``  the native outputs (NULL on _cn=False
-                    rows: the exact pandas UDF resolves those later)
+                    rows: the exact UDF resolves those later)
       ``_cp``/``_cf``  parent_url / raw href, kept ONLY on _cn=False rows
                     (NULL otherwise, so a cache of this projection stays
                     narrow — clean rows never store their parent twice)
@@ -400,7 +225,8 @@ def canonize_links_prepared(df, href_col):
     # common relative form on real webs): resolve = parent scheme://host +
     # trimmed href, entirely JVM-side. Masks are deliberately conservative
     # so every row the exact parser could treat differently (unicode
-    # whitespace trim, escapes, dot segments, odd parents) falls through.
+    # whitespace trim, escapes, dot segments, an empty query or fragment,
+    # odd parents) falls through.
     # The parent-derived columns come precomputed (parent_cols).
     df = _layer(
         df,
@@ -410,6 +236,7 @@ def canonize_links_prepared(df, href_col):
             & href.rlike(SQL_ABS_CLEAN)
             & ~_sql_path_needs_clean(path)
             & ~path.contains("%")  # escaped paths percent-decode ⇒ exact
+            & ~empty_tail(nofrag, href)
         ),
         _is_rootrel=(
             href.isNotNull()
@@ -424,6 +251,7 @@ def canonize_links_prepared(df, href_col):
             & parent_ok  # clean parent whose path re-parses unchanged
             & ~_sql_path_needs_clean(rr_path)
             & ~rr_path.contains("%")
+            & ~empty_tail(rr_nofrag, trimmed)
         ),
     )
     is_native, is_rootrel = c("_is_native"), c("_is_rootrel")
@@ -453,7 +281,7 @@ def canonize_links_split(pre, udf, exact=True):
     """(fast, slow) sides over a canonize_links_prepared projection.
 
     ``fast`` = the _cn rows with their precomputed (url, host, url_key);
-    ``slow`` = the ~_cn rows resolved by the exact pandas UDF. Both carry
+    ``slow`` = the ~_cn rows resolved by the exact UDF. Both carry
     passthrough + (url, host, url_key) in identical order; their
     unionByName is the full candidate set. When ``pre`` is persisted,
     each side is a plain flag filter over the cache — no mask tower, no
@@ -501,17 +329,20 @@ def url_native(url):
         & url.rlike(SQL_ABS_SIMPLE)
         & ~url.rlike(SQL_NON_PRINTABLE_ASCII)  # ctrl chars + raw non-ASCII
         & ~path.rlike(SQL_PATH_NEEDS_CLEAN)
-        & ~path.contains("%"),  # escaped paths percent-decode ⇒ exact path
+        & ~path.contains("%")  # escaped paths percent-decode ⇒ exact path
+        & ~empty_tail(F.substring_index(url, "#", 1), url),
         F.lit(False),
     )
 
 
 def canonize_urls(df, url_col, url_key_udf, exact=True):
-    """Derive ``url_key`` for raw URL strings (the seed path — no parent
-    resolution, just U3). Same native/exact split as the link path: the
-    common clean absolute URL (``url_native``) is keyed ENTIRELY
-    JVM-side; odd rows (dot-segments, control chars, opaque/relative
-    forms) take the exact pandas UDF. Keeps seeding off the Python path
+    """Canonical ``url_col`` and its ``url_key`` for raw URL strings (the
+    seed path — no parent resolution: purl's parse + to_string and U3).
+    Same native/exact split as the link path: the common clean absolute
+    URL (``url_native``), already canonical, is keyed ENTIRELY JVM-side;
+    odd rows (dot-segments, control chars, an uppercase scheme, an empty
+    query, opaque/relative forms) take the exact UDF, which rewrites the
+    URL as well as keying it. Keeps seeding off the Python path
     for large seed tables (10^5+ seeds on the bench graph; 10^8+ at web
     scale). ``exact=False`` (the caller counted no non-native row)
     leaves the UDF branch out of the plan."""
@@ -527,25 +358,44 @@ def canonize_urls(df, url_col, url_key_udf, exact=True):
     fast = df.filter(native).withColumn("url_key", key)
     if not exact:
         return fast
-    slow = df.filter(~native).withColumn("url_key", url_key_udf(url))
+    slow = (
+        df.filter(~native)
+        .withColumn("_c", url_key_udf(url))
+        .withColumn(url_col, F.col("_c.url"))
+        .withColumn("url_key", F.col("_c.url_key"))
+        .drop("_c")
+    )
     return fast.unionByName(slow)
 
 
 # ---------------------------------------------------------------------------
-# Spark-side wrappers
+# The exact tier: purl per row inside each Arrow batch
 # ---------------------------------------------------------------------------
 
 
-def pd_canonize(parent_urls: pd.Series, hrefs: pd.Series) -> pd.DataFrame:
-    """Fused U1+U3: resolve the href and derive (url, host, url_key) in ONE
-    vectorized pass — one Arrow transfer instead of three separate UDF
-    evaluations."""
-    url = pd_resolve(parent_urls, hrefs)
-    url_s = pd.Series(url, dtype="string")
-    parts = _split(url_s)
-    host = parts["host"].fillna("").astype(object)
-    key = pd_url_key(url_s)
-    return pd.DataFrame({"url": url, "host": host, "url_key": key})
+def _link_row(parent, href):
+    """(url, host, url_key) of link ``href`` on page ``parent``, as
+    oracle.crawl derives them; all None where the reference skips the
+    link. A parent that does not parse still resolves absolute hrefs."""
+    p = parse_url(parent)
+    if p is not None:
+        u = normalize(p, href)
+    else:
+        u = parse_url(href)
+        if u is not None and not u.is_abs:
+            u = None
+    if u is None:
+        return None, None, None
+    return u.to_string(), u.host, normalize_key(u)
+
+
+def _url_row(raw):
+    """(url, url_key) of a raw URL, as oracle.crawl pushes a seed; both
+    None when it does not parse."""
+    u = parse_url(raw)
+    if u is None:
+        return None, None
+    return u.to_string(), normalize_key(u)
 
 
 def register_udfs():
@@ -571,23 +421,23 @@ def register_udfs():
             if was:
                 _gc.enable()
 
-    @F.pandas_udf(T.StringType())
-    def url_key_udf(urls: pd.Series) -> pd.Series:
+    def _struct(*names):
+        return T.StructType([T.StructField(n, T.StringType()) for n in names])
+
+    @F.pandas_udf(_struct("url", "url_key"))
+    def url_key_udf(urls: pd.Series) -> pd.DataFrame:
         with _no_gc():
-            return pd_url_key(urls)
+            return pd.DataFrame(
+                [_url_row(u) for u in urls], columns=["url", "url_key"]
+            )
 
-    canon_t = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("host", T.StringType()),
-            T.StructField("url_key", T.StringType()),
-        ]
-    )
-
-    @F.pandas_udf(canon_t)
+    @F.pandas_udf(_struct("url", "host", "url_key"))
     def canonize_udf(parent_urls: pd.Series, hrefs: pd.Series) -> pd.DataFrame:
         with _no_gc():
-            return pd_canonize(parent_urls, hrefs)
+            return pd.DataFrame(
+                [_link_row(p, h) for p, h in zip(parent_urls, hrefs)],
+                columns=["url", "host", "url_key"],
+            )
 
     # NOTE on double evaluation: a deterministic Python UDF referenced by
     # both a Filter and a Project gets cloned by filter pushdown and was

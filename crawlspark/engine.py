@@ -563,7 +563,7 @@ class Crawler:
             F.col("l.href").alias("href"),
         )
         # canonicalization: JVM-native for the common absolute/
-        # root-relative case, exact fused pandas UDF for the rest
+        # root-relative case, purl per row (canonize_udf) for the rest
         # (canon.py). The persist sits on the ONE-PASS prepared
         # projection, BELOW the fast/slow union: the mask battery
         # and all native value expressions run exactly once per

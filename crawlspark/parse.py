@@ -126,22 +126,27 @@ def clean_page_pred(url, html):
     """Routing predicate: True ⇒ the native tier is bit-exact for this
     (page_url, html) pair. Grammar full-match + every media src natively
     resolvable (abs-clean verbatim, or rooted-clean against a clean
-    parent — the masks imply canon.pd_resolve's fast masks, which are
-    pinned ≡ purl.normalize)."""
+    parent — the masks imply that purl.normalize(page_url, src)
+    .to_string() is the src itself, or the page prefix + trimmed src)."""
     from pyspark.sql import functions as F
 
-    from .canon import SQL_ABS_CLEAN, SQL_ROOTED_CLEAN
+    from .canon import SQL_ABS_CLEAN, SQL_ROOTED_CLEAN, empty_tail
 
     _, parent_ok = _native_parent_cols(url)
 
     def _src_ok(s):
         t = F.trim(s)
-        abs_ok = s.rlike(SQL_ABS_CLEAN) & ~s.contains("%")
+        abs_ok = (
+            s.rlike(SQL_ABS_CLEAN)
+            & ~s.contains("%")
+            & ~empty_tail(F.substring_index(s, "#", 1), s)
+        )
         rooted_ok = (
             parent_ok
             & t.rlike(SQL_ROOTED_CLEAN)
             & ~t.startswith("//")
             & ~t.contains("%")
+            & ~empty_tail(F.substring_index(t, "#", 1), t)
         )
         return abs_ok | rooted_ok
 
@@ -224,7 +229,8 @@ def native_parse_projection(fetched):
 def _resolve_media(src, pprefix):
     """U1 for a routing-approved media src: rooted srcs (the only form
     that can carry leading spaces) resolve against the page prefix; abs
-    srcs pass through verbatim (pd_resolve abs_fast)."""
+    srcs pass through verbatim (clean_page_pred admits only those that
+    purl.normalize leaves unchanged)."""
     from pyspark.sql import functions as F
 
     t = F.trim(src)

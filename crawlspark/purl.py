@@ -14,8 +14,9 @@ These functions are the golden contract for URL handling (reference:
   dedup key — cleaned path (+ ``?rawquery``), scheme/host/fragment dropped.
 
 They are used in three places: the pure-Python reference oracle
-(crawlspark/oracle.py), the vectorized Arrow-batch fallback path in
-crawlspark/canon.py, and the unit tests' expected values.
+(crawlspark/oracle.py), the exact tier of crawlspark/canon.py (its pandas
+UDFs call them per row inside each Arrow batch), and the unit tests'
+expected values.
 
 No Spark imports here — this module must stay importable on executors
 without a SparkSession.

@@ -50,8 +50,6 @@ _LASTMOD_FORMATS = [
     "%Y",
 ]
 
-_NS = "{http://www.sitemaps.org/schemas/sitemap/0.9}"
-
 
 def parse_lastmod(s: str) -> Optional[datetime]:
     s = s.replace("Z", "+00:00") if s.endswith("Z") else s

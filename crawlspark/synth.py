@@ -29,8 +29,6 @@ from typing import Dict, List, Optional, Tuple
 
 from .purl import parse_url, url_key_of
 
-PAGES_COLUMNS = ["url", "host", "url_key", "status", "content_html"]
-
 
 def _row(url: str, status: int = 200, html: str = "") -> dict:
     u = parse_url(url)

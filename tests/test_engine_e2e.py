@@ -128,6 +128,28 @@ def test_seed_limit_boundary(spark, tmp_path):
         assert (result.lineage_df().count() == 0) == at_seeding
 
 
+def test_seeds_and_links_take_purl_form(spark, tmp_path):
+    """Seeds, hrefs and media srcs that purl rewrites — an uppercase
+    scheme, an empty query, an empty fragment — are stored in purl's
+    form, as the oracle stores them."""
+    from crawlspark.synth import _page, _row
+
+    pages, _ = basic16()
+    pages.append(_row("http://example.com/odd.html", html=_page(
+        '<a href="http://example.com/sub1/sub1-0.html?">a</a>\n'
+        '<a href="/sub1/sub1-1.html#">b</a>\n'
+        '<img src="/img/x.png?">'
+    )))
+    seeds = [
+        "http://example.com?",
+        "HTTP://example.com/site2.html",
+        "http://example.com/odd.html",
+    ]
+    result = run_spark_crawl(spark, tmp_path, pages, seeds, host="example.com")
+    oracle = oracle_crawl(pages_index(pages), seeds, "example.com")
+    assert_matches_oracle(result, oracle)
+
+
 def test_richsite_failures_and_variants(spark, tmp_path):
     pages, seeds = richsite()
     result = run_spark_crawl(spark, tmp_path, pages, seeds, host="rich.example")

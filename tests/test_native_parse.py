@@ -192,6 +192,10 @@ def test_clean_parent_edge_cases_match(spark):
         ("http://e.example/p", '<img src="http://m.example/a/../b#f">'),
         # rooted src with leading spaces (trim ≡ strip on printable srcs)
         ("http://e.example/p2", '<img src="  /lead.png">'),
+        # an empty query or fragment, which purl drops (the native tier
+        # would emit it verbatim)
+        ("http://e.example/p3", '<img src="/img/x.png?"><img src="/y.png#">'),
+        ("http://e.example/p4", '<img src="http://m.example/x.png?#f">'),
     ]
     for i, (url, html) in enumerate(cases):
         host = "e.example"

@@ -6,10 +6,8 @@ and normalizeKey (url.go:52-72) cleans/keys the DECODED path. String()
 emits EscapedPath(): the original raw text when it is a valid encoding,
 else the canonical re-escape. These vectors encode that contract."""
 
-import pandas as pd
 import pytest
 
-from crawlspark.canon import pd_resolve, pd_url_key
 from crawlspark.purl import (
     URL,
     escape_path,
@@ -129,8 +127,8 @@ def test_parent_decoded_path_reparses():
     assert normalize(parent, "child.html") is None
 
 
-# ---------------------------------------------------------------------------
-# vectorized paths agree (the fast-path masks must exclude '%' paths)
+# escaped URL shapes for the Spark tiers (tests/test_spark_canon.py: the
+# native masks must route every '%' path to the exact tier)
 # ---------------------------------------------------------------------------
 
 ESCAPED_URLS = [
@@ -143,26 +141,6 @@ ESCAPED_URLS = [
     "http://h/a%2Fb/../c",
     "http://h/plain",
 ]
-
-
-def test_pd_url_key_escaped_matches_purl():
-    got = pd_url_key(pd.Series(ESCAPED_URLS))
-    want = [url_key_of(u) for u in ESCAPED_URLS]
-    assert list(got) == want
-
-
-def test_pd_resolve_escaped_matches_purl():
-    parents = ["http://h/sub/page.html"] * 6
-    hrefs = [
-        "a%20b.html", "/x%zz", "http://h/ok%20x", "%2e%2e/up",
-        "http://h/q?x=%20", "name",
-    ]
-    got = pd_resolve(pd.Series(parents), pd.Series(hrefs))
-    want = []
-    for p, h in zip(parents, hrefs):
-        u = normalize(parse_url(p), h)
-        want.append(u.to_string() if u is not None else None)
-    assert list(got) == want
 
 
 # ---------------------------------------------------------------------------

@@ -3,7 +3,6 @@ accept filter / pandas UDFs must agree with the pure-Python contract when
 run through a real session, including plan-level checks (pushdown,
 codegen)."""
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -36,7 +35,7 @@ def test_udfs_match_purl_through_spark(spark):
     out = df.select(
         "parent", "href",
         udfs["canonize"](F.col("parent"), F.col("href")).alias("c"),
-    ).withColumn("key", udfs["url_key"](F.col("c.url"))).collect()
+    ).withColumn("key", udfs["url_key"](F.col("c.url"))["url_key"]).collect()
     for r in out:
         u = normalize(parse_url(r["parent"]), r["href"])
         want_resolved = u.to_string() if u else None
@@ -89,14 +88,16 @@ def _prepared_input(spark, rows):
 
 
 def _pd_reference(rows) -> dict:
-    """The pure-pandas exact path (pd_canonize), computed on the driver."""
-    out = canon.pd_canonize(
-        pd.Series([r[0] for r in rows]), pd.Series([r[2] for r in rows])
-    )
-    return {
-        r[1]: (u, h, k)
-        for r, u, h, k in zip(rows, out["url"], out["host"], out["url_key"])
-    }
+    """The oracle's (url, host, url_key) per link, straight from purl;
+    all None for a link the reference skips."""
+    out = {}
+    for parent, rid, href in rows:
+        u = normalize(parse_url(parent), href)
+        out[rid] = (
+            (None, None, None) if u is None
+            else (u.to_string(), u.host, normalize_key(u))
+        )
+    return out
 
 
 def _as_dict(df) -> dict:
@@ -106,8 +107,8 @@ def _as_dict(df) -> dict:
 
 
 def test_native_canonize_matches_udf(spark):
-    """The JVM-native canonicalization fast path must agree with the exact
-    pandas path row for row over every href shape."""
+    """The JVM-native canonicalization tier plus the exact UDF must agree
+    with purl row for row over every href shape."""
     rows = _href_rows(bulk=True)
     fast, slow = canon.canonize_links_split(
         canon.canonize_links_prepared(_prepared_input(spark, rows), "href"),
@@ -116,6 +117,30 @@ def test_native_canonize_matches_udf(spark):
     assert _as_dict(fast.unionByName(slow)) == _pd_reference(rows)
     # sanity: the native branch actually covered the machine-generated bulk
     assert fast.count() >= 200
+
+
+def test_canonize_urls_matches_purl(spark):
+    """The seed path (canonize_urls: native + exact url_key_udf) gives
+    every raw URL purl's canonical string and key — an uppercase scheme
+    or an empty query is rewritten, not kept raw — and a null URL keys
+    to null, "" to "/"."""
+    from tests.test_canon_vectorized import PARENTS, URLS
+    from tests.test_percent_encoding import ESCAPED_URLS
+
+    raws = URLS + ESCAPED_URLS + PARENTS + [None, ""]
+    df = spark.createDataFrame(list(enumerate(raws)), "rid long, url string")
+    out = canon.canonize_urls(df, "url", canon.register_udfs()["url_key"])
+    got = {r["rid"]: (r["url"], r["url_key"]) for r in out.collect()}
+    want = {}
+    for rid, raw in enumerate(raws):
+        u = parse_url(raw)
+        want[rid] = (None, None) if u is None else (u.to_string(), normalize_key(u))
+    assert got == want
+    assert got[len(raws) - 2] == (None, None)
+    assert got[len(raws) - 1] == ("", "/")
+    # both tiers exercised
+    n_native = df.filter(canon.url_native(F.col("url"))).count()
+    assert 0 < n_native < len(raws)
 
 
 def test_native_canonize_precomputed_parent_cols(spark):
@@ -147,8 +172,8 @@ def test_native_canonize_precomputed_parent_cols(spark):
 def test_prepared_split_cached_matches_udf(spark):
     """The engine's round shape — canonize_links_prepared over the
     hoisted parent columns, PERSISTED, then canonize_links_split's union
-    over the cache — must produce the same rows as the exact pandas path
-    over every href shape (with and without the absolute bulk), the
+    over the cache — must produce the same rows as purl over every href
+    shape (with and without the absolute bulk), the
     prepared projection must store NULL url/host/url_key and the raw
     (parent_url, href) pair exactly on the non-native rows, and no
     private column (_cn/_cp/_cf or the hoisted _p*) may leak into the

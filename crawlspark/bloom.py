@@ -128,7 +128,8 @@ def flag_candidates(
     """Add a ``_maybe`` column: True ⇔ the key MAY be in the seen set
     (Bloom positive), False ⇔ provably new. Probe is a vectorized pandas
     UDF over natively computed hashes. Callers that consume both halves
-    should persist the result so the probe evaluates once. The bitmaps'
+    should materialize the result (dedup checkpoints it) so the probe
+    evaluates once. The bitmaps'
     broadcast is appended to ``handles``: the caller destroys it once
     nothing can recompute the result."""
     bc = spark.sparkContext.broadcast(bloom_dict)

@@ -134,14 +134,15 @@ def canonize_links_prepared(df, href_col):
       ``url``/``host``/``url_key``  the native outputs (NULL on _cn=False
                     rows: the exact UDF resolves those later)
       ``_cp``/``_cf``  parent_url / raw href, kept ONLY on _cn=False rows
-                    (NULL otherwise, so a cache of this projection stays
+                    (NULL otherwise, so a checkpoint of this projection stays
                     narrow — clean rows never store their parent twice)
 
     The common case on a real web graph — an absolute, already-canonical
     href with a dot-segment-free path, or a clean root-relative href — is
-    computed entirely JVM-side, and a caller that persists the result
-    pays the byte ops once per link; canonize_links_split's two branches
-    are then plain flag filters over the cache.
+    computed entirely JVM-side, and a caller that materializes the
+    result (the engine checkpoints it) pays the byte ops once per link;
+    canonize_links_split's two branches are then plain flag filters over
+    the stored rows.
 
     Every intermediate (the fragment cut, the authority split, the
     root-relative path and query, the two tier masks) is a private
@@ -283,11 +284,14 @@ def canonize_links_split(pre, udf, exact=True):
     ``fast`` = the _cn rows with their precomputed (url, host, url_key);
     ``slow`` = the ~_cn rows resolved by the exact UDF. Both carry
     passthrough + (url, host, url_key) in identical order; their
-    unionByName is the full candidate set. When ``pre`` is persisted,
-    each side is a plain flag filter over the cache — no mask tower, no
-    regex re-evaluation. ``exact=False`` (the caller counted no ~_cn
-    row) returns ``slow`` as None: no UDF in the plan, so no Python
-    worker starts for empty batches."""
+    unionByName is the full candidate set. When ``pre`` is materialized
+    (the engine checkpoints it), each side is a plain flag filter over
+    the stored rows — no mask tower, no regex re-evaluation. Callers
+    should materialize ``slow`` too before more than one read: a
+    checkpoint runs the UDF once, and its leaf keeps filter pushdown
+    from cloning the UDF into a Filter. ``exact=False`` (the caller
+    counted no ~_cn row) returns ``slow`` as None: no UDF in the plan,
+    so no Python worker starts for empty batches."""
     from pyspark.sql import functions as F
 
     passthrough = [c for c in pre.columns if c not in _PREPARED]
@@ -345,7 +349,9 @@ def canonize_urls(df, url_col, url_key_udf, exact=True):
     URL as well as keying it. Keeps seeding off the Python path
     for large seed tables (10^5+ seeds on the bench graph; 10^8+ at web
     scale). ``exact=False`` (the caller counted no non-native row)
-    leaves the UDF branch out of the plan."""
+    leaves the UDF branch out of the plan. Rows purl cannot key (a NULL
+    ``url_key``) are dropped: only the exact side has any, and its
+    filter stays above the UDF, so each row is keyed once."""
     from pyspark.sql import functions as F
 
     url = F.col(url_col)
@@ -358,12 +364,15 @@ def canonize_urls(df, url_col, url_key_udf, exact=True):
     fast = df.filter(native).withColumn("url_key", key)
     if not exact:
         return fast
+    # a one-element explode: a filter on its output cannot be pushed
+    # below the Generate, so it never clones the UDF into a Filter
     slow = (
         df.filter(~native)
-        .withColumn("_c", url_key_udf(url))
+        .select("*", F.explode(F.array(url_key_udf(url))).alias("_c"))
         .withColumn(url_col, F.col("_c.url"))
         .withColumn("url_key", F.col("_c.url_key"))
         .drop("_c")
+        .filter(F.col("url_key").isNotNull())
     )
     return fast.unionByName(slow)
 
@@ -441,9 +450,10 @@ def register_udfs():
 
     # NOTE on double evaluation: a deterministic Python UDF referenced by
     # both a Filter and a Project gets cloned by filter pushdown and was
-    # measured evaluating 2-3x per row. The engine prevents this with an
-    # explicit persist barrier between the UDF projection and the filters
-    # (engine.py candidate pipeline) — NOT by marking the UDFs
+    # measured evaluating 2-3x per row. The engine prevents this with a
+    # local checkpoint between the UDF projection and the filters
+    # (engine.py candidate pipeline), and the seed path with a Generate
+    # (canonize_urls) — NOT by marking the UDFs
     # non-deterministic, which blocked enough other optimizations to be a
     # net 7x loss on the window/anti-join stages.
     return {"url_key": url_key_udf, "canonize": canonize_udf}

@@ -10,10 +10,16 @@ Round r (SURVEY.md §3 lifecycle):
       → uniform salted repartition for the fetch stage         [Q4]
       → robots literal-map gate (denied = counted failures)    [F5]
       → guards + resolver join against pages                   [F3,F4,SRC3,F6]
-      → one mapInArrow: parse + links + spans                 [P1-P4]
+        ⇒ checkpoint: fetched, with its parse routing flag
+      → native projection | mapInArrow: parse + links + spans [P1-P4]
+        ⇒ checkpoint: parsed (∪ robots-denied rows)
       → documents / order appends                              [SNK1,SNK2]
-      → link resolve (pandas UDF) → native accept filter       [U1,F1]
-      → first-wins window → anti-join seen → budget            [Q1]
+      → link canonicalization, native layers                  [U1]
+        ⇒ checkpoint: cands_pre; exact tier (purl UDF) ⇒ cands_slow
+      → native accept filter, fused agg                        [F1]
+      → first-wins window → anti-join seen                     [Q1]
+        ⇒ checkpoint: first (broadcast probe), new
+      → dense order → budget
       → frontier_{r+1} = carryover ∪ fresh (snapshot batch r+1)
       → background commit: seen append, metrics + lineage, state;
         joined by round r+1 before its seen read, and by run() before
@@ -21,6 +27,15 @@ Round r (SURVEY.md §3 lifecycle):
     terminate when the frontier is empty (≙ TTL fixpoint, Q2) or the
     round cap is hit. Every table append is keyed by round ⇒ resumable
     from any round boundary; a torn round overwrites itself on retry.
+
+Each ⇒ is an eager ``localCheckpoint``: every later plan starts from
+its ``LogicalRDD`` leaf instead of carrying the round above it (a
+persist keeps the lineage, and each ``InMemoryRelation`` embeds the plan
+it caches), and the leaf is an optimizer barrier, so filter pushdown
+cannot clone a UDF into a Filter. The commit frees them with
+``frontier.release`` after the seen append, their last reader; a round
+that raises frees its own. A lost checkpoint block cannot be recomputed:
+the round fails, and a resume restarts it from ``_state.json``.
 
 Determinism: every ordering is an explicit sort on
 (parent disc_order, link_index) — the canonical single-worker FIFO order —
@@ -44,12 +59,12 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import canon
 from .fetch import resolve_fetch
-from .frontier import DedupResult, dedup_candidates, order_bucket
+from .frontier import DedupResult, dedup_candidates, order_bucket, release
 from .parse import parse_stage
 from .robots import apply_robots
 from .schedule import schedule_round, spread_for_fetch
 from .schemas import DOCUMENTS, LINEAGE, METRICS, ORDER, SEEDS, SEEN
-from .storage import CheckpointStore
+from .storage import CheckpointStore, described
 
 log = logging.getLogger(__name__)
 
@@ -186,8 +201,7 @@ class _RoundCommit:
     lineage: Optional[list]  # (reason, n) rows; None in a drain round
     fresh: Optional[DataFrame]  # kept fresh keys, appended to seen
     bloom: bool  # roll the fresh keys into the bloom bitmaps
-    handles: list  # round caches to unpersist
-    dedup: Optional[DedupResult]
+    handles: list  # round checkpoints and caches to release
 
 
 class Crawler:
@@ -206,18 +220,19 @@ class Crawler:
         else:
             # co-locate the web table by the fetch-join key ONCE (the
             # in-sandbox analogue of bucketing the pages/Iceberg table):
-            # every round's resolver join then reads this cached layout
-            # with no exchange and no sort on the big side.
+            # every round's resolver join reads this cached layout with
+            # no exchange and no sort on the big side. Its final adaptive
+            # plan reads the pages through a TableCacheQueryStage; the
+            # Exchange printed inside that InMemoryRelation is the
+            # one-time repartition that built the cache.
             # DISK_ONLY, deliberately: the web table (HTML bodies — by far
             # the largest state in the job) must never be RESIDENT in
             # executor heap. A heap-resident web cache is (1) impossible at
             # 100 TB and (2) measurably toxic in-sandbox: it inflates G1
-            # mixed-collection copying cost for the whole job and evicts
-            # the per-round caches that are actually hot (parsed,
-            # cands_raw), causing recompute storms. The disk store lands on
-            # spark.local.dir (tmpfs in the bench = OS page cache, zero
-            # GC); the cached partitioning still avoids the per-round
-            # exchange+sort on the big side.
+            # mixed-collection copying cost for the whole job and competes
+            # with the round's checkpoints for memory. The disk store lands
+            # on spark.local.dir (tmpfs in the bench = OS page cache, zero
+            # GC).
             self.pages = pages.repartition(self.P, "host", "url_key").persist(
                 StorageLevel.DISK_ONLY
             )
@@ -334,9 +349,9 @@ class Crawler:
 
     # -- background round commit ---------------------------------------
     def _join_commit(self) -> None:
-        """Block until the previous round's commit (seen append, metrics
-        and lineage, state write, compaction, cache release) finishes;
-        raise its exception if it failed."""
+        """Block until the previous round's commit (seen append,
+        checkpoint release, metrics and lineage, state write, compaction)
+        finishes; raise its exception if it failed."""
         if self._pending_commit is not None:
             f, self._pending_commit = self._pending_commit, None
             f.result()
@@ -394,16 +409,18 @@ class Crawler:
         # one job counts the seeds (the bounds of their dense-order
         # buckets) and the seeds the exact url_key tier must take; with
         # none, that tier's UDF branch stays out of the plan
-        n_seed, n_exact = seeds_df.agg(
-            F.count("*"),
-            F.count(F.when(~canon.url_native(F.col("url")), 1)),
-        ).collect()[0]
+        with described(self.spark, "seed-init"):
+            n_seed, n_exact = seeds_df.agg(
+                F.count("*"),
+                F.count(F.when(~canon.url_native(F.col("url")), 1)),
+            ).collect()[0]
 
+        # the exact tier drops the seeds purl cannot key itself, so no
+        # filter over the union clones its UDF or the native key tower
         cands = (
             canon.canonize_urls(
-                seeds_df, "url", self.udfs["url_key"], exact=n_exact > 0
+                seeds_df, "url", self.udfs["url_key"], exact=n_exact > 0,
             )
-            .filter(F.col("url_key").isNotNull())
             .withColumn("host", canon.host_col("url"))
             .withColumn("seen_key", self._seen_key())
             .withColumn("parent_disc", F.lit(-1).cast("long"))
@@ -421,32 +438,42 @@ class Crawler:
                 F.col("link_index").cast("long"), n_seed, self.P
             )
         n_attempts = attempts_max = None
-        if self.cfg.limit > 0:
-            # the limit state machine's scalars, from one agg over the
-            # candidates (persisted: dedup reads them again)
-            cands = cands.persist()
-            n_attempts, attempts_max = cands.agg(
-                F.count("*"), F.max(F.struct("parent_disc", "link_index")),
-            ).collect()[0]
-        res = dedup_candidates(
-            cands, None, pushed=0, limit=self.cfg.limit,
-            limit_reached=False, bucket_col=bucket,
-            n_attempts=n_attempts,
-            attempts_max=None if attempts_max is None else tuple(attempts_max),
-        )
-        # NOTE: reference seed-push failures are logged, not flag-setting
-        # (crawler.go:320-329); the flag only matters for parse-time pushes
-        # and with a 0-room budget the first parse push trips it anyway —
-        # observably identical, asserted by tests vs the oracle.
-        if res.fresh is None:
-            cands.unpersist()
-            return 0, False
-        self.store.append(
-            "frontier", res.fresh.withColumn("round", F.lit(0)), 0
-        )
-        self._append_seen(res.fresh, 0)
-        res.unpersist()
-        cands.unpersist()
+        handles = []
+        try:
+            with described(self.spark, "seed-init"):
+                if self.cfg.limit > 0:
+                    # the limit state machine's scalars, from one agg over
+                    # the candidates (checkpointed: dedup reads them again)
+                    cands = cands.localCheckpoint(
+                        eager=True,
+                        storageLevel=StorageLevel.MEMORY_AND_DISK_DESER,
+                    )
+                    handles.append(cands)
+                    n_attempts, attempts_max = cands.agg(
+                        F.count("*"),
+                        F.max(F.struct("parent_disc", "link_index")),
+                    ).collect()[0]
+                res = dedup_candidates(
+                    cands, None, pushed=0, limit=self.cfg.limit,
+                    limit_reached=False, bucket_col=bucket,
+                    handles=handles, n_attempts=n_attempts,
+                    attempts_max=(
+                        None if attempts_max is None else tuple(attempts_max)
+                    ),
+                )
+            # NOTE: reference seed-push failures are logged, not
+            # flag-setting (crawler.go:320-329); the flag only matters for
+            # parse-time pushes and with a 0-room budget the first parse
+            # push trips it anyway — observably identical, asserted by
+            # tests vs the oracle.
+            if res.fresh is None:
+                return 0, False
+            self.store.append(
+                "frontier", res.fresh.withColumn("round", F.lit(0)), 0
+            )
+            self._append_seen(res.fresh, 0)
+        finally:
+            release(handles)
         return res.pushed_end, res.limit_reached
 
     # -- round phases -----------------------------------------------------
@@ -454,7 +481,7 @@ class Crawler:
         """Schedule → robots → fetch → parse, then the documents append
         and the order append, both on the round's own thread, so a round
         that raises later leaves no write running. Returns (parsed,
-        carry); the round's caches go into ``handles``."""
+        carry); the round's checkpoints go into ``handles``."""
         cfg = self.cfg
         scheduled, carry = schedule_round(
             frontier, cfg.host_budget, cfg.priority_order,
@@ -477,27 +504,29 @@ class Crawler:
         native = cfg.process_fn is None and cfg.remove_fn is None
         exact = True
         if native:
-            # persist the round batch with its routing flag computed
-            # INTO the cache: the clean-page grammar runs once per page,
-            # and the fetch join once, however many scans follow (the
-            # tier split's two disjoint filters, when both tiers run).
+            # checkpoint the round batch with its routing flag computed
+            # INTO it: the clean-page grammar runs once per page, and the
+            # fetch join once, however many scans follow (the tier
+            # split's two disjoint filters, when both tiers run).
             # DISK_ONLY for the same reason as the pages cache: HTML
             # bodies must never be heap-resident, and spark.local.dir
             # sits on tmpfs in the bench. Cost is bounded by ROUND size,
             # never corpus size. (Measured alternative, rejected:
-            # skipping this persist and streaming the join per tier
-            # re-runs the probe-side hash build and the routing grammar
-            # per tier — paired A/B at local[8]/400k pages: 176.4 s ->
-            # 229.5 s.)
+            # skipping this materialization and streaming the join per
+            # tier re-runs the probe-side hash build and the routing
+            # grammar per tier — paired A/B at local[8]/400k pages:
+            # 176.4 s -> 229.5 s.)
             from .parse import DIRTY_COL, mark_dirty
 
-            fetched = mark_dirty(fetched).persist(StorageLevel.DISK_ONLY)
-            # the count materializes the cache the documents append
-            # would; a round with no dirty page leaves the exact tier's
+            fetched = self._checkpoint(
+                mark_dirty(fetched), StorageLevel.DISK_ONLY,
+                f"fetch-parse r{r}",
+            )
+            handles.append(fetched)
+            # a round with no dirty page leaves the exact tier's
             # MapInArrow out of the plan, so no Python worker starts
-            exact = self._described(
-                f"parse-split r{r}", fetched.filter(F.col(DIRTY_COL)).count
-            ) > 0
+            with described(self.spark, f"parse-split r{r}"):
+                exact = fetched.filter(F.col(DIRTY_COL)).count() > 0
         parsed = parse_stage(
             fetched,
             process_fn=cfg.process_fn,
@@ -514,15 +543,15 @@ class Crawler:
                 F.lit(None).cast(parsed.schema["links"].dataType).alias("links"),
             )
             parsed = parsed.unionByName(denied_rows)
-        parsed = parsed.persist()
+        # the parse runs once, here: every later consumer (the documents
+        # and order appends, the fused agg, the candidate pipeline)
+        # scans the checkpoint
+        parsed = self._checkpoint(
+            parsed, StorageLevel.MEMORY_AND_DISK_DESER, f"fetch-parse r{r}"
+        )
         handles.append(parsed)
-        if native:
-            handles.append(fetched)
 
-        # SNK1: documents (Process runs even after the limit flag) —
-        # this write is also the job that materializes the parsed
-        # cache, so every later consumer (order write, fused agg,
-        # candidate pipeline) is a cache read
+        # SNK1: documents (Process runs even after the limit flag)
         self.store.append(
             "documents",
             parsed.filter(F.col("fetched_ok")).select(
@@ -544,7 +573,7 @@ class Crawler:
         """The round's canonicalized links. Returns (flagged, accepted,
         resolved_ok, accept_expr): every canonized link with what the
         accept filter reads, the accepted rows keyed for dedup, and the
-        two predicates the fused agg counts; caches go into
+        two predicates the fused agg counts; checkpoints go into
         ``handles``."""
         cfg = self.cfg
         # parent-derived canon columns are computed HERE, before the link
@@ -564,36 +593,36 @@ class Crawler:
         )
         # canonicalization: JVM-native for the common absolute/
         # root-relative case, purl per row (canonize_udf) for the rest
-        # (canon.py). The persist sits on the ONE-PASS prepared
-        # projection, BELOW the fast/slow union: the mask battery
-        # and all native value expressions run exactly once per
-        # link when the count below materializes the cache
-        # (the previous union-of-filtered-branches shape
-        # re-evaluated the mask towers per branch and per output
-        # column — the round-4 event logs showed it as the
-        # largest stage of the crawl; the one-pass cached shape
-        # measured ~4x faster at 19.35M links). The persist is
-        # also the optimizer barrier that keeps filter pushdown
-        # from cloning the UDF into a Filter (~3x Python CPU,
-        # measured in round 2).
-        cands_pre = canon.canonize_links_prepared(links, "href").persist(
-            StorageLevel.MEMORY_AND_DISK
+        # (canon.py). The checkpoint sits on the ONE-PASS prepared
+        # projection, BELOW the fast/slow union: the mask battery and
+        # all native value expressions run exactly once per link (the
+        # previous union-of-filtered-branches shape re-evaluated the
+        # mask towers per branch and per output column — the round-4
+        # event logs showed it as the largest stage of the crawl; the
+        # one-pass materialized shape measured ~4x faster at 19.35M
+        # links).
+        cands_pre = self._checkpoint(
+            canon.canonize_links_prepared(links, "href"),
+            StorageLevel.MEMORY_AND_DISK, f"candidates r{r}",
         )
         handles.append(cands_pre)
         # a round with no dirty href leaves the UDF branch out of the
         # plan, so no Python worker starts for empty batches
-        exact = self._described(
-            f"canon-split r{r}", cands_pre.filter(~F.col("_cn")).count
-        ) > 0
+        with described(self.spark, f"canon-split r{r}"):
+            exact = cands_pre.filter(~F.col("_cn")).count() > 0
         cands_raw, cands_slow = canon.canonize_links_split(
             cands_pre, self.udfs["canonize"], exact=exact
         )
         if cands_slow is not None:
-            # the slow (dirty-href) side is persisted POST-UDF so the
+            # the slow (dirty-href) side is checkpointed POST-UDF, so the
             # exact resolver runs once per dirty link, not once per
-            # consumer (the fused agg materializes it; the dedup scan
-            # reads both caches)
-            cands_slow = cands_slow.persist(StorageLevel.MEMORY_AND_DISK)
+            # consumer (the fused agg and the dedup scan read both
+            # checkpoints). The leaf is also the optimizer barrier that
+            # keeps filter pushdown from cloning the UDF into a Filter
+            # (~3x Python CPU, measured in round 2).
+            cands_slow = self._checkpoint(
+                cands_slow, StorageLevel.MEMORY_AND_DISK, f"candidates r{r}"
+            )
             handles.append(cands_slow)
             cands_raw = cands_raw.unionByName(cands_slow)
 
@@ -601,7 +630,7 @@ class Crawler:
         if cfg.accept_fn is not None:
             # IsAcceptedFunc seam: the user callable REPLACES F1
             # (crawler.go:137-142), evaluated as an Arrow-batched
-            # pandas UDF over the cached candidates
+            # pandas UDF over the checkpointed candidates
             _fn = cfg.accept_fn
 
             @F.pandas_udf("boolean")
@@ -637,15 +666,11 @@ class Crawler:
         )
         return flagged, accepted, resolved_ok, accept_expr
 
-    def _described(self, desc: str, action):
-        """``action()`` with ``desc`` as the description of the jobs it
-        starts from this thread."""
-        sc = self.spark.sparkContext
-        sc.setJobDescription(desc)
-        try:
-            return action()
-        finally:
-            sc.setJobDescription(None)
+    def _checkpoint(self, df: DataFrame, level, desc: str) -> DataFrame:
+        """``df`` as an eager local checkpoint at storage ``level``, its
+        jobs described ``desc``."""
+        with described(self.spark, desc):
+            return df.localCheckpoint(eager=True, storageLevel=level)
 
     @staticmethod
     def _parsed_counts(parsed: DataFrame) -> DataFrame:
@@ -661,29 +686,26 @@ class Crawler:
         the control flow needs: scheduled/fetched counts (SNK2 metrics)
         × Q3 error-taxonomy counts (queue.go:9-21 reasons; 'duplicate'
         covers in-round and cross-round — the reference has a single
-        ErrDuplicateURL). parsed and cands_pre are already cached (the
-        documents write, the canon-split count); this job materializes
-        the exact tier's cands_slow, when the round has one."""
-        return self._described(f"fused-agg r{r}", lambda: (
-            self._parsed_counts(parsed)
-            .crossJoin(
+        ErrDuplicateURL). Every frame it reads is a checkpoint: parsed,
+        cands_pre and, when the round has one, cands_slow."""
+        with described(self.spark, f"fused-agg r{r}"):
+            return self._parsed_counts(parsed).crossJoin(
                 flagged.agg(
                     F.count("*").alias("raw"),
                     F.count(F.when(resolved_ok, 1)).alias("resolved"),
                     F.count(F.when(accept_expr, 1)).alias("accepted"),
-                    # accepted parent_disc bounds: drive the
-                    # dense-order buckets (same fused job — no
-                    # extra action)
+                    # accepted parent_disc bounds: drive the dense-order
+                    # buckets (same fused job — no extra action)
                     F.min(
                         F.when(accept_expr, F.col("parent_disc"))
                     ).alias("pd_lo"),
                     F.max(
                         F.when(accept_expr, F.col("parent_disc"))
                     ).alias("pd_hi"),
-                    # max attempt order key: makes the limit-
-                    # boundary trailing-attempt check in
-                    # dedup_candidates a pure scalar compare
-                    # (no extra jobs on the limit-hit round)
+                    # max attempt order key: makes the limit-boundary
+                    # trailing-attempt check in dedup_candidates a pure
+                    # scalar compare (no extra jobs on the limit-hit
+                    # round)
                     F.max(
                         F.when(
                             accept_expr,
@@ -691,13 +713,12 @@ class Crawler:
                         )
                     ).alias("att_max"),
                 )
-            )
-            .collect()[0]
-        ))
+            ).collect()[0]
 
-    def _dedup(self, accepted, row, pushed, limit_reached):
-        """Seen probe + dedup of the accepted candidates. Returns the
-        DedupResult and whether the round probed the bloom bitmaps."""
+    def _dedup(self, accepted, row, pushed, limit_reached, handles):
+        """Seen probe + dedup of the accepted candidates, its round
+        caches appended to ``handles``. Returns the DedupResult and
+        whether the round probed the bloom bitmaps."""
         cfg = self.cfg
         seen = self.store.read("seen")
         probe = cfg.seen_probe
@@ -738,7 +759,7 @@ class Crawler:
             accepted, seen.select(F.col("url_key").alias("seen_key")),
             pushed=pushed, limit=cfg.limit,
             limit_reached=limit_reached, bucket_col=bucket,
-            bloom=bloom,
+            handles=handles, bloom=bloom,
             n_attempts=int(row["accepted"]) if limited else None,
             seen_probe=probe,
             attempts_max=(
@@ -784,16 +805,22 @@ class Crawler:
     def _commit(self, rc: _RoundCommit) -> None:
         """Round ``rc.r``'s background commit: the seen append (and, in
         a merge round that probed the bloom bitmaps, rolling the fresh
-        keys into them), the metrics and lineage rows, the state write,
-        seen compaction, and the release of the round's caches. The
-        state is written only after every round-r sink is durable
+        keys into them), the release of the round's checkpoints, the
+        metrics and lineage rows, the state write, and seen compaction.
+        The state is written only after every round-r sink is durable
         (documents, order and the next frontier already are: the round
         wrote them)."""
         nb = rc.r + 1
-        if rc.fresh is not None:
-            self._append_seen(rc.fresh, nb)
-            if rc.bloom:
-                self._roll_bloom_local(self._collect_fresh_bitmaps(rc.fresh))
+        try:
+            if rc.fresh is not None:
+                self._append_seen(rc.fresh, nb)
+                if rc.bloom:
+                    with described(self.spark, f"bloom r{rc.r}"):
+                        bitmaps = self._collect_fresh_bitmaps(rc.fresh)
+                    self._roll_bloom_local(bitmaps)
+        finally:
+            # the seen append was the round's last read of them
+            release(rc.handles)
         # a byte-sized table is written by the driver: no Spark job
         n_sched, n_ok, n_kept = rc.metrics
         self.store.append_local(
@@ -824,11 +851,6 @@ class Crawler:
                 "seen", upto=nb, round_col="first_round",
                 fanin=self.cfg.seen_compact_fanin,
             )
-        # release round-r caches
-        for h in rc.handles:
-            h.unpersist()
-        if rc.dedup is not None:
-            rc.dedup.unpersist()
 
     # -- main loop ------------------------------------------------------
     def run(
@@ -882,50 +904,57 @@ class Crawler:
                 while n_frontier > 0 and (
                     cfg.max_rounds == 0 or r < cfg.max_rounds
                 ):
-                    frontier = self.store.read_batch("frontier", r)
-                    handles = []
-                    parsed, carry = self._fetch_parse(
-                        r, frontier.drop("round"), handles
-                    )
-                    dedup = lineage = None
-                    bloom = False
-                    if limit_reached:
-                        # post-limit drain round: no candidate pipeline,
-                        # only the scheduled/fetched counts for metrics
-                        row = self._parsed_counts(parsed).collect()[0]
-                    else:
-                        flagged, accepted, resolved_ok, accept_expr = (
-                            self._candidates(r, parsed, handles)
+                    handles, dedup, lineage, bloom = [], None, None, False
+                    try:
+                        frontier = self.store.read_batch("frontier", r)
+                        parsed, carry = self._fetch_parse(
+                            r, frontier.drop("round"), handles
                         )
-                        row = self._fused_agg(
-                            r, parsed, flagged, resolved_ok, accept_expr
-                        )
-                        # first dependence on the previous round's commit
-                        # (seen batch, any compaction, the rolled bitmaps)
+                        if limit_reached:
+                            # post-limit drain round: no candidate
+                            # pipeline, only the scheduled/fetched counts
+                            # for metrics
+                            with described(self.spark, f"drain r{r}"):
+                                row = self._parsed_counts(parsed).collect()[0]
+                        else:
+                            flagged, accepted, resolved_ok, accept_expr = (
+                                self._candidates(r, parsed, handles)
+                            )
+                            row = self._fused_agg(
+                                r, parsed, flagged, resolved_ok, accept_expr
+                            )
+                            # first dependence on the previous round's
+                            # commit (seen batch, any compaction, the
+                            # rolled bitmaps)
+                            self._join_commit()
+                            with described(self.spark, f"dedup r{r}"):
+                                dedup, bloom = self._dedup(
+                                    accepted, row, pushed, limit_reached,
+                                    handles,
+                                )
+                            pushed, limit_reached = (
+                                dedup.pushed_end, dedup.limit_reached
+                            )
+                            lineage = self._lineage(row, dedup)
+                        n_sched, n_ok = row["n"], int(row["ok"] or 0)
+                        n_kept = dedup.n_kept if dedup is not None else 0
+                        fresh = dedup.fresh if n_kept > 0 else None
+                        nxt = self._next_frontier(carry, fresh)
+                        if nxt is not None:
+                            self.store.append(
+                                "frontier",
+                                nxt.withColumn("round", F.lit(r + 1)), r + 1,
+                            )
+                        # a drain round never joined the previous commit
+                        # (it reads no seen): join it here, or its failure
+                        # would be lost and this round's state write would
+                        # move past it
                         self._join_commit()
-                        dedup, bloom = self._dedup(
-                            accepted, row, pushed, limit_reached
-                        )
-                        pushed, limit_reached = (
-                            dedup.pushed_end, dedup.limit_reached
-                        )
-                        lineage = self._lineage(row, dedup)
-                    n_sched, n_ok = row["n"], int(row["ok"] or 0)
-                    n_kept = dedup.n_kept if dedup is not None else 0
-                    fresh = dedup.fresh if n_kept > 0 else None
-                    nxt = self._next_frontier(carry, fresh)
-                    if nxt is not None:
-                        self.store.append(
-                            "frontier", nxt.withColumn("round", F.lit(r + 1)),
-                            r + 1,
-                        )
+                    except BaseException:
+                        # the commit below would have released them
+                        release(handles)
+                        raise
                     n_frontier = n_frontier - n_sched + n_kept
-
-                    # a drain round never joined the previous commit (it
-                    # reads no seen): join it here, or its failure would
-                    # be lost and this round's state write would move
-                    # past it
-                    self._join_commit()
                     self._pending_commit = pool.submit(
                         self._commit,
                         _RoundCommit(
@@ -941,7 +970,6 @@ class Crawler:
                             fresh=fresh,
                             bloom=bloom,
                             handles=handles,
-                            dedup=dedup,
                         ),
                     )
                     r += 1

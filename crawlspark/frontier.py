@@ -16,6 +16,13 @@ Scale design:
   literal of at most ``P`` entries. No range sampling, no
   single-partition window, no driver collect of data rows (only one
   count per bucket reaches the driver).
+- Materialization: the deduped set (and the first-wins rows the
+  broadcast probe or the Bloom split reads twice) is an eager local
+  checkpoint, not a persist. Every later plan (dense-order counts, the
+  frontier and seen appends) starts from its ``LogicalRDD`` leaf, so no
+  plan carries the round's lineage. Each checkpoint goes into the
+  caller's handle list the moment it exists, and ``release`` frees
+  them: ``DataFrame.unpersist`` does not.
 - limit+1 budget: ``done > limit`` is checked before increment in the
   reference (queue.go:64-67) ⇒ exactly limit+1 pushes succeed; dedup
   happens after the limit check, so any push *attempt* past the budget —
@@ -24,12 +31,32 @@ Scale design:
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 from typing import Optional, Tuple
 
-from pyspark import Broadcast
+from pyspark import Broadcast, StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
+
+
+def release(handles) -> None:
+    """Free every round cache in ``handles``: destroy a broadcast, and
+    free the blocks of a local checkpoint (``DataFrame.unpersist`` does
+    nothing on one: its blocks belong to the RDD under its
+    ``LogicalRDD`` plan). A handle that fails to free is logged and the
+    rest are still freed, so cleanup never replaces the exception that
+    made the caller clean up."""
+    for h in handles:
+        try:
+            if isinstance(h, Broadcast):
+                h.destroy()
+            else:
+                h._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        except Exception:
+            log.exception("could not release a round cache")
 
 
 def order_bucket(offset: Column, span: int, buckets: int) -> Column:
@@ -110,8 +137,8 @@ def _anti_seen(cands: DataFrame, seen: DataFrame, probe: str) -> DataFrame:
     left_semi against the candidate keys (duplicate-key extraction), then
     the (small) duplicate-key set broadcasts into a left_anti — the seen
     side never shuffles or sorts. probe="merge": plain left_anti.
-    ``cands`` must be persisted by the caller in broadcast mode (it is
-    referenced twice)."""
+    ``cands`` must be materialized by the caller in broadcast mode (it
+    is referenced twice)."""
     if probe == "broadcast":
         dup_keys = seen.select("seen_key").join(
             F.broadcast(cands.select("seen_key")), "seen_key", "left_semi"
@@ -127,18 +154,6 @@ class DedupResult:
     n_new: int  # unique candidates not yet seen
     n_kept: int  # after budget cut
     limit_reached: bool
-    # persisted DataFrames and broadcasts for the caller to release
-    handles: tuple = ()
-
-    def unpersist(self):
-        for h in self.handles:
-            try:
-                if isinstance(h, Broadcast):
-                    h.destroy()
-                else:
-                    h.unpersist()
-            except Exception:
-                pass
 
 
 def dedup_candidates(
@@ -148,6 +163,7 @@ def dedup_candidates(
     limit: int,
     limit_reached: bool,
     bucket_col: Column,
+    handles: list,
     bloom: Optional[tuple] = None,
     n_attempts: Optional[int] = None,
     seen_probe: str = "merge",
@@ -168,6 +184,9 @@ def dedup_candidates(
     ``bucket_col``: monotone integer bucket expression over the order
     key (parent_disc, link_index) for the dense index (see
     with_dense_order); ``F.lit(0)`` when there are no bounds.
+    ``handles``: the caller's list of round caches; each checkpoint and
+    broadcast is appended to it as soon as it exists, so the caller
+    frees them with ``release`` even when this function raises.
     ``attempts_max``: max (parent_disc, link_index) over ALL attempts,
     required when ``limit > 0`` and ``n_attempts > 0``: the
     limit-boundary trailing-attempt check is a scalar comparison of it
@@ -186,12 +205,12 @@ def dedup_candidates(
         The Bloom prefilter pairs with "merge" only: here the seen side
         is already streamed once with no shuffle for it to save.
     """
-    handles = []
     if limit > 0 and n_attempts == 0:
         return DedupResult(None, pushed, 0, 0, limit_reached)
 
     order_key = [F.col("parent_disc"), F.col("link_index")]
 
+    level = StorageLevel.MEMORY_AND_DISK_DESER
     # within-round first-wins (the first URL variant for a key is enqueued)
     w = Window.partitionBy("seen_key").orderBy(*order_key)
     first = (
@@ -208,24 +227,26 @@ def dedup_candidates(
             spark, bdict, bcfg = bloom
             flagged = flag_candidates(
                 spark, first, "seen_key", bdict, bcfg, handles=handles
-            ).persist()
+            ).localCheckpoint(eager=True, storageLevel=level)
             handles.append(flagged)
             maybe = flagged.filter(F.col("_maybe")).drop("_maybe")
             definite = flagged.filter(~F.col("_maybe")).drop("_maybe")
             new = _anti_seen(maybe, seen, seen_probe).unionByName(definite)
         else:
             if seen_probe == "broadcast":
-                first = first.persist()
+                # the probe reads it twice
+                first = first.localCheckpoint(eager=True, storageLevel=level)
                 handles.append(first)
             new = _anti_seen(first, seen, seen_probe)
     else:
         new = first
-    # Materialize the deduped set ONCE: the dense-order counts job fills
-    # the cache, and the indexed rows' later reads (the seen and frontier
-    # appends, the next round's handoff) read the small cached set instead
-    # of re-running the explode→resolve→window→anti-join chain. n_new falls
-    # out of the dense-order per-bucket counts (no dedicated count job).
-    new = new.persist()
+    # Materialize the deduped set ONCE, as a local checkpoint: the
+    # dense-order counts job and the indexed rows' later reads (the
+    # frontier and seen appends) scan the small checkpointed set, and
+    # their plans start from its LogicalRDD leaf instead of carrying the
+    # explode→resolve→window→anti-join chain. n_new falls out of the
+    # dense-order per-bucket counts (no dedicated count job).
+    new = new.localCheckpoint(eager=True, storageLevel=level)
     handles.append(new)
     _new_max_out: list = []
     new, n_new = with_dense_order(
@@ -270,5 +291,4 @@ def dedup_candidates(
         n_new=n_new,
         n_kept=n_kept,
         limit_reached=limit_reached or limit_hit,
-        handles=tuple(handles),
     )

@@ -361,10 +361,11 @@ def parse_stage(fetched, process_fn=None, remove_fn=None, native=False,
     fetch-ok, plus fetch-ok rows whose page passes clean_page_pred, take
     the JVM-native projection; only dirty pages cross into Python. The
     hooks force the exact tier (they run inside the Python parse loop).
-    Callers should persist ``fetched`` before a native-split call — the
-    two tiers each scan it; pre-marking with ``mark_dirty`` before the
-    persist makes the routing grammar run ONCE per page (the two tier
-    filters then read the cached boolean) instead of once per tier.
+    Callers should materialize ``fetched`` (the engine checkpoints it)
+    before a native-split call — the two tiers each scan it; pre-marking
+    with ``mark_dirty`` before the checkpoint makes the routing grammar
+    run ONCE per page (the two tier filters then read the stored
+    boolean) instead of once per tier.
     ``exact=False`` (the caller counted no dirty row) leaves the exact
     tier's MapInArrow out of the native split, so no Python worker
     starts for empty batches; the hooks still force the exact tier."""
@@ -395,9 +396,9 @@ DIRTY_COL = "_parse_dirty"
 def mark_dirty(fetched):
     """Materializable routing flag: True ⇔ the row is fetch-ok AND the
     page fails the clean grammar (must cross into the exact Arrow parse).
-    Callers compute it once into a persisted round batch; the two tier
-    filters in parse_stage are then cheap cached-column scans instead of
-    two full regex passes per page."""
+    Callers compute it once into a checkpointed round batch; the two
+    tier filters in parse_stage are then cheap stored-column scans
+    instead of two full regex passes per page."""
     from pyspark.sql import functions as F
 
     ok = (

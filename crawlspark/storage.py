@@ -15,11 +15,26 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from contextlib import contextmanager
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .schemas import TABLES
+
+
+@contextmanager
+def described(spark: SparkSession, desc: str):
+    """``desc`` as the description of the jobs this thread starts inside
+    the block, so event logs attribute their stages. Job descriptions
+    are thread-local: the background commit's writes and the round's
+    own do not clobber each other's."""
+    sc = spark.sparkContext
+    sc.setJobDescription(desc)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(None)
 
 
 class CheckpointStore:
@@ -38,15 +53,8 @@ class CheckpointStore:
 
     def append(self, table: str, df: DataFrame, batch: int) -> None:
         path = os.path.join(self._table_path(table), f"batch={batch}")
-        # label the write's stages in the event log (job descriptions are
-        # thread-local, so the background commit's writes and the round's
-        # own do not clobber each other's)
-        sc = self.spark.sparkContext
-        sc.setJobDescription(f"append:{table} b{batch}")
-        try:
+        with described(self.spark, f"append:{table} b{batch}"):
             df.write.mode("overwrite").parquet(path)
-        finally:
-            sc.setJobDescription(None)
 
     def append_local(
         self, table: str, columns: dict, schema, batch: int
@@ -197,7 +205,8 @@ class CheckpointStore:
         path = self._table_path(table)
         tmp = os.path.join(path, ".compact_tmp")
         shutil.rmtree(tmp, ignore_errors=True)
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        with described(self.spark, f"compact:{table} b{label}"):
+            df.coalesce(1).write.mode("overwrite").parquet(tmp)
         with open(os.path.join(tmp, "_compacted.json"), "w") as f:
             json.dump({"round_col": round_col}, f)
         # commit point: from here a crash is completed by recovery

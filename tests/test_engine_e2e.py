@@ -150,6 +150,31 @@ def test_seeds_and_links_take_purl_form(spark, tmp_path):
     assert_matches_oracle(result, oracle)
 
 
+def test_seed_keyed_once(spark, tmp_path, monkeypatch):
+    """A seed purl must rewrite (a dot-segment) is keyed by one
+    url_key_udf evaluation: the drop of unkeyable seeds stays above the
+    UDF, so filter pushdown cannot clone it. The plan checked is that of
+    the seed candidates dedup materializes, the plan that keys them."""
+    from crawlspark import engine
+
+    pages, _ = basic16()
+    seeds = ["http://example.com", "http://example.com/sub1/../site1.html"]
+    dedup, plans = engine.dedup_candidates, []
+
+    def spy(cands, seen, *a, **k):
+        if seen is None:
+            plans.append(cands._jdf.queryExecution().executedPlan().toString())
+        return dedup(cands, seen, *a, **k)
+
+    monkeypatch.setattr(engine, "dedup_candidates", spy)
+    result = run_spark_crawl(spark, tmp_path, pages, seeds, host="example.com")
+    [plan] = plans
+    assert plan.count("ArrowEvalPython [url_key_udf") == 1, plan
+    assert_matches_oracle(
+        result, oracle_crawl(pages_index(pages), seeds, "example.com")
+    )
+
+
 def test_richsite_failures_and_variants(spark, tmp_path):
     pages, seeds = richsite()
     result = run_spark_crawl(spark, tmp_path, pages, seeds, host="rich.example")
@@ -514,3 +539,54 @@ def test_failed_round_waits_out_pending_commit(spark, tmp_path,
                       host="example.com")
     result = Crawler(spark, pages_df, cfg).run(resume=True)
     assert_matches_oracle(result, oracle)
+
+
+@pytest.mark.parametrize("fail_in", ["fused_agg", "dense_order"])
+def test_failed_round_releases_its_checkpoints(spark, tmp_path,
+                                               monkeypatch, fail_in):
+    """A round that raises frees what it materialized. Round 1 raises in
+    its fused agg, after the round checkpointed its fetched batch, parsed
+    rows and candidates, or in its dense order, after dedup checkpointed
+    the deduped set; once run() has raised, the session holds exactly
+    the persistent RDDs it held before run()."""
+    from crawlspark import frontier
+
+    pages, seeds = basic16()
+    fused_agg, dense_order = Crawler._fused_agg, frontier.with_dense_order
+    rounds = []
+
+    def fused_agg_spy(self, r, *args):
+        rounds.append(r)
+        if r == 1 and fail_in == "fused_agg":
+            raise RuntimeError("injected fused-agg failure in round 1")
+        return fused_agg(self, r, *args)
+
+    def dense_order_spy(*args, **kwargs):
+        if rounds[-1:] == [1] and fail_in == "dense_order":
+            raise RuntimeError("injected dense-order failure in round 1")
+        return dense_order(*args, **kwargs)
+
+    monkeypatch.setattr(Crawler, "_fused_agg", fused_agg_spy)
+    monkeypatch.setattr(frontier, "with_dense_order", dense_order_spy)
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs())
+    with pytest.raises(RuntimeError, match="round 1"):
+        run_spark_crawl(spark, tmp_path, pages, seeds, host="example.com")
+    assert set(sc._jsc.getPersistentRDDs()) == before
+
+
+def test_release_frees_every_handle_past_a_failure(spark, caplog):
+    """``release`` frees the checkpoints after a handle that cannot be
+    freed, logs that failure, and raises nothing: a round's cleanup must
+    not replace the exception that made it clean up."""
+    from crawlspark.frontier import release
+
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs())
+    a = spark.range(10).localCheckpoint(eager=True)
+    b = spark.range(20).localCheckpoint(eager=True)
+    assert len(set(sc._jsc.getPersistentRDDs()) - before) == 2
+    with caplog.at_level("ERROR", logger="crawlspark.frontier"):
+        release([a, object(), b])
+    assert set(sc._jsc.getPersistentRDDs()) == before
+    assert "could not release" in caplog.text

@@ -44,6 +44,11 @@ def test_udfs_match_purl_through_spark(spark):
             assert r["c"]["url_key"] == r["key"] == normalize_key(
                 parse_url(want_resolved)
             )
+    # a URL purl cannot parse, and a null one, key to null
+    keys = spark.createDataFrame(
+        [("http://a b.com/",), (None,)], "url string"
+    ).select(udfs["url_key"](F.col("url")).alias("k")).collect()
+    assert [tuple(r["k"]) for r in keys] == [(None, None), (None, None)]
 
 
 def test_accept_filter_col_matches_purl(spark):
@@ -122,8 +127,8 @@ def test_native_canonize_matches_udf(spark):
 def test_canonize_urls_matches_purl(spark):
     """The seed path (canonize_urls: native + exact url_key_udf) gives
     every raw URL purl's canonical string and key — an uppercase scheme
-    or an empty query is rewritten, not kept raw — and a null URL keys
-    to null, "" to "/"."""
+    or an empty query is rewritten, not kept raw — and "" keys to "/".
+    A URL purl cannot key (a null one) is dropped."""
     from tests.test_canon_vectorized import PARENTS, URLS
     from tests.test_percent_encoding import ESCAPED_URLS
 
@@ -134,9 +139,10 @@ def test_canonize_urls_matches_purl(spark):
     want = {}
     for rid, raw in enumerate(raws):
         u = parse_url(raw)
-        want[rid] = (None, None) if u is None else (u.to_string(), normalize_key(u))
+        if u is not None:
+            want[rid] = (u.to_string(), normalize_key(u))
     assert got == want
-    assert got[len(raws) - 2] == (None, None)
+    assert len(raws) - 2 not in got
     assert got[len(raws) - 1] == ("", "/")
     # both tiers exercised
     n_native = df.filter(canon.url_native(F.col("url"))).count()

@@ -15,6 +15,12 @@ the script imports it from the shipped archive on the driver while every
 executor's Python worker resolves the same archive — the standard
 multi-executor deployment the sandbox emulates with local[N].
 
+A round's materialized frames are local checkpoints, kept on the
+executors that computed them and never recomputed from lineage: losing
+an executor (or a preempted one) fails the run. Run the same command
+with ``--resume`` to restart it from the last committed round recorded
+in the checkpoint's ``_state.json``.
+
 Inputs are parquet tables: pages in the resolver schema
 (crawlspark.schemas.PAGES — the deterministic stand-in for HTTP GET,
 crawler.go:27-57) and seeds as (url string, seed_order int) — a TABLE, not

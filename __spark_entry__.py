@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from crawlspark import analysis
 from crawlspark.engine import CrawlConfig, Crawler
-from crawlspark.frontier import order_bucket, with_dense_order
+from crawlspark.frontier import bucket_counts, order_bucket, with_dense_order
 from crawlspark.media import media_features
 from crawlspark.schedule import schedule_round
 from crawlspark.schemas import PAGES, SPAN
@@ -156,13 +156,16 @@ def _q_budget_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery) — checked against row_number in DuckDB."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id")
     lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).collect()[0]
+    buckets = spark.sparkContext.defaultParallelism
     bucket = F.lit(0)
     if lo is not None:
         bucket = order_bucket(
-            F.col("event_id") - F.lit(lo), hi - lo + 1,
-            spark.sparkContext.defaultParallelism,
+            F.col("event_id") - F.lit(lo), hi - lo + 1, buckets
         )
-    idx, _n = with_dense_order(ev, [F.col("event_id")], "disc_order", bucket)
+    [counts] = ev.agg(bucket_counts(bucket, buckets)).first()
+    idx, _n = with_dense_order(
+        ev, [F.col("event_id")], "disc_order", bucket, counts
+    )
     return idx.filter(F.col("disc_order") < 101).select(
         "event_id", "disc_order"
     )

@@ -174,7 +174,7 @@ def canonize_links_prepared(df, href_col):
     # Everything below the two fused rlike masks is UTF8String byte ops:
     # each regexp_* / rlike converts the row to java.lang.String first,
     # and at ~20 passes/link the conversions dominated the candidate
-    # pipeline's CPU (event-log measured: the fused-agg stage IS the
+    # pipeline's CPU (event-log measured: the candidate stage was the
     # largest stage of the crawl). Two regex passes per link remain.
     # F.trim(href) feeds the ROOT-RELATIVE tier (below).
     df = _layer(

@@ -14,9 +14,8 @@ Round r (SURVEY.md §3 lifecycle):
       → native projection | mapInArrow: parse + links + spans [P1-P4]
         ⇒ checkpoint: parsed (∪ robots-denied rows)
       → documents / order appends                              [SNK1,SNK2]
-      → link canonicalization, native layers                  [U1]
+      → link canonicalization, native layers, accept flag     [U1,F1]
         ⇒ checkpoint: cands_pre; exact tier (purl UDF) ⇒ cands_slow
-      → native accept filter, fused agg                        [F1]
       → first-wins window → anti-join seen                     [Q1]
         ⇒ checkpoint: first (broadcast probe), new
       → dense order → budget
@@ -36,6 +35,14 @@ cannot clone a UDF into a Filter. The commit frees them with
 ``frontier.release`` after the seen append, their last reader; a round
 that raises frees its own. A lost checkpoint block cannot be recomputed:
 the round fails, and a resume restarts it from ``_state.json``.
+
+Every scalar the driver needs from a round is observed
+(``DataFrame.observe``) on the checkpoint (⇒) that materializes its
+frame, so it costs no job of its own: the dirty-page count on
+``fetched``, the scheduled and fetched counts on ``parsed`` (all a
+post-limit drain round reads), the exact-tier count, the Q3 lineage
+counts and the dense-order bounds on ``cands_pre`` and ``cands_slow``,
+and the per-bucket counts on ``new``.
 
 Determinism: every ordering is an explicit sort on
 (parent disc_order, link_index) — the canonical single-worker FIFO order —
@@ -59,7 +66,9 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import canon
 from .fetch import resolve_fetch
-from .frontier import DedupResult, dedup_candidates, order_bucket, release
+from .frontier import (
+    DedupResult, checkpoint, dedup_candidates, order_bucket, release,
+)
 from .parse import parse_stage
 from .robots import apply_robots
 from .schedule import schedule_round, spread_for_fetch
@@ -106,7 +115,7 @@ class CrawlConfig:
     # streams the seen table with zero exchange/sort (exact; requires the
     # per-round candidate-key set to be broadcastable); "merge" is the
     # plain anti-join for unbounded rounds. Default "auto" picks PER
-    # ROUND from the fused agg's already-collected candidate count: the
+    # ROUND from the accepted count observed on its candidates: the
     # broadcast probe is used only while the round's candidate-key set
     # fits the byte budget below, else the round falls back to merge.
     # Nothing else bounds the round (the default config has
@@ -215,27 +224,22 @@ class Crawler:
         self.spark = spark
         self.cfg = config
         self.P = config.num_partitions or spark.sparkContext.defaultParallelism
+        # (frame, storage level) of the Crawler's own caches: each run()
+        # persists them and frees them when it returns or raises
+        self._caches = []
         if config.broadcast_pages:
             self.pages = pages
         else:
             # co-locate the web table by the fetch-join key ONCE (the
-            # in-sandbox analogue of bucketing the pages/Iceberg table):
-            # every round's resolver join reads this cached layout with
-            # no exchange and no sort on the big side. Its final adaptive
-            # plan reads the pages through a TableCacheQueryStage; the
-            # Exchange printed inside that InMemoryRelation is the
-            # one-time repartition that built the cache.
-            # DISK_ONLY, deliberately: the web table (HTML bodies — by far
-            # the largest state in the job) must never be RESIDENT in
-            # executor heap. A heap-resident web cache is (1) impossible at
-            # 100 TB and (2) measurably toxic in-sandbox: it inflates G1
-            # mixed-collection copying cost for the whole job and competes
-            # with the round's checkpoints for memory. The disk store lands
-            # on spark.local.dir (tmpfs in the bench = OS page cache, zero
-            # GC).
-            self.pages = pages.repartition(self.P, "host", "url_key").persist(
-                StorageLevel.DISK_ONLY
-            )
+            # analogue of bucketing the pages table): every round's
+            # resolver join reads this cached layout through a
+            # TableCacheQueryStage, with no exchange and no sort on the
+            # big side. DISK_ONLY: the web table (HTML bodies, the largest
+            # state in the job) must never be resident in executor heap,
+            # where it inflates G1 copying cost and competes with the
+            # round's checkpoints (spark.local.dir is tmpfs in the bench).
+            self.pages = pages.repartition(self.P, "host", "url_key")
+            self._caches.append((self.pages, StorageLevel.DISK_ONLY))
         # the robots rules are small policy state: collect them once, so
         # every round's gate is a literal-map projection (no join, no
         # window shuffle) and the crawl-delay budgets a literal map
@@ -263,7 +267,10 @@ class Crawler:
                 # driver collect of the host universe (10^6+ hosts at web
                 # scale would be a plan/driver killer); the broadcast
                 # exchanges downstream materialize it executor-side
-                self._hosts_df = pages.select("host").distinct().persist()
+                self._hosts_df = pages.select("host").distinct()
+                self._caches.append(
+                    (self._hosts_df, StorageLevel.MEMORY_AND_DISK_DESER)
+                )
         else:
             self._hosts_df = None
         # per-round seen-probe decisions ("broadcast"/"merge"), appended
@@ -442,20 +449,17 @@ class Crawler:
         try:
             with described(self.spark, "seed-init"):
                 if self.cfg.limit > 0:
-                    # the limit state machine's scalars, from one agg over
-                    # the candidates (checkpointed: dedup reads them again)
-                    cands = cands.localCheckpoint(
-                        eager=True,
-                        storageLevel=StorageLevel.MEMORY_AND_DISK_DESER,
+                    # the limit state machine's scalars, observed on the
+                    # candidates' checkpoint (dedup reads them again)
+                    cands, row = checkpoint(
+                        cands, StorageLevel.MEMORY_AND_DISK_DESER, handles,
+                        F.max(F.struct("parent_disc", "link_index"))
+                        .alias("mx"),
                     )
-                    handles.append(cands)
-                    n_attempts, attempts_max = cands.agg(
-                        F.count("*"),
-                        F.max(F.struct("parent_disc", "link_index")),
-                    ).collect()[0]
+                    n_attempts, attempts_max = row["rows"], row["mx"]
                 res = dedup_candidates(
                     cands, None, pushed=0, limit=self.cfg.limit,
-                    limit_reached=False, bucket_col=bucket,
+                    limit_reached=False, bucket_col=bucket, buckets=self.P,
                     handles=handles, n_attempts=n_attempts,
                     attempts_max=(
                         None if attempts_max is None else tuple(attempts_max)
@@ -481,7 +485,9 @@ class Crawler:
         """Schedule → robots → fetch → parse, then the documents append
         and the order append, both on the round's own thread, so a round
         that raises later leaves no write running. Returns (parsed,
-        carry); the round's checkpoints go into ``handles``."""
+        carry, counts): ``counts`` holds the scheduled (``rows``) and
+        fetched (``ok``) counts of SNK2 metrics, observed on parsed's
+        checkpoint. The round's checkpoints go into ``handles``."""
         cfg = self.cfg
         scheduled, carry = schedule_round(
             frontier, cfg.host_budget, cfg.priority_order,
@@ -518,15 +524,14 @@ class Crawler:
             # 176.4 s -> 229.5 s.)
             from .parse import DIRTY_COL, mark_dirty
 
-            fetched = self._checkpoint(
-                mark_dirty(fetched), StorageLevel.DISK_ONLY,
-                f"fetch-parse r{r}",
-            )
-            handles.append(fetched)
             # a round with no dirty page leaves the exact tier's
             # MapInArrow out of the plan, so no Python worker starts
-            with described(self.spark, f"parse-split r{r}"):
-                exact = fetched.filter(F.col(DIRTY_COL)).count() > 0
+            with described(self.spark, f"fetch-parse r{r}"):
+                fetched, obs = checkpoint(
+                    mark_dirty(fetched), StorageLevel.DISK_ONLY, handles,
+                    F.count(F.when(F.col(DIRTY_COL), 1)).alias("dirty"),
+                )
+            exact = obs["dirty"] > 0
         parsed = parse_stage(
             fetched,
             process_fn=cfg.process_fn,
@@ -544,12 +549,12 @@ class Crawler:
             )
             parsed = parsed.unionByName(denied_rows)
         # the parse runs once, here: every later consumer (the documents
-        # and order appends, the fused agg, the candidate pipeline)
-        # scans the checkpoint
-        parsed = self._checkpoint(
-            parsed, StorageLevel.MEMORY_AND_DISK_DESER, f"fetch-parse r{r}"
-        )
-        handles.append(parsed)
+        # and order appends, the candidate pipeline) scans the checkpoint
+        with described(self.spark, f"fetch-parse r{r}"):
+            parsed, counts = checkpoint(
+                parsed, StorageLevel.MEMORY_AND_DISK_DESER, handles,
+                F.count(F.when(F.col("fetched_ok"), 1)).alias("ok"),
+            )
 
         # SNK1: documents (Process runs even after the limit flag)
         self.store.append(
@@ -567,15 +572,18 @@ class Crawler:
             ),
             r,
         )
-        return parsed, carry
+        return parsed, carry, counts
 
     def _candidates(self, r: int, parsed: DataFrame, handles: list):
-        """The round's canonicalized links. Returns (flagged, accepted,
-        resolved_ok, accept_expr): every canonized link with what the
-        accept filter reads, the accepted rows keyed for dedup, and the
-        two predicates the fused agg counts; checkpoints go into
-        ``handles``."""
-        cfg = self.cfg
+        """The round's canonicalized links. Returns (accepted, row): the
+        accepted rows keyed for dedup, and the scalars observed on the
+        candidate checkpoints, which go into ``handles``. ``row`` holds
+        the Q3 error-taxonomy counts ``rows`` (raw), ``resolved`` and
+        ``accepted`` (queue.go:9-21 reasons; 'duplicate' covers in-round
+        and cross-round — the reference has a single ErrDuplicateURL),
+        the accepted ``parent_disc`` bounds ``pd_lo``/``pd_hi`` (the
+        dense-order buckets) and the max accepted order key ``att_max``
+        (the limit-boundary trailing-attempt check)."""
         # parent-derived canon columns are computed HERE, before the link
         # explode, so each page's regexes run once instead of once per
         # link (fanout ~19x on the bench graph)
@@ -594,43 +602,51 @@ class Crawler:
         # canonicalization: JVM-native for the common absolute/
         # root-relative case, purl per row (canonize_udf) for the rest
         # (canon.py). The checkpoint sits on the ONE-PASS prepared
-        # projection, BELOW the fast/slow union: the mask battery and
-        # all native value expressions run exactly once per link (the
-        # previous union-of-filtered-branches shape re-evaluated the
-        # mask towers per branch and per output column — the round-4
-        # event logs showed it as the largest stage of the crawl; the
-        # one-pass materialized shape measured ~4x faster at 19.35M
-        # links).
-        cands_pre = self._checkpoint(
-            canon.canonize_links_prepared(links, "href"),
-            StorageLevel.MEMORY_AND_DISK, f"candidates r{r}",
+        # projection, BELOW the fast/slow union, so the mask battery and
+        # every native value expression run once per link (~4x faster
+        # than re-evaluating them per branch, at 19.35M links). Its
+        # exact-tier rows store NULL urls: they count only in ``rows``.
+        cands_pre, row = self._flag_accepted(
+            r, canon.canonize_links_prepared(links, "href"), handles,
+            F.count(F.when(~F.col("_cn"), 1)).alias("exact"),
         )
-        handles.append(cands_pre)
         # a round with no dirty href leaves the UDF branch out of the
         # plan, so no Python worker starts for empty batches
-        with described(self.spark, f"canon-split r{r}"):
-            exact = cands_pre.filter(~F.col("_cn")).count() > 0
-        cands_raw, cands_slow = canon.canonize_links_split(
-            cands_pre, self.udfs["canonize"], exact=exact
+        cands, cands_slow = canon.canonize_links_split(
+            cands_pre, self.udfs["canonize"], exact=row["exact"] > 0
         )
         if cands_slow is not None:
             # the slow (dirty-href) side is checkpointed POST-UDF, so the
             # exact resolver runs once per dirty link, not once per
-            # consumer (the fused agg and the dedup scan read both
-            # checkpoints). The leaf is also the optimizer barrier that
-            # keeps filter pushdown from cloning the UDF into a Filter
-            # (~3x Python CPU, measured in round 2).
-            cands_slow = self._checkpoint(
-                cands_slow, StorageLevel.MEMORY_AND_DISK, f"candidates r{r}"
-            )
-            handles.append(cands_slow)
-            cands_raw = cands_raw.unionByName(cands_slow)
+            # consumer. The leaf is also the optimizer barrier that keeps
+            # filter pushdown from cloning the UDF into a Filter (~3x
+            # Python CPU, measured in round 2).
+            cands_slow, slow = self._flag_accepted(r, cands_slow, handles)
+            cands = cands.unionByName(cands_slow)
+            for k, pick in (("resolved", sum), ("accepted", sum),
+                            ("pd_lo", min), ("pd_hi", max), ("att_max", max)):
+                vals = [v for v in (row[k], slow[k]) if v is not None]
+                row[k] = pick(vals) if vals else None
+        accepted = cands.filter(F.col("_acc")).withColumn(
+            "seen_key", self._seen_key()
+        ).select(
+            "url", "host", "url_key", "seen_key",
+            "parent_disc", "link_index", "priority",
+        )
+        return accepted, row
 
-        resolved_ok = F.col("url").isNotNull() & F.col("url_key").isNotNull()
+    def _flag_accepted(self, r: int, cands: DataFrame, handles: list, *aggs):
+        """``cands`` checkpointed with its accept flag (F1) stored as
+        ``_acc``, and the row of ``aggs`` plus ``_candidates``' candidate
+        scalars observed on that checkpoint. Accepted: resolved (url and
+        url_key set) and passed by ``accept_fn``, by the multi-host
+        broadcast join, or by the single-host filter."""
+        cfg = self.cfg
+        ok = F.col("url").isNotNull() & F.col("url_key").isNotNull()
         if cfg.accept_fn is not None:
             # IsAcceptedFunc seam: the user callable REPLACES F1
             # (crawler.go:137-142), evaluated as an Arrow-batched
-            # pandas UDF over the checkpointed candidates
+            # pandas UDF
             _fn = cfg.accept_fn
 
             @F.pandas_udf("boolean")
@@ -639,81 +655,33 @@ class Crawler:
                     lambda u: bool(_fn(u)) if u is not None else False
                 ).astype(bool)
 
-            flagged = cands_raw
-            accept_expr = resolved_ok & _accept_udf(F.col("url"))
+            acc = ok & _accept_udf(F.col("url"))
         elif cfg.multi_host:
-            # membership flag via one broadcast join — shared by
-            # the accept filter AND the lineage counts (no per-
-            # round collect of the host universe, no isin literal
-            # list in the plan)
-            flagged = cands_raw.join(
+            # membership flag via one broadcast join (no per-round
+            # collect of the host universe, no isin literal list in the
+            # plan)
+            cands = cands.join(
                 F.broadcast(self._hosts_df.withColumn("_hin", F.lit(True))),
                 "host",
                 "left",
             )
-            accept_expr = resolved_ok & F.col("_hin").isNotNull()
+            acc = ok & F.col("_hin").isNotNull()
         else:
-            flagged = cands_raw
-            accept_expr = resolved_ok & canon.accept_filter_with_host(
+            acc = ok & canon.accept_filter_with_host(
                 "url", "host", cfg.host, list(cfg.reject), list(cfg.accept),
             )
-
-        accepted = flagged.filter(accept_expr).withColumn(
-            "seen_key", self._seen_key()
-        ).select(
-            "url", "host", "url_key", "seen_key",
-            "parent_disc", "link_index", "priority",
-        )
-        return flagged, accepted, resolved_ok, accept_expr
-
-    def _checkpoint(self, df: DataFrame, level, desc: str) -> DataFrame:
-        """``df`` as an eager local checkpoint at storage ``level``, its
-        jobs described ``desc``."""
-        with described(self.spark, desc):
-            return df.localCheckpoint(eager=True, storageLevel=level)
-
-    @staticmethod
-    def _parsed_counts(parsed: DataFrame) -> DataFrame:
-        """The scheduled/fetched counts of SNK2 metrics: all a drain
-        round aggregates, and the first half of the fused agg."""
-        return parsed.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("fetched_ok").cast("long")).alias("ok"),
-        )
-
-    def _fused_agg(self, r, parsed, flagged, resolved_ok, accept_expr):
-        """ONE fused driver-synchronized job per round for every scalar
-        the control flow needs: scheduled/fetched counts (SNK2 metrics)
-        × Q3 error-taxonomy counts (queue.go:9-21 reasons; 'duplicate'
-        covers in-round and cross-round — the reference has a single
-        ErrDuplicateURL). Every frame it reads is a checkpoint: parsed,
-        cands_pre and, when the round has one, cands_slow."""
-        with described(self.spark, f"fused-agg r{r}"):
-            return self._parsed_counts(parsed).crossJoin(
-                flagged.agg(
-                    F.count("*").alias("raw"),
-                    F.count(F.when(resolved_ok, 1)).alias("resolved"),
-                    F.count(F.when(accept_expr, 1)).alias("accepted"),
-                    # accepted parent_disc bounds: drive the dense-order
-                    # buckets (same fused job — no extra action)
-                    F.min(
-                        F.when(accept_expr, F.col("parent_disc"))
-                    ).alias("pd_lo"),
-                    F.max(
-                        F.when(accept_expr, F.col("parent_disc"))
-                    ).alias("pd_hi"),
-                    # max attempt order key: makes the limit-boundary
-                    # trailing-attempt check in dedup_candidates a pure
-                    # scalar compare (no extra jobs on the limit-hit
-                    # round)
-                    F.max(
-                        F.when(
-                            accept_expr,
-                            F.struct("parent_disc", "link_index"),
-                        )
-                    ).alias("att_max"),
-                )
-            ).collect()[0]
+        cands = cands.withColumn("_acc", acc).drop("_hin")
+        acc, pd_ = F.col("_acc"), F.col("parent_disc")
+        with described(self.spark, f"candidates r{r}"):
+            return checkpoint(
+                cands, StorageLevel.MEMORY_AND_DISK, handles, *aggs,
+                F.count(F.when(ok, 1)).alias("resolved"),
+                F.count(F.when(acc, 1)).alias("accepted"),
+                F.min(F.when(acc, pd_)).alias("pd_lo"),
+                F.max(F.when(acc, pd_)).alias("pd_hi"),
+                F.max(F.when(acc, F.struct("parent_disc", "link_index")))
+                .alias("att_max"),
+            )
 
     def _dedup(self, accepted, row, pushed, limit_reached, handles):
         """Seen probe + dedup of the accepted candidates, its round
@@ -724,8 +692,8 @@ class Crawler:
         probe = cfg.seen_probe
         if probe == "auto":
             # per-round guard: broadcast only while the candidate
-            # key set (bounded above by the accepted count, known
-            # from the fused agg — no extra job) fits the byte
+            # key set (bounded above by the accepted count, observed
+            # on the candidate checkpoints — no extra job) fits the byte
             # budget; large rounds take the shuffling merge path
             est = int(row["accepted"]) * cfg.broadcast_probe_key_bytes
             probe = (
@@ -742,8 +710,8 @@ class Crawler:
             # round's keys: drop them, the next merge round
             # rebuilds them from seen
             self._bloom_dict = None
-        # dense order: the accepted parents' disc range is known from the
-        # fused agg, so the global FIFO index uses analytic order-buckets
+        # dense order: the accepted parents' disc range is observed on the
+        # candidates, so the global FIFO index uses analytic order-buckets
         # (monotone in (parent_disc, link_index)); a round with no
         # accepted link takes the constant bucket
         bucket = F.lit(0)
@@ -758,7 +726,7 @@ class Crawler:
         res = dedup_candidates(
             accepted, seen.select(F.col("url_key").alias("seen_key")),
             pushed=pushed, limit=cfg.limit,
-            limit_reached=limit_reached, bucket_col=bucket,
+            limit_reached=limit_reached, bucket_col=bucket, buckets=self.P,
             handles=handles, bloom=bloom,
             n_attempts=int(row["accepted"]) if limited else None,
             seen_probe=probe,
@@ -775,7 +743,7 @@ class Crawler:
         """Q3 lineage rows: pure driver scalars, written driver-side by
         the commit."""
         n_raw, n_res, n_acc = (
-            int(row["raw"]), int(row["resolved"]), int(row["accepted"])
+            row["rows"], row["resolved"], row["accepted"]
         )
         return [
             ("unparseable", n_raw - n_res),
@@ -859,6 +827,16 @@ class Crawler:
         sitemap_entries: Optional[DataFrame] = None,
         resume: bool = False,
     ) -> CrawlResult:
+        """Crawl from ``seeds`` (and ``sitemap_entries``), or resume from
+        the checkpoint. The Crawler's own caches live only while this
+        runs."""
+        caches = [df.persist(level) for df, level in self._caches]
+        try:
+            return self._run(seeds, sitemap_entries, resume)
+        finally:
+            release(caches)
+
+    def _run(self, seeds, sitemap_entries, resume) -> CrawlResult:
         cfg = self.cfg
         # the bitmaps are rebuilt from seen by this run's first merge
         # round: a reused Crawler's dict may hold another crawl's keys,
@@ -907,21 +885,14 @@ class Crawler:
                     handles, dedup, lineage, bloom = [], None, None, False
                     try:
                         frontier = self.store.read_batch("frontier", r)
-                        parsed, carry = self._fetch_parse(
+                        parsed, carry, counts = self._fetch_parse(
                             r, frontier.drop("round"), handles
                         )
-                        if limit_reached:
-                            # post-limit drain round: no candidate
-                            # pipeline, only the scheduled/fetched counts
-                            # for metrics
-                            with described(self.spark, f"drain r{r}"):
-                                row = self._parsed_counts(parsed).collect()[0]
-                        else:
-                            flagged, accepted, resolved_ok, accept_expr = (
-                                self._candidates(r, parsed, handles)
-                            )
-                            row = self._fused_agg(
-                                r, parsed, flagged, resolved_ok, accept_expr
+                        # a post-limit drain round runs no candidate
+                        # pipeline: its metrics are parsed's counts
+                        if not limit_reached:
+                            accepted, row = self._candidates(
+                                r, parsed, handles
                             )
                             # first dependence on the previous round's
                             # commit (seen batch, any compaction, the
@@ -936,7 +907,7 @@ class Crawler:
                                 dedup.pushed_end, dedup.limit_reached
                             )
                             lineage = self._lineage(row, dedup)
-                        n_sched, n_ok = row["n"], int(row["ok"] or 0)
+                        n_sched, n_ok = counts["rows"], counts["ok"]
                         n_kept = dedup.n_kept if dedup is not None else 0
                         fresh = dedup.fresh if n_kept > 0 else None
                         nxt = self._next_frontier(carry, fresh)

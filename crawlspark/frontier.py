@@ -14,15 +14,16 @@ Scale design:
   computed from driver-known order-key bounds (``order_bucket``),
   per-bucket row_number, plus cumulative bucket offsets shipped as a map
   literal of at most ``P`` entries. No range sampling, no
-  single-partition window, no driver collect of data rows (only one
-  count per bucket reaches the driver).
+  single-partition window, no driver collect of data rows: the
+  per-bucket counts are observed on the deduped set's checkpoint, so
+  they cost no job of their own.
 - Materialization: the deduped set (and the first-wins rows the
   broadcast probe or the Bloom split reads twice) is an eager local
-  checkpoint, not a persist. Every later plan (dense-order counts, the
-  frontier and seen appends) starts from its ``LogicalRDD`` leaf, so no
-  plan carries the round's lineage. Each checkpoint goes into the
-  caller's handle list the moment it exists, and ``release`` frees
-  them: ``DataFrame.unpersist`` does not.
+  checkpoint (``checkpoint``), not a persist. Every later plan (the
+  dense order, the frontier and seen appends) starts from its
+  ``LogicalRDD`` leaf, so no plan carries the round's lineage. Each
+  checkpoint goes into the caller's handle list the moment it exists,
+  and ``release`` frees them: ``DataFrame.unpersist`` does not.
 - limit+1 budget: ``done > limit`` is checked before increment in the
   reference (queue.go:64-67) ⇒ exactly limit+1 pushes succeed; dedup
   happens after the limit check, so any push *attempt* past the budget —
@@ -33,26 +34,43 @@ from __future__ import annotations
 
 import logging
 from dataclasses import dataclass
-from typing import Optional, Tuple
+from typing import Optional, Sequence, Tuple
 
 from pyspark import Broadcast, StorageLevel
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
 
 
+def checkpoint(df: DataFrame, level, handles: list, *aggs: Column):
+    """``df`` as an eager local checkpoint at storage ``level``, appended
+    to ``handles``, and the row observed on the job that materializes it
+    (a dict: its row count ``rows`` and ``aggs`` by alias), so the
+    driver gets those scalars with no job of their own. The observation
+    is read only once the checkpoint exists: a failed action leaves it
+    unset, and reading an unset one blocks."""
+    obs = Observation()
+    df = df.observe(obs, F.count("*").alias("rows"), *aggs).localCheckpoint(
+        eager=True, storageLevel=level
+    )
+    handles.append(df)
+    return df, obs.get
+
+
 def release(handles) -> None:
-    """Free every round cache in ``handles``: destroy a broadcast, and
-    free the blocks of a local checkpoint (``DataFrame.unpersist`` does
-    nothing on one: its blocks belong to the RDD under its
-    ``LogicalRDD`` plan). A handle that fails to free is logged and the
-    rest are still freed, so cleanup never replaces the exception that
-    made the caller clean up."""
+    """Free every cache in ``handles``: destroy a broadcast, unpersist a
+    persisted frame, and free the blocks of a local checkpoint
+    (``DataFrame.unpersist`` does nothing on one: its blocks belong to
+    the RDD under its ``LogicalRDD`` plan). A handle that fails to free
+    is logged and the rest are still freed, so cleanup never replaces
+    the exception that made the caller clean up."""
     for h in handles:
         try:
             if isinstance(h, Broadcast):
                 h.destroy()
+            elif h.is_cached:
+                h.unpersist()
             else:
                 h._jdf.queryExecution().analyzed().rdd().unpersist(False)
         except Exception:
@@ -73,18 +91,28 @@ def order_bucket(offset: Column, span: int, buckets: int) -> Column:
     )
 
 
+def bucket_counts(bucket_col: Column, buckets: int) -> Column:
+    """The row count of each dense-order bucket ``0 … buckets - 1``, as
+    one array aggregate: what ``with_dense_order`` takes as ``counts``,
+    from an ``agg`` or an ``observe``."""
+    return F.array(
+        *[F.count(F.when(bucket_col == b, 1)) for b in range(buckets)]
+    )
+
+
 def with_dense_order(
     df: DataFrame,
     order_cols: list,
     out_col: str,
     bucket_col: Column,
+    counts: Sequence[int],
     start: int = 0,
-    order_max_out: Optional[list] = None,
 ) -> Tuple[DataFrame, int]:
     """Assign a dense global index, starting at ``start``, in
     ``order_cols`` order, fully distributed: per-bucket row_number +
-    cumulative bucket offsets (computed from per-bucket counts; only
-    #buckets scalars hit the driver). Returns (df_with_index, end_index).
+    cumulative bucket offsets. ``counts`` holds the row count of each
+    bucket (``bucket_counts``), so no job runs here. Returns
+    (df_with_index, end_index).
 
     ``bucket_col`` is an integer expression that is MONOTONE w.r.t. the
     lexicographic ``order_cols`` order (every row in bucket b sorts
@@ -95,24 +123,12 @@ def with_dense_order(
     The offsets ship as a map literal with one entry per non-empty
     bucket, so ``bucket_col`` should take few distinct values (the
     engine clamps it to ``[0, P-1]``)."""
-    ranged = df.withColumn("_pid", bucket_col.cast("int"))
-    # the max order key rides the same counts job (``order_max_out``):
-    # consumers needing "the last row's key" (the limit-boundary
-    # trailing-attempt check) get it for free instead of running a
-    # dedicated orderBy-limit collect over a possibly-evicted cache
-    counts_df = ranged.groupBy("_pid").agg(
-        F.count("*").alias("cnt"),
-        F.max(F.struct(*order_cols)).alias("mx"),
-    )
-    rows = counts_df.collect()
-    counts = {r["_pid"]: r["cnt"] for r in rows}
-    if order_max_out is not None and rows:
-        order_max_out.append(max(tuple(r["mx"]) for r in rows))
     offsets = {}
     acc = start
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
+    for pid, n in enumerate(counts):
+        if n:
+            offsets[pid] = acc
+            acc += n
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     if not offsets:
         # no rows at all — plan must still typecheck (map() is VOID-typed)
@@ -123,7 +139,8 @@ def with_dense_order(
         )
         offset_col = F.coalesce(mapping[F.col("_pid")], F.lit(start))
     out = (
-        ranged.withColumn("_rn", F.row_number().over(w))
+        df.withColumn("_pid", bucket_col.cast("int"))
+        .withColumn("_rn", F.row_number().over(w))
         .withColumn(out_col, (F.col("_rn") - 1 + offset_col).cast("long"))
         .drop("_pid", "_rn")
     )
@@ -163,6 +180,7 @@ def dedup_candidates(
     limit: int,
     limit_reached: bool,
     bucket_col: Column,
+    buckets: int,
     handles: list,
     bloom: Optional[tuple] = None,
     n_attempts: Optional[int] = None,
@@ -180,18 +198,20 @@ def dedup_candidates(
     The engine passes it only with ``seen_probe="merge"``.
     ``n_attempts``: the push-attempt count (rows of ``cands``); only
     the limit state machine reads it, so it is required when
-    ``limit > 0``. The engine takes it from an agg it already runs.
+    ``limit > 0``. The engine observes it on the checkpoint that
+    materializes ``cands``.
     ``bucket_col``: monotone integer bucket expression over the order
     key (parent_disc, link_index) for the dense index (see
-    with_dense_order); ``F.lit(0)`` when there are no bounds.
+    with_dense_order), with values in ``[0, buckets - 1]``;
+    ``F.lit(0)`` when there are no bounds.
     ``handles``: the caller's list of round caches; each checkpoint and
     broadcast is appended to it as soon as it exists, so the caller
     frees them with ``release`` even when this function raises.
     ``attempts_max``: max (parent_disc, link_index) over ALL attempts,
     required when ``limit > 0`` and ``n_attempts > 0``: the
     limit-boundary trailing-attempt check is a scalar comparison of it
-    against the deduped set's max key (which rides the dense-order
-    counts job).
+    against the deduped set's max key (observed, with the per-bucket
+    counts, on the checkpoint of the deduped set).
     ``seen_probe``: how the cross-round membership test executes:
       - "merge": plain ``left_anti`` (sort-merge / AQE choice) — both
         sides shuffle; the safe default at unbounded per-round volumes.
@@ -225,32 +245,32 @@ def dedup_candidates(
             from .bloom import flag_candidates
 
             spark, bdict, bcfg = bloom
-            flagged = flag_candidates(
+            flagged, _ = checkpoint(flag_candidates(
                 spark, first, "seen_key", bdict, bcfg, handles=handles
-            ).localCheckpoint(eager=True, storageLevel=level)
-            handles.append(flagged)
+            ), level, handles)
             maybe = flagged.filter(F.col("_maybe")).drop("_maybe")
             definite = flagged.filter(~F.col("_maybe")).drop("_maybe")
             new = _anti_seen(maybe, seen, seen_probe).unionByName(definite)
         else:
             if seen_probe == "broadcast":
                 # the probe reads it twice
-                first = first.localCheckpoint(eager=True, storageLevel=level)
-                handles.append(first)
+                first, _ = checkpoint(first, level, handles)
             new = _anti_seen(first, seen, seen_probe)
     else:
         new = first
     # Materialize the deduped set ONCE, as a local checkpoint: the
-    # dense-order counts job and the indexed rows' later reads (the
-    # frontier and seen appends) scan the small checkpointed set, and
-    # their plans start from its LogicalRDD leaf instead of carrying the
-    # explode→resolve→window→anti-join chain. n_new falls out of the
-    # dense-order per-bucket counts (no dedicated count job).
-    new = new.localCheckpoint(eager=True, storageLevel=level)
-    handles.append(new)
-    _new_max_out: list = []
+    # indexed rows' later reads (the frontier and seen appends) scan the
+    # small checkpointed set, and their plans start from its LogicalRDD
+    # leaf instead of carrying the explode→resolve→window→anti-join
+    # chain. Its job also observes the per-bucket counts (n_new is their
+    # sum) and the max order key: no job of their own.
+    new, obs = checkpoint(
+        new, level, handles,
+        bucket_counts(bucket_col, buckets).alias("counts"),
+        F.max(F.struct(*order_key)).alias("mx"),
+    )
     new, n_new = with_dense_order(
-        new, order_key, "_idx", bucket_col, order_max_out=_new_max_out,
+        new, order_key, "_idx", bucket_col, obs["counts"]
     )
 
     # budget: pushes succeed while done <= limit ⇒ room = limit+1-pushed
@@ -273,10 +293,9 @@ def dedup_candidates(
             if n_attempts > n_new:
                 # were any attempts ordered after the budget-exhausting
                 # push? kept == new here (n_new == room), so the last kept
-                # key is the deduped set's max order key, collected inside
-                # the dense-order counts job
+                # key is the deduped set's max order key
                 limit_hit = (
-                    room == 0 or tuple(attempts_max) > _new_max_out[0]
+                    room == 0 or tuple(attempts_max) > tuple(obs["mx"])
                 )
         elif room is not None and room == 0 and n_attempts > 0:
             limit_hit = True

@@ -420,11 +420,12 @@ def test_failed_seen_append_in_normal_round_raises(spark, tmp_path,
 
 
 def test_failed_round_leaves_no_append_running(spark, tmp_path, monkeypatch):
-    """A round that raises after its fetch/parse phase (here round 0's
-    fused agg) must leave no checkpoint write behind it: a write that
-    starts after run() raised could land after a resume's truncate. The
-    order append is slowed so that one running off the round's thread
-    would start late; a resume then equals the oracle."""
+    """A round that raises after its fetch/parse phase (here round 0,
+    once its candidates are checkpointed) must leave no checkpoint write
+    behind it: a write that starts after run() raised could land after a
+    resume's truncate. The order append is slowed so that one running
+    off the round's thread would start late; a resume then equals the
+    oracle."""
     import time
 
     from crawlspark.storage import CheckpointStore
@@ -438,11 +439,14 @@ def test_failed_round_leaves_no_append_running(spark, tmp_path, monkeypatch):
         starts.append((table, batch, time.monotonic()))
         return append(self, table, df, batch)
 
-    def failing_agg(self, *args):
-        raise RuntimeError("injected fused-agg failure")
+    candidates = Crawler._candidates
+
+    def failing_candidates(self, *args):
+        candidates(self, *args)
+        raise RuntimeError("injected candidates failure")
 
     monkeypatch.setattr(CheckpointStore, "append", spy)
-    monkeypatch.setattr(Crawler, "_fused_agg", failing_agg)
+    monkeypatch.setattr(Crawler, "_candidates", failing_candidates)
     with pytest.raises(RuntimeError, match="injected"):
         run_spark_crawl(spark, tmp_path, pages, seeds, host="example.com")
     raised = time.monotonic()
@@ -498,12 +502,13 @@ def test_failed_round_waits_out_pending_commit(spark, tmp_path,
         finally:
             calls.append(time.monotonic())
 
-    fused_agg = Crawler._fused_agg
+    candidates = Crawler._candidates
 
-    def agg_failing_in_round_1(self, r, *args):
+    def candidates_failing_in_round_1(self, r, *args):
+        out = candidates(self, r, *args)
         if r == 1:
-            raise RuntimeError("injected fused-agg failure in round 1")
-        return fused_agg(self, r, *args)
+            raise RuntimeError("injected candidates failure in round 1")
+        return out
 
     def pool_threads():
         return {t for t in threading.enumerate()
@@ -511,7 +516,7 @@ def test_failed_round_waits_out_pending_commit(spark, tmp_path,
 
     monkeypatch.setattr(CheckpointStore, "append", spy_append)
     monkeypatch.setattr(CheckpointStore, "write_state", spy_state)
-    monkeypatch.setattr(Crawler, "_fused_agg", agg_failing_in_round_1)
+    monkeypatch.setattr(Crawler, "_candidates", candidates_failing_in_round_1)
 
     # leg 1: the commit succeeds, late
     threads = pool_threads()
@@ -527,7 +532,7 @@ def test_failed_round_waits_out_pending_commit(spark, tmp_path,
     # leg 2: the slowed commit fails as well
     commit_fails.append(True)
     with caplog.at_level(logging.ERROR, logger="crawlspark.engine"):
-        with pytest.raises(RuntimeError, match="fused-agg"):
+        with pytest.raises(RuntimeError, match="candidates"):
             run_spark_crawl(spark, tmp_path / "leg2", pages, seeds,
                             host="example.com")
     assert any("round 0" in r.getMessage() and r.exc_info
@@ -541,38 +546,62 @@ def test_failed_round_waits_out_pending_commit(spark, tmp_path,
     assert_matches_oracle(result, oracle)
 
 
-@pytest.mark.parametrize("fail_in", ["fused_agg", "dense_order"])
+@pytest.mark.parametrize("fail_in", ["candidates", "dense_order"])
 def test_failed_round_releases_its_checkpoints(spark, tmp_path,
                                                monkeypatch, fail_in):
-    """A round that raises frees what it materialized. Round 1 raises in
-    its fused agg, after the round checkpointed its fetched batch, parsed
-    rows and candidates, or in its dense order, after dedup checkpointed
-    the deduped set; once run() has raised, the session holds exactly
-    the persistent RDDs it held before run()."""
+    """A round that raises frees what it materialized. Round 1 raises
+    once it has checkpointed its fetched batch, parsed rows and
+    candidates, or in its dense order, after dedup checkpointed the
+    deduped set; once run() has raised, the session holds exactly the
+    persistent RDDs it held before run()."""
     from crawlspark import frontier
 
     pages, seeds = basic16()
-    fused_agg, dense_order = Crawler._fused_agg, frontier.with_dense_order
+    candidates, dense_order = Crawler._candidates, frontier.with_dense_order
     rounds = []
 
-    def fused_agg_spy(self, r, *args):
+    def candidates_spy(self, r, *args):
         rounds.append(r)
-        if r == 1 and fail_in == "fused_agg":
-            raise RuntimeError("injected fused-agg failure in round 1")
-        return fused_agg(self, r, *args)
+        out = candidates(self, r, *args)
+        if r == 1 and fail_in == "candidates":
+            raise RuntimeError("injected candidates failure in round 1")
+        return out
 
     def dense_order_spy(*args, **kwargs):
         if rounds[-1:] == [1] and fail_in == "dense_order":
             raise RuntimeError("injected dense-order failure in round 1")
         return dense_order(*args, **kwargs)
 
-    monkeypatch.setattr(Crawler, "_fused_agg", fused_agg_spy)
+    monkeypatch.setattr(Crawler, "_candidates", candidates_spy)
     monkeypatch.setattr(frontier, "with_dense_order", dense_order_spy)
     sc = spark.sparkContext
     before = set(sc._jsc.getPersistentRDDs())
     with pytest.raises(RuntimeError, match="round 1"):
         run_spark_crawl(spark, tmp_path, pages, seeds, host="example.com")
     assert set(sc._jsc.getPersistentRDDs()) == before
+
+
+def test_crawler_frees_its_own_caches(spark, tmp_path):
+    """The Crawler's own caches live only while run() runs: with
+    ``broadcast_pages=False`` the repartitioned pages table, and with
+    ``multi_host`` and no ``hosts`` the discovered host list. After the
+    crawl the session holds exactly the persistent RDDs it held before
+    run(), and the crawl equals the oracle."""
+    pages, seeds = powerlaw(n_pages=120, n_hosts=4, seed=5)
+    cfg = CrawlConfig(
+        checkpoint_dir=str(tmp_path / "ckpt"), multi_host=True,
+        broadcast_pages=False, host_budget=10, max_rounds=3,
+    )
+    crawler = Crawler(spark, spark.createDataFrame(pages, PAGES), cfg)
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs())
+    result = crawler.run(seeds)
+    assert set(sc._jsc.getPersistentRDDs()) == before
+    oracle = oracle_crawl(
+        pages_index(pages), seeds, "", multi_host=True,
+        hosts={p["host"] for p in pages}, host_budget=10, max_rounds=3,
+    )
+    assert_matches_oracle(result, oracle)
 
 
 def test_release_frees_every_handle_past_a_failure(spark, caplog):

@@ -104,11 +104,13 @@ def test_per_host_budget_column(spark):
 
 def test_dense_order_bucket_col_no_sampling_identical_index(spark):
     """The bucketed dense order (bucket_col = analytic monotone buckets
-    over the order key) must (1) give the same dense, gap-free index,
-    starting at ``start``, as a driver-side sort, (2) put NO
-    repartitionByRange/RangePartitioning in the plan, (3) stay exact
-    under bucket skew and out-of-range clamping, and (4) index an empty
-    input with the constant bucket to zero rows, ending at ``start``."""
+    over the order key, with per-bucket counts from ``bucket_counts``)
+    must (1) give the same dense, gap-free index, starting at
+    ``start``, as a driver-side sort, (2) put NO
+    repartitionByRange/RangePartitioning in the plan and run no job
+    until read, (3) stay exact under bucket skew and out-of-range
+    clamping, and (4) index an empty input with the constant bucket to
+    zero rows, ending at ``start``."""
     import crawlspark.frontier as fr
 
     df = spark.range(5000).select(
@@ -127,7 +129,13 @@ def test_dense_order_bucket_col_no_sampling_identical_index(spark):
     # to 96, so the clamp to bucket 7 fires) — monotone is the only
     # requirement for exactness
     bucket = fr.order_bucket(F.col("parent_disc"), 50, 8)
-    out_b, end_b = fr.with_dense_order(df, order, "_idx", bucket, start=3)
+    [counts] = df.agg(fr.bucket_counts(bucket, 8)).first()
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    out_b, end_b = fr.with_dense_order(
+        df, order, "_idx", bucket, counts, start=3
+    )
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == before
     plan = out_b._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" not in plan.lower()
     got_b = [
@@ -139,8 +147,10 @@ def test_dense_order_bucket_col_no_sampling_identical_index(spark):
     # dense, 0-gap, starts at `start`
     assert [i for _, _, i in got_b] == list(range(3, 3 + 5000))
 
+    empty = df.limit(0)
+    [counts_e] = empty.agg(fr.bucket_counts(F.lit(0), 1)).first()
     out_e, end_e = fr.with_dense_order(
-        df.limit(0), order, "_idx", F.lit(0), start=3
+        empty, order, "_idx", F.lit(0), counts_e, start=3
     )
     assert out_e.collect() == [] and end_e == 3
 
@@ -255,3 +265,17 @@ def test_every_crawl_job_is_labeled(dirty_crawl):
     _, _, jobs = dirty_crawl
     assert jobs
     assert [j for j, d in jobs.items() if not d] == []
+
+
+def test_round_scalars_run_no_job_of_their_own(dirty_crawl):
+    """A round's driver scalars are observed on the checkpoints that
+    materialize its frames, so no job of their own runs: none counts
+    the dirty pages (``parse-split``), the exact-tier links
+    (``canon-split``), the candidates (``fused-agg``) or a drain
+    round's rows (``drain``), and nothing takes their place. Before,
+    this 4-round crawl ran 153 jobs, 36 of them under those four
+    descriptions."""
+    _, _, jobs = dirty_crawl
+    gone = ("parse-split", "canon-split", "fused-agg", "drain")
+    assert [d for d in jobs.values() if d and d.startswith(gone)] == []
+    assert len(jobs) <= 153 - 36, len(jobs)

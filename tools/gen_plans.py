@@ -149,7 +149,8 @@ out.append("## 6. Two-tier parse routing (P2/P4, round 4)\n\n"
            "exactly ONE MapInArrow node exists, fed only by the dirty-page\n"
            "filter; the routing flag `_parse_dirty` is read from the\n"
            "checkpointed round batch, not recomputed per tier. The engine\n"
-           "counts that flag first (job `parse-split r<N>`); at 0 it calls\n"
+           "observes the count of that flag on the job that checkpoints the\n"
+           "batch (no job of its own); at 0 it calls\n"
            "`parse_stage(exact=False)`, which leaves the MapInArrow branch\n"
            "out of the plan, so a round with no dirty page starts no Python\n"
            "worker.\n\n```\n"
@@ -208,6 +209,8 @@ out.append("## 9. Round materialization points are local checkpoints\n\n"
            "dedup's `first` (broadcast probe) and `new` — is an eager\n"
            "`localCheckpoint`, so every later plan starts from a\n"
            "`Scan ExistingRDD` leaf and carries none of the round above it.\n"
+           "Each also observes (`DataFrame.observe`) the scalars the driver\n"
+           "needs from its frame, so no job of their own runs.\n"
            "Round 0's frontier append (batch 1, below) is a projection of\n"
            "dedup's `new`. With persists at those points, round 0's\n"
            "frontier append on crawlbench `dirty` (seed 41) analyzed to\n"

@@ -17,6 +17,8 @@ corpora. Host extraction (``regexp_extract``), the accept filter (folded
 
 from __future__ import annotations
 
+from typing import Sequence
+
 import pandas as pd
 
 from .purl import normalize, normalize_key, parse_url
@@ -469,15 +471,17 @@ def host_col(url_col):
 
 
 def accept_filter_with_host(
-    url_col, host_c, host: str, reject: list[str], accept_pats: list[str]
+    url_col, host_c, hosts: Sequence[str], reject: Sequence[str],
+    accept_pats: Sequence[str],
 ):
     """F1 with a pre-computed host column (from the fused canonize UDF) —
-    saves re-deriving the host by regexp on the hot path."""
+    saves re-deriving the host by regexp on the hot path. Host membership
+    is a literal ``isin``: ``=`` for one host, ``INSET`` past ten."""
     from pyspark.sql import functions as F
 
     c = F.col(url_col) if isinstance(url_col, str) else url_col
     h = F.col(host_c) if isinstance(host_c, str) else host_c
-    pred = h == F.lit(host)
+    pred = h.isin(list(hosts))
     for pat in reject:
         pred = pred & ~c.rlike(pat)
     if accept_pats:
@@ -488,10 +492,11 @@ def accept_filter_with_host(
     return pred
 
 
-def accept_filter_col(url_col, host: str, reject: list[str], accept_pats: list[str]):
+def accept_filter_col(
+    url_col, host: str, reject: Sequence[str], accept_pats: Sequence[str]
+):
     """Native F1 predicate: folded rlike chain — fully inside whole-stage
     codegen, pushed below the UDF stages by Catalyst where legal."""
-    from pyspark.sql import functions as F
-
-    c = F.col(url_col) if isinstance(url_col, str) else url_col
-    return accept_filter_with_host(c, host_col(c), host, reject, accept_pats)
+    return accept_filter_with_host(
+        url_col, host_col(url_col), [host], reject, accept_pats
+    )

@@ -163,6 +163,10 @@ class CrawlConfig:
 
         for pat in list(self.reject) + list(self.accept):
             validate_pattern(pat)
+        # multi-host F1 is host membership alone, as in the oracle
+        if self.multi_host and (self.hosts is None or self.reject
+                                or self.accept):
+            raise ValueError("multi_host takes hosts and no reject/accept")
 
 
 @dataclass
@@ -224,22 +228,15 @@ class Crawler:
         self.spark = spark
         self.cfg = config
         self.P = config.num_partitions or spark.sparkContext.defaultParallelism
-        # (frame, storage level) of the Crawler's own caches: each run()
-        # persists them and frees them when it returns or raises
-        self._caches = []
-        if config.broadcast_pages:
-            self.pages = pages
-        else:
-            # co-locate the web table by the fetch-join key ONCE (the
-            # analogue of bucketing the pages table): every round's
-            # resolver join reads this cached layout through a
-            # TableCacheQueryStage, with no exchange and no sort on the
-            # big side. DISK_ONLY: the web table (HTML bodies, the largest
+        self.pages = pages
+        if not config.broadcast_pages:
+            # co-locate the web table by the fetch-join key ONCE (fetch.py,
+            # "Scale"). DISK_ONLY: the web table (HTML bodies, the largest
             # state in the job) must never be resident in executor heap,
             # where it inflates G1 copying cost and competes with the
             # round's checkpoints (spark.local.dir is tmpfs in the bench).
+            # run() persists it: the Crawler's one cache
             self.pages = pages.repartition(self.P, "host", "url_key")
-            self._caches.append((self.pages, StorageLevel.DISK_ONLY))
         # the robots rules are small policy state: collect them once, so
         # every round's gate is a literal-map projection (no join, no
         # window shuffle) and the crawl-delay budgets a literal map
@@ -251,28 +248,11 @@ class Crawler:
         self._robots_compiled = compile_robots(robots_rows)
         self.store = CheckpointStore(spark, config.checkpoint_dir)
         self.udfs = canon.register_udfs()
-        if config.multi_host:
-            if config.hosts is not None:
-                # dedupe user-supplied hosts: the accept join is a plain
-                # left join (lineage needs the unmatched rows), so a
-                # duplicate host entry would duplicate candidate rows and
-                # inflate lineage counts (ADVICE r2)
-                self._hosts_df = _local_frame(
-                    spark,
-                    T.StructType([T.StructField("host", T.StringType())]),
-                    {"host": list(dict.fromkeys(config.hosts))},
-                )
-            else:
-                # default discovery stays a DataFrame end-to-end: no
-                # driver collect of the host universe (10^6+ hosts at web
-                # scale would be a plan/driver killer); the broadcast
-                # exchanges downstream materialize it executor-side
-                self._hosts_df = pages.select("host").distinct()
-                self._caches.append(
-                    (self._hosts_df, StorageLevel.MEMORY_AND_DISK_DESER)
-                )
-        else:
-            self._hosts_df = None
+        # the allowed hosts, decided once as in the oracle: the F3 guard
+        # and the F1 flag both test membership in this literal list
+        self._allowed = (
+            sorted(set(config.hosts)) if config.multi_host else [config.host]
+        )
         # per-round seen-probe decisions ("broadcast"/"merge"), appended
         # by run() — observability for the auto guard (and its tests)
         self.probe_choices: list = []
@@ -501,8 +481,7 @@ class Crawler:
         fetched = resolve_fetch(
             allowed,
             self.pages,
-            allowed_hosts=self._hosts_df,
-            crawl_host=None if cfg.multi_host else cfg.host,
+            self._allowed,
             broadcast_pages=cfg.broadcast_pages,
         )
         # the hooks run inside the Python parse loop: they force the
@@ -639,8 +618,8 @@ class Crawler:
         """``cands`` checkpointed with its accept flag (F1) stored as
         ``_acc``, and the row of ``aggs`` plus ``_candidates``' candidate
         scalars observed on that checkpoint. Accepted: resolved (url and
-        url_key set) and passed by ``accept_fn``, by the multi-host
-        broadcast join, or by the single-host filter."""
+        url_key set) and passed by ``accept_fn``, else by F1 over the
+        allowed hosts (a NULL host is not accepted)."""
         cfg = self.cfg
         ok = F.col("url").isNotNull() & F.col("url_key").isNotNull()
         if cfg.accept_fn is not None:
@@ -656,21 +635,11 @@ class Crawler:
                 ).astype(bool)
 
             acc = ok & _accept_udf(F.col("url"))
-        elif cfg.multi_host:
-            # membership flag via one broadcast join (no per-round
-            # collect of the host universe, no isin literal list in the
-            # plan)
-            cands = cands.join(
-                F.broadcast(self._hosts_df.withColumn("_hin", F.lit(True))),
-                "host",
-                "left",
-            )
-            acc = ok & F.col("_hin").isNotNull()
         else:
-            acc = ok & canon.accept_filter_with_host(
-                "url", "host", cfg.host, list(cfg.reject), list(cfg.accept),
-            )
-        cands = cands.withColumn("_acc", acc).drop("_hin")
+            acc = ok & F.coalesce(canon.accept_filter_with_host(
+                "url", "host", self._allowed, cfg.reject, cfg.accept
+            ), F.lit(False))
+        cands = cands.withColumn("_acc", acc)
         acc, pd_ = F.col("_acc"), F.col("parent_disc")
         with described(self.spark, f"candidates r{r}"):
             return checkpoint(
@@ -828,9 +797,11 @@ class Crawler:
         resume: bool = False,
     ) -> CrawlResult:
         """Crawl from ``seeds`` (and ``sitemap_entries``), or resume from
-        the checkpoint. The Crawler's own caches live only while this
-        runs."""
-        caches = [df.persist(level) for df, level in self._caches]
+        the checkpoint. The Crawler's own cache lives only while this
+        runs. Two ``run()`` calls on one checkpoint directory at the same
+        time are unsupported, and nothing guards against them."""
+        caches = [] if self.cfg.broadcast_pages else [
+            self.pages.persist(StorageLevel.DISK_ONLY)]
         try:
             return self._run(seeds, sitemap_entries, resume)
         finally:

@@ -16,14 +16,15 @@ Semantics preserved:
 - The fetch key is (host, url_key): servers resolve cleaned path + query
   and never see fragments — matching the reference's file-server fixture.
 
-Scale: the pages side is broadcast when small; otherwise both sides
-shuffle on (host, url_key) with AQE handling skew. The scheduled side has
-already been uniformly spread by schedule.spread_for_fetch.
+Scale: one of two joins runs. With ``broadcast_pages`` the pages table
+is broadcast. Otherwise the Crawler caches it DISK_ONLY, repartitioned
+on (host, url_key), and the shuffle-hash join reads that cache through a
+TableCacheQueryStage with no exchange: only the scheduled batch shuffles.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -32,12 +33,12 @@ from pyspark.sql import functions as F
 def resolve_fetch(
     scheduled: DataFrame,
     pages: DataFrame,
-    allowed_hosts: Optional[DataFrame] = None,
-    crawl_host: Optional[str] = None,
+    hosts: Sequence[str],
     broadcast_pages: bool = False,
 ) -> DataFrame:
     """Join the scheduled batch against the pages table, adding
-    (status, content_html, guard_ok). Failed guards/misses get status 0.
+    (status, content_html, guard_ok). Rows off the allowed ``hosts``,
+    non-absolute URLs and misses get status 0.
     """
     p = pages.select(
         F.col("host").alias("_phost"),
@@ -50,24 +51,13 @@ def resolve_fetch(
 
     # F3/F4: host-membership + absoluteness guards (the ONLY filter seeds
     # get — off-host seeds are fetched-and-failed, not silently dropped)
-    if crawl_host is not None:
-        guard = F.col("host") == F.lit(crawl_host)
-    elif allowed_hosts is not None:
-        scheduled = scheduled.join(
-            F.broadcast(allowed_hosts.select(F.col("host").alias("_ahost"))),
-            F.col("host") == F.col("_ahost"),
-            "left",
-        )
-        guard = F.col("_ahost").isNotNull()
-    else:
-        guard = F.lit(True)
-    guard = guard & (F.col("url").rlike("^[A-Za-z][A-Za-z0-9+.\\-]*:"))
+    guard = F.col("host").isin(list(hosts)) & F.col("url").rlike(
+        "^[A-Za-z][A-Za-z0-9+.\\-]*:"
+    )
 
     # SHUFFLE_HASH hint: build the hash map on the (small) scheduled batch;
     # the pages side then streams without the per-round SORT a sort-merge
-    # join would impose on the whole web table. With the pages table
-    # pre-partitioned on (host, url_key) (Crawler init), the pages side
-    # needs no exchange at all — the per-round cost is one scan.
+    # join would impose on the whole web table.
     joined = scheduled.withColumn("guard_ok", guard).hint("shuffle_hash").join(
         p,
         (F.col("host") == F.col("_phost")) & (F.col("url_key") == F.col("_pkey")),
@@ -86,6 +76,6 @@ def resolve_fetch(
                 F.col("guard_ok") & (F.col("_status") == 200), F.col("_content")
             ),
         )
-        .drop("_phost", "_pkey", "_status", "_content", "_ahost")
+        .drop("_phost", "_pkey", "_status", "_content")
     )
     return out

@@ -5,11 +5,13 @@ Scale design:
 - Within-round first-wins dedup: window ``row_number() == 1`` over the seen
   key ordered by (parent_disc, link_index) — deterministic, unlike
   dropDuplicates (SURVEY.md Q1).
-- Cross-round dedup: ``left_anti`` join against the append-only seen table;
-  Spark's runtime Bloom filter assists. The explicit crawlspark.bloom
-  prefilter runs only with the merge probe, where it measured slower in
-  21 of 21 CPU pairs (BENCH/BLOOM_GATE.md). Exactness always comes from
-  the anti-join.
+- Cross-round dedup: ``left_anti`` join against the append-only seen table.
+  Spark's runtime Bloom filter does not fire: no executed dedup plan of a
+  crawl of crawlbench's ``wide`` web holds ``might_contain`` or
+  ``BloomFilterAggregate`` (seen is far below its 10 GiB threshold). The
+  explicit crawlspark.bloom prefilter runs only with the merge probe,
+  where it measured slower in 21 of 21 CPU pairs (BENCH/BLOOM_GATE.md).
+  Exactness always comes from the anti-join.
 - Global FIFO numbering: a *distributed* dense index — a monotone bucket
   computed from driver-known order-key bounds (``order_bucket``),
   per-bucket row_number, plus cumulative bucket offsets shipped as a map

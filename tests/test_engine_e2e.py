@@ -208,9 +208,8 @@ def test_accept_reject_filters(spark, tmp_path):
 
 
 def test_multi_host_powerlaw_budget(spark, tmp_path):
-    """Multi-host crawl, also with an empty hosts list (every URL is
-    off-host). The allowed-hosts table is deduplicated and JVM-side:
-    reading it runs no Python."""
+    """Multi-host crawl with a duplicated hosts list, and with an empty
+    one (every URL is off-host)."""
     pages, seeds = powerlaw(n_pages=200, n_hosts=5, seed=11)
     pages_df = spark.createDataFrame(pages, PAGES)
     all_hosts = sorted({p["host"] for p in pages})
@@ -220,8 +219,6 @@ def test_multi_host_powerlaw_budget(spark, tmp_path):
             multi_host=True, hosts=hosts, host_budget=10, max_rounds=6,
         )
         crawler = Crawler(spark, pages_df, cfg)
-        assert not has_python_rdd(crawler._hosts_df)
-        assert crawler._hosts_df.count() == len(set(hosts))
         oracle = oracle_crawl(
             pages_index(pages), seeds, "", multi_host=True, hosts=set(hosts),
             host_budget=10, max_rounds=6,
@@ -582,14 +579,14 @@ def test_failed_round_releases_its_checkpoints(spark, tmp_path,
 
 
 def test_crawler_frees_its_own_caches(spark, tmp_path):
-    """The Crawler's own caches live only while run() runs: with
-    ``broadcast_pages=False`` the repartitioned pages table, and with
-    ``multi_host`` and no ``hosts`` the discovered host list. After the
+    """The Crawler's own cache, the repartitioned pages table of
+    ``broadcast_pages=False``, lives only while run() runs. After the
     crawl the session holds exactly the persistent RDDs it held before
     run(), and the crawl equals the oracle."""
     pages, seeds = powerlaw(n_pages=120, n_hosts=4, seed=5)
+    hosts = sorted({p["host"] for p in pages})
     cfg = CrawlConfig(
-        checkpoint_dir=str(tmp_path / "ckpt"), multi_host=True,
+        checkpoint_dir=str(tmp_path / "ckpt"), multi_host=True, hosts=hosts,
         broadcast_pages=False, host_budget=10, max_rounds=3,
     )
     crawler = Crawler(spark, spark.createDataFrame(pages, PAGES), cfg)
@@ -599,9 +596,21 @@ def test_crawler_frees_its_own_caches(spark, tmp_path):
     assert set(sc._jsc.getPersistentRDDs()) == before
     oracle = oracle_crawl(
         pages_index(pages), seeds, "", multi_host=True,
-        hosts={p["host"] for p in pages}, host_budget=10, max_rounds=3,
+        hosts=set(hosts), host_budget=10, max_rounds=3,
     )
     assert_matches_oracle(result, oracle)
+
+
+def test_multi_host_config_rejects_what_the_oracle_ignores(tmp_path):
+    """Multi-host F1 is membership in ``hosts`` alone: a multi-host
+    config without hosts, or with reject or accept patterns, raises."""
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(ValueError, match="multi_host"):
+        CrawlConfig(checkpoint_dir=ckpt, multi_host=True)
+    for kw in (dict(reject=["x"]), dict(accept=["y"])):
+        with pytest.raises(ValueError, match="multi_host"):
+            CrawlConfig(checkpoint_dir=ckpt, multi_host=True, hosts=["h"], **kw)
+    CrawlConfig(checkpoint_dir=ckpt, host="h", reject=["x"], accept=["y"])
 
 
 def test_release_frees_every_handle_past_a_failure(spark, caplog):

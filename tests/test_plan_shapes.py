@@ -279,3 +279,16 @@ def test_round_scalars_run_no_job_of_their_own(dirty_crawl):
     gone = ("parse-split", "canon-split", "fused-agg", "drain")
     assert [d for d in jobs.values() if d and d.startswith(gone)] == []
     assert len(jobs) <= 153 - 36, len(jobs)
+
+
+def test_accept_flag_runs_no_join(dirty_crawl):
+    """The F1 accept flag and the F3 fetch guard test host membership
+    as a literal predicate over one allowed-host list, so no broadcast
+    of a host table runs: the ``candidates r{r}`` jobs are the candidate
+    checkpoints alone, two a round here (every round runs the exact
+    tier). With a broadcast host join before each checkpoint this
+    crawl ran 16 of them and 111 jobs in all."""
+    result, _, jobs = dirty_crawl
+    cands = [d for d in jobs.values() if d and d.startswith("candidates r")]
+    assert len(cands) == 2 * result.rounds, sorted(cands)
+    assert len(jobs) <= 99, len(jobs)
